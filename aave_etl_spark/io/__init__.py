@@ -1,4 +1,4 @@
-from aave_etl_spark.io.catalog import TABLES, register_testdata_views
+from aave_etl_spark.io.catalog import TABLES
 from aave_etl_spark.io.table_store import TableStore
 
-__all__ = ["TABLES", "register_testdata_views", "TableStore"]
+__all__ = ["TABLES", "TableStore"]

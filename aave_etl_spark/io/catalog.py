@@ -1,13 +1,11 @@
-"""Test-table catalog: registers the driver's synthetic parquet tables as
-temp views so queries can be written in either DataFrame or SQL form.
+"""Test-table catalog: the synthetic parquet tables the query registry and
+its DuckDB oracles read.
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,8 +22,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # events.ts is parquet TIMESTAMP(NANOS): with
 # spark.sql.legacy.parquet.nanosAsLong it arrives as epoch-nanos long; we
@@ -58,8 +54,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
     return df
 
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view named after the table."""
-    for name in TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)

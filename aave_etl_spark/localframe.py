@@ -3,10 +3,11 @@
 ``spark.createDataFrame(list_of_rows, schema)`` ships the rows through a
 pickled Python RDD split into ``defaultParallelism`` partitions — on
 local[32] that is 32 near-empty partitions whose every evaluation costs a
-Python-worker roundtrip (~0.15 s each here), and a downstream
-``.coalesce(1)`` chains all 32 roundtrips SERIALLY into one task: a
-measured ~5 s fixed cost per tiny local frame (guide §4 — the Python
-boundary; see OPTIMIZATION_r13.md "local frames").
+Python-worker roundtrip (~0.15 s each), and a downstream ``.coalesce(1)``
+chains all 32 roundtrips SERIALLY into one task: a measured ~5 s fixed
+cost per tiny local frame (guide §4 — the Python boundary). The cost is
+linear in core count: one 8-row mapInPandas over such a frame took 0.68 s
+on local[4] and 4.8 s on local[32].
 
 ``local_df`` builds the same frame through pandas + Arrow instead, which
 Spark converts driver-side into a pure-JVM ``LocalRelation``: zero Python

@@ -45,8 +45,7 @@ def scd2_snapshot(
     shuffle of the change log, no global window, no iteration. The
     output is strictly smaller than the input (no-ops drop), and the
     standard consumers compose directly: point-in-time state is an
-    as-of filter, history joins are range joins on the interval
-    (operators/range_join.py)."""
+    as-of filter, history joins are range joins on the interval."""
     if not key_cols or not attr_cols:
         raise ValueError("scd2_snapshot needs key_cols and attr_cols")
     order: list[Column] = [F.col(ts_col)] + [F.col(c) for c in (seq_cols or [])]

@@ -99,12 +99,17 @@ def _pair_cos_udf():
     (sqrt(Σa_i²)·sqrt(Σb_i²)), every accumulation per-dimension
     left-to-right float64 (the `dot`/`norm` op order) and the
     sqrt/multiply/divide single IEEE ops — bitwise the JVM expression
-    `dot_arrow(a,b) / (norm(a) * norm(b))`. NULL on a null operand or a
-    length mismatch, like `dot_arrow`. One UDF stage instead of three
-    (two per-row norm evals + the pair dot): at small scale the Arrow
-    boundary's fixed cost per stage dominates (the r13 regression on
-    llm_cosine_topk), and inside the kernel the pair-stack conversion
-    dominates the two extra accumulations."""
+    `dot_arrow(a,b) / (norm(a) * norm(b))` on every pair where both norms
+    are nonzero. NULL on a null operand or a length mismatch, like
+    `dot_arrow`. Also NULL, never NaN, when either operand has zero norm
+    or zero length: the kernel's 0/0 NaN becomes null at the Arrow
+    boundary, so such a pair sorts last under a descending cosine and
+    fails every `>=` threshold. (The JVM expression gives NULL there with
+    ANSI off and raises DIVIDE_BY_ZERO with ANSI on.) One UDF stage
+    instead of three (two per-row norm evals + the pair dot): at small
+    scale the Arrow boundary's fixed cost per stage dominates (the r13
+    regression on llm_cosine_topk), and inside the kernel the pair-stack
+    conversion dominates the two extra accumulations."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -133,7 +138,8 @@ def _pair_cos_udf():
                 with np.errstate(divide="ignore", invalid="ignore"):
                     out[pos] = ab / (np.sqrt(aa) * np.sqrt(bb))
             else:
-                # zero-length arrays: 0.0 / (0.0 * 0.0) = NaN, like the JVM
+                # zero-length arrays: 0.0 / (0.0 * 0.0) = NaN, which the
+                # Arrow boundary returns as NULL (see docstring)
                 out[pos] = np.nan
         res = pd.Series(out)
         res[~pd.Series(ok)] = None
@@ -178,8 +184,9 @@ def cosine_topk(
     # ONE fused Arrow stage for the |c|×|q| pair projection (guide §4.2):
     # `_pair_cos_udf` computes dot and both norms per pair in numpy with
     # the exact `dot`/`norm`/divide IEEE op order — bit-identical to the
-    # former dot_arrow + per-row-norm form, but 1 ArrowEvalPython stage
-    # instead of 3 (the per-stage fixed cost caused r13's only
+    # former dot_arrow + per-row-norm form on nonzero-norm pairs (a
+    # zero-norm pair scores NULL and ranks last), but 1 ArrowEvalPython
+    # stage instead of 3 (the per-stage fixed cost caused r13's only
     # regression); the two extra accumulations ride the pair stack the
     # kernel builds anyway (VERDICT r13 #5)
     cos = _pair_cos_udf()(F.col("_qv"), F.col("_cv"))

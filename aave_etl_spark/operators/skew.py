@@ -1,52 +1,31 @@
-"""Skew mitigation: salted joins for hot keys, and scan fan-out for
-under-partitioned inputs.
+"""Skew mitigation: scan fan-out for under-partitioned inputs.
 
-AQE's skew-join splitting (enabled session-wide) handles most skew at
-runtime by splitting oversized shuffle partitions — but it only applies to
-sort-merge joins and only when statistics surface the skew. Salting is the
-plan-level tool for the remaining cases: a join key so hot that one task
-would receive an unbounded share of the shuffle.
-
-Mechanics: the big side gets a deterministic salt in [0, n) appended to the
-key (spreading each hot key over n tasks); the small side is replicated n
-times, once per salt value. For inner and the left family the join result
-is IDENTICAL to the unsalted join — the salt never leaves the plan — at
-the cost of an n-fold replication of the (small) build side. right/full
-are rejected: each unmatched small-side row would be emitted once per salt
-value (the explode replicates it and no salt matches).
+AQE's skew-join splitting (enabled session-wide) handles shuffle skew at
+runtime by splitting oversized shuffle partitions. It cannot help a narrow
+scan that arrives in fewer partitions than the cluster has slots: there is
+no shuffle to split, so every downstream map stage runs on a few tasks.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# logical-plan node classes that make a frame more than a narrow scan
+_NOT_NARROW = ("Join", "Aggregate", "Window", "Repartition", "Sort")
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key_cols: list[str],
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join `big` to `small` on key_cols with the hot keys spread over
-    `n_salts` shuffle partitions. Output columns = unsalted join output.
 
-    The salt on the big side hashes ALL of the row's columns, so it is
-    deterministic per row content (replays produce the same spread) and
-    uniform even when the join key itself has two values."""
-    allowed = {"inner", "left", "left_outer", "left_semi", "left_anti"}
-    if how not in allowed:
-        raise ValueError(f"salted_join supports {sorted(allowed)}, got {how!r}")
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.abs(F.hash(*[F.col(c) for c in big.columns])), F.lit(n_salts))
-    )
-    salted_small = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return (
-        salted_big.join(salted_small, [*key_cols, "_salt"], how).drop("_salt")
-    )
+def _plan_node_classes(jplan) -> Iterator[str]:
+    """Class names of every node in a JVM logical plan, its subquery and
+    cached inner plans included (the nodes its tree string prints)."""
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        yield node.getClass().getSimpleName()
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
 
 
 def fan_out_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -70,10 +49,12 @@ def fan_out_scan(df: DataFrame, key_col: str) -> DataFrame:
     processes which row, so a float sum taken DIRECTLY over the scan
     layout could drift in the last ulp. Apply at narrow scan-shaped
     inputs only; the plan-shape guard below declines anything already
-    carrying a join/aggregate/window (splitting those is the planner's
-    job, and inspecting their RDD here could execute stages under AQE)."""
-    jplan = df._jdf.queryExecution().optimizedPlan().toString()
-    if any(k in jplan for k in ("Join", "Aggregate", "Window", "Repartition", "Sort")):
+    carrying a join/aggregate/window node (splitting those is the
+    planner's job, and inspecting their RDD here could execute stages
+    under AQE). It matches node classes, not plan text, so a column
+    named e.g. ``JoinDate`` does not read as a join."""
+    jplan = df._jdf.queryExecution().optimizedPlan()
+    if any(k in c for c in _plan_node_classes(jplan) for k in _NOT_NARROW):
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

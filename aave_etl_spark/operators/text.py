@@ -546,6 +546,47 @@ def bm25_index_build(
     _BM25_PARAMS_SEEN.pop(store._path(name + "_params"), None)
 
 
+def bm25_index_postings(
+    store, name: str, k1: float = 1.2, b: float = 0.75
+) -> DataFrame:
+    """The stored postings of an at-rest BM25 index, after checking that
+    (k1, b) match the build-params sidecar. Every at-rest consumer
+    (`bm25_index_search`, `bm25_topk_from_postings` over the stored table)
+    reads the index through here.
+
+    Raises on a (k1, b) mismatch — drifted parameters would silently score
+    with stale norms — and on a missing sidecar (index never built)."""
+    import os
+
+    # only a MISSING sidecar means "never built" — a present-but-unreadable
+    # one (half-written build, corruption) must surface as its own error,
+    # not send the caller to rebuild over a live index; an explicit path
+    # check makes the distinction exception classes can't
+    path = store._path(name + "_params")
+    if not os.path.exists(path):
+        raise ValueError(
+            f"bm25 index: no params sidecar for index {name!r} —"
+            " build it with bm25_index_build first"
+        )
+    # the sidecar is immutable once built (completion-marker discipline;
+    # bm25_index_build invalidates this entry on rewrite), so validate it
+    # with ONE driver job per index per session instead of one per search
+    # call — a per-process memo of a 2-float guard row, not of any query
+    # result (five at-rest consumers each paid a head() job otherwise)
+    built_pair = _BM25_PARAMS_SEEN.get(path)
+    if built_pair is None:
+        built = store.spark.read.parquet(path).head()
+        built_pair = (built.k1, built.b)
+        _BM25_PARAMS_SEEN[path] = built_pair
+    if (float(k1), float(b)) != built_pair:
+        raise ValueError(
+            f"bm25 index params {(k1, b)} != build params"
+            f" {built_pair} (k1, b) — stored weights were scored"
+            " under the build's parameters"
+        )
+    return store.read_bucketed(name)
+
+
 def bm25_index_search(
     store,
     queries: DataFrame,
@@ -569,36 +610,7 @@ def bm25_index_search(
 
     Raises on a (k1, b) mismatch against the index's build-params sidecar
     — drifted parameters would silently score with stale norms."""
-    import os
-
-    spark = queries.sparkSession
-    # only a MISSING sidecar means "never built" — a present-but-unreadable
-    # one (half-written build, corruption) must surface as its own error,
-    # not send the caller to rebuild over a live index; an explicit path
-    # check makes the distinction exception classes can't
-    path = store._path(name + "_params")
-    if not os.path.exists(path):
-        raise ValueError(
-            f"bm25_index_search: no params sidecar for index {name!r} —"
-            " build it with bm25_index_build first"
-        )
-    # the sidecar is immutable once built (completion-marker discipline;
-    # bm25_index_build invalidates this entry on rewrite), so validate it
-    # with ONE driver job per index per session instead of one per search
-    # call — a per-process memo of a 2-float guard row, not of any query
-    # result (five at-rest consumers each paid a head() job otherwise)
-    built_pair = _BM25_PARAMS_SEEN.get(path)
-    if built_pair is None:
-        built = spark.read.parquet(path).head()
-        built_pair = (built.k1, built.b)
-        _BM25_PARAMS_SEEN[path] = built_pair
-    if (float(k1), float(b)) != built_pair:
-        raise ValueError(
-            f"bm25 index params {(k1, b)} != build params"
-            f" {built_pair} (k1, b) — stored weights were scored"
-            " under the build's parameters"
-        )
-    postings = store.read_bucketed(name)
+    postings = bm25_index_postings(store, name, k1=k1, b=b)
     if max_df is not None and "df" not in postings.columns:
         # indexes built before the df column existed can't serve a capped
         # probe — fail with the rebuild hint, not an unresolved-column error
@@ -650,7 +662,8 @@ def bm25_topk_from_postings(
     included, so ranking the stored table is value-identical to the
     in-flight rebuild while skipping the tokenize→tf→df→weight corpus
     pass; the store-prefix sharing the round-13 verdict prescribed for
-    the BM25 trio)."""
+    the BM25 trio). Read the stored table with `bm25_index_postings`,
+    which raises when (k1, b) differ from the index's build params."""
     w = Window.partitionBy(id_col).orderBy(F.col("bm25").desc(), F.col("term"))
     return (
         postings.withColumn("rank", F.row_number().over(w).cast("long"))

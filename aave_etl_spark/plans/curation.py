@@ -15,7 +15,7 @@ to a core's stages. Multiple mixing policies (static rates, planned
 temperature rates, a quality-weighted budget draw) certify off ONE
 shared core instead of each re-running the full chain — the round-9
 bench showed two certifications paying the identical C4→dedup→gate→DSIR
-chain twice inside one family head. :func:`curate` composes the two for
+chain twice. :func:`curate` composes the two for
 single-call use.
 
 Stage semantics mirror the curation literature, not any reference file

@@ -242,8 +242,9 @@ def _emb_pq_prefilter_dups(store, batch: DataFrame, day: str) -> DataFrame:
             "query_id",
             # ONE fused Arrow stage per shortlisted pair
             # (`similarity._pair_cos_udf`): bitwise the former
-            # dot_arrow/(qn*cn) with per-row norms, minus two
-            # ArrowEvalPython boundaries (guide §4.2)
+            # dot_arrow/(qn*cn) with per-row norms on nonzero-norm pairs,
+            # minus two ArrowEvalPython boundaries (guide §4.2); a
+            # zero-norm pair scores NULL, so the filter below drops it
             F.round(
                 similarity._pair_cos_udf()(F.col("_qv"), F.col("_cv")), 6
             ).alias("_cs"),

@@ -65,7 +65,6 @@ def dedup_keep_last(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "lead_day_pairing",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH daily AS (
       SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, sum(value) AS day_value
@@ -107,7 +106,6 @@ def lead_day_pairing(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "lag_daily_ratio",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH daily AS (
       SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, sum(value) AS day_value
@@ -141,7 +139,6 @@ def lag_daily_ratio(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "forward_fill_ignore_nulls",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     SELECT event_id, user_id, ts,
            last_value(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
@@ -173,7 +170,6 @@ def forward_fill_ignore_nulls(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "json_extract_agg",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_bucket,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -201,7 +197,6 @@ def json_extract_agg(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "date_rollup",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
            CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS next_day,
@@ -233,7 +228,6 @@ def date_rollup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "vesting_clamp",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH streams AS (
       SELECT event_id, event_type, value,
@@ -326,7 +320,6 @@ def sessionize_events(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "json_struct_parse",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_rows,
@@ -357,7 +350,6 @@ def json_struct_parse(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "asof_last_purchase",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH l AS (
       SELECT event_id, user_id, ts, event_type, value,
@@ -435,7 +427,6 @@ GROUP BY GROUPING SETS ((d), (m))
 
 @register(
     "hypertable_rollup",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=_HYPER_SQL,
     doc=(
         "hypertable-style multi-granularity rollup: day+month continuous"
@@ -465,7 +456,6 @@ def hypertable_rollup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "stream_sessionize_store",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle="""
     WITH g AS (
       SELECT user_id, ts, event_id, value,
@@ -591,7 +581,6 @@ def stream_sessionize_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "stream_dedup_store",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle="""
     SELECT event_id, user_id, event_type, round(value, 6) AS value
     FROM events
@@ -689,7 +678,6 @@ def stream_dedup_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "stream_rollup_store",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle="""
     SELECT event_type,
            CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS window_start_us,

@@ -75,9 +75,6 @@ WHERE c.measure_type IS NOT NULL
 
 @register(
     "all_financials_shape",
-    export=False,  # certified via the datamart_real heads (queries/datamart_real.py:
-    # the verbatim all_financials / treasury models cover this shape); kept
-    # pytest-gated here as the standalone operator-chain twin
     oracle=FLAGSHIP_ORACLE,
     doc=(
         "Flagship: all_financials chain — agg → LEAD pairing + last-day drop "
@@ -141,9 +138,6 @@ def all_financials_shape(spark, sf_dir):
 
 @register(
     "treasury_rollup_shape",
-    export=False,  # certified via the datamart_real heads (queries/datamart_real.py:
-    # the verbatim all_financials / treasury models cover this shape); kept
-    # pytest-gated here as the standalone operator-chain twin
     oracle="""
     WITH base AS (
       SELECT l_returnflag AS market, CAST(date_trunc('day', l_shipdate) AS TIMESTAMP) AS day,

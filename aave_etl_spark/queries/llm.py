@@ -24,7 +24,6 @@ _TOKS = f"string_split({_NORM}, ' ')"
 
 @register(
     "llm_dedup_exact",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     SELECT md5({_NORM}) AS digest,
            min(doc_id) AS keeper_id,
@@ -40,7 +39,6 @@ def llm_dedup_exact(spark, sf_dir):
 
 @register(
     "llm_fingerprint",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH fp AS (
       SELECT doc_id,
@@ -61,7 +59,6 @@ def llm_fingerprint(spark, sf_dir):
 
 @register(
     "llm_ngram_topk",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=r"""
     WITH toks AS (
       SELECT doc_id,
@@ -85,7 +82,6 @@ def llm_ngram_topk(spark, sf_dir):
 
 @register(
     "llm_token_stats",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH base AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
     SELECT doc_id,
@@ -105,7 +101,6 @@ def llm_token_stats(spark, sf_dir):
 
 @register(
     "llm_quality_features",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH base AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
     SELECT doc_id,
@@ -249,7 +244,6 @@ def llm_ngram_jaccard(spark, sf_dir):
 
 @register(
     "llm_span_dedup",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH d AS (SELECT doc_id, {_TOKS} AS l FROM documents),
     w AS (
@@ -281,7 +275,6 @@ def llm_span_dedup(spark, sf_dir):
 
 @register(
     "llm_span_rewrite",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH d AS (
       SELECT doc_id, {_TOKS} AS l FROM documents WHERE doc_id % 4 = 0
@@ -404,7 +397,6 @@ _MARGIN_COS = (
 
 @register(
     "llm_margin_topk",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
@@ -512,10 +504,6 @@ def llm_srp_bucket_pairs(spark, sf_dir):
 
 @register(
     "llm_binary_payload",
-    export=False,  # driver slot held by its family head (pivot_family):
-    # demoted in round 12 to free the exported slot corpus_state_family
-    # (the time_rollup_family split) takes — the registry holds the line
-    # at exactly 50 exported heads
     oracle="""
     SELECT doc_id,
            CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS byte_len,
@@ -581,7 +569,6 @@ def llm_media_features(spark, sf_dir):
 
 @register(
     "llm_frame_sample",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH m AS (
       SELECT doc_id AS media_id, (n_chars % 30) + 1 AS duration_s, 24 AS fps
@@ -705,7 +692,6 @@ def llm_ivf_topk(spark, sf_dir):
 
 @register(
     "llm_ann_recall",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH truth AS ({_TOPK_ORACLE}),
     approx AS ({_IVF_ORACLE}),
@@ -751,7 +737,6 @@ def llm_ann_recall(spark, sf_dir):
 
 @register(
     "llm_semantic_dedup",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     cent AS (SELECT vec_id AS cell_id, e AS ce FROM v WHERE vec_id < 16),
@@ -801,7 +786,6 @@ def llm_semantic_dedup(spark, sf_dir):
 
 @register(
     "llm_embed_quantize",
-    export=False,  # driver slot held by its family head (emb_quantize_family)
     oracle="""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     s AS (
@@ -858,7 +842,6 @@ def llm_embed_quantize(spark, sf_dir):
 
 @register(
     "llm_kmv_distinct",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH h AS (SELECT DISTINCT lang, md5(text) AS h FROM documents),
     rn AS (SELECT lang, h,
@@ -929,7 +912,6 @@ def _kmv_fine_sketches(spark, sf_dir):
 
 @register(
     "llm_kmv_merge",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_KMV_MERGE_ORACLE,
     doc=(
         "LLM corpus stats: MERGEABLE KMV — per-(lang, source) bottom-k"
@@ -948,7 +930,6 @@ def llm_kmv_merge(spark, sf_dir):
 
 @register(
     "llm_kmv_atrest",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_KMV_MERGE_ORACLE,  # identical output contract to llm_kmv_merge
     doc=(
         "LLM corpus stats: the AT-REST KMV rollup — per-(lang, source)"
@@ -1039,7 +1020,6 @@ def _hh_fine_sketches(spark, sf_dir):
 
 @register(
     "llm_topk_merge",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_TOPK_MERGE_ORACLE,
     doc=(
         "LLM corpus stats: MERGEABLE heavy hitters — per-(lang, shard)"
@@ -1058,7 +1038,6 @@ def llm_topk_merge(spark, sf_dir):
 
 @register(
     "llm_hh_atrest",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_TOPK_MERGE_ORACLE,  # identical output contract to llm_topk_merge
     doc=(
         "LLM corpus stats: the AT-REST heavy-hitters rollup — the"
@@ -1127,7 +1106,6 @@ def _rsq_fine_sketches(spark, sf_dir):
 
 @register(
     "llm_rowsample_quantiles",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_RSQ_ORACLE,
     doc=(
         "LLM corpus stats: MERGEABLE row-sample QUANTILE sketch — the"
@@ -1149,7 +1127,6 @@ def llm_rowsample_quantiles(spark, sf_dir):
 
 @register(
     "llm_rsq_atrest",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_RSQ_ORACLE,  # identical output contract to llm_rowsample_quantiles
     doc=(
         "LLM corpus stats: the AT-REST row-sample quantile rollup —"
@@ -1182,7 +1159,6 @@ def llm_rsq_atrest(spark, sf_dir):
 
 @register(
     "llm_lsh_verified_dups",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH {_MH_CTES},
     cand AS (
@@ -1224,7 +1200,6 @@ def llm_lsh_verified_dups(spark, sf_dir):
 
 @register(
     "llm_repetition",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     big AS (
@@ -1250,7 +1225,6 @@ def llm_repetition(spark, sf_dir):
 
 @register(
     "llm_doc_chunks",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     w AS (
@@ -1277,7 +1251,6 @@ def llm_doc_chunks(spark, sf_dir):
 
 @register(
     "llm_dedup_cluster",
-    export=False,  # driver slot held by its family head (collect_family)
     oracle=f"""
     WITH RECURSIVE {_MH_CTES},
     cand AS (
@@ -1344,7 +1317,6 @@ _UHASH = (
 
 @register(
     "llm_stratified_sample",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH r AS (
       SELECT lang, doc_id,
@@ -1371,7 +1343,6 @@ def llm_stratified_sample(spark, sf_dir):
 
 @register(
     "llm_train_test_split",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH s AS (
       SELECT lang,
@@ -1400,7 +1371,6 @@ def llm_train_test_split(spark, sf_dir):
 
 @register(
     "llm_scrub_pii",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=r"""
     WITH s AS (
       SELECT doc_id,
@@ -1433,7 +1403,6 @@ def llm_scrub_pii(spark, sf_dir):
 
 @register(
     "llm_bm25_topk",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest({_TOKS}) AS term FROM documents
@@ -1474,7 +1443,7 @@ def llm_bm25_topk(spark, sf_dir):
     # are value-identical by construction — the bm25-trio store-prefix
     # sharing the r13 verdict prescribed (guide §5/§6)
     store, tbl, _docs = _bm25_index_store(spark, sf_dir)
-    return text.bm25_topk_from_postings(store.read_bucketed(tbl), k=3)
+    return text.bm25_topk_from_postings(text.bm25_index_postings(store, tbl), k=3)
 
 
 # The sparse-retrieval arm's CTE chain, shared verbatim by the in-flight
@@ -1545,7 +1514,6 @@ _RRF_FUSE_TAIL = """fused AS (
 
 @register(
     "llm_hybrid_rrf",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=f"""
     WITH {_BM25_SPARSE_CTES},
     {_RRF_SR_CTE},
@@ -1596,7 +1564,6 @@ def llm_hybrid_rrf(spark, sf_dir):
 
 @register(
     "llm_knn_classify",
-    export=False,  # driver slot held by its family head (collect_family)
     oracle="""
     WITH dq AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                 FROM embeddings WHERE vec_id < 8),
@@ -1641,7 +1608,6 @@ def llm_knn_classify(spark, sf_dir):
 
 @register(
     "llm_bm25_index_search",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH {_BM25_SPARSE_CTES}
     SELECT query_id, candidate_id, bm25_score,
@@ -1665,7 +1631,6 @@ def llm_bm25_index_search(spark, sf_dir):
 
 @register(
     "llm_bm25_capped",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH {_BM25_SPARSE_CTES},
     capped AS (
@@ -1820,7 +1785,6 @@ def _stopterms_result(stop, posts, docs):
 
 @register(
     "llm_bm25_stopterms",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_BM25_STOPTERMS_ORACLE,
     doc=(
         "LLM retrieval: DATA-PLANNED stop terms — the mergeable heavy-"
@@ -1838,7 +1802,7 @@ def llm_bm25_stopterms(spark, sf_dir):
     from aave_etl_spark.operators.text import discover_stop_terms
 
     store, tbl, docs = _bm25_index_store(spark, sf_dir)
-    posts = store.read_bucketed(tbl)
+    posts = text.bm25_index_postings(store, tbl)
     return _stopterms_result(
         discover_stop_terms(posts, m=16, k=5, n_shards=4), posts, docs
     )
@@ -1846,7 +1810,6 @@ def llm_bm25_stopterms(spark, sf_dir):
 
 @register(
     "llm_bm25_stopterms_atrest",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_BM25_STOPTERMS_ORACLE,  # identical contract to the in-flight twin
     doc=(
         "LLM retrieval: the AT-REST stop-term discovery — the per-shard"
@@ -1869,7 +1832,7 @@ def llm_bm25_stopterms_atrest(spark, sf_dir):
     )
 
     store, tbl, docs = _bm25_index_store(spark, sf_dir)
-    posts = store.read_bucketed(tbl)
+    posts = text.bm25_index_postings(store, tbl)
     hh_store = TableStore(
         spark, session_scratch_dir(spark, "aave_etl_spark_stophh", corpus_key(sf_dir))
     )
@@ -1891,7 +1854,6 @@ def llm_bm25_stopterms_atrest(spark, sf_dir):
 
 @register(
     "llm_sequence_pack",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH RECURSIVE base AS (
       SELECT lang, doc_id,
@@ -1934,7 +1896,6 @@ def llm_sequence_pack(spark, sf_dir):
 
 @register(
     "llm_span_pack",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH RECURSIVE d AS (
       SELECT doc_id, {_TOKS} AS l FROM documents WHERE doc_id % 4 = 0
@@ -2019,7 +1980,6 @@ def llm_span_pack(spark, sf_dir):
 
 @register(
     "llm_curation_gate",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH base AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
     feat AS (
@@ -2144,7 +2104,6 @@ def llm_curation_gate(spark, sf_dir):
 
 @register(
     "llm_decontaminate",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH m AS (
       SELECT doc_id,
@@ -2197,7 +2156,6 @@ def llm_decontaminate(spark, sf_dir):
 
 @register(
     "llm_length_percentiles",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle="""
     SELECT lang,
            quantile_cont(n_chars, 0.5) AS p50,
@@ -2228,7 +2186,6 @@ _MIX_WEIGHTS = [("en", 0.9), ("fr", 0.5), ("de", 0.5), ("es", 0.5), ("zh", 0.2)]
 
 @register(
     "llm_line_dedup",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle="""
     WITH planted AS (
       SELECT doc_id,
@@ -2294,7 +2251,6 @@ def llm_line_dedup(spark, sf_dir):
 
 @register(
     "llm_mix_plan",
-    export=False,  # driver slot held by its family head (union_family)
     oracle="""
     WITH m AS (
       SELECT lang, CAST(sum(n_chars) AS DOUBLE) AS t
@@ -2328,7 +2284,6 @@ def llm_mix_plan(spark, sf_dir):
 
 @register(
     "llm_weighted_sample",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH wm AS (
       SELECT lang, max(CAST(n_chars AS DOUBLE)) AS wmax
@@ -2375,7 +2330,6 @@ def llm_weighted_sample(spark, sf_dir):
 
 @register(
     "llm_data_mix",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH w AS (
       SELECT * FROM (VALUES {", ".join(f"('{g}', {f})" for g, f in _MIX_WEIGHTS)})
@@ -2421,7 +2375,6 @@ def llm_data_mix(spark, sf_dir):
 
 @register(
     "llm_simhash_near_dup",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest({_TOKS}) AS token FROM documents
@@ -2470,7 +2423,6 @@ def llm_simhash_near_dup(spark, sf_dir):
 
 @register(
     "llm_mean_pool",
-    export=False,  # driver slot held by its family head (collect_family)
     oracle="""
     WITH v AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, vec_id % 8 AS shard
@@ -2516,7 +2468,6 @@ def llm_mean_pool(spark, sf_dir):
 
 @register(
     "llm_quality_topfrac",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH base AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
     scored AS (
@@ -2566,7 +2517,6 @@ def llm_quality_topfrac(spark, sf_dir):
 
 @register(
     "llm_vocab_coverage",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH tok AS (SELECT lang, unnest({_TOKS}) AS token FROM documents),
     freq AS (SELECT lang, token, count(*) AS f FROM tok GROUP BY lang, token),
@@ -2606,7 +2556,6 @@ def llm_vocab_coverage(spark, sf_dir):
 
 @register(
     "llm_unigram_logprob",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
     freq AS (SELECT token, count(*) AS tf FROM tok GROUP BY token),
@@ -2631,7 +2580,6 @@ def llm_unigram_logprob(spark, sf_dir):
 
 @register(
     "llm_stupid_backoff",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH tr AS (SELECT {_TOKS} AS l FROM documents WHERE doc_id % 4 = 0),
     uni AS (SELECT w, CAST(count(*) AS BIGINT) AS tf
@@ -2735,7 +2683,6 @@ def _bpe_oracle(n_merges: int) -> str:
 
 @register(
     "llm_bpe_vocab",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=_bpe_oracle(4),
     doc=(
         "LLM tokenization: BPE vocabulary INDUCTION (Sennrich et al."
@@ -2771,7 +2718,6 @@ def llm_bpe_vocab(spark, sf_dir):
 
 @register(
     "llm_c4_line_filter",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     -- the synthetic corpus is single-line; derive line structure the same
     -- way on both engines (every ' table ' becomes a sentence boundary)
@@ -2827,7 +2773,6 @@ _DSIR_GUMBEL = (
 
 @register(
     "llm_dsir_resample",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=f"""
     WITH d AS (
       SELECT doc_id, {_TOKS} AS l, (lang = 'en') AS is_target FROM documents
@@ -2890,7 +2835,6 @@ def llm_dsir_resample(spark, sf_dir):
 
 @register(
     "llm_ivf_index_search",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=_IVF_ORACLE,  # identical output contract to llm_ivf_topk
     doc=(
         "LLM similarity: the AT-REST IVF path — build the index through"
@@ -2961,7 +2905,6 @@ def _rp_oracle(r: int = 16) -> str:
 
 @register(
     "llm_rp_project",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle=_rp_oracle(r=16),
     doc=(
         "LLM similarity: Johnson-Lindenstrauss random projection 64->16 dims"
@@ -3323,7 +3266,7 @@ FROM wp
 # stage-6/7 TAIL — the expensive stage-1..5 chain (C4 → exact dedup →
 # LSH/Jaccard/CC near-dup → quality/lang gate → DSIR) is byte-identical
 # across them. Each used to re-run the whole chain (r9 bench: ~6.5 s of
-# duplicated certified work PER tail inside one family head); now the
+# duplicated certified work PER tail); now the
 # checkpointed core is built once per (session, corpus) and every tail
 # reads the same materialized stage frames — the same build-once/
 # read-many discipline as the at-rest sketch/index certifications
@@ -3360,7 +3303,6 @@ def _shared_curation_core(spark, sf_dir):
 
 @register(
     "llm_curation_tempmix",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_CURATION_TEMPMIX_ORACLE,
     doc=(
         "LLM curation: the PLANNED-mix pipeline shape — temperature"
@@ -3396,7 +3338,6 @@ def llm_curation_tempmix(spark, sf_dir):
 
 @register(
     "llm_curation_pipeline",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_CURATION_PIPELINE_ORACLE,
     doc=(
         "LLM curation PIPELINE end-to-end: C4 line-clean -> exact dedup on"
@@ -3438,7 +3379,6 @@ def llm_curation_pipeline(spark, sf_dir):
 
 @register(
     "llm_curation_wdraw",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=_CURATION_WDRAW_ORACLE,
     doc=(
         "LLM curation: the QUALITY-WEIGHTED budget draw wired into the"
@@ -3486,7 +3426,6 @@ def llm_curation_wdraw(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "llm_stream_ingest",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle=f"""
     WITH d AS (SELECT doc_id, md5({_NORM}) AS digest FROM documents),
     keep AS (SELECT digest, min(doc_id) AS doc_id FROM d GROUP BY digest)
@@ -4058,7 +3997,6 @@ def _corpus_run_store(spark, sf_dir):
 
 @register(
     "llm_corpus_pipeline_run",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=_CORPUS_RUN_ORACLE,
     doc=(
         "the DAILY training-corpus pipeline run END-TO-END through the"
@@ -4098,7 +4036,6 @@ def llm_corpus_pipeline_run(spark, sf_dir):
 
 @register(
     "llm_corpus_span_state",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH {_CORPUS_CLEAN_CTES},
     spw AS (
@@ -4218,7 +4155,6 @@ _CORPUS_LM_CTES = """lml AS (SELECT day, {toks} AS l FROM cclean),
 
 @register(
     "llm_corpus_lm",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH {_CORPUS_CLEAN_CTES},
     {_CORPUS_LM_CTES}
@@ -4260,7 +4196,6 @@ def llm_corpus_lm(spark, sf_dir):
 
 @register(
     "llm_corpus_lm_keep",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -4340,7 +4275,6 @@ _CORPUS_DSIR_CTES = f"""dl AS (SELECT doc_id, day, lang, {_TOKS} AS l FROM cclea
 
 @register(
     "llm_corpus_dsir_state",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -4388,7 +4322,6 @@ def llm_corpus_dsir_state(spark, sf_dir):
 
 @register(
     "llm_corpus_dsir_resample",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -4478,7 +4411,6 @@ def llm_corpus_dsir_resample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "llm_corpus_stopterms",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -4548,7 +4480,6 @@ def llm_corpus_stopterms(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "llm_corpus_retrieval",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -4662,7 +4593,6 @@ _GOPHER_STOPS = "['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with']"
 
 @register(
     "llm_gopher_quality",
-    export=False,  # driver slot held by its family head (llm_text_stats)
     oracle=f"""
     WITH src AS (SELECT doc_id, {_GOPHER_TXT_SQL} AS t FROM documents),
     b AS (
@@ -4750,7 +4680,6 @@ def llm_gopher_quality(spark, sf_dir):
 
 @register(
     "llm_perplexity_buckets",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
     freq AS (SELECT token, count(*) AS tf FROM tok GROUP BY token),
@@ -4798,7 +4727,6 @@ def llm_perplexity_buckets(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "llm_minhash_index_match",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=f"""
     WITH {_MH_CTES}
     SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
@@ -4880,7 +4808,6 @@ _PQ_ORACLE = """
 
 @register(
     "llm_pq_topk",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=_PQ_ORACLE,
     doc=(
         "LLM similarity: product-quantization top-k with asymmetric"
@@ -4897,7 +4824,6 @@ def llm_pq_topk(spark, sf_dir):
 
 @register(
     "llm_epoch_shards",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle="""
     WITH keyed AS (
       SELECT doc_id,
@@ -5013,7 +4939,6 @@ _IVFPQ_ORACLE = f"""
 
 @register(
     "llm_ivfpq_topk",
-    export=False,  # driver slot held by its family head (collect_family)
     oracle=_IVFPQ_ORACLE,
     doc=(
         "LLM similarity: IVF-PQ composed ANN — 2-of-8-cell probe pruning"
@@ -5031,7 +4956,6 @@ def llm_ivfpq_topk(spark, sf_dir):
 
 @register(
     "llm_ivfpq_index_search",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=_IVFPQ_ORACLE,  # identical output contract to llm_ivfpq_topk
     doc=(
         "LLM similarity: the AT-REST IVF-PQ path — codes persisted"
@@ -5085,7 +5009,6 @@ def _ivfpq_index_arm(spark, sf_dir, k):
 
 @register(
     "llm_hybrid_rrf_atrest",
-    export=False,  # driver slot held by its family head (semi_anti_family)
     oracle=f"""
     WITH {_BM25_SPARSE_CTES},
     {_IVFPQ_CTES},
@@ -5330,7 +5253,6 @@ def _emb_run_store(spark, sf_dir):
 
 @register(
     "llm_emb_pipeline_run",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES}
     SELECT 'clean' AS part, CAST(day AS STRING) AS k1,
@@ -5374,7 +5296,6 @@ def llm_emb_pipeline_run(spark, sf_dir):
 
 @register(
     "llm_emb_index_state",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES}
     SELECT CAST(day AS STRING) AS day, vec_id, CAST(cell_id AS BIGINT) AS cell_id
@@ -5401,7 +5322,6 @@ def llm_emb_index_state(spark, sf_dir):
 
 @register(
     "llm_emb_search_atrest",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES},
     eq AS (SELECT vec_id AS query_id, e AS qv FROM ev WHERE vec_id < 8),
@@ -5445,7 +5365,6 @@ def llm_emb_search_atrest(spark, sf_dir):
 
 @register(
     "llm_emb_index_health",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES}
     SELECT CAST(count(*) AS BIGINT) AS n_vectors,
@@ -5491,7 +5410,6 @@ def llm_emb_index_health(spark, sf_dir):
 
 @register(
     "llm_corpus_decontam",
-    export=False,  # driver slot held by its family head (corpus_state_family)
     oracle=f"""
     WITH {_CORPUS_CLEAN_CTES}
     SELECT CAST(day AS VARCHAR) AS day, doc_id, n_shingles, n_overlap,
@@ -5586,7 +5504,6 @@ _EMB_PQ_CTES = f"""pqsd AS (
 
 @register(
     "llm_emb_pq_state",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES},
     {_EMB_PQ_CTES}
@@ -5625,7 +5542,6 @@ def llm_emb_pq_state(spark, sf_dir):
 
 @register(
     "llm_emb_pq_search_atrest",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES},
     {_EMB_PQ_CTES},
@@ -5693,7 +5609,6 @@ def llm_emb_pq_search_atrest(spark, sf_dir):
 
 @register(
     "llm_corpus_shards",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH RECURSIVE
     {_CORPUS_CLEAN_CTES},
@@ -5741,7 +5656,6 @@ def llm_corpus_shards(spark, sf_dir):
 
 @register(
     "llm_emb_pq_prefilter_dedup",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH {_EMB_CTES}
     SELECT vec_id FROM edup WHERE vec_id % 2 = 0
@@ -5787,7 +5701,6 @@ def llm_emb_pq_prefilter_dedup(spark, sf_dir):
 
 @register(
     "llm_emb_stream_ingest",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle=f"""
     WITH {_EMB_CTES}
     SELECT vec_id, CAST(cell_id AS BIGINT) AS cell_id FROM eassign
@@ -5906,7 +5819,6 @@ def llm_emb_stream_ingest(spark, sf_dir):
 
 @register(
     "llm_emb_dedup_recall",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle=f"""
     WITH ev AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings

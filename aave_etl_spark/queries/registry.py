@@ -1,9 +1,9 @@
 """Query registry: name → (Spark builder, DuckDB oracle SQL, §2 coverage).
 
-Contract (driver): builder(spark, sf_dir) -> DataFrame; oracle is ANSI SQL
-DuckDB runs over the same parquet tables registered as views. Column names
-(and practically, types) must match between the two — every computed column
-is aliased identically on both sides.
+Contract: builder(spark, sf_dir) -> DataFrame; oracle is ANSI SQL DuckDB
+runs over the same parquet tables registered as views. Column names (and
+practically, types) must match between the two — every computed column is
+aliased identically on both sides.
 """
 
 from __future__ import annotations
@@ -22,26 +22,18 @@ class Query:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str
-    export: bool = True
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = "", export: bool = True):
-    """Decorator registering a query builder with its oracle SQL.
-
-    export=False keeps the query in the local pytest oracle-parity gate but
-    out of the driver-facing `queries()` surface — used for singleton
-    queries whose driver slot is taken by a union-aligned family head
-    (queries/families.py): the driver certifies at most the first 50
-    registry entries, so cheap singletons share slots.
-    """
+def register(name: str, oracle: str | None = None, doc: str = ""):
+    """Decorator registering a query builder with its oracle SQL."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(name=name, builder=fn, oracle=oracle, doc=doc, export=export)
+        _REGISTRY[name] = Query(name=name, builder=fn, oracle=oracle, doc=doc)
         return fn
 
     return deco
@@ -49,11 +41,6 @@ def register(name: str, oracle: str | None = None, doc: str = "", export: bool =
 
 def all_queries() -> dict[str, Query]:
     return dict(_REGISTRY)
-
-
-def exported_queries() -> dict[str, Query]:
-    """The driver-facing subset (≤50 so every query gets a correctness row)."""
-    return {n: q for n, q in _REGISTRY.items() if q.export}
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

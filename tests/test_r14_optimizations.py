@@ -22,7 +22,7 @@ def _vecs(spark, rows):
 
 # ---------------------------------------------------------------------------
 # _pair_cos_udf: bitwise the split dot_arrow/(norm*norm) form, including the
-# NULL contract (null operand / length mismatch -> NULL).
+# NULL contract (null operand / length mismatch / zero norm -> NULL).
 # ---------------------------------------------------------------------------
 def test_pair_cos_udf_matches_split_form(spark):
     import random
@@ -57,6 +57,8 @@ def test_pair_cos_udf_null_contract(spark):
             (1, [1.0, 2.0], [3.0, 4.0]),
             (2, None, [1.0, 1.0]),          # null operand -> NULL
             (3, [1.0, 2.0, 3.0], [1.0, 2.0]),  # length mismatch -> NULL
+            (4, [0.0, 0.0], [1.0, 2.0]),    # zero norm -> NULL, not NaN
+            (5, [], []),                    # zero length -> NULL, not NaN
         ],
         "k long, a array<double>, b array<double>",
     )
@@ -65,6 +67,7 @@ def test_pair_cos_udf_null_contract(spark):
     ).collect()}
     assert out[1] == pytest.approx(11.0 / ((5.0 ** 0.5) * (25.0 ** 0.5)))
     assert out[2] is None and out[3] is None
+    assert out[4] is None and out[5] is None
 
 
 # ---------------------------------------------------------------------------
@@ -144,6 +147,27 @@ def test_bm25_topk_from_postings_matches_inflight(spark):
     assert direct == via_postings
 
 
+def test_bm25_topk_from_stored_postings_checks_build_params(spark, tmp_path):
+    """Ranking the at-rest postings goes through the build-params check:
+    an index built with non-default (k1, b) raises under the defaults and
+    ranks under its own pair."""
+    from aave_etl_spark.io.table_store import TableStore
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta beta gamma"), (2, "alpha alpha delta")],
+        "doc_id long, text string",
+    )
+    store = TableStore(spark, str(tmp_path))
+    text.bm25_index_build(store, docs, "bm25_k2", k1=2.0, n_buckets=2)
+    with pytest.raises(ValueError, match="build params"):
+        text.bm25_topk_from_postings(text.bm25_index_postings(store, "bm25_k2"))
+    ranked = text.bm25_topk_from_postings(
+        text.bm25_index_postings(store, "bm25_k2", k1=2.0), k=2
+    )
+    direct = text.bm25_topk(docs, k=2, k1=2.0)
+    assert sorted(ranked.collect()) == sorted(direct.collect())
+
+
 # ---------------------------------------------------------------------------
 # fan_out_scan: fires only on under-partitioned narrow scans; declines
 # aggregates; never changes the row set.
@@ -162,6 +186,23 @@ def test_fan_out_scan_gating_and_row_preservation(spark, tmp_path):
     # aggregate-shaped inputs are declined outright (same plan object back)
     agg = scan.groupBy("doc_id").count()
     assert fan_out_scan(agg, "doc_id") is agg
+
+
+def test_fan_out_scan_ignores_column_names(spark, tmp_path):
+    """The plan-shape guard matches plan node classes, not plan text: a
+    narrow scan whose column is named ``JoinDate`` gets the same decision
+    as the same scan with that column renamed."""
+    decisions = []
+    for i, col in enumerate(("JoinDate", "joined_on")):
+        path = str(tmp_path / f"t{i}.parquet")
+        spark.range(100).select(
+            F.col("id").alias("doc_id"), F.col("id").alias(col)
+        ).coalesce(1).write.parquet(path)
+        scan = spark.read.parquet(path)
+        decisions.append(fan_out_scan(scan, "doc_id") is scan)
+    assert decisions[0] == decisions[1]
+    if spark.sparkContext.defaultParallelism > 1:
+        assert decisions == [False, False]  # both fan out
 
 
 # ---------------------------------------------------------------------------
