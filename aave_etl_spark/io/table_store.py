@@ -26,9 +26,10 @@ table's history.
 from __future__ import annotations
 
 import os
+import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from aave_etl_spark.localframe import local_df
@@ -131,7 +132,7 @@ class TableStore:
         return os.path.join(self.root, name)
 
     def exists(self, name: str) -> bool:
-        self._recover_interrupted_compact(name)
+        self._recover_interrupted_swap(name)
         return os.path.isdir(self._path(name))
 
     # --- multi-table completion markers -----------------------------------
@@ -158,13 +159,45 @@ class TableStore:
     def is_complete(self, tag: str) -> bool:
         return os.path.exists(os.path.join(self.root, f"{tag}.__complete"))
 
-    def _recover_interrupted_compact(self, name: str) -> None:
-        """Self-heal the one vulnerable window in :meth:`compact`'s swap: a
-        crash between ``os.replace(live, old)`` and ``os.replace(tmp, live)``
-        leaves no live directory but a complete copy at ``<name>.__old``.
-        Without this, ``exists()`` returns False and ``read()`` silently
-        serves an EMPTY frame (missing-table K3 semantics) for a table whose
-        data is sitting intact one rename away — restore it instead.
+    def _staging_path(self, name: str) -> str:
+        """Sibling directory a staged write, a compaction or a snapshot
+        restore lands in before :meth:`_swap_in` renames it live. Readers
+        never look there."""
+        return self._path(name) + ".__staging"
+
+    def _swap_in(self, name: str, src: str) -> None:
+        """Make the complete table at ``src`` the live ``name``: move the
+        live directory aside to ``<name>.__old``, rename ``src`` in, then
+        remove the old copy — so at every instant at least one complete
+        copy exists on disk. The only vulnerable window is between the two
+        atomic renames; the ``.__swap_pending`` marker written first lets
+        :meth:`_recover_interrupted_swap` heal a crash there. A table that
+        does not exist yet needs no swap: one rename publishes it."""
+        live = self._path(name)
+        if not os.path.isdir(live):
+            os.replace(src, live)
+            return
+        old = live + ".__old"
+        marker = live + ".__swap_pending"
+        if os.path.exists(old):  # debris from a crashed prior swap
+            shutil.rmtree(old)
+        # marker first: recovery restores .__old ONLY while it exists, so a
+        # crash after the swap can never resurrect the stale copy
+        with open(marker, "w") as f:
+            f.write(name)
+        os.replace(live, old)
+        os.replace(src, live)
+        os.remove(marker)
+        shutil.rmtree(old)
+
+    def _recover_interrupted_swap(self, name: str) -> None:
+        """Self-heal the one vulnerable window in :meth:`_swap_in` (shared
+        by staged writes, compaction and snapshot restore): a crash between
+        ``os.replace(live, old)`` and ``os.replace(src, live)`` leaves no
+        live directory but a complete copy at ``<name>.__old``. Without
+        this, ``exists()`` returns False and ``read()`` silently serves an
+        EMPTY frame (missing-table K3 semantics) for a table whose data is
+        sitting intact one rename away — restore it instead.
 
         The ``.__swap_pending`` marker distinguishes MID-swap debris (crash
         between the renames — restore) from POST-swap debris (crash after
@@ -172,8 +205,6 @@ class TableStore:
         it, even if the live directory was later removed externally). The
         restore rename tolerates a concurrent process winning the same
         recovery (FileNotFoundError → already healed)."""
-        import shutil
-
         live = self._path(name)
         old = live + ".__old"
         marker = live + ".__swap_pending"
@@ -187,9 +218,9 @@ class TableStore:
                 # post-swap debris: live is the newer copy, old is stale
                 shutil.rmtree(old, ignore_errors=True)
                 # only NOW is a lingering marker provably from a crashed
-                # (not in-flight) compact — (live, old, marker) can't occur
+                # (not in-flight) swap — (live, old, marker) can't occur
                 # mid-swap. A bare (live, marker, no old) state is an
-                # ACTIVE compact between marker-write and its first rename;
+                # ACTIVE swap between marker-write and its first rename;
                 # deleting that marker would re-open the silent-empty
                 # window the protocol closes, so leave it alone.
                 try:
@@ -225,6 +256,26 @@ class TableStore:
         (bigquery_io_manager.py:115, 168-169); returns whether data landed
         (False = empty skip) so multi-table writers can gate completion
         markers on actual writes.
+
+        The skip is decided AFTER the write, from a row count the write's
+        own Spark job observes (``DataFrame.observe``), so the plan runs
+        once — never once to probe emptiness and again to write. Each mode
+        makes an empty write harmless in its own way:
+
+        - dynamic partition overwrite and partitioned append write in
+          place: an empty write replaces no partition, and the bare
+          directory Spark leaves for a table that did not exist before is
+          removed, so a missing table stays missing (K3);
+        - unpartitioned overwrite and ``full_refresh`` would destroy the
+          live table on an empty write, so they land in the sibling
+          ``<name>.__staging`` directory, swapped in (:meth:`_swap_in`)
+          only when rows were written;
+        - unpartitioned append also lands in ``<name>.__staging``; its
+          part files move into the live directory only when rows were
+          written.
+
+        Staging debris left by a crashed writer is never read and is
+        removed by the next write of the table.
 
         ``cluster_by`` sort-clusters the data before writing: rows are
         range-repartitioned then sorted within tasks on
@@ -265,9 +316,11 @@ class TableStore:
         Size the filter with ``bloom_ndv`` (expected distinct values per
         row group — overestimating costs bytes, underestimating costs
         false positives)."""
-        _schema_memo_invalidate(self._path(name))
-        if df.isEmpty():
-            return False
+        live = self._path(name)
+        staging = self._staging_path(name)
+        _schema_memo_invalidate(live)
+        existed = self.exists(name)  # also heals an interrupted swap
+        shutil.rmtree(staging, ignore_errors=True)
         drop_after: list[str] = []
         if zorder_by:
             if cluster_by:
@@ -297,23 +350,44 @@ class TableStore:
                 "_partition_key",
                 F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols]),
             ).withColumn("_partition_type", F.lit("multi" if len(partition_cols) > 1 else "single"))
-            # Pin dynamic overwrite at the writer (not ambient session conf):
-            # partition overwrite must replace only the slices present in
-            # `df` regardless of how the caller built their session.
-            writer = stamped.write.partitionBy(*partition_cols).option(
-                "partitionOverwriteMode", "static" if full_refresh else "dynamic"
-            )
         else:
             stamped = stamped.withColumn("_partition_key", F.lit(None).cast("string")).withColumn(
                 "_partition_type", F.lit(None).cast("string")
             )
-            writer = stamped.write
-        mode = "append" if append_only else "overwrite"
+        # the write job itself counts the rows it writes
+        observed = Observation()
+        writer = stamped.observe(observed, F.count(F.lit(1)).alias("rows")).write
+        if partition_cols:
+            # Pin dynamic overwrite at the writer (not ambient session conf):
+            # partition overwrite must replace only the slices present in
+            # `df` regardless of how the caller built their session.
+            writer = writer.partitionBy(*partition_cols).option(
+                "partitionOverwriteMode", "static" if full_refresh else "dynamic"
+            )
         for c in bloom_cols or []:
             writer = writer.option(
                 f"parquet.bloom.filter.enabled#{c}", "true"
             ).option(f"parquet.bloom.filter.expected.ndv#{c}", str(bloom_ndv))
-        writer.mode(mode).parquet(self._path(name))
+        if partition_cols and (append_only or not full_refresh):
+            # in place: an empty dynamic overwrite or append replaces no
+            # partition, but Spark makes the directory of a missing table
+            writer.mode("append" if append_only else "overwrite").parquet(live)
+            if observed.get["rows"]:
+                return True
+            if not existed:
+                shutil.rmtree(live, ignore_errors=True)
+            return False
+        # staged: an empty write must not replace or add to the live table
+        writer.mode("overwrite").parquet(staging)
+        if not observed.get["rows"]:
+            shutil.rmtree(staging)
+            return False
+        if append_only and existed:
+            for f in os.listdir(staging):
+                os.replace(os.path.join(staging, f), os.path.join(live, f))
+            shutil.rmtree(staging)
+        else:
+            self._swap_in(name, staging)
         return True
 
     # -- snapshots: poor-man's time travel ---------------------------------
@@ -341,8 +415,6 @@ class TableStore:
         versions, expressed on a plain filesystem. Call before a risky
         overwrite/merge; ``read_snapshot`` serves any kept version,
         ``restore_snapshot`` rolls the live table back."""
-        import shutil
-
         src = self._path(name)
         if not self.exists(name):
             raise ValueError(f"snapshot: table {name!r} does not exist")
@@ -384,29 +456,18 @@ class TableStore:
         if not os.path.isdir(src):
             raise ValueError(f"no snapshot {snapshot_id!r} for table {name!r}")
         _schema_memo_invalidate(self._path(name))
-        import shutil
-
         if self.exists(name):
             # keep wide enough that this bookkeeping snapshot can never
             # prune the snapshot being restored from
             self.snapshot(name, keep=len(self.snapshots(name)) + 1)
-        live = self._path(name)
-        # build the restored tree at a sibling, then swap — a crash can
-        # never leave a PARTIAL live directory for read() to serve
-        # silently (the compact() two-rename discipline); the only
-        # vulnerable window is between the two atomic renames, and the
-        # pre-restore state is already snapshotted above
-        tmp = live + ".__restoring"
+        # build the restored tree at the staging sibling, then swap it in
+        # (the write/compact protocol): a crash never leaves a PARTIAL
+        # live directory for read() to serve, and the pre-restore state
+        # is already snapshotted above
+        tmp = self._staging_path(name)
         shutil.rmtree(tmp, ignore_errors=True)
         self._link_tree(src, tmp)
-        if os.path.exists(live):
-            old = live + ".__pre_restore"
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(live, old)
-            os.replace(tmp, live)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.replace(tmp, live)
+        self._swap_in(name, tmp)
 
     def merge(
         self,
@@ -524,44 +585,43 @@ class TableStore:
         # paths. The checkpoint holds only the TOUCHED partitions' rows —
         # the merge's working set, not the table.
         out = survivors.unionByName(upserts).localCheckpoint(eager=True)
-        if not partition_cols and out.isEmpty():
-            # the merge emptied an unpartitioned table: write() skips empty
-            # frames, so express the deletion directly — leaving the old
-            # files would silently resurrect every deleted row
-            return self._remove_table(name)
         landed = self.write(out, name, partition_cols=partition_cols)
-        if partition_cols:
-            # a touched partition with no output rows vanished entirely —
-            # dynamic overwrite can't delete it, so drop the directory.
-            # The directories are resolved from the FILESYSTEM (a fresh
-            # read of the stale files, semi-joined to the vanished value
-            # tuples, input_file_name → dirname), never re-formatted from
-            # Python values: Spark escapes special characters in partition
-            # paths (':', '%', '#', …) and renders NULL as
-            # __HIVE_DEFAULT_PARTITION__, so an f"{c}={v}" reconstruction
-            # silently misses those partitions and resurrects deleted rows.
-            remaining = {
-                tuple(r) for r in out.select(*partition_cols).distinct().collect()
-            }
-            vanished = set(touched_vals) - remaining
-            if vanished:
-                self._drop_partition_dirs(
-                    name, partition_cols, pinned_schema, vanished
-                )
-            if out.isEmpty() and not self._parquet_files(name):
-                # every partition of the table was touched AND emptied: the
-                # sweep removed all partition dirs, leaving a bare root that
-                # read() cannot infer a schema from and a later merge would
-                # crash on — express the full deletion like the
-                # unpartitioned branch does
-                return self._remove_table(name)
-        return landed or self.exists(name)
+        if not partition_cols:
+            if landed:
+                return True
+            # the merge emptied an unpartitioned table: write() skipped the
+            # empty frame, so express the deletion directly — leaving the
+            # old files would silently resurrect every deleted row
+            return self._remove_table(name)
+        # a touched partition with no output rows vanished entirely —
+        # dynamic overwrite can't delete it, so drop the directory.
+        # The directories are resolved from the FILESYSTEM (a fresh
+        # read of the stale files, semi-joined to the vanished value
+        # tuples, input_file_name → dirname), never re-formatted from
+        # Python values: Spark escapes special characters in partition
+        # paths (':', '%', '#', …) and renders NULL as
+        # __HIVE_DEFAULT_PARTITION__, so an f"{c}={v}" reconstruction
+        # silently misses those partitions and resurrects deleted rows.
+        remaining = (
+            {tuple(r) for r in out.select(*partition_cols).distinct().collect()}
+            if landed
+            else set()
+        )
+        vanished = set(touched_vals) - remaining
+        if vanished:
+            self._drop_partition_dirs(name, partition_cols, pinned_schema, vanished)
+        if not landed and not self._parquet_files(name):
+            # every partition of the table was touched AND emptied: the
+            # sweep removed all partition dirs, leaving a bare root that
+            # read() cannot infer a schema from and a later merge would
+            # crash on — express the full deletion like the unpartitioned
+            # branch does
+            return self._remove_table(name)
+        return True
 
     def _remove_table(self, name: str) -> bool:
         """Delete ``name``'s directory outright (the full-deletion tail of
         both merge branches). Returns False — the merge left no table."""
-        import shutil
-
         _schema_memo_invalidate(self._path(name))
         shutil.rmtree(self._path(name), ignore_errors=True)
         return False
@@ -571,7 +631,9 @@ class TableStore:
         True when a table was actually removed.
 
         This is the EMPTY-STATE writer's tool: ``write`` skips empty
-        frames, so a state table whose new version is "no rows" (e.g. the
+        frames — it counts the rows its own job wrote and, at zero, leaves
+        the live table exactly as it was — so a state table whose new
+        version is "no rows" (e.g. the
         decontamination digests after the benchmarks resource is removed,
         plans/corpus_pipeline.py) would otherwise silently keep serving
         the PREVIOUS run's rows — drop expresses "the state is now empty"
@@ -637,7 +699,6 @@ class TableStore:
         silently misses. A vanished tuple with no files is legal (a
         brand-new partition whose rows were all deleted in the same batch
         never hit disk); a failing rmtree raises (no silent no-op)."""
-        import shutil
         from functools import reduce
         from urllib.parse import unquote, urlparse
 
@@ -748,14 +809,12 @@ class TableStore:
         ``_load_timestamp`` provenance stamps are preserved exactly —
         compaction is a physical-layout change only.
 
-        The rewrite lands in a sibling temp directory, the live directory
-        is moved aside, the rewrite renamed in, then the old copy removed —
-        so at every instant at least one complete copy exists on disk
-        (reading and overwriting the same path in one job is not safe in
-        any engine); the only vulnerable window is between the two
-        atomic renames (microseconds), and a crash there leaves the full
-        old copy recoverable at ``<name>.__old``. On object storage the
-        same shape runs against the FileSystem API.
+        The rewrite lands in ``<name>.__staging`` and :meth:`_swap_in`
+        renames it live, so at every instant at least one complete copy
+        exists on disk (reading and overwriting the same path in one job
+        is not safe in any engine); a crash between the swap's two atomic
+        renames leaves the full old copy recoverable at ``<name>.__old``.
+        On object storage the same shape runs against the FileSystem API.
 
         A table written with ``cluster_by`` must pass those columns as
         ``sort_cols`` — compaction re-sorts within the rewrite so the
@@ -769,8 +828,6 @@ class TableStore:
 
         Returns (files_before, files_after)."""
         import math
-        import shutil
-
         _schema_memo_invalidate(self._path(name))
         if zorder_by and sort_cols:
             raise ValueError("pass sort_cols OR zorder_by, not both")
@@ -783,7 +840,7 @@ class TableStore:
                 f"{name!r} is a catalog (bucketed) table; compaction would"
                 " orphan its bucket metadata — rewrite via write_bucketed"
             )
-        self._recover_interrupted_compact(name)
+        self._recover_interrupted_swap(name)
         files = self._parquet_files(name)
         if not files:
             return (0, 0)
@@ -798,7 +855,7 @@ class TableStore:
             )
             sort_cols = ["_zkey"]
             drop_after = ["_zkey"]
-        tmp = self._path(name) + ".__compacting"
+        tmp = self._staging_path(name)
         if partition_cols:
             # hash-repartition on the partition cols: every partition value
             # lands in one task -> exactly one output file per partition
@@ -820,18 +877,7 @@ class TableStore:
             ).drop(*drop_after)
         writer = out.write.partitionBy(*partition_cols) if partition_cols else out.write
         writer.mode("overwrite").parquet(tmp)
-        old = self._path(name) + ".__old"
-        marker = self._path(name) + ".__swap_pending"
-        if os.path.exists(old):  # debris from a crashed prior compaction
-            shutil.rmtree(old)
-        # marker first: recovery restores .__old ONLY while it exists, so a
-        # crash after the swap can never resurrect the stale copy
-        with open(marker, "w") as f:
-            f.write(name)
-        os.replace(self._path(name), old)
-        os.replace(tmp, self._path(name))
-        os.remove(marker)
-        shutil.rmtree(old)
+        self._swap_in(name, tmp)
         return (len(files), len(self._parquet_files(name)))
 
     def read(

@@ -159,7 +159,9 @@ class AssetContext:
 
         A table whose every run produced empty output was never written
         (TableStore.write skips empties — reference bigquery_io_manager
-        parity) and reads back as a ZERO-COLUMN frame; pass ``schema`` to
+        parity — deciding from the row count its own write job observed,
+        so an empty run leaves a missing table missing and an existing
+        one untouched) and reads back as a ZERO-COLUMN frame; pass ``schema`` to
         get a typed empty instead, or guard on ``df.columns`` before
         running SQL over it (see the datamart assets in
         plans/reference_pipeline.py)."""
@@ -195,6 +197,8 @@ def run_partition(
                 partition_cols=list(asset.partition_cols) or None,
                 append_only=asset.append_only,
             )
+            # the read infers the written table's schema once and memoizes
+            # it for every downstream reader of the table
             out[asset.name] = store.read(asset.name)
         else:
             out[asset.name] = df

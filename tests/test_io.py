@@ -3,6 +3,8 @@ co-location — direct tests for the IO layer the datamart runner builds on."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -181,6 +183,126 @@ def test_compact_post_swap_debris_never_resurrects(spark, tmp_path):
     assert store.read("t").count() == 0  # K3 typed-empty, not stale data
     # and the stale unmarked .__old is reclaimed, not left on disk forever
     assert not os.path.exists(str(tmp_path / "t.__old"))
+
+
+# write modes by their keyword arguments; "seed" is the write that builds the
+# existing table the mode is then applied to
+WRITE_MODES = {
+    "overwrite": ({}, {}),
+    "dynamic": ({"partition_cols": ["p"]}, {"partition_cols": ["p"]}),
+    "append_partitioned": (
+        {"partition_cols": ["p"], "append_only": True},
+        {"partition_cols": ["p"], "append_only": True},
+    ),
+    "append": ({"append_only": True}, {"append_only": True}),
+    "full_refresh": (
+        {"partition_cols": ["p"], "full_refresh": True},
+        {"partition_cols": ["p"]},
+    ),
+}
+
+
+def _staging(store, name):
+    return os.path.join(store.root, f"{name}.__staging")
+
+
+def _frame(spark, n):
+    return spark.range(n).select(F.col("id").alias("k"), (F.col("id") % 3).alias("p"))
+
+
+@pytest.mark.parametrize("existing", [True, False], ids=["existing", "missing"])
+@pytest.mark.parametrize("mode", list(WRITE_MODES))
+def test_empty_write_is_skipped_in_every_mode(spark, tmp_path, mode, existing):
+    """An empty frame returns False and changes nothing on disk: an
+    existing table keeps its rows and its parquet files, a missing table
+    stays missing (K3 typed-empty), and no staging directory is left."""
+    store = _store(spark, tmp_path)
+    kwargs, seed_kwargs = WRITE_MODES[mode]
+    if existing:
+        assert store.write(_frame(spark, 10), "t", **seed_kwargs)
+    rows = sorted(store.read("t").collect())
+    files = sorted(store._parquet_files("t"))
+
+    assert store.write(_frame(spark, 0), "t", **kwargs) is False
+    assert sorted(store.read("t").collect()) == rows
+    assert sorted(store._parquet_files("t")) == files
+    assert store.exists("t") is existing
+    assert not os.path.exists(_staging(store, "t"))
+
+
+@pytest.mark.parametrize("mode", list(WRITE_MODES))
+def test_write_runs_one_spark_job(spark, tmp_path, mode):
+    """The empty-write skip comes from the write job's own row count, so a
+    plain write is one Spark job, onto a missing table and onto an existing
+    one."""
+    store = _store(spark, tmp_path)
+    sc = spark.sparkContext
+    kwargs, _ = WRITE_MODES[mode]
+    try:
+        for attempt in ("missing", "existing"):
+            group = f"one-job-{mode}-{attempt}"
+            sc.setJobGroup(group, group)
+            assert store.write(_frame(spark, 30), "t", **kwargs)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, attempt
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    want = 60 if kwargs.get("append_only") else 30
+    assert store.read("t").count() == want
+
+
+def test_failed_staged_write_keeps_previous_table(spark, tmp_path):
+    """An unpartitioned overwrite whose job fails in a later task leaves the
+    previous table readable; staging debris is never read and the next
+    write clears it."""
+    store = _store(spark, tmp_path)
+    store.write(_frame(spark, 10), "t")
+    before = sorted(store.read("t").collect())
+    failing = spark.range(0, 400, 1, 4).select(
+        F.when(F.col("id") == 399, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("k")
+    )
+    with pytest.raises(Exception, match="boom"):
+        store.write(failing, "t")
+    assert sorted(store.read("t").collect()) == before
+
+    # debris of a writer that died after its job but before the swap
+    _frame(spark, 5).write.mode("overwrite").parquet(_staging(store, "t"))
+    assert sorted(store.read("t").collect()) == before
+    assert store.write(_frame(spark, 0), "t", partition_cols=["p"]) is False
+    assert not os.path.exists(_staging(store, "t"))
+    assert sorted(store.read("t").collect()) == before
+
+
+def test_write_swap_crash_window_recovery(spark, tmp_path, monkeypatch):
+    """A staged overwrite interrupted between its swap's two renames leaves
+    only <name>.__old; the next exists()/read() restores the previous table
+    instead of serving K3 empty, and the next write lands normally."""
+    from aave_etl_spark.io import table_store
+
+    store = TableStore(spark, str(tmp_path))
+    store.write(_frame(spark, 50), "crashy")
+    real_replace = os.replace
+
+    def crash_on_second_rename(src, dst):
+        if src == _staging(store, "crashy"):
+            raise OSError("crash between the swap's renames")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(table_store.os, "replace", crash_on_second_rename)
+    with pytest.raises(OSError, match="crash between"):
+        store.write(_frame(spark, 7), "crashy")
+    monkeypatch.setattr(table_store.os, "replace", real_replace)
+    assert not os.path.exists(str(tmp_path / "crashy"))
+    assert os.path.exists(str(tmp_path / "crashy.__old"))
+
+    assert store.exists("crashy")  # auto-restored, not reported missing
+    assert store.read("crashy").count() == 50
+    assert not os.path.exists(str(tmp_path / "crashy.__old"))
+    assert store.write(_frame(spark, 7), "crashy")
+    assert store.read("crashy").count() == 7
+    assert not os.path.exists(str(tmp_path / "crashy.__swap_pending"))
+    assert not os.path.exists(_staging(store, "crashy"))
 
 
 def test_compact_refuses_bucketed_tables(spark, tmp_path):

@@ -274,9 +274,9 @@ def _transports():
     }
 
 
-@pytest.fixture(scope="module")
-def pipeline_store(spark, tmp_path_factory):
-    store = TableStore(spark, str(tmp_path_factory.mktemp("refpipe")))
+def _resources(spark):
+    """The ``resources`` dict the graph's asset fns read: fake transports
+    plus the seed dims."""
     ranks = spark.createDataFrame(
         [("ethereum_v2", "ethereum", 1), ("polygon_v3", "polygon", 2)],
         "market string, chain string, price_rank long",
@@ -346,7 +346,7 @@ def pipeline_store(spark, tmp_path_factory):
          ("ethereum", "0xSTM_E", "stMATIC", 18), ("ethereum", "0xMX_E", "MaticX", 18)],
         "chain string, address string, symbol string, decimals long",
     )
-    resources = {
+    return {
         "transports": _transports(),
         "markets": MARKETS,
         "config_tokens": config_tokens,
@@ -363,6 +363,12 @@ def pipeline_store(spark, tmp_path_factory):
         "balancer_pools": balancer_pools,
         "coingecko_tokens": coingecko_tokens,
     }
+
+
+@pytest.fixture(scope="module")
+def pipeline_store(spark, tmp_path_factory):
+    store = TableStore(spark, str(tmp_path_factory.mktemp("refpipe")))
+    resources = _resources(spark)
     graph = reference_graph(include_market_state=True)
     backfill(
         spark, store, graph, "2024-01-01", "2024-01-02",
@@ -594,6 +600,45 @@ def test_hourly_protocol_and_datamart(pipeline_store):
     rfh = pipeline_store.read("reserve_factor_income_by_hour")
     assert rfh.count() == 6
     assert "daily_income_usd" in rfh.columns
+
+
+def test_run_hour_calls_each_transport_request_once(spark, pipeline_store, tmp_path):
+    """One hourly tick sends every source request exactly once: the
+    executor-side fan-out (protocol_data) and the driver-side block lookup
+    alike. A second evaluation of an asset's lineage — e.g. an emptiness
+    probe before its write — would call the live source twice and could
+    see different data in each pass."""
+    import shutil
+    from collections import Counter
+
+    from pyspark.accumulators import AddingAccumulatorParam
+
+    # a copy of the built day, so the extra tick leaves the shared store as is
+    store = TableStore(spark, str(tmp_path / "store"))
+    shutil.copytree(pipeline_store.root, store.root)
+    calls = spark.sparkContext.accumulator([], AddingAccumulatorParam([]))
+
+    def counted(name, fn):
+        def call(req):
+            calls.add([(name, repr(sorted(req.items())))])
+            return fn(req)
+
+        return call
+
+    resources = _resources(spark)
+    resources["transports"] = {
+        n: counted(n, fn) for n, fn in resources["transports"].items()
+    }
+    run_hour(
+        spark, store, reference_graph(include_market_state=True), "2024-01-01", 7,
+        list(MARKETS), resources, groups=HOURLY_JOB_GROUPS,
+    )
+    per_request = Counter(calls.value)
+    per_transport = Counter(name for name, _ in per_request.elements())
+    # 2 markets; 3 reserves per market
+    assert per_transport == {"closest_block_hour": 2, "protocol_data": 6}
+    assert set(per_request.values()) == {1}
+    assert store.read("protocol_data_by_hour").count() == 12  # hours 6 and 7
 
 
 def test_treasury_measure_chain(pipeline_store):
