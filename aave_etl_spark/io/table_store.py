@@ -42,8 +42,10 @@ META_COLS = ("_load_timestamp", "_partition_type", "_partition_key")
 # between a table's write and its reads (the catalog._SCHEMA_CACHE
 # discipline applied to the store). Keyed by table path; EVERY mutating
 # method invalidates its table's entry (write/merge/compact/restore/
-# drop), so a rewritten table is always re-inferred. Metadata only —
-# never row data — and per-process, so nothing survives across runs.
+# drop), so a rewritten table is re-inferred — except an unpartitioned
+# overwrite, which seeds the entry with the schema it just wrote.
+# Metadata only — never row data — and per-process, so nothing survives
+# across runs.
 _SCHEMA_MEMO: dict[str, StructType] = {}
 
 
@@ -274,8 +276,11 @@ class TableStore:
           part files move into the live directory only when rows were
           written.
 
-        Staging debris left by a crashed writer is never read and is
-        removed by the next write of the table.
+        A staged write whose job fails removes its staging directory;
+        debris left by a crashed writer is never read and is removed by
+        the next write of the table. An unpartitioned overwrite also
+        records the schema it wrote, so the next :meth:`read` runs no
+        footer-inference job.
 
         ``cluster_by`` sort-clusters the data before writing: rows are
         range-repartitioned then sorted within tasks on
@@ -378,7 +383,11 @@ class TableStore:
                 shutil.rmtree(live, ignore_errors=True)
             return False
         # staged: an empty write must not replace or add to the live table
-        writer.mode("overwrite").parquet(staging)
+        try:
+            writer.mode("overwrite").parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)  # a failed job's debris
+            raise
         if not observed.get["rows"]:
             shutil.rmtree(staging)
             return False
@@ -386,8 +395,14 @@ class TableStore:
             for f in os.listdir(staging):
                 os.replace(os.path.join(staging, f), os.path.join(live, f))
             shutil.rmtree(staging)
-        else:
-            self._swap_in(name, staging)
+            return True
+        self._swap_in(name, staging)
+        if not (partition_cols or append_only):
+            # the swapped-in table holds exactly what was just written, so
+            # its schema is known without a footer-inference job on the
+            # next read. Partitioned tables are left to inference: Spark
+            # types their partition columns from the directory names.
+            _SCHEMA_MEMO[live] = stamped.schema
         return True
 
     # -- snapshots: poor-man's time travel ---------------------------------

@@ -15,7 +15,7 @@ Reference mapping (SURVEY §3 entry point 1):
   group and explicit key lists (aave_data/__init__.py:243-352). Here an
   :class:`Asset` declares its ``group`` and ``deps``; a job is a group
   selection over the :class:`AssetGraph`, executed in Kahn topological order
-  (same executor discipline as plans/runner.py).
+  (plans/dag.py, shared with the datamart runner in plans/runner.py).
 - Schedules — the reference's cadence chain (data lake 01:00 → warehouse +
   datamart 01:15/01:30, midday 13:00, liquidity every 2 h, hourly lake :05 →
   hourly datamart :10; aave_data/__init__.py:374-434) is declared in
@@ -45,6 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from aave_etl_spark.io.table_store import TableStore
+from aave_etl_spark.plans.dag import kahn_order
 
 # Partitioning kinds, mirroring the reference's partitions_defs
 # (aave_data/__init__.py:286-352): market_day multipartition, plain daily,
@@ -103,28 +104,20 @@ class AssetGraph:
             raise ValueError(f"unknown deps: {sorted(unknown)}")
 
     def topo_order(self, selection: Iterable[str] | None = None) -> list[Asset]:
-        """Kahn order over the selected assets; deps outside the selection are
-        assumed already materialized in the store (how the reference's 01:15
-        warehouse job consumes the 01:00 lake job's output)."""
+        """Kahn order over the selected assets, each wave in declaration
+        order; deps outside the selection are assumed already materialized
+        in the store (how the reference's 01:15 warehouse job consumes the
+        01:00 lake job's output)."""
         sel = set(selection) if selection is not None else set(self.assets)
         missing = sel - set(self.assets)
         if missing:
             raise ValueError(f"unknown assets in selection: {sorted(missing)}")
-        pending = {n: self.assets[n] for n in sel}
-        resolved: set[str] = set()
-        out: list[Asset] = []
-        while pending:
-            ready = [
-                n
-                for n, a in pending.items()
-                if all(d in resolved or d not in sel for d in a.deps)
-            ]
-            if not ready:
-                raise ValueError(f"dependency cycle among: {sorted(pending)}")
-            for n in ready:
-                out.append(pending.pop(n))
-                resolved.add(n)
-        return out
+        deps = {
+            n: [d for d in a.deps if d in sel]
+            for n, a in self.assets.items()
+            if n in sel
+        }
+        return [self.assets[n] for n in kahn_order(deps, "dependency cycle")]
 
     def select_groups(self, *groups: str) -> list[str]:
         sel = [n for n, a in self.assets.items() if a.group in groups]
@@ -197,8 +190,9 @@ def run_partition(
                 partition_cols=list(asset.partition_cols) or None,
                 append_only=asset.append_only,
             )
-            # the read infers the written table's schema once and memoizes
-            # it for every downstream reader of the table
+            # the read memoizes the written table's schema for every
+            # downstream reader (inferring it once unless the write
+            # already seeded it)
             out[asset.name] = store.read(asset.name)
         else:
             out[asset.name] = df

@@ -776,42 +776,51 @@ _DATAMART_HOURLY_MODELS = (
 )
 
 
-def _datamart_hourly(ctx: AssetContext) -> DataFrame:
-    """The hourly datamart job (datamart_hourly_schedule, :10 past the
-    hour): the reference's five-model selection. refs to DAILY models
-    (chains_markets, aave_atokens, market_state/config_by_day) become
-    store reads of the tables the 01:30 job materialized — exactly dbt's
-    behavior of ref()ing a table the selection doesn't rebuild."""
+# the daily models the hourly selection ref()s but does not rebuild
+_DAILY_REF_TABLES = (
+    "chains_markets", "aave_atokens", "market_state_by_day", "market_config_by_day",
+)
+
+
+def hourly_datamart_models() -> dict:
+    """The hourly selection's models, with every ref to a DAILY model turned
+    into a source: the selection reads the table the 01:30 job materialized
+    — exactly dbt's behavior of ref()ing a table the selection doesn't
+    rebuild."""
     from dataclasses import replace as dc_replace
 
     from aave_etl_spark.datamart.models import MODELS
+
+    return {
+        k: dc_replace(
+            MODELS[k],
+            refs=tuple(r for r in MODELS[k].refs if r not in _DAILY_REF_TABLES),
+            sources=MODELS[k].sources
+            + tuple(r for r in MODELS[k].refs if r in _DAILY_REF_TABLES),
+        )
+        for k in _DATAMART_HOURLY_MODELS
+    }
+
+
+def _datamart_hourly(ctx: AssetContext) -> DataFrame:
+    """The hourly datamart job (datamart_hourly_schedule, :10 past the
+    hour): the reference's five-model selection over
+    :func:`hourly_datamart_models`."""
     from aave_etl_spark.plans.runner import run_datamart
 
-    daily_tables = (
-        "chains_markets", "aave_atokens", "market_state_by_day", "market_config_by_day",
-    )
     inputs = {
         "protocol_data_by_hour": ctx.upstream("protocol_data_by_hour"),
         "emode_config_by_day": ctx.upstream("emode_config_by_day"),
         "aave_oracle_prices_by_day": ctx.upstream("aave_oracle_prices_by_day"),
         "token_prices_by_day": ctx.upstream("token_prices_by_day"),
-        **{t: ctx.upstream(t) for t in daily_tables},
+        **{t: ctx.upstream(t) for t in _DAILY_REF_TABLES},
     }
     if any(not df.columns for df in inputs.values()):
         # an upstream table was never materialized (empty fetches are
         # skipped by TableStore.write, reference parity) — nothing to run
         # this tick; write_output=False so nothing lands either
         return local_df(ctx.spark, [], "tick string")
-    models = {}
-    for k in _DATAMART_HOURLY_MODELS:
-        m = MODELS[k]
-        moved = tuple(r for r in m.refs if r in daily_tables)
-        models[k] = dc_replace(
-            m,
-            refs=tuple(r for r in m.refs if r not in daily_tables),
-            sources=m.sources + moved,
-        )
-    out = run_datamart(ctx.spark, inputs, models=models, store=ctx.store)
+    out = run_datamart(ctx.spark, inputs, models=hourly_datamart_models(), store=ctx.store)
     return out["market_state_by_hour"]
 
 

@@ -17,6 +17,7 @@ partitions, with per-partition concurrency bounded by the semaphore, so a
 
 from __future__ import annotations
 
+import itertools
 import random
 import time
 from collections.abc import Callable, Iterator
@@ -60,16 +61,14 @@ def retrying(
     policy: RetryPolicy = DEFAULT_RETRY,
     retryable: tuple[type[BaseException], ...] = (Exception,),
 ) -> Any:
-    """Run ``fn`` with the reference's backoff loop (helpers.py:192-205)."""
-    last: BaseException | None = None
-    for delay in policy.delays():
+    """Run ``fn`` with the reference's backoff loop (helpers.py:192-205):
+    up to ``policy.max_retries`` attempts (at least one), sleeping only
+    between them, so an exhausted request raises its last error at once."""
+    for delay in itertools.islice(policy.delays(), max(policy.max_retries - 1, 0)):
         try:
             return fn()
-        except retryable as exc:  # noqa: PERF203
-            last = exc
+        except retryable:  # noqa: PERF203
             time.sleep(delay)
-    if last is not None:
-        raise last
     return fn()
 
 

@@ -24,7 +24,7 @@ RES = "0xres"
 
 
 @pytest.fixture(scope="module")
-def datamart(spark):
+def datamart_inputs(spark):
     def df(rows, schema):
         return spark.createDataFrame(rows, schema)
 
@@ -280,7 +280,12 @@ def datamart(spark):
     inputs["warehouse_market_config_by_day"] = market_config_by_day(
         inputs["protocol_data_by_day"], inputs["emode_config_by_day"]
     )
-    return run_datamart(spark, inputs)
+    return inputs
+
+
+@pytest.fixture(scope="module")
+def datamart(spark, datamart_inputs):
+    return run_datamart(spark, datamart_inputs)
 
 
 def test_all_models_ran(datamart):
@@ -398,3 +403,133 @@ def test_impact_proposal_and_inv_lst_models_run(datamart):
     ]
     assert "receipts_usd" in datamart["inv_lst_performance_base"].columns
     assert "deposits_usd" in datamart["market_state_by_time"].columns
+
+
+# ---------------------------------------------------------------------------
+# The runner's ready-queue scheduling: independent models build
+# concurrently, on worker threads, with the caller's job group.
+# ---------------------------------------------------------------------------
+@pytest.fixture(scope="module")
+def hourly(datamart_inputs, datamart):
+    """The five-model hourly selection and its inputs: fixture sources plus
+    the daily model tables the selection reads instead of rebuilding."""
+    from aave_etl_spark.plans.reference_pipeline import hourly_datamart_models
+
+    models = hourly_datamart_models()
+    needed = {s for m in models.values() for s in m.sources}
+    inputs = {n: datamart_inputs[n] if n in datamart_inputs else datamart[n] for n in needed}
+    return models, inputs
+
+
+def _group_fence(sc, group: str) -> int:
+    """Run one job under ``group`` and return its id: every job started
+    between two fences has an id strictly between theirs."""
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_runner_jobs_stay_in_callers_job_group(spark, hourly, tmp_path):
+    """Every Spark job of a store-backed run lands in the job group the
+    caller set, although the models run on pool threads."""
+    import warnings
+
+    from aave_etl_spark.io.table_store import TableStore
+
+    models, inputs = hourly
+    sc = spark.sparkContext
+    store = TableStore(spark, str(tmp_path))
+    try:
+        first = _group_fence(sc, "runner-before")
+        sc.setJobGroup("runner-run", "hourly datamart")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_datamart(spark, inputs, models=models, store=store)
+        last = _group_fence(sc, "runner-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup("runner-run"))
+    assert jobs == set(range(first + 1, last))
+    assert len(jobs) >= len(models)  # at least one write job per model
+    assert not [w for w in caught if "not be inherited" in str(w.message)]
+
+
+def test_runner_store_rows_match_storeless_run(spark, hourly, tmp_path):
+    """The tables a store-backed run writes hold the rows a storeless run
+    computes, and both return the models in topo order."""
+    from aave_etl_spark.io.table_store import TableStore
+    from aave_etl_spark.plans import topo_order
+
+    models, inputs = hourly
+    store = TableStore(spark, str(tmp_path))
+    stored = run_datamart(spark, inputs, models=models, store=store)
+    plain = run_datamart(spark, inputs, models=models)
+    assert list(stored) == list(plain) == topo_order(models)
+    for name in models:
+        got, want = store.read(name), plain[name]
+        assert got.columns == want.columns, name
+        rows = want.orderBy(*want.columns).collect()
+        assert rows, name
+        assert got.orderBy(*got.columns).collect() == rows, name
+
+
+def test_runner_failure_stops_scheduling_and_keeps_finished_tables(spark, tmp_path):
+    """A model failing at execution: the run raises the failure earliest in
+    topo order once the running models finish; a sibling that succeeded
+    keeps its table; nothing downstream of the failure is written; no
+    staging debris or pool thread is left behind."""
+    import os
+    import threading
+
+    from aave_etl_spark.datamart.models import Model
+    from aave_etl_spark.io.table_store import TableStore
+
+    def boom(msg: str, n: int) -> str:
+        return f"SELECT IF(id = {n - 1}, raise_error('{msg}'), id) AS x FROM range({n})"
+
+    models = {
+        "sibling": Model("sibling", "SELECT id FROM range(3)"),
+        "exploding": Model("exploding", boom("first model exploded", 3)),
+        "also_exploding": Model("also_exploding", boom("second model exploded", 2)),
+        "downstream": Model("downstream", "SELECT * FROM exploding", refs=("exploding",)),
+    }
+    store = TableStore(spark, str(tmp_path))
+    with pytest.raises(Exception, match="first model exploded"):
+        run_datamart(spark, {}, models=models, store=store)
+    assert store.read("sibling").count() == 3
+    for name in ("exploding", "also_exploding", "downstream"):
+        assert not store.exists(name), name
+    assert sorted(os.listdir(tmp_path)) == ["sibling"]
+    assert not [t for t in threading.enumerate() if t.name.startswith("datamart")]
+
+
+def test_runner_layered_dag_sees_every_ref(spark):
+    """Six-wide, four-deep DAG of tiny models, with thread switches forced
+    often: every model resolves the refs built before it, and each value
+    matches the one computed serially in Python."""
+    import sys
+
+    from aave_etl_spark.datamart.models import Model
+
+    width, depth = 6, 4
+    models: dict[str, Model] = {}
+    want: dict[str, int] = {}
+    for layer in range(depth):
+        for j in range(width):
+            name = f"layered_{layer}_{j}"
+            if layer == 0:
+                models[name] = Model(name, f"SELECT CAST({j + 1} AS BIGINT) AS v")
+                want[name] = j + 1
+                continue
+            a, b = f"layered_{layer - 1}_{j}", f"layered_{layer - 1}_{(j + 1) % width}"
+            models[name] = Model(
+                name, f"SELECT x.v * 10 + y.v AS v FROM {a} x CROSS JOIN {b} y", refs=(a, b)
+            )
+            want[name] = want[a] * 10 + want[b]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = run_datamart(spark, {}, models=models)
+    finally:
+        sys.setswitchinterval(interval)
+    assert {n: df.first().v for n, df in out.items()} == want

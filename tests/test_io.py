@@ -250,6 +250,42 @@ def test_write_runs_one_spark_job(spark, tmp_path, mode):
     assert store.read("t").count() == want
 
 
+def test_staged_overwrite_read_runs_no_inference_job(spark, tmp_path):
+    """An unpartitioned overwrite (plain or full_refresh) records the schema
+    it wrote: the next read runs no Spark job, and its schema equals what
+    footer inference gives, for every column type below. Partitioned
+    writes are left to inference (partition columns are typed from the
+    directory names)."""
+    from aave_etl_spark.io.table_store import _SCHEMA_MEMO, META_COLS
+
+    store = _store(spark, tmp_path)
+    df = spark.sql(
+        "SELECT 'a' AS s, CAST(1 AS BIGINT) AS l, 2 AS i, 1.5D AS d,"
+        " CAST(1.25 AS DECIMAL(38, 18)) AS dec, DATE'2024-01-01' AS dt,"
+        " TIMESTAMP'2024-01-01 01:00:00' AS ts,"
+        " TIMESTAMP_NTZ'2024-01-01 01:00:00' AS ts_ntz, true AS b,"
+        " array(1, 2) AS arr, named_struct('x', 1, 'y', 'z') AS st,"
+        " map('k', 1.0D) AS m"
+    )
+    sc = spark.sparkContext
+    for mode, kwargs in (("overwrite", {}), ("full_refresh", {"full_refresh": True})):
+        store.write(df, "t", **kwargs)
+        group = f"memo-read-{mode}"
+        try:
+            sc.setJobGroup(group, group)
+            got = store.read("t", keep_meta=True)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], mode
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        inferred = spark.read.parquet(os.path.join(store.root, "t"))
+        assert got.schema == inferred.schema, mode
+        assert store.read("t").schema == inferred.drop(*META_COLS).schema, mode
+        assert store.read("t").collect() == df.collect(), mode
+
+    store.write(_frame(spark, 10), "parted", partition_cols=["p"])
+    assert os.path.join(store.root, "parted") not in _SCHEMA_MEMO
+
+
 def test_failed_staged_write_keeps_previous_table(spark, tmp_path):
     """An unpartitioned overwrite whose job fails in a later task leaves the
     previous table readable; staging debris is never read and the next
@@ -264,6 +300,7 @@ def test_failed_staged_write_keeps_previous_table(spark, tmp_path):
     )
     with pytest.raises(Exception, match="boom"):
         store.write(failing, "t")
+    assert not os.path.exists(_staging(store, "t"))
     assert sorted(store.read("t").collect()) == before
 
     # debris of a writer that died after its job but before the swap

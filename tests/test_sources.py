@@ -7,6 +7,7 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 from aave_etl_spark.sources import base, connectors, schemas
 
@@ -32,6 +33,50 @@ def test_retrying_exhausts_and_raises():
 
     with pytest.raises(ConnectionError):
         base.retrying(always_fails, FAST)
+
+
+def test_retry_budget_sleeps_only_between_attempts(monkeypatch):
+    """An exhausted request under the default policy makes max_retries
+    attempts, sleeps between them only (no dead backoff after the last),
+    and raises the transport's own exception."""
+    sleeps: list[float] = []
+    monkeypatch.setattr(base.time, "sleep", sleeps.append)
+    calls = {"n": 0}
+    down = ConnectionError("down")
+
+    def transport(req):
+        calls["n"] += 1
+        raise down
+
+    with pytest.raises(ConnectionError) as info:
+        base.retrying(lambda: transport({}))
+    policy = base.DEFAULT_RETRY
+    assert info.value is down
+    assert calls["n"] == policy.max_retries
+    assert len(sleeps) == policy.max_retries - 1
+    # exponential from initial_s, plus bounded jitter
+    for i, s in enumerate(sleeps):
+        assert policy.initial_s * 2**i <= s <= policy.initial_s * 2**i + policy.jitter_s
+
+    # a policy without retries still makes its one attempt
+    calls["n"] = 0
+    with pytest.raises(ConnectionError):
+        base.retrying(lambda: transport({}), base.RetryPolicy(max_retries=0))
+    assert calls["n"] == 1
+
+
+def test_fanout_exhausted_retries_surface_as_error(spark):
+    """A request that never succeeds fails the fan-out's job; it is not
+    turned into an empty partition."""
+    keys = spark.createDataFrame([(1,), (2,)], ["block_height"])
+
+    def transport(req):
+        raise ConnectionError(f"rpc down at {req['block_height']}")
+
+    schema = StructType([StructField("answer", LongType())])
+    df = base.fanout_fetch(keys, transport, lambda req, payload: [payload], schema, FAST)
+    with pytest.raises(Exception, match="rpc down at"):
+        df.collect()
 
 
 def test_block_numbers_by_day(spark):
