@@ -18,8 +18,8 @@ SURVEY.md):
 - ``aave_etl_spark.datamart``  — the dbt SQL models as Spark SQL
   (reference: aave_dbt/models/datamart/*.sql).
 - ``aave_etl_spark.operators`` — large-scale training-data pipeline operators
-  (dedup, similarity search, text analysis, multimodal plumbing) beyond the
-  reference's own surface.
+  (dedup, text analysis, sampling, sketches, packing) beyond the reference's
+  own surface.
 - ``aave_etl_spark.queries``   — the driver-facing query inventory: each entry
   is a (Spark builder, DuckDB oracle SQL) pair over the synthetic test tables.
 """

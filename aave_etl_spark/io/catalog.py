@@ -2,7 +2,7 @@
 its DuckDB oracles read.
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
-events documents embeddings.
+events documents.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 # events.ts is parquet TIMESTAMP(NANOS): with

@@ -43,9 +43,10 @@ META_COLS = ("_load_timestamp", "_partition_type", "_partition_key")
 # discipline applied to the store). Keyed by table path; EVERY mutating
 # method invalidates its table's entry (write/merge/compact/restore/
 # drop), so a rewritten table is re-inferred — except an unpartitioned
-# overwrite, which seeds the entry with the schema it just wrote.
-# Metadata only — never row data — and per-process, so nothing survives
-# across runs.
+# overwrite, which seeds the entry with the schema it just wrote. Code
+# that writes a store path directly (streaming sinks) clears it through
+# drop first. Metadata only — never row data — and per-process, so
+# nothing survives across runs.
 _SCHEMA_MEMO: dict[str, StructType] = {}
 
 
@@ -138,8 +139,8 @@ class TableStore:
         return os.path.isdir(self._path(name))
 
     # --- multi-table completion markers -----------------------------------
-    # A logical dataset spanning several tables (e.g. an IVF index =
-    # assignments + centroids sidecar) has no single atomic write; the
+    # A logical dataset spanning several tables (e.g. a BM25 index =
+    # postings + params sidecar) has no single atomic write; the
     # marker is written LAST (tmp + atomic rename) and checked FIRST, so an
     # interrupted multi-table build/rebuild can never present a mutually
     # inconsistent pair as complete. Writers call clear_complete() before
@@ -635,8 +636,9 @@ class TableStore:
         return True
 
     def _remove_table(self, name: str) -> bool:
-        """Delete ``name``'s directory outright (the full-deletion tail of
-        both merge branches). Returns False — the merge left no table."""
+        """Delete ``name``'s directory outright and forget its memoized
+        schema (the full-deletion tail of both merge branches, and
+        :meth:`drop`). Returns False — the merge left no table."""
         _schema_memo_invalidate(self._path(name))
         shutil.rmtree(self._path(name), ignore_errors=True)
         return False
@@ -652,11 +654,15 @@ class TableStore:
         decontamination digests after the benchmarks resource is removed,
         plans/corpus_pipeline.py) would otherwise silently keep serving
         the PREVIOUS run's rows — drop expresses "the state is now empty"
-        where the skip cannot."""
-        if not self.exists(name):
-            return False
+        where the skip cannot.
+
+        It is also how code that writes a store path directly (a streaming
+        sink) clears it first: whatever is at the path goes, a partial
+        directory included, and the schema memo entry goes with it even
+        when no table was there, so the next ``read`` re-infers."""
+        removed = self.exists(name)
         self._remove_table(name)
-        return True
+        return removed
 
     def _pinned_schema(self, name: str, batch_schema, partition_cols: list[str]):
         """The read schema for ``name`` with partition-column TYPES pinned

@@ -1,3 +1,3 @@
-from aave_etl_spark.operators import dedup, multimodal, similarity, text
+from aave_etl_spark.operators import dedup, text
 
-__all__ = ["dedup", "similarity", "text", "multimodal"]
+__all__ = ["dedup", "text"]

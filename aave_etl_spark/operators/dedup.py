@@ -545,8 +545,8 @@ def span_index_build(
     One skinny row per distinct length-``n`` normalized-token window
     hash in ``docs``: ``(_h, keeper id, keeper offset, *carry_cols)``,
     keeper = the hash's first (id, pos) occurrence. The dedup ladder's
-    other rungs already keep daily at-rest state (digests, band index,
-    IVF index); this is the span rung's: a later batch passed to
+    other rungs already keep daily at-rest state (digests, band index);
+    this is the span rung's: a later batch passed to
     ``span_dedup_rewrite(prior_spans=read_bucketed(name))`` cuts every
     occurrence of a stored hash — cross-day boilerplate (the same
     header/footer re-crawled every day, Lee et al.'s motivating case)

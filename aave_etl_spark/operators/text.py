@@ -520,10 +520,9 @@ def bm25_index_build(
     """Materialize a corpus's BM25 postings as an AT-REST inverted index,
     hash-bucketed on `term` through the TableStore.
 
-    The sparse-retrieval sibling of `minhash_index_build` (dedup.py) and
-    the IVF-PQ code table: tokenize→tf→df→weight runs ONCE per corpus;
-    every later query batch probes the stored postings without re-scanning
-    any text. Bucketing on `term` pre-shuffles the join key, so a LARGE
+    The sparse-retrieval sibling of `minhash_index_build` (dedup.py):
+    tokenize→tf→df→weight runs ONCE per corpus; every later query batch
+    probes the stored postings without re-scanning any text. Bucketing on `term` pre-shuffles the join key, so a LARGE
     query batch (shuffle-join regime) leaves the corpus side exchange-free
     — small batches broadcast and never shuffle anything.
 

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass, field
-from datetime import date, datetime, timedelta, timezone
+from datetime import date, datetime, timedelta
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -342,13 +342,10 @@ SCHEDULES: tuple[Schedule, ...] = (
     Schedule("chain_day_partitioned_schedule", "chain_day", "25 1 * * *"),
     Schedule("data_lake_hourly_partitioned_schedule", "hourly_data_lake", "5 * * * *"),
     Schedule("datamart_hourly_schedule", "datamart_hourly", "10 * * * *"),
-    # beyond-ref: the weekly maintenance pass for the two incremental
-    # stores — Sunday 03:00 UTC, off the daily 01:00-01:30 chain. A
-    # scheduler tick whose due_jobs includes "maintenance" dispatches
-    # :func:`run_maintenance`, which READS the stored emb_index_health
-    # trigger and acts on it (the retrain contract's consumer — without
-    # this declared cadence the health asset stores `outgrown=true`
-    # forever and the measured IVF probe-cost curve resumes unchecked).
+    # beyond-ref: the weekly maintenance pass for the corpus store —
+    # Sunday 03:00 UTC, off the daily 01:00-01:30 chain. A scheduler tick
+    # whose due_jobs includes "maintenance" dispatches
+    # :func:`run_maintenance`.
     Schedule("maintenance_schedule", "maintenance", "0 3 * * 0"),
 )
 
@@ -395,83 +392,22 @@ def due_jobs(at: datetime, schedules: Sequence[Schedule] = SCHEDULES) -> list[st
 def run_maintenance(
     spark: SparkSession,
     corpus_store: TableStore | None = None,
-    emb_store: TableStore | None = None,
-    day: str | None = None,
 ) -> dict[str, Any]:
     """The ``maintenance`` job group's body — what a scheduler tick whose
     :func:`due_jobs` includes ``"maintenance"`` dispatches (the weekly
     ``maintenance_schedule`` cadence in :data:`SCHEDULES`).
 
-    This closes the retrain loop the daily graphs only OBSERVE: the
-    embeddings graph's ``emb_index_health`` asset stores the quantizer-
-    drift trigger every run (``outgrown=true`` when the corpus is past
-    ``factor x n_cells²`` — the point where the frozen coarse quantizer's
-    probe cost has drifted measurably off the sqrt(N) balance, the
-    SCALE.md day-cost curve), and THIS job is the declared consumer:
+    Runs :func:`~aave_etl_spark.plans.corpus_pipeline.corpus_maintenance`
+    (compaction + MinHash band-index reclaim) on the corpus store when one
+    is passed. Returns a result dict keyed by store for logging.
 
-    - reads the STORED ``emb_index_health`` row and, when it says
-      ``outgrown``, retrains the quantizer at its stored
-      ``recommended_n_cells`` via
-      :func:`~aave_etl_spark.plans.embeddings_pipeline.embeddings_maintenance`
-      (a store with no health row yet falls back to ``auto_retrain=True``,
-      which derives the same signal live); either way the compaction +
-      stale-slice-reclaim rebuild halves run,
-    - runs :func:`~aave_etl_spark.plans.corpus_pipeline.corpus_maintenance`
-      (compaction + MinHash band-index reclaim) on the corpus store,
-    - re-materializes ``emb_index_health`` THROUGH the asset graph
-      (``run_partition`` selection), so a post-retrain read of the store
-      sees ``outgrown=false`` — the trigger is consumed, not just acted on.
-
-    Pass only the stores that exist in the deployment; ``day`` stamps the
-    health-refresh partition key (the asset itself is unpartitioned —
-    defaults to today UTC). Returns per-store result dicts for logging.
-
-    Scale: everything here is the off-daily-path cost contract the two
-    maintenance functions document — one scan+rewrite of STATE tables
-    (never raw landing history), and the retrain's full re-assignment is
-    exactly the pass whose amortized weekly cost buys back the otherwise
-    history-linear daily probe (SCALE.md measures 15x day-cost recovery).
+    Scale: the off-daily-path cost contract ``corpus_maintenance``
+    documents — one scan+rewrite of STATE tables, never raw landing
+    history.
     """
     out: dict[str, Any] = {}
     if corpus_store is not None:
         from aave_etl_spark.plans.corpus_pipeline import corpus_maintenance
 
         out["corpus"] = corpus_maintenance(corpus_store)
-    if emb_store is not None:
-        from aave_etl_spark.plans.embeddings_pipeline import (
-            embeddings_maintenance,
-            embeddings_pipeline_graph,
-        )
-
-        health = None
-        if emb_store.exists("emb_index_health"):
-            rows = emb_store.read("emb_index_health").collect()
-            health = rows[0] if rows else None
-        if health is not None:
-            out["emb_trigger"] = {
-                "outgrown": bool(health.outgrown),
-                "recommended_n_cells": int(health.recommended_n_cells),
-            }
-            out["emb"] = embeddings_maintenance(
-                emb_store,
-                retrain=bool(health.outgrown),
-                n_cells=int(health.recommended_n_cells)
-                if health.outgrown
-                else None,
-            )
-        else:
-            out["emb_trigger"] = {"outgrown": None, "recommended_n_cells": None}
-            out["emb"] = embeddings_maintenance(emb_store, auto_retrain=True)
-        # refresh the stored trigger through the graph itself: the same
-        # asset fn the daily run materializes, so the store's health row
-        # now reflects the post-maintenance quantizer (outgrown flips
-        # back to false after a retrain)
-        if emb_store.exists("emb_ivf_centroids"):
-            run_partition(
-                spark,
-                emb_store,
-                embeddings_pipeline_graph(),
-                PartitionKey(day or datetime.now(timezone.utc).date().isoformat()),
-                selection=["emb_index_health"],
-            )
     return out

@@ -37,7 +37,7 @@ from aave_etl_spark.plans.dag import ReadyQueue, kahn_order
 
 def topo_order(models: dict[str, Model] | None = None) -> list[str]:
     """Kahn's algorithm over ref() edges; deterministic (insertion order)."""
-    ms = models or MODELS
+    ms = MODELS if models is None else models
     return kahn_order({n: m.refs for n, m in ms.items()}, "ref cycle or missing ref")
 
 
@@ -68,9 +68,12 @@ def run_datamart(
     Failure: after the first model fails no new model starts; the running
     ones finish, then the failure is raised — the earliest in topo order
     if several failed. Models downstream of a failed one never run, and
-    models that finished keep their tables."""
-    ms = models or MODELS
+    models that finished keep their tables. An empty ``models`` selection
+    runs nothing and returns ``{}``."""
+    ms = MODELS if models is None else models
     order = topo_order(ms)
+    if not order:
+        return {}
 
     needed = {s for m in ms.values() for s in m.sources}
     missing = sorted(needed - set(inputs))

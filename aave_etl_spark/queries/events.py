@@ -520,7 +520,7 @@ def stream_sessionize_store(spark, sf_dir):
     store.clear_complete("sessions")
     shutil.rmtree(os.path.join(root, "lake"), ignore_errors=True)
     shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    shutil.rmtree(store._path("sessions"), ignore_errors=True)
+    store.drop("sessions")
 
     lake = os.path.join(root, "lake")
     # watermark requires TIMESTAMP (not NTZ); session tz is pinned UTC so
@@ -619,7 +619,7 @@ def stream_dedup_store(spark, sf_dir):
     store.clear_complete("deduped")
     for sub in ("lake", "ckpt"):
         shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    shutil.rmtree(store._path("deduped"), ignore_errors=True)
+    store.drop("deduped")
 
     lake = os.path.join(root, "lake")
     # watermark needs TIMESTAMP (session tz pinned UTC, epoch preserved)
@@ -725,7 +725,7 @@ def stream_rollup_store(spark, sf_dir):
     store.clear_complete("rollup")
     for sub in ("lake", "ckpt"):
         shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    shutil.rmtree(store._path("rollup"), ignore_errors=True)
+    store.drop("rollup")
 
     lake = os.path.join(root, "lake")
     ev = t(spark, sf_dir, "events").select(

@@ -1,8 +1,8 @@
-"""Training-data pipeline queries over `documents` / `embeddings`.
+"""Training-data pipeline queries over `documents`.
 
 These are the beyond-reference operators (BASELINE.json north star):
-dedup (exact / minhash-LSH / simhash / n-gram Jaccard), similarity search,
-text analysis, and multimodal binary plumbing. Every SQL-expressible one
+dedup (exact / minhash-LSH / simhash / n-gram Jaccard), text analysis and
+binary payload plumbing. Every SQL-expressible one
 carries a DuckDB oracle implementing the *same deterministic algorithm*
 (md5-based hashing — engine-portable, seed-free).
 """
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from aave_etl_spark.operators import dedup, similarity, text
+from aave_etl_spark.operators import dedup, text
 from aave_etl_spark.queries.registry import register, t
 from aave_etl_spark.localframe import local_df
 
@@ -358,150 +358,6 @@ def llm_simhash(spark, sf_dir):
     return dedup.simhash(t(spark, sf_dir, "documents"), bits=16)
 
 
-_TOPK_ORACLE = """
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-               FROM embeddings WHERE vec_id < 8),
-    c AS (SELECT vec_id AS candidate_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-    scored AS (
-      SELECT q.query_id, c.candidate_id,
-             round(list_dot_product(q.qv, c.cv)
-                   / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))),
-                   6) AS cos_sim
-      FROM c CROSS JOIN q
-      WHERE c.candidate_id <> q.query_id
-    )
-    SELECT query_id, candidate_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, candidate_id) AS BIGINT) AS rank
-    FROM scored
-    QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, candidate_id) <= 3
-    """
-
-
-@register(
-    "llm_cosine_topk",
-    oracle=_TOPK_ORACLE,
-    doc="LLM similarity: brute-force cosine top-k ANN baseline (broadcast query set)",
-)
-def llm_cosine_topk(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.cosine_topk(emb, queries, k=3)
-
-
-_MARGIN_COS = (
-    "round(list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-
-@register(
-    "llm_margin_topk",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS candidate_id,
-             {_MARGIN_COS.format(a="q.qe", b="c.e")} AS cos_sim
-      FROM v c CROSS JOIN q WHERE c.vec_id != q.query_id
-    ),
-    aq AS (
-      SELECT query_id, avg(cos_sim) AS a_q FROM (
-        SELECT query_id, cos_sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, candidate_id) AS r
-        FROM scored) s WHERE r <= 4 GROUP BY query_id
-    ),
-    ac AS (
-      SELECT candidate_id, avg(cos_sim) AS a_c FROM (
-        SELECT candidate_id, cos_sim,
-               row_number() OVER (PARTITION BY candidate_id
-                                  ORDER BY cos_sim DESC, query_id) AS r
-        FROM scored) s WHERE r <= 4 GROUP BY candidate_id
-    ),
-    fw AS (
-      SELECT query_id, candidate_id, cos_sim FROM (
-        SELECT scored.*,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, candidate_id) AS r
-        FROM scored) s WHERE r <= 3
-    ),
-    margined AS (
-      SELECT fw.query_id, fw.candidate_id, fw.cos_sim,
-             round(fw.cos_sim / ((aq.a_q + ac.a_c) / 2.0), 6) AS margin
-      FROM fw JOIN aq USING (query_id) JOIN ac USING (candidate_id)
-    )
-    SELECT query_id, candidate_id, cos_sim, margin,
-      CAST(row_number() OVER (PARTITION BY query_id
-                              ORDER BY margin DESC, candidate_id) AS BIGINT) AS rank
-    FROM margined
-    """,
-    doc=(
-        "LLM similarity: margin-based candidate re-ranking (Artetxe &"
-        " Schwenk 2019, CCMatrix bitext-mining criterion) — cosine"
-        " normalized by both endpoints' k-NN neighborhood means, one"
-        " broadcast pair scan feeding both direction's windows"
-    ),
-)
-def llm_margin_topk(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    # cardinality known by construction (≤ 8 ids) — vouch instead of
-    # paying the guard's eager probe count on every bench/cert build
-    return similarity.margin_topk(
-        emb, queries, k=3, knn=4, broadcast_queries=True
-    )
-
-
-def _srp_bucket_expr(n_planes: int = 8, var: str = "e") -> str:
-    """The SRP bucket id of vector column ``var`` as one SQL expression —
-    DuckDB mirror of the plane derivation (operators/similarity.py
-    `_srp_signs`/`srp_buckets`): the ±1 sign for (plane p, dim i) is the
-    parity of the integer formed by the first 15 hex chars of md5('p:i')
-    — i.e. whether the 15th hex digit is odd. DuckDB's 1-based lambda
-    index maps to Spark's 0-based sequence via i-1."""
-    sign = (
-        "CASE WHEN strpos('13579bdf', "
-        "substring(md5('{p}:' || CAST(i - 1 AS VARCHAR)), 15, 1)) > 0 "
-        "THEN 1.0 ELSE -1.0 END"
-    )
-    projs = [
-        f"list_sum(list_transform({var}, (x, i) -> x * {sign.format(p=p)}))"
-        for p in range(n_planes)
-    ]
-    return " + ".join(
-        f"CASE WHEN {proj} > 0 THEN {2 ** p} ELSE 0 END" for p, proj in enumerate(projs)
-    )
-
-
-def _srp_oracle(n_planes: int = 8, min_cos: float = 0.0) -> str:
-    """Full SRP bucketed-pairs oracle over the embeddings table (see
-    `_srp_bucket_expr` for the plane derivation)."""
-    bucket = _srp_bucket_expr(n_planes)
-    return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    b AS (SELECT vec_id, e, CAST({bucket} AS BIGINT) AS bucket FROM v),
-    pairs AS (
-      SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
-             round(list_dot_product(a.e, b2.e)
-                   / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b2.e, b2.e))),
-                   6) AS cos_sim
-      FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-    )
-    SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {min_cos}
-    """
-
-
-@register(
-    "llm_srp_bucket_pairs",
-    oracle=_srp_oracle(n_planes=8, min_cos=0.0),
-    doc="LLM similarity: SRP-LSH bucketed near-neighbor pairs (scale path for ANN)",
-)
-def llm_srp_bucket_pairs(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.bucketed_cosine_pairs(emb, n_planes=8, min_cos=0.0)
-
-
 @register(
     "llm_binary_payload",
     oracle="""
@@ -510,7 +366,7 @@ def llm_srp_bucket_pairs(spark, sf_dir):
            md5(text) AS content_md5
     FROM documents
     """,
-    doc="Multimodal plumbing: opaque binary column + typed metadata (byte_len, digest)",
+    doc="Binary payload plumbing: opaque binary column + typed metadata (byte_len, digest)",
 )
 def llm_binary_payload(spark, sf_dir):
     docs = t(spark, sf_dir, "documents").select(
@@ -520,324 +376,6 @@ def llm_binary_payload(spark, sf_dir):
         "content_md5", F.md5("payload")
     )
     return withmeta.select("doc_id", "byte_len", "content_md5")
-
-
-def _media_oracle(dim: int = 8) -> str:
-    """DuckDB mirror of multimodal._fake_decode: feature i is byte i of
-    md5(payload).digest() / 255 — reconstructed from the md5 hex string
-    (byte i = 16*hex[2i] + hex[2i+1]); feat_mean/feat_std are the same
-    left-to-right double arithmetic the Python stub runs."""
-    hexv = "(strpos('0123456789abcdef', substring(h, {c}, 1)) - 1)"
-    feats = [
-        f"({hexv.format(c=2 * i + 1)} * 16.0 + {hexv.format(c=2 * i + 2)}) / 255.0"
-        for i in range(dim)
-    ]
-    v = "[" + ", ".join(feats) + "]"
-    return f"""
-    WITH d AS (
-      SELECT doc_id AS media_id, 'image' AS media_type,
-             CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS byte_len,
-             md5(text) AS h
-      FROM documents
-    ),
-    f AS (SELECT media_id, media_type, byte_len, {v} AS v FROM d)
-    SELECT media_id, media_type, byte_len,
-           list_sum(v) / {dim} AS feat_mean,
-           sqrt(list_sum(list_transform(v,
-               x -> (x - list_sum(v) / {dim}) * (x - list_sum(v) / {dim}))) / {dim})
-             AS feat_std,
-           CAST({dim} AS BIGINT) AS feat_dim
-    FROM f
-    """
-
-
-@register(
-    "llm_media_features",
-    oracle=_media_oracle(dim=8),
-    doc="Multimodal: Arrow-batched mapInPandas feature extraction over binary payloads (decode stubbed; md5-arithmetic stub mirrored in SQL)",
-)
-def llm_media_features(spark, sf_dir):
-    from aave_etl_spark.operators import multimodal
-
-    docs = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-    return multimodal.decode_image_features(docs)
-
-
-@register(
-    "llm_frame_sample",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id AS media_id, (n_chars % 30) + 1 AS duration_s, 24 AS fps
-      FROM documents
-    ),
-    s AS (
-      SELECT media_id, fps, duration_s * fps AS nf, i AS sample_pos
-      FROM m, unnest(range(0, 4)) AS r(i)
-    ),
-    f AS (
-      SELECT media_id, fps, sample_pos,
-             CAST(floor(sample_pos * (nf - 1) / 3.0) AS BIGINT) AS frame_idx
-      FROM s
-    )
-    SELECT media_id,
-           CAST(sample_pos AS BIGINT) AS sample_pos,
-           frame_idx,
-           round(CAST(frame_idx AS DOUBLE) / fps, 6) AS ts_s,
-           md5(CAST(media_id AS VARCHAR) || ':' || CAST(frame_idx AS VARCHAR))
-             AS frame_digest
-    FROM f
-    """,
-    doc=(
-        "Multimodal: fixed-budget uniform video frame sampling — metadata-only"
-        " sequence+explode (payloads untouched), m evenly-spaced frame indices"
-        " + timestamps + the deterministic digest a decode stage joins on"
-    ),
-)
-def llm_frame_sample(spark, sf_dir):
-    from aave_etl_spark.operators import multimodal
-
-    media = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        ((F.col("n_chars") % 30) + 1).alias("duration_s"),
-        F.lit(24).alias("fps"),
-    )
-    return multimodal.uniform_frame_sample(media, m=4)
-
-
-@register(
-    "llm_cosine_near_dup",
-    oracle="""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             round(list_dot_product(a.e, b.e)
-                   / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))),
-                   6) AS cos_sim
-      FROM v a JOIN v b ON a.vec_id < b.vec_id
-    )
-    SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= 0.35
-    """,
-    doc=(
-        "LLM dedup: embedding-cosine near-duplicate pairs, exact, via block-matrix"
-        " products (each row ships once per partner block, not once per pair;"
-        " the SRP-bucketed llm_srp_bucket_pairs remains the sub-quadratic path)"
-    ),
-)
-def llm_cosine_near_dup(spark, sf_dir):
-    return similarity.blocked_cosine_pairs(t(spark, sf_dir, "embeddings"), threshold=0.35)
-
-
-_IVF_COS = (
-    "round(list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-
-_IVF_ORACLE = f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT vec_id AS cell_id, e AS ce FROM v WHERE vec_id < 16),
-    assigned AS (
-      SELECT candidate_id, cell_id, cv FROM (
-        SELECT v.vec_id AS candidate_id, v.e AS cv, cent.cell_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {_IVF_COS.format(a="v.e", b="cent.ce")} DESC, cent.cell_id) AS rn
-        FROM v CROSS JOIN cent)
-      WHERE rn = 1
-    ),
-    probes AS (
-      SELECT query_id, cell_id, qv FROM (
-        SELECT v.vec_id AS query_id, v.e AS qv, cent.cell_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {_IVF_COS.format(a="v.e", b="cent.ce")} DESC, cent.cell_id) AS rn
-        FROM v CROSS JOIN cent WHERE v.vec_id < 8)
-      WHERE rn <= 4
-    ),
-    scored AS (
-      SELECT p.query_id, a.candidate_id,
-             {_IVF_COS.format(a="p.qv", b="a.cv")} AS cos_sim
-      FROM probes p JOIN assigned a USING (cell_id)
-      WHERE a.candidate_id <> p.query_id
-    )
-    SELECT query_id, candidate_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, candidate_id) AS BIGINT) AS rank
-    FROM scored
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, candidate_id) <= 3
-    """
-
-
-@register(
-    "llm_ivf_topk",
-    oracle=_IVF_ORACLE,
-    doc=(
-        "LLM similarity: IVF-flat approximate top-k — deterministic coarse"
-        " quantizer (first-16 centroids; k-means slots into the same plan),"
-        " broadcast centroid assignment (no shuffle over the corpus),"
-        " 4-probe cell join, per-query top-3. The hash-gated scale path"
-        " complementing the exact llm_cosine_topk baseline"
-    ),
-)
-def llm_ivf_topk(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.ivf_topk(emb, queries, k=3, n_cells=16, n_probe=4)
-
-
-@register(
-    "llm_ann_recall",
-    oracle=f"""
-    WITH truth AS ({_TOPK_ORACLE}),
-    approx AS ({_IVF_ORACLE}),
-    hits AS (
-      SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_hits
-      FROM truth t JOIN approx a
-        ON t.query_id = a.query_id AND t.candidate_id = a.candidate_id
-      GROUP BY t.query_id
-    ),
-    q AS (SELECT DISTINCT query_id FROM truth)
-    SELECT q.query_id,
-           CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-    FROM q LEFT JOIN hits h USING (query_id)
-    """,
-    doc=(
-        "LLM similarity: ANN index-quality measurement — per-query recall@3"
-        " of the IVF multi-probe index against the brute-force ground truth"
-        " (the join every index rollout gates on before swapping paths)"
-    ),
-)
-def llm_ann_recall(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    truth = similarity.cosine_topk(emb, queries, k=3).select("query_id", "candidate_id")
-    approx = similarity.ivf_topk(emb, queries, k=3, n_cells=16, n_probe=4).select(
-        "query_id", "candidate_id"
-    )
-    hits = (
-        truth.join(approx, ["query_id", "candidate_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("_h"))
-    )
-    qs = truth.select("query_id").distinct()
-    return qs.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce("_h", F.lit(0)).cast("long").alias("n_hits"),
-        F.round(F.coalesce(F.col("_h").cast("double"), F.lit(0.0)) / F.lit(3.0), 6).alias(
-            "recall_at_3"
-        ),
-    )
-
-
-@register(
-    "llm_semantic_dedup",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT vec_id AS cell_id, e AS ce FROM v WHERE vec_id < 16),
-    assigned AS (
-      SELECT vec_id, cell_id, e FROM (
-        SELECT v.vec_id, v.e, cent.cell_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {_IVF_COS.format(a="v.e", b="cent.ce")} DESC, cent.cell_id) AS rn
-        FROM v CROSS JOIN cent)
-      WHERE rn = 1
-    ),
-    sizes AS (SELECT cell_id, CAST(count(*) AS BIGINT) AS n_cell
-              FROM assigned GROUP BY cell_id),
-    -- cell_cap sub-split twin (similarity.py semantic_dedup): parts =
-    -- ceil(n/1024), sub = md5(id) hex prefix mod parts (1 part below cap)
-    parted AS (
-      SELECT a.vec_id, a.cell_id, a.e, s.n_cell,
-             CAST(('0x' || substring(md5(CAST(a.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
-               % GREATEST(CAST(1 AS BIGINT), CAST(ceil(s.n_cell / 1024.0) AS BIGINT))
-               AS sub_cell
-      FROM assigned a JOIN sizes s USING (cell_id)
-    ),
-    pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             {_IVF_COS.format(a="a.e", b="b.e")} AS cos_sim
-      FROM parted a JOIN parted b
-        ON a.cell_id = b.cell_id AND a.sub_cell = b.sub_cell
-       AND a.vec_id < b.vec_id
-    ),
-    dropped AS (SELECT DISTINCT id_b FROM pairs WHERE cos_sim >= 0.35)
-    SELECT a.vec_id, a.cell_id, a.n_cell, (d.id_b IS NULL) AS kept
-    FROM parted a
-    LEFT JOIN dropped d ON a.vec_id = d.id_b
-    """,
-    doc=(
-        "LLM dedup: SemDeDup semantic near-dup pruning — broadcast-argmax"
-        " cluster assignment (map-only over the corpus), within-cell exact"
-        " cosine pairs, drop-if-similar-to-any-smaller-id keeper rule"
-    ),
-)
-def llm_semantic_dedup(spark, sf_dir):
-    return similarity.semantic_dedup(
-        t(spark, sf_dir, "embeddings"), eps=0.35, n_cells=16
-    )
-
-
-@register(
-    "llm_embed_quantize",
-    oracle="""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    s AS (
-      SELECT vec_id, e,
-             CASE WHEN m > 0 THEN 127.0 / m ELSE 0.0 END AS qscale
-      FROM (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m FROM v)
-    ),
-    q AS (
-      SELECT vec_id, e, qscale,
-             list_transform(e, x -> round(x * qscale, 0)) AS qv
-      FROM s
-    ),
-    err AS (
-      SELECT vec_id, qscale,
-             list_transform(range(1, len(e) + 1),
-                            i -> abs(e[i] - CASE WHEN qscale > 0 THEN qv[i] / qscale ELSE 0.0 END)) AS errs
-      FROM q
-    )
-    SELECT vec_id, round(qscale, 6) AS qscale,
-           round(list_max(errs), 6) AS max_abs_err,
-           round(list_sum(errs) / len(errs), 6) AS mean_abs_err
-    FROM err
-    """,
-    doc=(
-        "LLM similarity: symmetric int8 embedding quantization with per-vector"
-        " dequantization scale; the query gates the round-trip reconstruction"
-        " error (max/mean abs) per vector"
-    ),
-)
-def llm_embed_quantize(spark, sf_dir):
-    q = similarity.quantize_embeddings(t(spark, sf_dir, "embeddings"))
-    deq = F.zip_with(
-        F.col("embedding"),
-        F.col("qvec"),
-        lambda x, v: F.abs(
-            x.cast("double")
-            - F.when(F.col("qscale") > 0, v.cast("double") / F.col("qscale")).otherwise(
-                F.lit(0.0)
-            )
-        ),
-    )
-    withe = q.select("vec_id", "qscale", deq.alias("errs"))
-    return withe.select(
-        "vec_id",
-        F.round(F.col("qscale"), 6).alias("qscale"),
-        F.round(F.array_max("errs"), 6).alias("max_abs_err"),
-        F.round(
-            F.aggregate(F.col("errs"), F.lit(0.0), lambda acc, x: acc + x)
-            / F.size("errs"),
-            6,
-        ).alias("mean_abs_err"),
-    )
 
 
 @register(
@@ -1479,131 +1017,6 @@ _BM25_SPARSE_CTES = f"""tok AS (
       WHERE p.doc_id <> q.query_id
       GROUP BY q.query_id, p.doc_id
     )"""
-
-
-# The RRF fusion oracle fragments, shared VERBATIM by the in-flight
-# hybrid (llm_hybrid_rrf) and the at-rest composition
-# (llm_hybrid_rrf_atrest): the sparse-arm top-10 rank over `sarm`, and
-# the k0=60 reciprocal-rank full-outer fusion + final top-5 over a `dr`
-# CTE each query supplies. One copy — the certified twins cannot drift.
-_RRF_SR_CTE = """sr AS (
-      SELECT query_id, candidate_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY bm25_score DESC, candidate_id) AS r
-      FROM sarm
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY bm25_score DESC, candidate_id) <= 10
-    )"""
-
-_RRF_FUSE_TAIL = """fused AS (
-      SELECT coalesce(dr.query_id, sr.query_id) AS query_id,
-             coalesce(dr.candidate_id, sr.candidate_id) AS candidate_id,
-             round(coalesce(1.0 / (60 + dr.r), 0.0)
-                   + coalesce(1.0 / (60 + sr.r), 0.0), 6) AS rrf_score
-      FROM dr FULL OUTER JOIN sr
-        ON dr.query_id = sr.query_id AND dr.candidate_id = sr.candidate_id
-    )
-    SELECT query_id, candidate_id, rrf_score,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY rrf_score DESC, candidate_id) AS BIGINT) AS rank
-    FROM fused
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY rrf_score DESC, candidate_id) <= 5
-    """
-
-
-@register(
-    "llm_hybrid_rrf",
-    oracle=f"""
-    WITH {_BM25_SPARSE_CTES},
-    {_RRF_SR_CTE},
-    dq AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 8),
-    dc AS (SELECT vec_id AS candidate_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-    dscored AS (
-      SELECT dq.query_id, dc.candidate_id,
-             round(list_dot_product(dq.qv, dc.cv)
-                   / (sqrt(list_dot_product(dq.qv, dq.qv)) * sqrt(list_dot_product(dc.cv, dc.cv))),
-                   6) AS cos_sim
-      FROM dc CROSS JOIN dq
-      WHERE dc.candidate_id <> dq.query_id
-    ),
-    dr AS (
-      SELECT query_id, candidate_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim DESC, candidate_id) AS r
-      FROM dscored
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos_sim DESC, candidate_id) <= 10
-    ),
-    {_RRF_FUSE_TAIL}""",
-    doc=(
-        "LLM retrieval: HYBRID dense+sparse fusion — BM25 query-terms"
-        " probe the corpus postings (broadcast query-term set, map-side"
-        " join on term) and cosine top-k over embeddings (vec_id == doc_id"
-        " correspondence); the two per-query top-10 arms fuse by"
-        " reciprocal-rank (Cormack 2009, k0=60) into a top-5 — the"
-        " calibration-free hybrid retrieval every RAG/hard-negative-mining"
-        " pipeline runs; all scale stays inside the arms, the fusion join"
-        " is |queries|-bounded"
-    ),
-)
-def llm_hybrid_rrf(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    dense = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=10)
-    # the sparse arm probes the session's shared at-rest postings store
-    # (scores identical to the in-flight bm25_retrieve by construction —
-    # the stored weights ARE bm25_postings' output, certified by the
-    # common oracle) instead of re-running the tokenize→tf→df→weight
-    # corpus pass inside this head: the rrf/rrf_atrest store-prefix
-    # sharing the r13 verdict prescribed (guide §5/§6). The two parts
-    # stay distinct in their DENSE arms (exact cosine vs at-rest IVF-PQ).
-    sparse = _bm25_index_arm(spark, sf_dir, k=10)
-    return similarity.rrf_fuse(dense, sparse, k=5)
-
-
-@register(
-    "llm_knn_classify",
-    oracle="""
-    WITH dq AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                FROM embeddings WHERE vec_id < 8),
-    dc AS (SELECT vec_id AS candidate_id, label,
-                  CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-    scored AS (
-      SELECT dq.query_id, dc.candidate_id, dc.label,
-             round(list_dot_product(dq.qv, dc.cv)
-                   / (sqrt(list_dot_product(dq.qv, dq.qv))
-                      * sqrt(list_dot_product(dc.cv, dc.cv))), 6) AS cos_sim
-      FROM dc CROSS JOIN dq
-      WHERE dc.candidate_id <> dq.query_id
-    ),
-    nn AS (
-      SELECT query_id, label FROM (
-        SELECT query_id, label,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, candidate_id) AS r
-        FROM scored) WHERE r <= 5
-    ),
-    votes AS (
-      SELECT query_id, label, CAST(count(*) AS BIGINT) AS n_votes
-      FROM nn GROUP BY 1, 2
-    )
-    SELECT query_id, label AS pred_label, n_votes FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY n_votes DESC, label ASC) AS rn
-      FROM votes) WHERE rn = 1
-    """,
-    doc=(
-        "LLM curation: k-NN majority-vote label propagation over the"
-        " embedding column (cosine top-5 neighbors vote, ties to the"
-        " smallest label) — the model-free quality/domain classifier"
-        " pattern; vote aggregation is |queries|x k rows regardless of"
-        " corpus size"
-    ),
-)
-def llm_knn_classify(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.knn_classify(emb, emb.filter(F.col("vec_id") < 8), k=5)
 
 
 @register(
@@ -2422,51 +1835,6 @@ def llm_simhash_near_dup(spark, sf_dir):
 
 
 @register(
-    "llm_mean_pool",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, vec_id % 8 AS shard
-      FROM embeddings
-    ),
-    g AS (
-      SELECT shard, CAST(count(*) AS BIGINT) AS n_vecs,
-             list(e ORDER BY vec_id) AS vs
-      FROM v GROUP BY shard
-    ),
-    m AS (
-      SELECT shard, n_vecs,
-             list_transform(range(1, len(vs[1]) + 1),
-                i -> list_sum(list_transform(vs, v -> v[i])) / CAST(n_vecs AS DOUBLE))
-               AS mean_e
-      FROM g
-    )
-    SELECT shard, n_vecs,
-           round(sqrt(list_dot_product(mean_e, mean_e)), 6) AS mean_norm,
-           round(mean_e[1], 6) AS mean_c0
-    FROM m
-    """,
-    doc=(
-        "LLM similarity: deterministic mean-pooling (chunk→doc /"
-        " member→centroid) — per-group vectors fold in sorted-id order so"
-        " the pooled floats are bit-reproducible across engines; certified"
-        " on the pooled vector's norm and first component"
-    ),
-)
-def llm_mean_pool(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings").withColumn(
-        "shard", F.expr("vec_id % 8")
-    )
-    pooled = similarity.mean_pool_embeddings(emb, ["shard"])
-    me = F.col("mean_embedding")
-    return pooled.select(
-        "shard",
-        "n_vecs",
-        F.round(F.sqrt(F.aggregate(me, F.lit(0.0), lambda a, x: a + x * x)), 6).alias("mean_norm"),
-        F.round(F.element_at(me, 1), 6).alias("mean_c0"),
-    )
-
-
-@register(
     "llm_quality_topfrac",
     oracle=f"""
     WITH base AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
@@ -2830,96 +2198,6 @@ def llm_dsir_resample(spark, sf_dir):
     return sampling.dsir_importance_resample(
         t(spark, sf_dir, "documents"), target_pred="lang = 'en'",
         m=256, keep_frac=0.25,
-    )
-
-
-@register(
-    "llm_ivf_index_search",
-    oracle=_IVF_ORACLE,  # identical output contract to llm_ivf_topk
-    doc=(
-        "LLM similarity: the AT-REST IVF path — build the index through"
-        " TableStore partitioned BY cell_id, then search via a"
-        " partition-PRUNED scan of only the probed cells' directories"
-        " (n_probe/n_cells of the corpus bytes, enforced by the file"
-        " listing); results bitwise-match the in-flight llm_ivf_topk"
-    ),
-)
-def llm_ivf_index_search(spark, sf_dir):
-    import os
-
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = t(spark, sf_dir, "embeddings")
-    # per-SESSION store root (the session_scratch_dir discipline the ivfpq
-    # sibling adopted): concurrent harness processes can never race one
-    # another's build/rmtree, and a regenerated fixture at the same path
-    # can't serve a prior session's stale index. Keyed additionally by a
-    # digest of the FULL resolved sf_dir (not its basename): two corpora
-    # whose dirs share a basename must never share a cached index.
-    store = TableStore(
-        spark,
-        session_scratch_dir(spark, "aave_etl_spark_ivf", corpus_key(sf_dir)),
-    )
-    # build-once, search-many: the at-rest pattern's whole point. The index
-    # is keyed by sf_dir, and the corpus at a given sf is immutable, so a
-    # present index is current; repeat invocations (bench passes, driver
-    # cert) exercise the search path against the materialized layout.
-    # gate on the COMPLETION MARKER (cleared first / written last by
-    # ivf_index_build): an interrupted first build OR rebuild leaves no
-    # marker, so a half-written or cross-run-inconsistent table pair can
-    # never be served; the existence checks stay as belt-and-braces
-    if not (
-        store.is_complete("ivf_index")
-        and store.exists("ivf_index")
-        and store.exists("ivf_index_centroids")
-    ):
-        similarity.ivf_index_build(store, emb, n_cells=16)
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.ivf_index_search(store, queries, k=3, n_probe=4)
-
-
-def _rp_oracle(r: int = 16) -> str:
-    """DuckDB mirror of similarity.random_projection: row p of the ±1/sqrt(r)
-    matrix reuses the SRP md5-parity sign derivation (`_srp_oracle` docs)."""
-    sign = (
-        "CASE WHEN strpos('13579bdf', "
-        "substring(md5('{p}:' || CAST(i - 1 AS VARCHAR)), 15, 1)) > 0 "
-        "THEN 1.0 ELSE -1.0 END"
-    )
-    projs = ", ".join(
-        f"list_sum(list_transform(e, (x, i) -> x * {sign.format(p=p)})) / sqrt({r}.0)"
-        for p in range(r)
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    p AS (SELECT vec_id, e, [{projs}] AS rp FROM v)
-    SELECT vec_id,
-           round(sqrt(list_dot_product(e, e)), 6) AS orig_norm,
-           round(sqrt(list_dot_product(rp, rp)), 6) AS proj_norm,
-           round(sqrt(list_dot_product(rp, rp)) / sqrt(list_dot_product(e, e)), 6)
-             AS norm_ratio
-    FROM p
-    """
-
-
-@register(
-    "llm_rp_project",
-    oracle=_rp_oracle(r=16),
-    doc=(
-        "LLM similarity: Johnson-Lindenstrauss random projection 64->16 dims"
-        " (Achlioptas ±1/sqrt(r) literal matrix, md5-parity derivation shared"
-        " with SRP) — shuffle-free narrow map; the query gates per-vector"
-        " norm preservation"
-    ),
-)
-def llm_rp_project(spark, sf_dir):
-    rp = similarity.random_projection(t(spark, sf_dir, "embeddings"), r=16)
-    return rp.select(
-        "vec_id",
-        F.round("orig_norm", 6).alias("orig_norm"),
-        F.round("proj_norm", 6).alias("proj_norm"),
-        F.round(F.col("proj_norm") / F.col("orig_norm"), 6).alias("norm_ratio"),
     )
 
 
@@ -3463,7 +2741,7 @@ def llm_stream_ingest(spark, sf_dir):
     landing = os.path.join(root, "landing")
     ckpt = os.path.join(root, "ckpt")
     store = TableStore(spark, os.path.join(root, "warehouse"))
-    # drain-once / read-many (the at-rest IVF discipline): the FIRST
+    # drain-once / read-many (the at-rest discipline): the FIRST
     # invocation in a session runs the real streaming machinery end-to-end
     # and stamps a completion marker LAST; repeat invocations (bench
     # passes, driver cert re-runs) certify the AT-REST table the stream
@@ -4757,69 +4035,13 @@ def llm_minhash_index_match(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     new_batch = docs.filter(F.col("doc_id") % 2 == 1)
-    # build-once/match-many (the at-rest IVF discipline): marker stamped
+    # build-once/match-many (the at-rest discipline): marker stamped
     # LAST so an interrupted build is rebuilt from scratch next call
     if not (store.is_complete(tbl) and store.exists(tbl)):
         store.clear_complete(tbl)
         dedup.minhash_index_build(store, corpus, tbl)
         store.mark_complete(tbl)
     return dedup.minhash_index_match(store, new_batch, tbl)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (Jégou et al. 2011): the compressed-domain ANN —
-# codes are M small ints per vector, query scoring is M table lookups
-# (asymmetric distance), and the corpus floats are never read at query
-# time. Completes the ANN ladder: cosine_topk (exact) → ivf_topk (probe
-# pruning) → pq_topk (scan compression); IVF-PQ composes the two.
-# ---------------------------------------------------------------------------
-_PQ_ORACLE = """
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cb AS (SELECT vec_id AS code, e AS ce FROM v WHERE vec_id < 16),
-    ms AS (SELECT unnest(range(0, 4)) AS m),
-    sd AS (
-      SELECT v.vec_id, ms.m, cb.code,
-             round(list_sum([ (v.e[ms.m * 16 + j] - cb.ce[ms.m * 16 + j])
-                              * (v.e[ms.m * 16 + j] - cb.ce[ms.m * 16 + j])
-                              for j in range(1, 17) ]), 6) AS d2
-      FROM v CROSS JOIN cb CROSS JOIN ms
-    ),
-    codes AS (
-      SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
-        FROM sd) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT s.vec_id AS query_id, c.vec_id AS candidate_id,
-             round(sum(s.d2), 6) AS approx_d2
-      FROM codes c JOIN sd s ON s.m = c.m AND s.code = c.code
-      WHERE s.vec_id < 8 AND c.vec_id != s.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT query_id, candidate_id, approx_d2,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY approx_d2, candidate_id) AS BIGINT) AS rank
-    FROM pairs
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx_d2, candidate_id) <= 3
-    """
-
-
-@register(
-    "llm_pq_topk",
-    oracle=_PQ_ORACLE,
-    doc=(
-        "LLM similarity: product-quantization top-k with asymmetric"
-        " distance (M=4 subspaces x K=16 codes over 64-dim embeddings,"
-        " deterministic first-K codebook) — the compressed-domain ANN"
-        " whose query scan reads M codes per candidate, not d floats"
-    ),
-)
-def llm_pq_topk(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.pq_topk(emb, queries, k=3, n_subspaces=4, n_codes=16)
 
 
 @register(
@@ -4851,561 +4073,6 @@ def llm_epoch_shards(spark, sf_dir):
     from aave_etl_spark.operators import sampling
 
     return sampling.epoch_shards(t(spark, sf_dir, "documents"), n_shards=8)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ (FAISS's IVFPQ layout; Jégou et al. 2011 §V): coarse-cell probe
-# pruning × residual-PQ scan compression — the composed billion-scale ANN.
-# Deterministic geometry: cells = first 8 vectors, residual codebook =
-# residuals of vectors 8..15 w.r.t. their own assigned cells.
-# ---------------------------------------------------------------------------
-# The IVF-PQ CTE chain (ends at `pairs`: per-(query, candidate) 6dp ADC
-# distances over the probed cells) — shared by the standalone IVF-PQ
-# oracles and the at-rest hybrid fusion oracle, which re-ranks `pairs`
-# at a different k before fusing with the BM25 arm.
-_IVFPQ_CTES = """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cells AS (SELECT CAST(vec_id AS INT) AS cell_id, e AS ce FROM v WHERE vec_id < 8),
-    asg AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 round(list_sum([ (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i])
-                                  for i in range(1, 65) ]), 6), c.cell_id) AS rn
-        FROM v CROSS JOIN cells c) WHERE rn = 1
-    ),
-    res AS (
-      SELECT v.vec_id, a.cell_id,
-             [v.e[i] - c.ce[i] for i in range(1, 65)] AS r
-      FROM v JOIN asg a USING (vec_id) JOIN cells c ON c.cell_id = a.cell_id
-    ),
-    cb AS (SELECT CAST(vec_id - 8 AS INT) AS code, r AS cr
-           FROM res WHERE vec_id >= 8 AND vec_id < 16),
-    ms AS (SELECT unnest(range(0, 4)) AS m),
-    sdc AS (
-      SELECT res.vec_id, ms.m, cb.code,
-             round(list_sum([ (res.r[ms.m * 16 + j] - cb.cr[ms.m * 16 + j])
-                              * (res.r[ms.m * 16 + j] - cb.cr[ms.m * 16 + j])
-                              for j in range(1, 17) ]), 6) AS d2
-      FROM res CROSS JOIN cb CROSS JOIN ms
-    ),
-    codes AS (
-      SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
-        FROM sdc) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
-    probes AS (
-      SELECT query_id, cell_id FROM (
-        SELECT q.query_id, c.cell_id,
-               row_number() OVER (PARTITION BY q.query_id ORDER BY
-                 round(list_sum([ (q.qe[i] - c.ce[i]) * (q.qe[i] - c.ce[i])
-                                  for i in range(1, 65) ]), 6), c.cell_id) AS rn
-        FROM q CROSS JOIN cells c) WHERE rn <= 2
-    ),
-    qres AS (
-      SELECT p.query_id, p.cell_id,
-             [q.qe[i] - c.ce[i] for i in range(1, 65)] AS qr
-      FROM probes p JOIN q USING (query_id) JOIN cells c ON c.cell_id = p.cell_id
-    ),
-    qtab AS (
-      SELECT qres.query_id, qres.cell_id, ms.m, cb.code,
-             round(list_sum([ (qres.qr[ms.m * 16 + j] - cb.cr[ms.m * 16 + j])
-                              * (qres.qr[ms.m * 16 + j] - cb.cr[ms.m * 16 + j])
-                              for j in range(1, 17) ]), 6) AS d2
-      FROM qres CROSS JOIN cb CROSS JOIN ms
-    ),
-    pairs AS (
-      SELECT t.query_id, e.vec_id AS candidate_id, a.cell_id,
-             round(sum(t.d2), 6) AS approx_d2
-      FROM codes e
-      JOIN asg a USING (vec_id)
-      JOIN qtab t ON t.cell_id = a.cell_id AND t.m = e.m AND t.code = e.code
-      WHERE e.vec_id != t.query_id
-      GROUP BY 1, 2, 3
-    )"""
-
-_IVFPQ_ORACLE = f"""
-    WITH {_IVFPQ_CTES}
-    SELECT query_id, candidate_id, cell_id, approx_d2,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY approx_d2, candidate_id) AS BIGINT)
-             AS rank
-    FROM pairs
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx_d2, candidate_id) <= 3
-    """
-
-
-@register(
-    "llm_ivfpq_topk",
-    oracle=_IVFPQ_ORACLE,
-    doc=(
-        "LLM similarity: IVF-PQ composed ANN — 2-of-8-cell probe pruning"
-        " times residual-PQ (M=4 x K=8) asymmetric-distance scoring; bytes"
-        " read scale with n_probe/n_cells x M/(4d) of the raw corpus"
-    ),
-)
-def llm_ivfpq_topk(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.ivfpq_topk(
-        emb, queries, k=3, n_cells=8, n_probe=2, n_subspaces=4, n_codes=8
-    )
-
-
-@register(
-    "llm_ivfpq_index_search",
-    oracle=_IVFPQ_ORACLE,  # identical output contract to llm_ivfpq_topk
-    doc=(
-        "LLM similarity: the AT-REST IVF-PQ path — codes persisted"
-        " partitioned BY cell_id with centroid/codebook sidecars, searched"
-        " via a partition-PRUNED scan of only the probed cells reading M"
-        " ints per candidate; results bitwise-match the in-flight"
-        " llm_ivfpq_topk"
-    ),
-)
-def llm_ivfpq_index_search(spark, sf_dir):
-    return _ivfpq_index_arm(spark, sf_dir, k=3)
-
-
-def _ivfpq_index_arm(spark, sf_dir, k):
-    """The at-rest dense arm: partition-pruned IVF-PQ search against the
-    persisted codes + sidecars (store shared across callers on the same
-    corpus; the hybrid fusion reuses the build)."""
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = t(spark, sf_dir, "embeddings")
-    # per-SESSION store root (the session_scratch_dir discipline every
-    # other at-rest cert store follows): two concurrent harness processes
-    # can never race clear_complete/rmtree on a shared index, and a
-    # regenerated fixture at the same path can't serve a stale one.
-    # Within the session the root is additionally sha-keyed by the FULL
-    # resolved sf path — two corpora sharing a basename never share a
-    # cached index.
-    store = TableStore(
-        spark,
-        session_scratch_dir(spark, "aave_etl_spark_ivfpq", corpus_key(sf_dir)),
-    )
-    # build-once/search-many, gated on the COMPLETION MARKER (cleared
-    # first / written last by ivfpq_index_build): an interrupted build or
-    # rebuild leaves no marker, so a codes/sidecar pair from different
-    # runs can never be served
-    if not (
-        store.is_complete("ivfpq_index")
-        and store.exists("ivfpq_index")
-        and store.exists("ivfpq_index_cells")
-        and store.exists("ivfpq_index_codebook")
-    ):
-        similarity.ivfpq_index_build(
-            store, emb, n_cells=8, n_codes=8, n_subspaces=4
-        )
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.ivfpq_index_search(
-        store, queries, k=k, n_probe=2, n_subspaces=4
-    )
-
-
-@register(
-    "llm_hybrid_rrf_atrest",
-    oracle=f"""
-    WITH {_BM25_SPARSE_CTES},
-    {_IVFPQ_CTES},
-    {_RRF_SR_CTE},
-    dr AS (
-      SELECT query_id, candidate_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY approx_d2, candidate_id) AS r
-      FROM pairs
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY approx_d2, candidate_id) <= 10
-    ),
-    {_RRF_FUSE_TAIL}""",
-    doc=(
-        "LLM retrieval: the AT-REST hybrid composition — the 100 TB shape"
-        " SCALE.md names: rrf_fuse over bm25_index_search (term-bucketed"
-        " postings store) x ivfpq_index_search (cell-partition-pruned"
-        " codes store); both arms are bitwise twins of their in-flight"
-        " forms, so the fusion is certified end-to-end against the same"
-        " dual-engine oracle shape as llm_hybrid_rrf; all corpus scale"
-        " stays inside the at-rest arms, the fusion join is"
-        " |queries|-bounded"
-    ),
-)
-def llm_hybrid_rrf_atrest(spark, sf_dir):
-    dense = _ivfpq_index_arm(spark, sf_dir, k=10)
-    sparse = _bm25_index_arm(spark, sf_dir, k=10)
-    return similarity.rrf_fuse(dense, sparse, k=5)
-
-
-# ---------------------------------------------------------------------------
-# The daily EMBEDDINGS pipeline (plans/embeddings_pipeline.py): the ANN twin
-# of the corpus pipeline. Two days of vector batches — day 2 plants exact
-# replicas (+10M ids, copies of day-1 vectors), RESCALED replicas (+20M ids,
-# 2x day-1 vectors: cosine is scale-invariant, so they score 1.0 without
-# being bitwise equal), a within-batch EXACT duplicate pair (+30M ids,
-# copies of same-day odd vectors), and a within-batch NEAR-dup pair (+40M
-# ids, 3x same-day odd vectors: not bitwise equal, so only the round-12
-# within-batch SEMANTIC pass can drop them) — flow landing -> within-batch
-# exact-vector dedup (agg+join, the vector is the digest) -> WITHIN-BATCH
-# semantic dedup (SRP-bucketed cosine self-join, keep the lowest id per
-# >= 0.999 pair) -> cross-corpus semantic dedup (IVF probe of the at-rest
-# index scoped to prior days, drop at rounded cosine >= 0.999) ->
-# incremental index maintenance (day 1 builds under a frozen deterministic
-# quantizer, day 2 ivf_index_append's under the STORED centroids). The
-# oracles recompute the whole chain from first principles: the same SRP
-# plane derivation, the same argmax-cell assignment, the same top-4 probe
-# ranking (rounded cosine DESC, cell_id ASC), the same threshold.
-# ---------------------------------------------------------------------------
-# certification corpus cap: the pipeline's frozen 16-cell quantizer is
-# sized for corpora in this envelope (SCALE.md measures the cost curve
-# past it and the retrain remedy); the cap keeps the bench-scale (sf0.1,
-# 50k vectors) store build from paying the out-of-envelope probe the
-# SCALE row exists to document — correctness certifies at sf0.01 over
-# the full 2000 (sf0.001's 500 vectors are untouched)
-_EMB_CAP = 2000
-
-_EMB_CTES = f"""ev AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      WHERE vec_id < {_EMB_CAP}
-    ),
-    ed1 AS (
-      SELECT vec_id, e, DATE '2024-01-01' AS day FROM ev WHERE vec_id % 2 = 0
-    ),
-    ed2raw AS (
-      SELECT vec_id, e FROM ev WHERE vec_id % 2 = 1
-      UNION ALL
-      SELECT vec_id + 10000000 AS vec_id, e FROM ev WHERE vec_id % 4 = 0
-      UNION ALL
-      SELECT vec_id + 20000000 AS vec_id,
-             list_transform(e, x -> x * 2.0) AS e
-      FROM ev WHERE vec_id % 4 = 2
-      UNION ALL
-      SELECT vec_id + 30000000 AS vec_id, e FROM ev WHERE vec_id % 4 = 1
-      UNION ALL
-      SELECT vec_id + 40000000 AS vec_id,
-             list_transform(e, x -> x * 3.0) AS e
-      FROM ev WHERE vec_id % 8 = 5
-    ),
-    ed2w AS (
-      SELECT min(vec_id) AS vec_id, e, DATE '2024-01-02' AS day
-      FROM ed2raw GROUP BY e
-    ),
-    ewb AS (
-      -- eu mirrors the ENGINE's float expression structure exactly
-      -- (operators/similarity.py normalized(): each element divided by
-      -- sqrt(dot(e,e)), THEN the pair dot on unit vectors) — not the
-      -- algebraically-equal dot(a,b)/(|a||b|) on raw lists, whose last
-      -- ulp can differ and flip a pair sitting exactly at the rounded
-      -- 0.999 boundary (round-12 ADVICE)
-      SELECT day, vec_id, e,
-             list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS eu,
-             CAST({_srp_bucket_expr(8)} AS BIGINT) AS bucket
-      FROM (SELECT day, vec_id, e FROM ed1
-            UNION ALL SELECT day, vec_id, e FROM ed2w)
-    ),
-    ewdup AS (
-      SELECT DISTINCT hi.vec_id
-      FROM ewb lo JOIN ewb hi
-        ON lo.day = hi.day AND lo.bucket = hi.bucket
-       AND lo.vec_id < hi.vec_id
-      WHERE round(list_dot_product(lo.eu, hi.eu), 6) >= 0.999
-    ),
-    ed1c AS (
-      SELECT vec_id, e, day FROM ed1
-      WHERE vec_id NOT IN (SELECT vec_id FROM ewdup)
-    ),
-    ed2b AS (
-      SELECT vec_id, e, day FROM ed2w
-      WHERE vec_id NOT IN (SELECT vec_id FROM ewdup)
-    ),
-    ecent AS (SELECT vec_id AS cell_id, e AS ce FROM ed1c WHERE vec_id < 16),
-    ea1 AS (
-      SELECT vec_id, e, day, cell_id FROM (
-        SELECT d.vec_id, d.e, d.day, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY d.vec_id
-                 ORDER BY {_IVF_COS.format(a="d.e", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM ed1c d CROSS JOIN ecent c)
-      WHERE rn = 1
-    ),
-    eprobe AS (
-      SELECT vec_id, e, cell_id FROM (
-        SELECT d.vec_id, d.e, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY d.vec_id
-                 ORDER BY {_IVF_COS.format(a="d.e", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM ed2b d CROSS JOIN ecent c)
-      WHERE rn <= 4
-    ),
-    edup AS (
-      SELECT DISTINCT p.vec_id
-      FROM eprobe p JOIN ea1 a USING (cell_id)
-      WHERE a.vec_id <> p.vec_id
-        AND {_IVF_COS.format(a="p.e", b="a.e")} >= 0.999
-    ),
-    ed2c AS (
-      SELECT vec_id, e, day FROM ed2b
-      WHERE vec_id NOT IN (SELECT vec_id FROM edup)
-    ),
-    eclean AS (
-      SELECT vec_id, e, day FROM ed1c
-      UNION ALL SELECT vec_id, e, day FROM ed2c
-    ),
-    ea2 AS (
-      SELECT vec_id, e, day, cell_id FROM (
-        SELECT d.vec_id, d.e, d.day, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY d.vec_id
-                 ORDER BY {_IVF_COS.format(a="d.e", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM ed2c d CROSS JOIN ecent c)
-      WHERE rn = 1
-    ),
-    eassign AS (
-      SELECT vec_id, e, day, cell_id FROM ea1
-      UNION ALL SELECT vec_id, e, day, cell_id FROM ea2
-    )"""
-
-
-def _emb_run_store(spark, sf_dir):
-    """Run the 2-day embeddings pipeline through the orchestration layer
-    into a session-scoped scratch store ONCE per (session, corpus) — the
-    _corpus_run_store pattern for the ANN side."""
-    import shutil
-
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-    from aave_etl_spark.plans.embeddings_pipeline import embeddings_pipeline_graph
-    from aave_etl_spark.plans.orchestration import run_day
-
-    root = session_scratch_dir(spark, "aave_etl_spark_emb_run", corpus_key(sf_dir))
-    store = TableStore(spark, root)
-    done = store.is_complete("emb_cell_stats") and all(
-        store.exists(n)
-        for n in (
-            "emb_clean",
-            "emb_ivf",
-            "emb_ivf_centroids",
-            "emb_cell_stats",
-            "emb_index_health",
-            "emb_pq",
-            "emb_pq_cells",
-            "emb_pq_codebook",
-        )
-    )
-    if not done:
-        store.clear_complete("emb_cell_stats")
-        shutil.rmtree(root, ignore_errors=True)
-        base = (
-            t(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") < _EMB_CAP)
-            .select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-            )
-        )
-        d1 = base.filter("vec_id % 2 = 0").withColumn(
-            "day", F.to_date(F.lit("2024-01-01"))
-        )
-        d2 = (
-            base.filter("vec_id % 2 = 1")
-            .unionByName(
-                base.filter("vec_id % 4 = 0").select(
-                    (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-                )
-            )
-            .unionByName(
-                base.filter("vec_id % 4 = 2").select(
-                    (F.col("vec_id") + 20_000_000).alias("vec_id"),
-                    F.transform("embedding", lambda x: x * F.lit(2.0)).alias(
-                        "embedding"
-                    ),
-                )
-            )
-            .unionByName(
-                base.filter("vec_id % 4 = 1").select(
-                    (F.col("vec_id") + 30_000_000).alias("vec_id"), "embedding"
-                )
-            )
-            .unionByName(
-                # same-day NEAR-dup pair: 3x-rescaled copies of day-2's own
-                # odd vectors — invisible to the exact pass (different
-                # bytes) and to the prior-day probe (originals are in the
-                # SAME batch); only the within-batch SRP pass drops them
-                base.filter("vec_id % 8 = 5").select(
-                    (F.col("vec_id") + 40_000_000).alias("vec_id"),
-                    F.transform("embedding", lambda x: x * F.lit(3.0)).alias(
-                        "embedding"
-                    ),
-                )
-            )
-            .withColumn("day", F.to_date(F.lit("2024-01-02")))
-        )
-        landing = d1.unionByName(d2)
-        graph = embeddings_pipeline_graph()
-        for day in ("2024-01-01", "2024-01-02"):
-            run_day(
-                spark, store, graph, day, markets=[], resources={"vectors": landing}
-            )
-        store.mark_complete("emb_cell_stats")
-    return store
-
-
-@register(
-    "llm_emb_pipeline_run",
-    oracle=f"""
-    WITH {_EMB_CTES}
-    SELECT 'clean' AS part, CAST(day AS STRING) AS k1,
-           CAST(vec_id AS STRING) AS k2,
-           round(sqrt(list_dot_product(e, e)), 6) AS v1
-    FROM eclean
-    UNION ALL
-    SELECT 'cells' AS part, CAST(day AS STRING) AS k1,
-           CAST(cell_id AS STRING) AS k2,
-           CAST(count(*) AS DOUBLE) AS v1
-    FROM eassign GROUP BY day, cell_id
-    """,
-    doc=(
-        "the DAILY embeddings pipeline run END-TO-END through the"
-        " orchestration layer (plans/embeddings_pipeline.py): two days of"
-        " vector batches — day 2 plants exact replicas, RESCALED replicas"
-        " (cosine scale-invariance), a within-batch EXACT duplicate pair,"
-        " and a within-batch NEAR-dup pair (3x same-day rescales) — flow"
-        " landing -> within-batch exact-vector dedup -> within-batch"
-        " SEMANTIC dedup (SRP-bucketed cosine self-join; round 12) ->"
-        " cross-corpus semantic dedup against the at-rest IVF index"
-        " (prior-day-scoped probe, rounded-cosine threshold) -> per-(day,"
-        " cell) balance stats, every table read back FROM THE STORE; the"
-        " ANN twin of llm_corpus_pipeline_run"
-    ),
-)
-def llm_emb_pipeline_run(spark, sf_dir):
-    store = _emb_run_store(spark, sf_dir)
-    clean = store.read("emb_clean").select(
-        F.lit("clean").alias("part"),
-        F.col("day").cast("string").alias("k1"),
-        F.col("vec_id").cast("string").alias("k2"),
-        F.round(similarity.norm(F.col("embedding")), 6).alias("v1"),
-    )
-    cells = store.read("emb_cell_stats").selectExpr(
-        "'cells' AS part", "CAST(day AS STRING) AS k1",
-        "CAST(cell_id AS STRING) AS k2", "CAST(n_vecs AS DOUBLE) AS v1",
-    )
-    return clean.unionByName(cells)
-
-
-@register(
-    "llm_emb_index_state",
-    oracle=f"""
-    WITH {_EMB_CTES}
-    SELECT CAST(day AS STRING) AS day, vec_id, CAST(cell_id AS BIGINT) AS cell_id
-    FROM eassign
-    """,
-    doc=(
-        "LLM ANN state: the INCREMENTALLY-maintained at-rest IVF index —"
-        " day 1 built under a frozen deterministic coarse quantizer, day 2"
-        " ivf_index_append'ed under the STORED centroids (a broadcast"
-        " argmax over the batch only; dynamic (cell, day) slice overwrite"
-        " makes re-runs idempotent) — certified per-VECTOR equal to a"
-        " from-scratch assignment of the accumulated survivors under the"
-        " same centroids: the append path never drifts from the build path"
-    ),
-)
-def llm_emb_index_state(spark, sf_dir):
-    store = _emb_run_store(spark, sf_dir)
-    return store.read("emb_ivf").select(
-        F.col("day").cast("string").alias("day"),
-        "vec_id",
-        F.col("cell_id").cast("long").alias("cell_id"),
-    )
-
-
-@register(
-    "llm_emb_search_atrest",
-    oracle=f"""
-    WITH {_EMB_CTES},
-    eq AS (SELECT vec_id AS query_id, e AS qv FROM ev WHERE vec_id < 8),
-    eqprobe AS (
-      SELECT query_id, qv, cell_id FROM (
-        SELECT q.query_id, q.qv, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY {_IVF_COS.format(a="q.qv", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM eq q CROSS JOIN ecent c)
-      WHERE rn <= 4
-    ),
-    escored AS (
-      SELECT p.query_id, a.vec_id AS candidate_id,
-             {_IVF_COS.format(a="p.qv", b="a.e")} AS cos_sim
-      FROM eqprobe p JOIN eassign a USING (cell_id)
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, candidate_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, candidate_id) AS BIGINT) AS rank
-    FROM escored
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, candidate_id) <= 3
-    """,
-    doc=(
-        "LLM ANN retrieval over the PIPELINE's index: top-3 neighbors of a"
-        " fixed probe set against the 2-day incrementally-maintained"
-        " at-rest IVF index — the search plan lists only the probed cell"
-        " directories of an index no single build produced, certifying"
-        " that incremental maintenance leaves search semantics identical"
-    ),
-)
-def llm_emb_search_atrest(spark, sf_dir):
-    store = _emb_run_store(spark, sf_dir)
-    q = t(spark, sf_dir, "embeddings").filter("vec_id < 8").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    return similarity.ivf_index_search(store, q, name="emb_ivf", k=3, n_probe=4)
-
-
-@register(
-    "llm_emb_index_health",
-    oracle=f"""
-    WITH {_EMB_CTES}
-    SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-           CAST((SELECT count(*) FROM ecent) AS BIGINT) AS n_cells,
-           CAST(count(*) AS DOUBLE)
-             / CAST((SELECT count(*) FROM ecent) AS DOUBLE) AS mean_cell_size,
-           CAST((SELECT count(*) FROM ecent)
-                * (SELECT count(*) FROM ecent) AS BIGINT) AS balance_point,
-           4.0 AS factor,
-           CAST(count(*) AS DOUBLE)
-             > 4.0 * CAST((SELECT count(*) FROM ecent) AS DOUBLE)
-                   * CAST((SELECT count(*) FROM ecent) AS DOUBLE) AS outgrown,
-           greatest(
-             CAST((SELECT count(*) FROM ecent) AS BIGINT),
-             CAST(ceil(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
-           ) AS recommended_n_cells
-    FROM eassign
-    """,
-    doc=(
-        "LLM ANN state: the embeddings pipeline's QUANTIZER-HEALTH asset"
-        " (plans/embeddings_pipeline.py emb_index_health) — the"
-        " quantizer-drift trigger (n_vectors, n_cells, mean_cell_size,"
-        " balance point, outgrown flag, sqrt(N) recommended cell count)"
-        " refreshed into the store by every daily run, so the frozen"
-        " quantizer's linear probe-cost degradation is observable state"
-        " with a documented retrain contract instead of an off-path hook"
-        " a deployment might never call; certified against a closed-form"
-        " oracle over the accumulated 2-day corpus"
-    ),
-)
-def llm_emb_index_health(spark, sf_dir):
-    store = _emb_run_store(spark, sf_dir)
-    return store.read("emb_index_health").select(
-        "n_vectors",
-        "n_cells",
-        "mean_cell_size",
-        "balance_point",
-        "factor",
-        "outgrown",
-        "recommended_n_cells",
-    )
 
 
 @register(
@@ -5442,168 +4109,6 @@ def llm_corpus_decontam(spark, sf_dir):
         "n_overlap",
         "contamination_ratio",
         "flagged",
-    )
-
-
-# the pipeline's IVF-PQ geometry + per-vector codes, re-derived from first
-# principles over the accumulated clean corpus — shared by the code-state
-# cert and the at-rest ADC search cert. Geometry = rank-based first 16 of
-# DAY-1 CLEAN (the slice the graph's emb_pq_state asset trains on): ranks
-# 0..7 are coarse cells, 8..15 seed the residual codebook.
-_EMB_PQ_CTES = f"""pqsd AS (
-      SELECT rk, e FROM (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS rk, e FROM ed1c)
-      WHERE rk < 16
-    ),
-    pqc AS (SELECT CAST(rk AS INT) AS cell_id, e AS ce FROM pqsd WHERE rk < 8),
-    pqsa AS (
-      SELECT rk, e, cell_id FROM (
-        SELECT s.rk, s.e, c.cell_id,
-               row_number() OVER (PARTITION BY s.rk ORDER BY
-                 round(list_sum([ (s.e[i] - c.ce[i]) * (s.e[i] - c.ce[i])
-                                  for i in range(1, 65) ]), 6), c.cell_id) AS rn
-        FROM pqsd s CROSS JOIN pqc c)
-      WHERE rn = 1
-    ),
-    pqcb AS (
-      SELECT CAST(sa.rk - 8 AS INT) AS code,
-             [sa.e[i] - c.ce[i] for i in range(1, 65)] AS cr
-      FROM pqsa sa JOIN pqc c USING (cell_id) WHERE sa.rk >= 8
-    ),
-    pqasg AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 round(list_sum([ (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i])
-                                  for i in range(1, 65) ]), 6), c.cell_id) AS rn
-        FROM eclean v CROSS JOIN pqc c)
-      WHERE rn = 1
-    ),
-    pqres AS (
-      SELECT v.vec_id, v.day, a.cell_id,
-             [v.e[i] - c.ce[i] for i in range(1, 65)] AS r
-      FROM eclean v JOIN pqasg a USING (vec_id)
-      JOIN pqc c ON c.cell_id = a.cell_id
-    ),
-    pqms AS (SELECT unnest(range(0, 4)) AS m),
-    pqsdc AS (
-      SELECT r.vec_id, r.day, r.cell_id, pqms.m, cb.code,
-             round(list_sum([ (r.r[pqms.m * 16 + j] - cb.cr[pqms.m * 16 + j])
-                              * (r.r[pqms.m * 16 + j] - cb.cr[pqms.m * 16 + j])
-                              for j in range(1, 17) ]), 6) AS d2
-      FROM pqres r CROSS JOIN pqcb cb CROSS JOIN pqms
-    ),
-    pqcodes AS (
-      SELECT day, vec_id, cell_id, m, code
-      FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                                         ORDER BY d2, code) AS rn
-            FROM pqsdc)
-      WHERE rn = 1
-    )"""
-
-
-@register(
-    "llm_emb_pq_state",
-    oracle=f"""
-    WITH {_EMB_CTES},
-    {_EMB_PQ_CTES}
-    SELECT CAST(day AS VARCHAR) AS day, vec_id,
-           CAST(cell_id AS BIGINT) AS cell_id,
-           CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code
-    FROM pqcodes
-    """,
-    doc=(
-        "LLM ANN state: the embeddings pipeline's INCREMENTALLY-maintained"
-        " at-rest IVF-PQ code store — a GRAPH asset since round 12"
-        " (plans/embeddings_pipeline.py emb_pq_state): day 1 of the"
-        " pipeline's survivors builds the index (M=4 x K=8 residual PQ"
-        " under the deterministic rank-based first-16 geometry), day 2"
-        " ivfpq_index_append's under the FROZEN stored cells+codebook (one"
-        " broadcast encode pass over the batch, dynamic (cell, day) slice"
-        " overwrite, n_subspaces validated against the meta sidecar) —"
-        " certified per-(vector, subspace) CODE-level equal to a"
-        " from-scratch encode of the accumulated survivors: the append"
-        " path never drifts from the build path, down to every stored int"
-    ),
-)
-def llm_emb_pq_state(spark, sf_dir):
-    pq = _emb_run_store(spark, sf_dir)
-    return pq.read("emb_pq").select(
-        F.col("day").cast("string").alias("day"),
-        "vec_id",
-        F.col("cell_id").cast("long").alias("cell_id"),
-        F.posexplode("codes").alias("m", "code"),
-    ).select(
-        "day", "vec_id", "cell_id",
-        F.col("m").cast("long").alias("m"),
-        F.col("code").cast("long").alias("code"),
-    )
-
-
-@register(
-    "llm_emb_pq_search_atrest",
-    oracle=f"""
-    WITH {_EMB_CTES},
-    {_EMB_PQ_CTES},
-    pqq AS (SELECT vec_id AS query_id, e AS qe FROM ev WHERE vec_id < 8),
-    pqprobes AS (
-      SELECT query_id, cell_id FROM (
-        SELECT q.query_id, c.cell_id,
-               row_number() OVER (PARTITION BY q.query_id ORDER BY
-                 round(list_sum([ (q.qe[i] - c.ce[i]) * (q.qe[i] - c.ce[i])
-                                  for i in range(1, 65) ]), 6), c.cell_id) AS rn
-        FROM pqq q CROSS JOIN pqc c) WHERE rn <= 2
-    ),
-    pqqres AS (
-      SELECT p.query_id, p.cell_id,
-             [q.qe[i] - c.ce[i] for i in range(1, 65)] AS qr
-      FROM pqprobes p JOIN pqq q USING (query_id)
-      JOIN pqc c ON c.cell_id = p.cell_id
-    ),
-    pqqtab AS (
-      SELECT qres.query_id, qres.cell_id, pqms.m, cb.code,
-             round(list_sum([ (qres.qr[pqms.m * 16 + j] - cb.cr[pqms.m * 16 + j])
-                              * (qres.qr[pqms.m * 16 + j] - cb.cr[pqms.m * 16 + j])
-                              for j in range(1, 17) ]), 6) AS d2
-      FROM pqqres qres CROSS JOIN pqcb cb CROSS JOIN pqms
-    ),
-    pqpairs AS (
-      SELECT t.query_id, e.vec_id AS candidate_id, e.cell_id,
-             round(sum(t.d2), 6) AS approx_d2
-      FROM pqcodes e
-      JOIN pqqtab t ON t.cell_id = e.cell_id AND t.m = e.m AND t.code = e.code
-      WHERE e.vec_id != t.query_id
-      GROUP BY 1, 2, 3
-    )
-    SELECT query_id, candidate_id, CAST(cell_id AS INT) AS cell_id,
-           approx_d2,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY approx_d2, candidate_id) AS BIGINT)
-             AS rank
-    FROM pqpairs
-    QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx_d2, candidate_id) <= 3
-    """,
-    doc=(
-        "LLM ANN retrieval over the PIPELINE's compressed index: top-3"
-        " ADC search (ivfpq_index_search — partition-pruned probe scan"
-        " reading M ints per candidate) against the 2-day incrementally-"
-        " maintained at-rest IVF-PQ code store no single build produced,"
-        " certifying that incremental code maintenance leaves the"
-        " asymmetric-distance search semantics identical to a from-scratch"
-        " encode of the accumulated corpus — the at-scale retrieval"
-        " composition the daily graph now ships (round 12)"
-    ),
-)
-def llm_emb_pq_search_atrest(spark, sf_dir):
-    from aave_etl_spark.plans.embeddings_pipeline import EMB_PQ_M, EMB_PQ_INDEX
-
-    pq = _emb_run_store(spark, sf_dir)
-    q = t(spark, sf_dir, "embeddings").filter("vec_id < 8").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    return similarity.ivfpq_index_search(
-        pq, q, name=EMB_PQ_INDEX, k=3, n_probe=2, n_subspaces=EMB_PQ_M
     )
 
 
@@ -5651,288 +4156,4 @@ def llm_corpus_shards(spark, sf_dir):
         "n_tokens",
         "pack_id",
         "sort_key",
-    )
-
-
-@register(
-    "llm_emb_pq_prefilter_dedup",
-    oracle=f"""
-    WITH {_EMB_CTES}
-    SELECT vec_id FROM edup WHERE vec_id % 2 = 0
-    """,
-    doc=(
-        "LLM embeddings: the PQ-PREFILTERED semantic-dedup probe (round"
-        " 13) — the day-2 batch shortlisted by ADC over the maintained"
-        " emb_pq code store (M ints per candidate, partition-pruned,"
-        " prior-day-scoped), then EXACT-verified against raw vectors"
-        " fetched only from the shortlist candidates' day slices; the"
-        " oracle is the FLAT probe's drop set (the e2e chain's edup CTE),"
-        " so the cert IS the drop-set-equality contract: on the planted"
-        " corpus (exact +10M and 2x-rescaled +20M replicas) the"
-        " compressed-probe composition drops exactly what the raw-vector"
-        " probe drops — probe bytes ~M/(4d) of the flat scan (SCALE.md),"
-        " exactness preserved by the raw verify at the same rounded-"
-        " cosine threshold. The probe set is the deterministic vec_id%2=0"
-        " half of the day-2 batch on BOTH engines (cross-corpus drops are"
-        " per-vector independent, so the sliced drop set is exactly"
-        " edup ∩ slice — the llm_span_rewrite cost-slice pattern; both"
-        " planted replica classes span both parities)"
-    ),
-)
-def llm_emb_pq_prefilter_dedup(spark, sf_dir):
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        EMB_DUP_COSINE,
-        _emb_pq_prefilter_dups,
-    )
-
-    store = _emb_run_store(spark, sf_dir)
-    # reconstruct the day-2 probe INPUT exactly as _emb_clean builds it
-    # (exact-vector dedup, then within-batch semantic dedup) — the same
-    # stages the flat-probe oracle chain models as ed2b
-    batch = store.read("emb_landing", where="day = DATE '2024-01-02'")
-    batch = dedup.keep_first_by_digest(batch, F.col("embedding"), id_col="vec_id")
-    wd = similarity.within_batch_cosine_drops(batch, min_cos=EMB_DUP_COSINE)
-    batch = batch.join(wd, "vec_id", "left_anti")
-    # deterministic half-batch probe slice (cost containment — the
-    # cross-corpus probe is per-vector, so the sliced drop set is exact)
-    batch = batch.filter("vec_id % 2 = 0")
-    return _emb_pq_prefilter_dups(store, batch, "2024-01-02")
-
-
-@register(
-    "llm_emb_stream_ingest",
-    oracle=f"""
-    WITH {_EMB_CTES}
-    SELECT vec_id, CAST(cell_id AS BIGINT) AS cell_id FROM eassign
-    """,
-    doc=(
-        "STREAMING maintenance of an ANN index, certified at rest: two"
-        " availableNow drains of a file-source vector stream through"
-        " foreachBatch (streaming/micro_batch.py"
-        " incremental_embedding_ingest) — batch 1 trains the frozen"
-        " quantizer and builds the at-rest IVF index; batch 2's exact"
-        " replicas and RESCALED replicas are dropped by the semantic"
-        " anti-join against the accumulated index (which doubles as the"
-        " at-least-once replay idempotence mechanism — same-id replays"
-        " match THEMSELVES, exclude_self=False), its within-batch exact"
-        " pair by the vector-digest dedup and its within-batch NEAR pair"
-        " (3x rescales of same-batch vectors, invisible to the index) by"
-        " the SRP-bucketed self-join, and the survivors append under the"
-        " stored centroids; the final index equals the daily pipeline's"
-        " 2-day assignment oracle exactly — stream and batch converge"
-    ),
-)
-def llm_emb_stream_ingest(spark, sf_dir):
-    import os
-    import shutil
-
-    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
-
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-    from aave_etl_spark.streaming.micro_batch import (
-        incremental_embedding_ingest,
-        stream_lake_table,
-    )
-
-    root = session_scratch_dir(
-        spark, "aave_etl_spark_emb_stream", corpus_key(sf_dir)
-    )
-    landing = os.path.join(root, "landing")
-    ckpt = os.path.join(root, "ckpt")
-    store = TableStore(spark, os.path.join(root, "warehouse"))
-    # drain-once / read-many with the completion-marker protocol (the
-    # llm_stream_ingest discipline): repeat invocations certify the
-    # at-rest index the stream left behind
-    if store.is_complete("emb_ivf") and store.exists("emb_ivf"):
-        return store.read("emb_ivf").select(
-            "vec_id", F.col("cell_id").cast("long").alias("cell_id")
-        )
-    store.clear_complete("emb_ivf")
-    shutil.rmtree(root, ignore_errors=True)
-
-    base = (
-        t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _EMB_CAP)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    )
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-        ]
-    )
-    # batch 1: even-parity vectors (vec_id < 16 among them train the
-    # frozen quantizer — the daily pipeline's day-1 geometry exactly)
-    base.filter("vec_id % 2 = 0").write.mode("append").parquet(landing)
-    q1 = incremental_embedding_ingest(
-        store, stream_lake_table(spark, landing, schema), ckpt
-    )
-    if not q1.awaitTermination(300):
-        q1.stop()
-        raise RuntimeError("emb_stream_ingest: drain 1 did not finish in 300s")
-    # batch 2: odd-parity vectors + exact replicas (+10M), rescaled
-    # replicas (+20M, cosine scale-invariance), and a within-batch
-    # duplicate pair (+30M copies of the odds)
-    batch2 = (
-        base.filter("vec_id % 2 = 1")
-        .unionByName(
-            base.filter("vec_id % 4 = 0").select(
-                (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            base.filter("vec_id % 4 = 2").select(
-                (F.col("vec_id") + 20_000_000).alias("vec_id"),
-                F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-            )
-        )
-        .unionByName(
-            base.filter("vec_id % 4 = 1").select(
-                (F.col("vec_id") + 30_000_000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            # same-day NEAR-dup pair (3x rescale of odd vectors): only the
-            # ingest's within-batch SRP pass can drop these — the index
-            # anti-join can't see them (originals arrive in the same batch)
-            base.filter("vec_id % 8 = 5").select(
-                (F.col("vec_id") + 40_000_000).alias("vec_id"),
-                F.transform("embedding", lambda x: x * F.lit(3.0)).alias(
-                    "embedding"
-                ),
-            )
-        )
-    )
-    batch2.write.mode("append").parquet(landing)
-    q2 = incremental_embedding_ingest(
-        store, stream_lake_table(spark, landing, schema), ckpt
-    )
-    if not q2.awaitTermination(300):
-        q2.stop()
-        raise RuntimeError("emb_stream_ingest: drain 2 did not finish in 300s")
-    store.mark_complete("emb_ivf")
-    return store.read("emb_ivf").select(
-        "vec_id", F.col("cell_id").cast("long").alias("cell_id")
-    )
-
-
-@register(
-    "llm_emb_dedup_recall",
-    oracle=f"""
-    WITH ev AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      WHERE vec_id < {_EMB_CAP}
-    ),
-    ecorp AS (SELECT vec_id, e FROM ev WHERE vec_id % 2 = 0),
-    rcent AS (SELECT vec_id AS cell_id, e AS ce FROM ecorp WHERE vec_id < 16),
-    mixq AS (
-      SELECT a.vec_id + 50000000 AS query_id,
-             list_transform(a.e, (x, i) -> x + 0.35 * b.e[i]) AS qv
-      FROM ev a JOIN ev b ON b.vec_id = a.vec_id + 2
-      WHERE a.vec_id % 8 = 0
-    ),
-    rtruth AS (
-      SELECT query_id, truth_id, truth_cos FROM (
-        SELECT q.query_id, c.vec_id AS truth_id,
-               {_IVF_COS.format(a="q.qv", b="c.e")} AS truth_cos,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY {_IVF_COS.format(a="q.qv", b="c.e")} DESC, c.vec_id) AS rn
-        FROM mixq q CROSS JOIN ecorp c)
-      WHERE rn = 1
-    ),
-    rprobes AS (
-      SELECT query_id, qv, cell_id FROM (
-        SELECT q.query_id, q.qv, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY {_IVF_COS.format(a="q.qv", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM mixq q CROSS JOIN rcent c)
-      WHERE rn <= 2
-    ),
-    rassigned AS (
-      SELECT vec_id, e, cell_id FROM (
-        SELECT v.vec_id, v.e, c.cell_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {_IVF_COS.format(a="v.e", b="c.ce")} DESC, c.cell_id) AS rn
-        FROM ecorp v CROSS JOIN rcent c)
-      WHERE rn = 1
-    ),
-    rprobe_top AS (
-      SELECT query_id, probe_id, probe_cos FROM (
-        SELECT p.query_id, a.vec_id AS probe_id,
-               {_IVF_COS.format(a="p.qv", b="a.e")} AS probe_cos,
-               row_number() OVER (
-                 PARTITION BY p.query_id
-                 ORDER BY {_IVF_COS.format(a="p.qv", b="a.e")} DESC, a.vec_id) AS rn
-        FROM rprobes p JOIN rassigned a USING (cell_id)
-        WHERE a.vec_id <> p.query_id)
-      WHERE rn = 1
-    )
-    SELECT t.query_id, t.truth_id, t.truth_cos, p.probe_id, p.probe_cos,
-           CAST(CASE WHEN p.probe_id = t.truth_id AND p.probe_cos >= 0.8
-                     THEN 1 ELSE 0 END AS BIGINT) AS found
-    FROM rtruth t JOIN rprobe_top p USING (query_id)
-    """,
-    doc=(
-        "LLM ANN instrumentation: DEDUP-probe recall — the measurement a"
-        " semantic-dedup rollout gates on before trusting an IVF probe to"
-        " find near-duplicates. Planted ~0.94-cosine near-dups (a day-1"
-        " vector plus 0.35x another — paraphrase-grade, NOT scale"
-        " copies, so the copy's argmax cell CAN differ from its"
-        " original's and the 2-probe search can genuinely miss) are"
-        " searched both brute-force (truth) and via the 2-of-16-cell"
-        " probe; per-query found flags certified on both engines — the"
-        " llm_ann_recall pattern specialized to the dedup threshold"
-    ),
-)
-def llm_emb_dedup_recall(spark, sf_dir):
-    base = (
-        t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _EMB_CAP)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    )
-    corpus = base.filter("vec_id % 2 = 0")
-    nxt = base.select(
-        (F.col("vec_id") - 2).alias("vec_id"), F.col("embedding").alias("_e2")
-    )
-    # %8 keeps the planted-query population large enough for a meaningful
-    # recall statistic while bounding the brute-force truth arm's
-    # |queries| x |corpus| interpreted dot products at bench scale
-    mixed = (
-        base.filter("vec_id % 8 = 0")
-        .join(nxt, "vec_id")
-        .select(
-            (F.col("vec_id") + 50_000_000).alias("vec_id"),
-            F.zip_with(
-                "embedding", "_e2", lambda x, y: x + F.lit(0.35) * y
-            ).alias("embedding"),
-        )
-    )
-    truth = similarity.cosine_topk(corpus, mixed, k=1).select(
-        "query_id",
-        F.col("candidate_id").alias("truth_id"),
-        F.col("cos_sim").alias("truth_cos"),
-    )
-    probe = similarity.ivf_topk(
-        corpus, mixed, k=1, n_cells=16, n_probe=2
-    ).select(
-        "query_id",
-        F.col("candidate_id").alias("probe_id"),
-        F.col("cos_sim").alias("probe_cos"),
-    )
-    return truth.join(probe, "query_id").select(
-        "query_id",
-        "truth_id",
-        "truth_cos",
-        "probe_id",
-        "probe_cos",
-        (
-            (F.col("probe_id") == F.col("truth_id"))
-            & (F.col("probe_cos") >= 0.8)
-        )
-        .cast("long")
-        .alias("found"),
     )

@@ -313,7 +313,6 @@ _DEPTH_LATEST_COLS = (
 )
 def liquidity_depth_append_store(spark, sf_dir):
     import os
-    import shutil
 
     from aave_etl_spark.datamart.models import MODELS
     from aave_etl_spark.io.table_store import TableStore
@@ -331,8 +330,7 @@ def liquidity_depth_append_store(spark, sf_dir):
     store = TableStore(spark, store_root)
     # reset so repeat invocations (bench passes, driver cert) exercise the
     # SAME three-append sequence with bounded disk
-    shutil.rmtree(os.path.join(store_root, "aave_token_liquidity_depth"),
-                  ignore_errors=True)
+    store.drop("aave_token_liquidity_depth")
     for idx in (1, 2, 3):
         snap = spark.sql(_DEPTH_SNAPSHOT.format(idx=idx))
         store.write(snap, "aave_token_liquidity_depth", append_only=True)
@@ -512,8 +510,6 @@ def zorder_scan_store(spark, sf_dir):
     ),
 )
 def cdc_merge_store(spark, sf_dir):
-    import os
-
     from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
     from aave_etl_spark.io.table_store import TableStore
 
@@ -531,9 +527,7 @@ def cdc_merge_store(spark, sf_dir):
     if store.is_complete(tbl) and store.exists(tbl):
         return _at_rest()
     store.clear_complete(tbl)
-    import shutil
-
-    shutil.rmtree(store._path(tbl), ignore_errors=True)
+    store.drop(tbl)
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )

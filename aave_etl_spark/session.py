@@ -11,8 +11,8 @@ Design notes (scale-first):
 - ``partitionOverwriteMode=dynamic`` — the reference's idempotent
   delete-then-append partition write (bigquery_io_manager.py:88-229) is
   Spark's dynamic partition overwrite.
-- Arrow enabled — every pandas-UDF boundary (ABI decode, scipy interpolation,
-  multimodal decode) transfers via Arrow batches, not pickled rows.
+- Arrow enabled — every pandas-UDF boundary (ABI decode, scipy interpolation)
+  transfers via Arrow batches, not pickled rows.
 """
 
 from __future__ import annotations

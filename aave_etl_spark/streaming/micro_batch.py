@@ -257,102 +257,3 @@ def incremental_corpus_ingest(
         .start()
     )
 
-
-def incremental_embedding_ingest(
-    store,
-    incoming: DataFrame,
-    checkpoint_dir: str,
-    name: str = "emb_ivf",
-    n_cells: int = 16,
-    n_probe: int = 4,
-    dup_cosine: float = 0.999,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Continuous VECTOR ingest maintaining an at-rest IVF index — the
-    streaming form of the daily embeddings pipeline
-    (plans/embeddings_pipeline.py): new vectors stream in, anything
-    semantically duplicating the accumulated corpus is dropped, the
-    remainder is assigned under the index's FROZEN centroids and
-    appended into its cell layout.
-
-    Per micro-batch (foreachBatch): within-batch exact-vector dedup (the
-    vector IS the digest — skew-safe agg+join), within-batch SEMANTIC
-    dedup (SRP-bucketed cosine self-join, keep the lowest id per
-    >= ``dup_cosine`` pair — same-batch near-copies are invisible to the
-    index anti-join), then the batch probes the CURRENT index (re-read
-    each batch, so batch N+1 sees batch N's appends) and drops vectors
-    whose nearest accumulated neighbor scores rounded cosine >=
-    ``dup_cosine``; the first non-empty batch trains the deterministic
-    quantizer and builds the index, every later batch
-    ``ivf_index_append``s under the stored centroids.
-
-    The semantic anti-join IS the at-least-once idempotence mechanism:
-    a REPLAYED batch finds its own vectors already in the index and
-    appends nothing — content-level idempotency with no sink
-    transactions, exactly the digest-anti-join contract of
-    ``incremental_corpus_ingest`` lifted to vector space. That covers
-    BOTH replay shapes: same content under fresh ids matches its
-    original at cosine 1.0, and the same content under the SAME ids
-    matches itself — the search runs with ``exclude_self=False``, so the
-    self-match's cosine-1.0 row is kept for the anti-join instead of
-    being filtered as it is in query-time search (the default would
-    silently re-append every same-id replay whose nearest OTHER
-    neighbor sits under the threshold; same-id redelivery is
-    pytest-gated in tests/test_streaming.py). (Contrast the DAILY
-    pipeline, whose dynamic slice overwrite must NOT self-dedup a
-    re-run — append-only streaming wants the opposite.)
-
-    At 100 TB: per batch, one broadcast-centroid argmax over the batch +
-    a probe scan of n_probe/n_cells of the index partitions; the
-    quantizer-outgrowth economics and the retrain remedy are the daily
-    pipeline's (plans/embeddings_pipeline.py quantizer_outgrown).
-    Returns the started availableNow StreamingQuery."""
-    from aave_etl_spark.operators import similarity
-    from aave_etl_spark.operators.dedup import keep_first_by_digest
-
-    def _ingest(bdf: DataFrame, _batch_id: int) -> None:
-        fresh = keep_first_by_digest(
-            bdf.where(F.col(vec_col).isNotNull()), F.col(vec_col), id_col=id_col
-        )
-        # within-batch SEMANTIC dedup (the daily pipeline's round-12 pass):
-        # two ~1.0-cosine vectors arriving in the SAME micro-batch would
-        # both survive the index anti-join (neither is stored yet) — SRP-
-        # bucket the batch against itself and keep the lowest id per pair
-        # (two-phase existential form: a k-copy storm costs O(k) dots)
-        wdups = similarity.within_batch_cosine_drops(
-            fresh, id_col=id_col, vec_col=vec_col, min_cos=dup_cosine
-        )
-        fresh = fresh.join(wdups, id_col, "left_anti")
-        if store.exists(f"{name}_centroids") and store.exists(name):
-            nn = similarity.ivf_index_search(
-                store, fresh, name=name, k=1, n_probe=n_probe,
-                id_col=id_col, vec_col=vec_col,
-                # keep self-matches: a same-id replayed vector's only
-                # cosine-1.0 evidence of already being present is ITSELF
-                exclude_self=False,
-            )
-            dups = (
-                nn.filter(F.col("cos_sim") >= dup_cosine)
-                .select(F.col("query_id").alias(id_col))
-                .distinct()
-            )
-            fresh = fresh.join(dups, id_col, "left_anti")
-            similarity.ivf_index_append(
-                store, fresh, name=name, id_col=id_col, vec_col=vec_col
-            )
-        elif not fresh.isEmpty():
-            # never train the quantizer on an empty batch (a phantom
-            # centroid table would wedge every later batch)
-            similarity.ivf_index_build(
-                store, fresh, name=name, n_cells=n_cells,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    return (
-        incoming.writeStream.foreachBatch(_ingest)
-        .queryName("embedding_ingest")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -6,6 +6,7 @@ import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

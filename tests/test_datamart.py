@@ -533,3 +533,17 @@ def test_runner_layered_dag_sees_every_ref(spark):
     finally:
         sys.setswitchinterval(interval)
     assert {n: df.first().v for n, df in out.items()} == want
+
+
+def test_runner_empty_selection_runs_nothing(spark, tmp_path):
+    """An empty ``models`` selection is a selection of nothing, not of the
+    whole datamart: no source is required, no model runs, no table is
+    written."""
+    from aave_etl_spark.io.table_store import TableStore
+    from aave_etl_spark.plans.runner import topo_order
+
+    assert topo_order({}) == []
+    assert run_datamart(spark, {}, models={}) == {}
+    store = TableStore(spark, str(tmp_path))
+    assert run_datamart(spark, {}, models={}, store=store) == {}
+    assert not list(tmp_path.iterdir())

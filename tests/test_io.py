@@ -421,6 +421,27 @@ def test_full_refresh_overwrite_drops_absent_partitions(spark, tmp_path):
     assert [r.part for r in rows] == ["a"]
 
 
+def test_completion_marker_protocol(spark, tmp_path):
+    """A dataset spanning several tables is complete only between
+    mark_complete and the next clear_complete: an interrupted rebuild
+    (marker cleared first, both member tables still on disk) does not
+    present as complete. The marker is a file beside the tables."""
+    store = TableStore(spark, str(tmp_path))
+    assert not store.is_complete("idx")
+    store.clear_complete("idx")  # clearing an absent marker is a no-op
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    store.write(df, "idx")
+    store.write(df, "idx_params")
+    store.mark_complete("idx")
+    assert store.is_complete("idx")
+    store.clear_complete("idx")
+    assert store.exists("idx") and store.exists("idx_params")
+    assert not store.is_complete("idx")
+    store.mark_complete("idx")
+    assert store.is_complete("idx")
+    assert sorted(os.listdir(tmp_path)) == ["idx", "idx.__complete", "idx_params"]
+
+
 def test_session_scratch_dir_sweeps_only_stale_siblings(spark, tmp_path, monkeypatch):
     """Per-session scratch roots: stale (dead-session) siblings older than
     the age guard are reclaimed; fresh siblings (a possibly-live concurrent
@@ -448,6 +469,68 @@ def test_session_scratch_dir_sweeps_only_stale_siblings(spark, tmp_path, monkeyp
     assert not stale.exists(), "stale sibling must be reclaimed"
     assert fresh.exists(), "fresh sibling may be a live session - kept"
     assert (mine / "sub" / "x").exists(), "own root untouched"
+
+
+def test_session_scratch_dir_heartbeat_keeps_own_root_young(spark, tmp_path, monkeypatch):
+    """Each call touches the session's own root, so a long-lived session
+    whose writes land in nested subdirectories never ages into a
+    concurrent sibling's sweep."""
+    import time as time_mod
+
+    import aave_etl_spark.io.scratch as scratch
+
+    monkeypatch.setattr(scratch.tempfile, "gettempdir", lambda: str(tmp_path))
+    mine = tmp_path / "fam" / spark.sparkContext.applicationId
+    mine.mkdir(parents=True)
+    old = time_mod.time() - scratch.STALE_AFTER_S - 60
+    os.utime(mine, (old, old))
+    scratch.session_scratch_dir(spark, "fam")
+    assert os.path.getmtime(mine) > time_mod.time() - 60
+
+
+def test_session_scratch_dir_does_not_create_paths(spark, tmp_path, monkeypatch):
+    import aave_etl_spark.io.scratch as scratch
+
+    monkeypatch.setattr(scratch.tempfile, "gettempdir", lambda: str(tmp_path))
+    got = scratch.session_scratch_dir(spark, "fam", "a", "b")
+    assert got == os.path.join(str(tmp_path), "fam", spark.sparkContext.applicationId, "a", "b")
+    assert not (tmp_path / "fam").exists()
+
+
+def test_corpus_key_is_readable_and_stable(tmp_path):
+    from aave_etl_spark.io.scratch import corpus_key
+
+    d = tmp_path / "sf0.01"
+    key = corpus_key(str(d))
+    base, digest = key.rsplit("-", 1)
+    assert base == "sf0.01"
+    assert len(digest) == 16 and int(digest, 16) >= 0
+    assert corpus_key(str(d)) == key
+    assert corpus_key(str(d) + "/") == key
+
+
+def test_corpus_key_separates_corpora_sharing_a_basename(tmp_path):
+    from aave_etl_spark.io.scratch import corpus_key
+
+    a, b = tmp_path / "one" / "sf0.01", tmp_path / "two" / "sf0.01"
+    assert corpus_key(str(a)) != corpus_key(str(b))
+    assert corpus_key(str(a)).startswith("sf0.01-")
+    assert corpus_key(str(b)).startswith("sf0.01-")
+
+
+def test_corpus_key_digest_follows_the_resolved_path(tmp_path):
+    """Two spellings of one corpus (a symlink, a ``..`` detour) key the
+    same cached store; the readable prefix is the spelled basename."""
+    from aave_etl_spark.io.scratch import corpus_key
+
+    real = tmp_path / "data" / "sf0.01"
+    real.mkdir(parents=True)
+    link = tmp_path / "alias"
+    link.symlink_to(real)
+    detour = tmp_path / "data" / "x" / ".." / "sf0.01"
+    assert corpus_key(str(detour)) == corpus_key(str(real))
+    assert corpus_key(str(link)).split("-")[-1] == corpus_key(str(real)).split("-")[-1]
+    assert corpus_key(str(link)).startswith("alias-")
 
 
 def test_morton_zkey_interleaves_bits(spark):
@@ -1046,3 +1129,34 @@ def test_snapshot_restore_prune_never_drops_restore_target(spark, tmp_path):
     oldest = ids[0]
     store.restore_snapshot("pp", oldest)
     assert [r.k for r in store.read("pp").collect()] == [0]
+
+
+def test_read_table_memoizes_the_schema_per_directory(spark, tmp_path):
+    """The first read of ``<sf_dir>/<name>.parquet`` infers and caches its
+    schema; later reads of the same table skip the footer inference."""
+    from aave_etl_spark.io import catalog
+
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(f"{sf}/docs.parquet")
+    first = catalog.read_table(spark, sf, "docs")
+    assert catalog._SCHEMA_CACHE[(sf, "docs")] == first.schema
+    again = catalog.read_table(spark, sf, "docs")
+    assert again.schema == first.schema
+    assert [tuple(r) for r in again.collect()] == [(1, "a")]
+
+
+def test_read_table_decodes_nanosecond_long_timestamps(spark, tmp_path):
+    """An old-layout events file carrying ``ts`` as epoch nanoseconds
+    (bigint) reads back as a timestamp at microsecond precision."""
+    from datetime import datetime
+
+    from aave_etl_spark.io import catalog
+
+    sf = str(tmp_path / "sf")
+    ns = 1_674_104_400_123_456_789  # 2023-01-19 05:00:00.123456789 UTC
+    spark.createDataFrame([(ns, "supply")], "ts long, kind string").write.parquet(
+        f"{sf}/events.parquet"
+    )
+    df = catalog.read_table(spark, sf, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert df.first().ts == datetime(2023, 1, 19, 5, 0, 0, 123456)

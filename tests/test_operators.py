@@ -9,7 +9,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from aave_etl_spark.operators import dedup, similarity
+from aave_etl_spark.operators import dedup
 from aave_etl_spark.operators.asof import asof_join
 
 
@@ -93,116 +93,6 @@ def test_jaccard_verify_zero_intersection_kept(spark):
     assert dedup.jaccard_verify(sh, pairs, threshold=0.1).count() == 0
 
 
-def test_uniform_frame_sample_grid(spark):
-    from aave_etl_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [(0, 10, 24), (1, 1, 24)], "media_id long, duration_s long, fps long"
-    )
-    rows = multimodal.uniform_frame_sample(media, m=4).collect()
-    by_clip = {}
-    for r in rows:
-        by_clip.setdefault(r.media_id, []).append(r)
-    # exactly m rows per clip regardless of duration
-    assert {len(v) for v in by_clip.values()} == {4}
-    clip0 = sorted(by_clip[0], key=lambda r: r.sample_pos)
-    # 10 s @ 24 fps = 240 frames: endpoints pinned, evenly spaced
-    assert [r.frame_idx for r in clip0] == [0, 79, 159, 239]
-    assert clip0[-1].ts_s == pytest.approx(239 / 24, abs=1e-6)
-    # 1 s clip: indices stay within [0, 23]
-    assert all(0 <= r.frame_idx <= 23 for r in by_clip[1])
-    # digest is the decode-stage join key
-    assert all(len(r.frame_digest) == 32 for r in rows)
-    with pytest.raises(ValueError):
-        multimodal.uniform_frame_sample(media, m=1)
-    # zero-length clip: frame 0 sampled m times, never a negative index
-    degenerate = spark.createDataFrame(
-        [(9, 0, 24)], "media_id long, duration_s long, fps long"
-    )
-    zrows = multimodal.uniform_frame_sample(degenerate, m=4).collect()
-    assert len(zrows) == 4 and all(r.frame_idx == 0 for r in zrows)
-    # poisoned metadata (fps<=0/NULL, negative duration) is dropped, never
-    # emitted as NULL/NaN ts_s rows that would join downstream looking valid
-    poisoned = spark.createDataFrame(
-        [(20, 10, 0), (21, 10, None), (22, -1, 24), (23, 5, 24)],
-        "media_id long, duration_s long, fps long",
-    )
-    prows = multimodal.uniform_frame_sample(poisoned, m=4).collect()
-    assert {r.media_id for r in prows} == {23}
-    assert all(r.ts_s is not None for r in prows)
-    # NaN in a double-typed column: Spark orders NaN above every number,
-    # so `fps > 0` alone would pass it — the isnan terms must drop it
-    nan = float("nan")
-    nan_media = spark.createDataFrame(
-        [(30, 10.0, nan), (31, nan, 24.0), (32, 5.0, 24.0)],
-        "media_id long, duration_s double, fps double",
-    )
-    nrows = multimodal.uniform_frame_sample(nan_media, m=4).collect()
-    assert {r.media_id for r in nrows} == {32}
-    import math
-
-    assert all(not math.isnan(r.ts_s) for r in nrows)
-
-
-def test_frame_sample_plan_every_n_seconds(spark):
-    from aave_etl_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [(0, 12), (1, 3)], "media_id long, duration_s long"
-    )
-    rows = multimodal.frame_sample_plan(media, every_n_seconds=5).collect()
-    got = {(r.media_id, r.frame_ts) for r in rows}
-    assert got == {(0, 0), (0, 5), (0, 10), (1, 0)}
-
-
-def test_semantic_dedup_keeper_rule(spark):
-    # centroids = first 2 vectors (n_cells=2): cell 0 along +x, cell 1
-    # along +y. Vectors 2,3 duplicate cell 0's direction; 4 is y-ish; 5 is
-    # a y-direction near-dup of 4 but in-cell only vs lower ids 1 and 4.
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [0.0, 1.0]),
-            (2, [2.0, 0.0]),       # cos=1 to 0 -> dropped
-            (3, [1.0, 0.05]),      # ~1 to 0 -> dropped
-            (4, [0.05, 1.0]),      # ~1 to 1 -> dropped
-            (5, [-1.0, 0.2]),      # far from everything in its cell? cos to 0 is -1
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = {
-        r.vec_id: r
-        for r in similarity.semantic_dedup(emb, eps=0.9, n_cells=2).collect()
-    }
-    assert len(out) == 6
-    assert out[0].kept and out[1].kept
-    assert not out[2].kept and not out[3].kept and not out[4].kept
-    # vector 5: assigned to cell 1 (cos(5,1)=0.196 > cos(5,0)=-0.98);
-    # within cell 1 its best lower-id cos is ~0.196 < eps -> kept
-    assert out[5].cell_id == 1 and out[5].kept
-    # cell sizes: cell 0 = {0,2,3}, cell 1 = {1,4,5}
-    assert out[0].n_cell == 3 and out[1].n_cell == 3
-
-
-def test_semantic_dedup_trained_centroids(spark):
-    # a kmeans_fit centroid table slots into the same plan and still
-    # produces a full partition of the corpus
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), float((i * 7) % 5), 1.0]) for i in range(30)],
-        "vec_id long, embedding array<double>",
-    )
-    cent = similarity.kmeans_fit(emb, k=3, n_iter=2)
-    out = similarity.semantic_dedup(emb, eps=0.999, n_cells=3, centroids=cent)
-    rows = out.collect()
-    assert len(rows) == 30
-    assert {r.cell_id for r in rows} <= {0, 1, 2}
-    # every cell's n_cell matches its member count
-    from collections import Counter
-
-    sizes = Counter(r.cell_id for r in rows)
-    assert all(r.n_cell == sizes[r.cell_id] for r in rows)
-
-
 def test_span_duplicates_planted_span(spark):
     # docs 0 and 1 share one exact 4-token span; doc 2 is unrelated; doc 3
     # is too short for any window.
@@ -238,20 +128,6 @@ def test_span_duplicates_within_doc_repeat(spark):
     # windows: 'a b c', 'b c a', 'c a b', 'a b c' — the two 'a b c' dup
     assert row.n_windows == 4 and row.n_dup_windows == 2
     assert row.dup_fraction == 0.5
-
-
-# ---------------------------------------------------------------------------
-# cosine_pairs is the n_blocks=1 blocked form — no theta join in its plan.
-# ---------------------------------------------------------------------------
-def test_cosine_pairs_plan_has_no_nested_loop(spark):
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(6)], "vec_id long, embedding array<double>"
-    )
-    df = similarity.cosine_pairs(emb, threshold=0.9)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert df.count() > 0
 
 
 # ---------------------------------------------------------------------------
@@ -542,24 +418,6 @@ def test_bm25_index_search_equals_inflight_and_reads_bucketed(spark, tmp_path):
         bm25_index_search(store, queries, "no_such_index")
 
 
-def test_rrf_fuse_combines_and_handles_single_arm(spark):
-    from aave_etl_spark.operators.similarity import rrf_fuse
-
-    dense = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2)], "query_id long, candidate_id long, rank long"
-    )
-    sparse = spark.createDataFrame(
-        [(1, 11, 1), (1, 12, 2)], "query_id long, candidate_id long, rank long"
-    )
-    out = {r.candidate_id: r for r in rrf_fuse(dense, sparse, k=5).collect()}
-    # candidate 11 is in both arms → 1/62 + 1/61; 10/12 single-arm
-    assert abs(out[11].rrf_score - round(1 / 62 + 1 / 61, 6)) < 1e-9
-    assert abs(out[10].rrf_score - round(1 / 61, 6)) < 1e-9
-    assert abs(out[12].rrf_score - round(1 / 62, 6)) < 1e-9
-    # two-arm candidate outranks either single-arm one
-    assert out[11].rank == 1
-
-
 # ---------------------------------------------------------------------------
 # greedy sequence packing.
 # ---------------------------------------------------------------------------
@@ -606,64 +464,6 @@ def test_greedy_pack_never_overflows_capacity(spark):
         for r in rs:
             assert r.pack_offset == cum
             cum += r.n_tokens
-
-
-# ---------------------------------------------------------------------------
-# k-means coarse quantizer.
-# ---------------------------------------------------------------------------
-def _clustered_vectors(spark, n_per=20):
-    # three well-separated clusters around axis corners
-    base = {0: [10.0, 0.0, 0.0], 1: [0.0, 10.0, 0.0], 2: [0.0, 0.0, 10.0]}
-    rows = [
-        (c * n_per + i, [v + ((i * 7 + d) % 5) * 0.1 for d, v in enumerate(base[c])], c)
-        for c in base
-        for i in range(n_per)
-    ]
-    return spark.createDataFrame(
-        [(r[0], r[1]) for r in rows], "vec_id long, embedding array<double>"
-    ), {r[0]: r[2] for r in rows}
-
-
-def test_kmeans_recovers_separated_clusters(spark):
-    from aave_etl_spark.operators.similarity import kmeans_fit
-
-    df, truth = _clustered_vectors(spark)
-    cent = kmeans_fit(df, k=3, n_iter=5)
-    rows = cent.collect()
-    assert len(rows) == 3
-    # each trained centroid should sit near one distinct cluster corner
-    corners = {0: 0, 1: 1, 2: 2}  # dominant dim -> cluster
-    dominant = sorted(max(range(3), key=lambda d: r.centroid[d]) for r in rows)
-    assert dominant == [0, 1, 2]
-    for r in rows:
-        d = max(range(3), key=lambda i: r.centroid[i])
-        assert 9.5 <= r.centroid[d] <= 10.7  # near the corner's 10 + jitter mean
-
-
-def test_ivf_topk_with_trained_centroids_full_recall_on_clusters(spark):
-    from aave_etl_spark.operators.similarity import cosine_topk, ivf_topk, kmeans_fit
-
-    df, _ = _clustered_vectors(spark)
-    cent = kmeans_fit(df, k=3, n_iter=4)
-    queries = df.filter(F.col("vec_id").isin([0, 25, 45]))
-    exact = cosine_topk(df, queries, k=3)
-    approx = ivf_topk(df, queries, k=3, n_probe=1, centroids=cent)
-    ex = {(r.query_id, r.candidate_id) for r in exact.collect()}
-    ap = {(r.query_id, r.candidate_id) for r in approx.collect()}
-    # clusters are separated: probing 1 trained cell must reach full recall
-    assert ap == ex
-
-
-def test_kmeans_empty_cell_keeps_previous_centroid(spark):
-    from aave_etl_spark.operators.similarity import kmeans_fit
-
-    # k=3 but only 2 distinct points: one init centroid never wins a vector
-    df = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [0.0, 0.01]), (2, [9.0, 9.0]), (3, [9.0, 9.0])],
-        "vec_id long, embedding array<double>",
-    )
-    cent = kmeans_fit(df, k=3, n_iter=3)
-    assert cent.count() == 3  # no cell vanished
 
 
 # ---------------------------------------------------------------------------
@@ -801,20 +601,6 @@ def test_simhash_near_dup_exact_recall_within_radius(spark):
 
     with pytest.raises(ValueError, match="exact recall"):
         simhash_near_dup_pairs(docs, bands=4, max_hamming=4)
-
-
-def test_mean_pool_repartition_invariant_bitwise(spark):
-    from aave_etl_spark.operators.similarity import mean_pool_embeddings
-
-    df = spark.createDataFrame(
-        [(i, "g", [0.1 * i, 1.0 / (i + 1), float(i % 7)]) for i in range(200)],
-        "vec_id long, grp string, embedding array<double>",
-    )
-    a = mean_pool_embeddings(df, ["grp"]).collect()[0]
-    b = mean_pool_embeddings(df.repartition(17), ["grp"]).collect()[0]
-    # BITWISE equality: the sorted fold makes float pooling layout-invariant
-    assert a.mean_embedding == b.mean_embedding
-    assert a.n_vecs == 200
 
 
 def test_top_fraction_by_group_exact(spark):
@@ -993,19 +779,6 @@ def test_bpe_learn_and_segment_match_reference(spark):
         assert seg[w] == (ref_seg[w], f, len(ref_seg[w])), w
 
 
-def test_ivf_index_roundtrip_matches_in_flight(spark, tmp_path):
-    from aave_etl_spark.io.table_store import TableStore
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet")
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivf_index_build(store, emb, n_cells=16)
-    queries = emb.filter(F.col("vec_id") < 8)
-    at_rest = similarity.ivf_index_search(store, queries, k=3, n_probe=4).collect()
-    in_flight = similarity.ivf_topk(emb, queries, k=3, n_cells=16, n_probe=4).collect()
-    assert sorted(map(tuple, at_rest)) == sorted(map(tuple, in_flight))
-
-
 def test_global_desc_rank_equals_naive_window(spark):
     """The distributed exact rank (range-partitioned local ranks +
     broadcast offsets) must equal the partition-less row_number window
@@ -1178,112 +951,6 @@ def test_within_batch_near_dup_drops_equals_all_pairs(spark):
     assert 1 not in naive and {2, 3, 4}.issubset(naive)
 
 
-def test_within_batch_cosine_drops_equals_all_pairs(spark):
-    """The vector twin: the two-phase SRP form must equal the naive
-    bucketed_cosine_pairs drop-id_b rule exactly. Shapes: a rescaled-copy
-    cluster (phase 1 resolves), a bucket whose minimum id is NOT a near
-    copy of the rest (forces phase 2 — a low-id vector sharing the SRP
-    bucket at a sub-threshold angle), and unrelated singletons."""
-    from aave_etl_spark.operators.similarity import (
-        bucketed_cosine_pairs,
-        within_batch_cosine_drops,
-    )
-
-    rows = [(0, [1.0, 0.02, 0.0, 0.01])]  # same orthant as the cluster,
-    # but well under the 0.999 threshold against every member
-    # cluster: positive rescales of one vector — identical SRP signs
-    rows += [(i, [x * float(i) for x in [0.9, 0.1, 0.05, 0.2]]) for i in range(1, 9)]
-    # singletons in other orthants
-    rows += [(20, [-1.0, 0.5, 0.0, 0.3]), (21, [0.0, -1.0, 0.7, -0.2])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    naive = {
-        r.id_b
-        for r in bucketed_cosine_pairs(df, min_cos=0.999)
-        .select("id_b")
-        .distinct()
-        .collect()
-    }
-    staged = {
-        r.vec_id for r in within_batch_cosine_drops(df, min_cos=0.999).collect()
-    }
-    assert staged == naive
-    # the cluster collapsed to its lowest member; the sub-threshold
-    # bucket-mate survived on both paths
-    assert 1 not in naive and {2, 3, 4, 5, 6, 7, 8}.issubset(naive)
-    assert 0 not in naive
-
-
-def test_ivf_index_append_validates_meta_sidecar(spark, tmp_path):
-    """ivf_index_build writes a <name>_meta sidecar (round_digits,
-    carry_cols) and ivf_index_append refuses a mismatched append — a
-    different rounding would assign borderline vectors to different
-    cells than the certified append==build contract, a different carry
-    layout writes a mismatched partition tree (round-11 ADVICE; the
-    ivfpq_index_append n_subspaces discipline applied to IVF)."""
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = spark.createDataFrame(
-        [
-            (i, [float((i * 13) % 7), float((i * 5) % 11), 1.0], "2024-01-01")
-            for i in range(32)
-        ],
-        "vec_id long, embedding array<double>, day string",
-    ).withColumn("day", F.to_date("day"))
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivf_index_build(store, emb, n_cells=8, carry_cols=("day",))
-    meta = store.read("ivf_index_meta").first()
-    assert meta.round_digits == 6 and meta.carry_cols == "day"
-
-    batch = spark.createDataFrame(
-        [(100, [1.0, 2.0, 3.0], "2024-01-02")],
-        "vec_id long, embedding array<double>, day string",
-    ).withColumn("day", F.to_date("day"))
-    with pytest.raises(ValueError, match="round_digits"):
-        similarity.ivf_index_append(
-            store, batch, round_digits=4, carry_cols=("day",)
-        )
-    with pytest.raises(ValueError, match="carry_cols"):
-        similarity.ivf_index_append(store, batch.drop("day"))
-    before = store.read("ivf_index").count()
-    assert before == 32  # neither mismatched append landed rows
-    similarity.ivf_index_append(store, batch, carry_cols=("day",))
-    assert store.read("ivf_index").count() == 33
-
-
-def test_ivf_index_search_scans_only_probed_cells(spark, tmp_path):
-    import re as _re
-
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 13) % 7), float((i * 5) % 11), 1.0]) for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivf_index_build(store, emb, n_cells=8)
-    one_query = emb.filter(F.col("vec_id") == 20)
-    out = similarity.ivf_index_search(store, one_query, k=3, n_probe=2)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    m = _re.search(r"cell_id#\d+ IN(?:SET)? \(?([\d, ]+)\)?", p)
-    assert m, f"no partition IN/INSET filter in plan:\n{p[:2000]}"
-    # exactly the 2 probed cells reach the file listing — 6 of 8 partition
-    # directories are never read
-    assert len([v for v in m.group(1).split(",") if v.strip()]) == 2
-    assert out.count() == 3
-    # empty query set: typed empty result, no IN () predicate constructed
-    none = similarity.ivf_index_search(
-        store, emb.filter(F.col("vec_id") < 0), k=3, n_probe=2
-    )
-    assert none.count() == 0
-    assert [f.name for f in none.schema.fields] == [
-        "query_id",
-        "candidate_id",
-        "cos_sim",
-        "rank",
-    ]
-
-
 # ---------------------------------------------------------------------------
 # round-4 review regressions
 # ---------------------------------------------------------------------------
@@ -1371,54 +1038,6 @@ def test_keep_first_by_digest_equals_window_form_and_window_free(spark):
         keep_first_by_digest(df.withColumn("_dg", F.lit(1)), digest)
 
 
-def test_uniform_frame_sample_fractional_duration(spark):
-    from aave_etl_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [(0, 0.9, 30.0)], "media_id long, duration_s double, fps double"
-    )
-    rows = sorted(
-        multimodal.uniform_frame_sample(media, m=4).collect(), key=lambda r: r.sample_pos
-    )
-    # 0.9 s @ 30 fps = 27 frames -> indices span [0, 26], not all-zero
-    assert [r.frame_idx for r in rows] == [0, 8, 17, 26]
-
-
-def test_blocked_cosine_pairs_string_ids(spark):
-    emb = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [1.0, 0.01]), ("c", [0.0, 1.0])],
-        "vec_id string, embedding array<double>",
-    )
-    out = similarity.blocked_cosine_pairs(emb, threshold=0.9, n_blocks=2).collect()
-    assert {(r.id_a, r.id_b) for r in out} == {("a", "b")}
-
-
-def test_ivf_index_rebuild_drops_stale_cells(spark, tmp_path):
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 13) % 7), float((i * 5) % 11), 1.0]) for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivf_index_build(store, emb, n_cells=8)
-    n_v1 = store.read("ivf_index").count()
-    assert n_v1 == 64
-    # corpus shrinks to the first 8 vectors (the centroids themselves):
-    # rebuild must leave EXACTLY 8 rows — no stale partition directories
-    similarity.ivf_index_build(store, emb.filter(F.col("vec_id") < 8), n_cells=8)
-    assert store.read("ivf_index").count() == 8
-
-
-def test_ivf_index_search_missing_index_raises(spark, tmp_path):
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    q = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="not found in store"):
-        similarity.ivf_index_search(store, q)
-
-
 def test_tokens_lowercase_shared_tokenization(spark):
     from aave_etl_spark.operators import text as text_ops
 
@@ -1453,88 +1072,6 @@ def test_compact_sort_cols_keeps_disjoint_ranges(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2
     assert store.read("ct").count() == 10_000
-
-
-def test_semantic_dedup_cell_cap_bounds_pairs(spark):
-    """Planted hot cell: 240 near-identical vectors all land in one cell.
-    cell_cap=40 splits it into ceil(240/40)=6 md5 sub-buckets, so the pair
-    join does ~sum(part^2)/2 work instead of 240^2/2, while cells under the
-    cap stay bit-identical to the uncapped result."""
-    import hashlib
-
-    hot = [(i, [1.0, 0.001 * (i % 7)]) for i in range(240)]
-    cold = [(1000 + i, [0.0, 1.0 + 0.001 * i]) for i in range(5)]
-    emb = spark.createDataFrame(hot + cold, "vec_id long, embedding array<double>")
-    # centroids = first 2 vectors: both ~+x! use explicit centroids so the
-    # hot mass lands in cell 0 and the cold rows in cell 1
-    cent = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell_id long, centroid array<double>"
-    )
-    out = similarity.semantic_dedup(
-        emb, eps=0.99, n_cells=2, centroids=cent, cell_cap=40
-    ).collect()
-    assert len(out) == 245
-    by_id = {r.vec_id: r for r in out}
-    # hot cell: one keeper PER SUB-BUCKET (6 parts) — bounded approximation,
-    # not one global keeper; each keeper is its bucket's smallest id
-    hot_rows = [r for r in out if r.cell_id == 0]
-    assert len(hot_rows) == 240 and hot_rows[0].n_cell == 240
-
-    def sub(i: int, parts: int) -> int:
-        return int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16) % parts
-
-    keepers = {r.vec_id for r in hot_rows if r.kept}
-    expected_keepers = {
-        min(i for i in range(240) if sub(i, 6) == p)
-        for p in {sub(i, 6) for i in range(240)}
-    }
-    assert keepers == expected_keepers
-    assert len(keepers) <= 6
-    # cold cell (size 5 < cap): untouched single-bucket behavior
-    cold_rows = [r for r in out if r.cell_id == 1]
-    assert len(cold_rows) == 5
-    assert sum(1 for r in cold_rows if r.kept) == 1
-    assert by_id[1000].kept  # smallest id keeps
-
-
-def test_semantic_dedup_cap_off_matches_capped_when_under(spark):
-    """A corpus whose every cell is under the cap produces bit-identical
-    results with any cap value (the sub split degenerates to 1 part)."""
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3) + 0.1, float((i * 7) % 5)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        similarity.semantic_dedup(emb, eps=0.95, n_cells=4, cell_cap=4096).collect()
-    )
-    b = sorted(
-        similarity.semantic_dedup(emb, eps=0.95, n_cells=4, cell_cap=40).collect()
-    )
-    assert a == b
-
-
-def test_ivf_index_completion_marker_protocol(spark, tmp_path):
-    """ivf_index_build clears the completion marker first and writes it
-    last, so an interrupted REBUILD (both tables exist, one stale) is
-    detectable — the exists()-only gate cannot catch that state."""
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    similarity.ivf_index_build(store, emb, n_cells=4)
-    assert store.is_complete("ivf_index")
-    assert store.exists("ivf_index") and store.exists("ivf_index_centroids")
-    # simulate an interrupted rebuild: marker cleared, centroids rewritten,
-    # assignments still from the previous run — both tables exist, but the
-    # dataset must NOT present as complete
-    store.clear_complete("ivf_index")
-    assert not store.is_complete("ivf_index")
-    # a fresh build restores the marker atomically
-    similarity.ivf_index_build(store, emb, n_cells=4)
-    assert store.is_complete("ivf_index")
 
 
 def test_dsir_importance_resample_prefers_target_like(spark):
@@ -1622,43 +1159,6 @@ def test_dsir_approximate_matches_exact_and_has_no_window(spark):
         assert a0.filter("kept").count() == want, f"keep_frac={frac}"
 
 
-def test_margin_topk_suppresses_hubs(spark):
-    """Margin scoring: a hub candidate close to EVERY query is discounted
-    by its high neighborhood mean; a candidate uniquely close to one query
-    out-margins it despite similar raw cosine."""
-    import math
-
-    def vec(theta):
-        return [math.cos(theta), math.sin(theta)]
-
-    queries = spark.createDataFrame(
-        [(0, vec(0.0)), (1, vec(1.2))], "vec_id long, embedding array<double>"
-    )
-    cands = spark.createDataFrame(
-        [
-            (100, vec(0.6)),    # hub: moderately close to both queries
-            (101, vec(0.05)),   # uniquely close to query 0
-            (102, vec(1.15)),   # uniquely close to query 1
-            (103, vec(3.0)),    # far from everything
-            (0, vec(0.0)), (1, vec(1.2)),  # self rows excluded from own results
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = similarity.margin_topk(cands, queries, k=3, knn=2).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r.query_id, {})[r.candidate_id] = r
-    # per-query top-3 present with margin-ranked order
-    for qid, cmap in per_q.items():
-        ranks = sorted((r.rank, r.candidate_id) for r in cmap.values())
-        assert [rk for rk, _ in ranks] == list(range(1, len(ranks) + 1))
-    # the unique neighbor out-margins the hub for its query
-    assert per_q[0][101].margin > per_q[0][100].margin
-    assert per_q[1][102].margin > per_q[1][100].margin
-    # margin = cos / mean of the two neighborhood means: spot-check ratio > 1
-    assert per_q[0][101].margin > 1.0
-
-
 def test_c4_line_filter_rules(spark):
     """Each C4 line rule in isolation: terminal punctuation, min words,
     boilerplate markers; the >=3-kept-lines doc gate; empty-clean md5."""
@@ -1689,27 +1189,6 @@ def test_c4_line_filter_rules(spark):
     expect = "\n".join(doc_good.split("\n")[:3])
     assert out[0].clean_md5 == hashlib.md5(expect.encode()).hexdigest()
     assert out[0].clean_chars == len(expect)
-
-
-def test_margin_topk_broadcast_guard_falls_back(spark):
-    """A query frame above max_broadcast_queries must NOT be broadcast —
-    the guard drops the hint and the pair scan shuffles instead. Results
-    are identical either way (the guard changes the physical plan only)."""
-    from aave_etl_spark.operators import similarity
-
-    vecs = spark.createDataFrame(
-        [(i, [float((i * 7 + j * 3) % 5 - 2) for j in range(4)]) for i in range(12)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = vecs.filter("vec_id < 3")
-    cands = vecs.filter("vec_id >= 3")
-    fast = similarity.margin_topk(cands, queries, k=2, knn=3)
-    guarded = similarity.margin_topk(
-        cands, queries, k=2, knn=3, max_broadcast_queries=1
-    )
-    # the guarded plan carries no broadcast hint on the pair scan
-    assert "ResolvedHint" not in guarded._jdf.queryExecution().analyzed().toString()
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, guarded.collect()))
 
 
 def test_gopher_quality_rules(spark):
@@ -1942,43 +1421,6 @@ def test_minhash_index_if_absent_scoped_append(spark, tmp_path):
     assert store.read("mh_idx_sc").count() > n
 
 
-def test_pq_topk_recall_on_clustered_vectors(spark):
-    """PQ/ADC: on well-separated clusters the compressed-domain top-k must
-    recover the same cluster memberships as exact L2 — the codes quantize
-    to the nearest seed, and ADC sums per-subspace lookup distances."""
-    import math
-
-    from aave_etl_spark.operators import similarity as sim
-
-    dim, m_sub, k_codes = 16, 4, 4
-    # 4 well-separated cluster anchors (= the first-4 seed codebook),
-    # then 5 jittered members per cluster (deterministic jitter)
-    def vec(c, j):
-        base = [0.0] * dim
-        for i in range(dim):
-            base[i] = 10.0 * c + 0.01 * ((i * 7 + j * 3 + c) % 5)
-        return base
-
-    rows = [(c, vec(c, 0)) for c in range(k_codes)] + [
-        (10 + c * 5 + j, vec(c, j + 1)) for c in range(4) for j in range(5)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter("vec_id IN (10, 15, 20, 25)")  # one member per cluster
-    out = sim.pq_topk(df, queries, k=3, n_subspaces=m_sub, n_codes=k_codes)
-    got = out.collect()
-    assert len(got) == 12  # 4 queries x top-3
-    cluster = lambda vid: vid if vid < 4 else (vid - 10) // 5  # noqa: E731
-    for r in got:
-        # every retrieved neighbor is from the query's own cluster
-        assert cluster(r.candidate_id) == cluster(r.query_id), r
-        assert r.approx_d2 < 1.0  # same-cluster ADC distance is tiny
-    # rank is dense 1..3 per query
-    ranks = {}
-    for r in got:
-        ranks.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == [1, 2, 3] for v in ranks.values())
-
-
 def test_epoch_shards_deterministic_and_partition_invariant(spark):
     """Epoch sharding: assignment depends only on (seed, id) — invariant
     under repartitioning; positions are dense 1..|shard|; a new seed
@@ -2056,105 +1498,6 @@ def test_epoch_shards_two_level_rank_matches_global_and_is_bounded(spark):
 
     with pytest.raises(ValueError):
         sampling.epoch_shards(df, sub_prefix_len=0)
-
-
-def test_ivfpq_topk_probe_pruning_and_recall(spark):
-    """IVF-PQ: results only come from the query's probed cells, and on
-    well-separated clusters the composed index recovers same-cluster
-    neighbors (residual codes refine within the probed cell)."""
-    from aave_etl_spark.operators import similarity as sim
-
-    dim = 16
-
-    def vec(c, j):
-        return [20.0 * c + 0.01 * ((i * 5 + j * 3) % 7) for i in range(dim)]
-
-    # cells 0..3 = anchors; codebook seeds 4..7 (one per cluster, jittered);
-    # members 20.. (5 per cluster); queries are one member per cluster
-    rows = (
-        [(c, vec(c, 0)) for c in range(4)]
-        + [(4 + c, vec(c, 1)) for c in range(4)]
-        + [(20 + c * 5 + j, vec(c, j + 2)) for c in range(4) for j in range(5)]
-    )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter("vec_id IN (20, 25, 30, 35)")
-    out = sim.ivfpq_topk(
-        df, queries, k=3, n_cells=4, n_probe=1, n_subspaces=4, n_codes=4
-    ).collect()
-    assert len(out) == 12
-    cluster = lambda vid: vid if vid < 4 else (vid - 4 if vid < 8 else (vid - 20) // 5)  # noqa: E731
-    for r in out:
-        # n_probe=1 on separated clusters: every hit is from the query's
-        # own cluster's cell — probe pruning is doing the scan reduction
-        assert r.cell_id == cluster(r.query_id), r
-        assert cluster(r.candidate_id) == cluster(r.query_id), r
-    ranks = {}
-    for r in out:
-        ranks.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == [1, 2, 3] for v in ranks.values())
-
-
-def test_ivfpq_arrow_encode_tie_breaks_to_lowest_cell_and_code(spark):
-    """The Arrow-vectorized encode (round 13) must keep the interpreted
-    struct-min tie semantics: equal rounded distances break to the LOWEST
-    cell/code id. Duplicate centroid seeds force exact d2 ties for every
-    vector, so any comparator drift (e.g. numpy argmax-style last-wins)
-    would surface as a non-zero cell/code."""
-    from aave_etl_spark.operators import similarity as sim
-
-    dim = 8
-    # seeds 0 and 1 are IDENTICAL -> both coarse centroids equal; seeds
-    # 2 and 3 identical -> both residual codebook entries equal
-    base = [1.0] * dim
-    rows = (
-        [(0, base), (1, base), (2, [2.0] * dim), (3, [2.0] * dim)]
-        + [(10 + j, [1.0 + 0.1 * j] * dim) for j in range(4)]
-    )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = sim.ivfpq_topk(
-        df, df.filter("vec_id = 10"), k=3, n_cells=2, n_probe=2,
-        n_subspaces=4, n_codes=2,
-    ).collect()
-    # every candidate ties between the two identical cells -> all land in
-    # cell 0; ADC scores tie between the two identical codes the same way
-    assert out and all(r.cell_id == 0 for r in out), out
-
-
-def test_pq_topk_sparse_nonzero_ids_and_dim_guard(spark):
-    """Review regression: codebook/cell seeding must re-code densely (ids
-    that are sparse or don't start at 0 previously broke the
-    position<->code identity), and a dimension not divisible by
-    n_subspaces must raise, not silently truncate."""
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    from aave_etl_spark.operators import similarity as sim
-
-    dim = 8
-
-    def vec(c, j):
-        return [10.0 * c + 0.01 * ((i + j) % 3) for i in range(dim)]
-
-    # ids start at 1000 and stride 7 — the old id<n_codes filter would
-    # yield an EMPTY codebook and NULL scores
-    rows = [(1000 + (c * 3 + j) * 7, vec(c, j)) for c in range(2) for j in range(3)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.limit(1)
-    out = sim.pq_topk(df, queries, k=2, n_subspaces=2, n_codes=2).collect()
-    assert len(out) == 2
-    assert all(r.approx_d2 is not None for r in out)
-    out2 = sim.ivfpq_topk(
-        df, queries, k=2, n_cells=2, n_probe=2, n_subspaces=2, n_codes=2
-    ).collect()
-    assert len(out2) == 2
-    assert all(r.approx_d2 is not None for r in out2)
-
-    # 9-dim vectors with M=2: must raise, not truncate
-    bad = spark.createDataFrame(
-        [(1, [float(i) for i in range(9)]), (2, [float(i + 1) for i in range(9)])],
-        "vec_id long, embedding array<double>",
-    )
-    with pytest.raises(SparkRuntimeException, match="not divisible"):
-        sim.pq_topk(bad, bad.limit(1), k=1, n_subspaces=2, n_codes=2).collect()
 
 
 def test_perplexity_buckets_null_lang_kept_in_both_forms(spark):
@@ -2308,128 +1651,6 @@ def test_curate_weighted_budget_draw_and_tail_validation(spark):
         curate(docs, sample_k=3, sample_weight_col="no_such_col")
 
 
-def test_ivfpq_trained_geometry_end_to_end_recall_and_determinism(spark, tmp_path):
-    """The PRODUCTION ANN shape: k-means-TRAINED cells + residual codebook
-    run through ivfpq_index_build/ivfpq_index_search end-to-end.
-    Gates: (a) recall@3 vs exact L2 >= the deterministic-geometry
-    baseline and >= 0.9 on separated clusters; (b) the at-rest trained
-    search bitwise-matches the trained in-flight ivfpq_topk (geometry
-    flows through the identical plan); (c) ivfpq_train is deterministic
-    (fixed init = first-N-by-id, densely re-coded)."""
-    from aave_etl_spark.io.table_store import TableStore
-    from aave_etl_spark.operators import similarity as sim
-
-    dim = 16
-
-    def vec(c, j):
-        return [20.0 * c + 0.01 * ((i * 5 + j * 3) % 7) for i in range(dim)]
-
-    rows = (
-        [(c, vec(c, 0)) for c in range(4)]
-        + [(4 + c, vec(c, 1)) for c in range(4)]
-        + [(20 + c * 5 + j, vec(c, j + 2)) for c in range(4) for j in range(5)]
-    )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter("vec_id IN (20, 25, 30, 35)")
-
-    # exact top-3 by squared L2 (excluding self), driver-side
-    by_id = {r.vec_id: r.embedding for r in df.collect()}
-    exact = {}
-    for q in (20, 25, 30, 35):
-        d2 = sorted(
-            (sum((a - b) ** 2 for a, b in zip(by_id[q], v)), i)
-            for i, v in by_id.items()
-            if i != q
-        )
-        exact[q] = {i for _, i in d2[:3]}
-
-    def recall(rows_):
-        got = {}
-        for r in rows_:
-            got.setdefault(r.query_id, set()).add(r.candidate_id)
-        return sum(len(got.get(q, set()) & exact[q]) for q in exact) / (3 * len(exact))
-
-    cells, codebook = sim.ivfpq_train(df, n_cells=4, n_codes=4, n_iter=3)
-    store = TableStore(spark, str(tmp_path / "trained"))
-    sim.ivfpq_index_build(
-        store, df, n_subspaces=4, cells=cells, codebook=codebook
-    )
-    trained = sim.ivfpq_index_search(
-        store, queries, k=3, n_probe=1, n_subspaces=4
-    ).collect()
-
-    det_store = TableStore(spark, str(tmp_path / "det"))
-    sim.ivfpq_index_build(det_store, df, n_cells=4, n_codes=4, n_subspaces=4)
-    det = sim.ivfpq_index_search(
-        det_store, queries, k=3, n_probe=1, n_subspaces=4
-    ).collect()
-
-    assert recall(trained) >= recall(det)
-    assert recall(trained) >= 0.9
-    # trained at-rest == trained in-flight: same geometry, same plan shape
-    in_flight = sim.ivfpq_topk(
-        df, queries, k=3, n_probe=1, n_subspaces=4, cells=cells, codebook=codebook
-    ).collect()
-    assert sorted(map(tuple, trained)) == sorted(map(tuple, in_flight))
-    # determinism: retraining yields bit-identical geometry
-    cells2, codebook2 = sim.ivfpq_train(df, n_cells=4, n_codes=4, n_iter=3)
-    assert sorted(map(tuple, cells.collect())) == sorted(map(tuple, cells2.collect()))
-    assert sorted(map(tuple, codebook.collect())) == sorted(
-        map(tuple, codebook2.collect())
-    )
-    # half-provided geometry refuses
-    with pytest.raises(ValueError, match="both"):
-        sim.ivfpq_topk(df, queries, cells=cells)
-
-
-def test_ivfpq_index_roundtrip_matches_in_flight(spark, tmp_path):
-    from aave_etl_spark.io.table_store import TableStore
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet")
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivfpq_index_build(store, emb, n_cells=8, n_codes=8, n_subspaces=4)
-    queries = emb.filter(F.col("vec_id") < 8)
-    at_rest = similarity.ivfpq_index_search(
-        store, queries, k=3, n_probe=2, n_subspaces=4
-    ).collect()
-    in_flight = similarity.ivfpq_topk(
-        emb, queries, k=3, n_cells=8, n_probe=2, n_subspaces=4, n_codes=8
-    ).collect()
-    assert sorted(map(tuple, at_rest)) == sorted(map(tuple, in_flight))
-    assert len(at_rest) > 0
-
-
-def test_ivfpq_index_search_scans_only_probed_cells(spark, tmp_path):
-    import re as _re
-
-    from aave_etl_spark.io.table_store import TableStore
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 13) % 7), float((i * 5) % 11), 1.0, 2.0]) for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivfpq_index_build(store, emb, n_cells=8, n_codes=4, n_subspaces=2)
-    one_query = emb.filter(F.col("vec_id") == 20)
-    out = similarity.ivfpq_index_search(
-        store, one_query, k=3, n_probe=2, n_subspaces=2
-    )
-    p = out._jdf.queryExecution().executedPlan().toString()
-    m = _re.search(r"cell_id#\d+ IN(?:SET)? \(?([\d, ]+)\)?", p)
-    assert m, f"no partition IN/INSET filter in plan:\n{p[:2000]}"
-    assert len([v for v in m.group(1).split(",") if v.strip()]) == 2
-    assert out.count() == 3
-    # empty query set: typed empty, no IN () predicate constructed
-    none = similarity.ivfpq_index_search(
-        store, emb.filter(F.col("vec_id") < 0), k=3, n_probe=2, n_subspaces=2
-    )
-    assert none.count() == 0
-    assert [f.name for f in none.schema.fields] == [
-        "query_id", "candidate_id", "cell_id", "approx_d2", "rank",
-    ]
-
-
 # ---------------------------------------------------------------------------
 # SCD Type-2 snapshots.
 # ---------------------------------------------------------------------------
@@ -2487,43 +1708,6 @@ def test_scd2_snapshot_tie_break_and_validation(spark):
     ]
     with pytest.raises(ValueError, match="key_cols and attr_cols"):
         scd2_snapshot(log, [], ["attr"])
-
-
-def test_knn_classify_majority_vote_and_ties(spark):
-    from aave_etl_spark.operators.similarity import knn_classify
-
-    # 2-D geometry around query [1,0]: neighbor ranks by cosine are
-    # 1 > 2 > 3 > 4 > 5 >> 6; labels interleave so k flips the vote
-    rows = [
-        (0, [1.0, 0.0], 9),      # the query (label ignored on query side)
-        (1, [0.99, 0.1], 1),
-        (2, [0.98, 0.12], 1),
-        (3, [0.97, 0.15], 2),
-        (4, [0.9, 0.3], 2),
-        (5, [0.88, 0.35], 2),
-        (6, [-1.0, 0.0], 1),     # far: never in the top-5
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    # k=5: labels {1,1,2,2,2} -> 2 wins with 3 votes
-    out = knn_classify(emb, emb.filter("vec_id = 0"), k=5).collect()
-    assert len(out) == 1
-    assert (out[0].pred_label, out[0].n_votes) == (2, 3)
-    # k=4: labels {1,1,2,2} tie -> smallest label wins
-    out2 = knn_classify(emb, emb.filter("vec_id = 0"), k=4).collect()
-    assert len(out2) == 1 and (out2[0].pred_label, out2[0].n_votes) == (1, 2)
-    # UNLABELED (NULL) corpus rows must not vote at all: with labels
-    # {1,1,NULL,NULL} at k=4 pred is 1, and even when NULLs hold an
-    # outright plurality — {1,1,NULL,NULL,NULL} at k=5 — the labeled
-    # neighbors still decide (seed-set propagation on a mostly-unlabeled
-    # corpus must never predict NULL)
-    nulled = spark.createDataFrame(
-        [(i, v, None if lbl == 2 else lbl) for i, v, lbl in rows],
-        "vec_id long, embedding array<double>, label int",
-    )
-    out3 = knn_classify(nulled, nulled.filter("vec_id = 0"), k=4).collect()
-    assert len(out3) == 1 and (out3[0].pred_label, out3[0].n_votes) == (1, 2)
-    out4 = knn_classify(nulled, nulled.filter("vec_id = 0"), k=5).collect()
-    assert len(out4) == 1 and (out4[0].pred_label, out4[0].n_votes) == (1, 2)
 
 
 def test_hll_sketches_merge_losslessly_and_estimate_accurately(spark):
@@ -2606,43 +1790,6 @@ def test_kmv_merge_equals_direct_sketch(spark):
         ).collect()
 
 
-def test_knn_vote_composes_with_ivf_arm(spark):
-    """The vote logic is arm-agnostic: on a well-clustered fixture the
-    IVF search feeding knn_vote yields the same predictions as the exact
-    cosine arm — the swap the 100 TB path performs against the at-rest
-    indexes."""
-    import numpy as np
-
-    from aave_etl_spark.operators.similarity import (
-        ivf_topk,
-        knn_classify,
-        knn_vote,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = []
-    # two tight clusters of 20 vectors each, labels follow the cluster
-    for i in range(40):
-        c = i % 2
-        base = np.array([3.0, 0.0] if c == 0 else [0.0, 3.0])
-        rows.append((i, (base + rng.normal(0, 0.05, 2)).tolist(), c + 1))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    queries = emb.filter("vec_id < 4")
-    labels = emb.selectExpr("vec_id AS candidate_id", "label AS _lbl")
-    ivf_arm = ivf_topk(emb, queries, k=5, n_cells=4, n_probe=2)
-    via_ivf = {
-        r.query_id: r.pred_label for r in knn_vote(ivf_arm, labels).collect()
-    }
-    exact = {
-        r.query_id: r.pred_label for r in knn_classify(emb, queries, k=5).collect()
-    }
-    assert via_ivf == exact and len(exact) == 4
-    # and the labels are the cluster identities
-    assert all(via_ivf[q] == (q % 2) + 1 for q in via_ivf)
-
-
 def test_bm25_max_df_caps_stop_terms_and_pushes_down(spark, tmp_path):
     """max_df drops stop-term postings BEFORE the hits join: scores equal
     the uncapped retrieve over a corpus whose stop terms were never there,
@@ -2686,30 +1833,6 @@ def test_bm25_max_df_caps_stop_terms_and_pushes_down(spark, tmp_path):
     assert sorted(map(tuple, at_rest.collect())) == sorted(map(tuple, capped))
     plan = at_rest._jdf.queryExecution().executedPlan().toString()
     assert "LessThanOrEqual(df,5)" in plan, plan
-
-
-def test_hybrid_rrf_atrest_composition_matches_inflight(spark):
-    """The at-rest hybrid retrieval composition — rrf_fuse over
-    bm25_index_search × ivfpq_index_search, the shape SCALE.md names as
-    the 100 TB path — equals the fusion of the arms' IN-FLIGHT twins
-    exactly: each at-rest arm is a bitwise twin of its in-flight form, so
-    the fused (query, candidate, score, rank) sets must match row-for-row."""
-    from tests.conftest import SF_SMOKE
-
-    from aave_etl_spark.operators import similarity, text
-    from aave_etl_spark.queries.llm import llm_hybrid_rrf_atrest
-
-    at_rest = sorted(map(tuple, llm_hybrid_rrf_atrest(spark, SF_SMOKE).collect()))
-    emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet")
-    docs = spark.read.parquet(SF_SMOKE + "/documents.parquet")
-    dense = similarity.ivfpq_topk(
-        emb, emb.filter("vec_id < 8"), k=10,
-        n_cells=8, n_probe=2, n_subspaces=4, n_codes=8,
-    )
-    sparse = text.bm25_retrieve(docs, docs.filter("doc_id < 8"), k=10)
-    in_flight = sorted(map(tuple, similarity.rrf_fuse(dense, sparse, k=5).collect()))
-    assert at_rest == in_flight
-    assert len(at_rest) > 0
 
 
 def test_topk_sketch_merge_bounds_contain_truth(spark):
@@ -3061,103 +2184,297 @@ def test_line_dedup_global_agg_form_equals_window_form_and_skew_immune(spark):
     assert "Window" not in plan, plan
 
 
-def test_ivfpq_index_append_frozen_geometry_and_idempotent(spark, tmp_path):
-    """ivfpq_index_append encodes the batch under the STORED geometry:
-    the incremental index equals a from-scratch build of the union under
-    the same (cells, codebook); a byte-identical re-append dynamic-
-    overwrites its own (cell, day) slices so the row count stays fixed;
-    a mismatched n_subspaces is rejected against the meta sidecar."""
-    import pytest as _pytest
+# ---------------------------------------------------------------------------
+# sampling building blocks: the md5-prefix uniform hash, the mergeable DSIR
+# bucket state, the smoothed log-ratio table and the Gumbel sample key.
+# Each is checked against a pure-Python twin of its documented formula.
+# ---------------------------------------------------------------------------
+def _md5_prefix(s: str) -> int:
+    import hashlib
 
-    from aave_etl_spark.io.table_store import TableStore
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
-    mk = lambda lo, hi, day: spark.createDataFrame(
+
+def test_uniform_hash_matches_python_md5_prefix(spark):
+    from aave_etl_spark.operators import sampling
+
+    ids = [0, 7, 123456789]
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = [r.u for r in df.select(sampling.uniform_hash("doc_id", "s1").alias("u")).collect()]
+    assert got == [_md5_prefix(f"s1:{i}") / 16.0**15 for i in ids]
+
+
+def test_uniform_hash_salted_scores_are_uniform_in_unit_interval(spark):
+    from aave_etl_spark.operators import sampling
+
+    df = spark.range(400).withColumnRenamed("id", "doc_id")
+    rows = df.select(
+        sampling.uniform_hash("doc_id", "a").alias("a"),
+        sampling.uniform_hash(F.col("doc_id"), "b").alias("b"),
+    ).collect()
+    a = [r.a for r in rows]
+    assert all(0.0 <= x < 1.0 for x in a)
+    assert 0.4 < sum(a) / len(a) < 0.6
+    assert sum(r.a != r.b for r in rows) == len(rows)
+
+
+def test_hashed_ngram_buckets_count_unigrams_and_bigrams_with_multiplicity(spark):
+    from aave_etl_spark.operators import sampling
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "d1"), (2, "x x x", "d1"), (3, "solo", "d2")],
+        "doc_id long, text string, day string",
+    )
+    # one bucket: _c is the doc's gram count, unigrams plus bigrams
+    rows = sampling.hashed_ngram_buckets(docs, m=1, extra_cols=("day",)).collect()
+    assert sorted((r.doc_id, r.day, r._b, r._c) for r in rows) == [
+        (1, "d1", 0, 5), (2, "d1", 0, 5), (3, "d2", 0, 1),
+    ]
+
+
+def test_hashed_ngram_buckets_use_the_md5_prefix_bucket(spark):
+    from aave_etl_spark.operators import sampling
+
+    m = 97
+    docs = spark.createDataFrame([(1, "Hello   WORLD hello")], "doc_id long, text string")
+    got = {r._b: r._c for r in sampling.hashed_ngram_buckets(docs, m=m).collect()}
+    want: dict[int, int] = {}
+    for g in ["hello", "world", "hello", "hello world", "world hello"]:
+        b = _md5_prefix(g) % m
+        want[b] = want.get(b, 0) + 1
+    assert got == want
+
+
+def test_dsir_log_ratio_covers_full_domain_with_laplace_prior(spark):
+    import math
+
+    from aave_etl_spark.operators import sampling
+
+    m = 4
+    tgt = spark.createDataFrame([(0, 3)], "_b long, _ct long")
+    raw = spark.createDataFrame([(1, 1)], "_b long, _cr long")
+    got = {r._b: r._lr for r in sampling.dsir_log_ratio(tgt, raw, m).collect()}
+    nt, nr = 3.0, 1.0
+    ct, cr = {0: 3}, {1: 1}
+    want = {
+        b: math.log((ct.get(b, 0) + 1.0) / (nt + m)) - math.log((cr.get(b, 0) + 1.0) / (nr + m))
+        for b in range(m)
+    }
+    assert got.keys() == want.keys()
+    for b in range(m):
+        assert got[b] == pytest.approx(want[b], abs=1e-12)
+
+
+def test_dsir_scores_sum_count_weighted_log_ratios(spark):
+    from aave_etl_spark.operators import sampling
+
+    buckets = spark.createDataFrame(
+        [(1, 0, 2), (1, 1, 1), (2, 1, 3)], "doc_id long, _b long, _c long"
+    )
+    ratio = spark.createDataFrame([(0, 0.5), (1, -1.0)], "_b long, _lr double")
+    got = {r.doc_id: (r.n_grams, r._w) for r in sampling.dsir_scores(buckets, ratio).collect()}
+    assert got == {1: (3, 0.0), 2: (3, -3.0)}
+
+
+def test_dsir_sample_key_matches_gumbel_twin_and_scales_by_temperature(spark):
+    import math
+
+    from aave_etl_spark.operators import sampling
+
+    df = spark.createDataFrame([(11, 2.0), (42, -1.0)], "doc_id long, w double")
+    rows = df.select(
+        "doc_id",
+        "w",
+        sampling.dsir_sample_key(F.col("w"), F.col("doc_id")).alias("k1"),
+        sampling.dsir_sample_key(F.col("w") * 2.0, F.col("doc_id"), temperature=2.0).alias("k2"),
+    ).collect()
+    for r in rows:
+        u = (_md5_prefix(f"dsir:{r.doc_id}") + 0.5) / 16.0**15
+        assert r.k1 == pytest.approx(round(r.w - math.log(-math.log(u)), 6), abs=1e-6)
+        # w/T is what the key sees: doubling both leaves it unchanged
+        assert r.k2 == r.k1
+
+
+# ---------------------------------------------------------------------------
+# text: quality features/score, language-ID heuristic, bag-of-words
+# fingerprint, document-frequency n-grams and sketch-backed stop terms
+# ---------------------------------------------------------------------------
+def test_quality_features_known_values(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame([(1, "The cat, and the DOG.")], "doc_id long, text string")
+    r = text.quality_features(docs).first()
+    # tokens: the, "cat,", and, the, "dog."
+    assert (r.n_chars, r.n_words) == (21, 5)
+    assert r.stopword_ratio == pytest.approx(3 / 5)
+    assert r.punct_ratio == pytest.approx(2 / 21)
+    assert r.distinct_ratio == pytest.approx(4 / 5)
+
+
+def test_quality_score_weights_and_short_doc_gate(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame(
+        [(1, "the cat and the dog"), (2, "too short doc"), (3, "spam spam spam spam spam spam")],
+        "doc_id long, text string",
+    )
+    got = {r.doc_id: r.quality for r in text.quality_score(docs).collect()}
+    # 0.3*min(5/100,1) + 0.3*min(0.6*10,1) + 0.3*(4/5) + 0.1*(1-0)
+    assert got[1] == pytest.approx(0.655)
+    assert got[2] == 0.0
+    # no stopwords and one distinct token: only length and punctuation score
+    assert got[3] == pytest.approx(round(0.3 * 0.06 + 0.3 / 6 + 0.1, 6))
+    assert all(0.0 <= q <= 1.0 for q in got.values())
+
+
+@pytest.mark.parametrize(
+    "doc, lang, score",
+    [
+        ("the cat and a dog", "en", 3 / 5),
+        ("le chat et les chiens", "fr", 3 / 5),
+        ("der hund und die katze", "de", 3 / 5),
+        ("el perro y los gatos", "es", 3 / 5),
+        ("zzz qqq", "und", 0.0),
+        # "la" marks both fr and es: the tie goes to the first language
+        ("la casa", "fr", 1 / 2),
+    ],
+)
+def test_language_id_marker_heuristic(spark, doc, lang, score):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame([(1, doc)], "doc_id long, text string")
+    r = text.language_id(docs).first()
+    assert r.lang_guess == lang
+    assert r.lang_score == pytest.approx(score)
+
+
+def test_language_id_custom_markers(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame(
+        [(1, "ja ja nein"), (2, "si si no")], "doc_id long, text string"
+    )
+    markers = {"de": ("ja", "nein"), "it": ("si", "no")}
+    got = {r.doc_id: r.lang_guess for r in text.language_id(docs, markers=markers).collect()}
+    assert got == {1: "de", 2: "it"}
+
+
+def test_fingerprint_is_a_bag_of_distinct_words(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame(
         [
-            (i, [float((i * 13 + d) % 7) for d in range(8)], day)
-            for i in range(lo, hi)
+            (1, "alpha beta gamma"),
+            (2, "Gamma  alpha BETA"),
+            (3, "beta alpha gamma gamma"),
+            (4, "alpha beta delta"),
         ],
-        "vec_id long, embedding array<double>, day string",
-    ).withColumn("day", F.to_date("day"))
-    d1 = mk(0, 40, "2024-01-01")
-    d2 = mk(100, 130, "2024-01-02")
-
-    store = TableStore(spark, str(tmp_path / "inc"))
-    similarity.ivfpq_index_build(
-        store, d1, name="pq", n_cells=4, n_codes=4, n_subspaces=2,
-        carry_cols=("day",),
+        "doc_id long, text string",
     )
-    similarity.ivfpq_index_append(
-        store, d2, name="pq", n_subspaces=2, carry_cols=("day",)
+    fp = {r.doc_id: r.fingerprint for r in text.fingerprint(docs).collect()}
+    assert fp[1] == fp[2] == fp[3]
+    assert fp[4] != fp[1]
+    import hashlib
+
+    assert fp[1] == hashlib.md5(b"alpha beta gamma").hexdigest()
+
+
+def test_ngram_doc_freq_topk_counts_documents_not_occurrences(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b d a b"), (3, "A B c")], "doc_id long, text string"
     )
-    inc = {
-        (r.day, r.vec_id, r.cell_id, tuple(r.codes))
-        for r in store.read("pq").collect()
-    }
-    assert len(inc) == 70
+    got = [
+        (r.ngram, r.doc_freq, r.rank)
+        for r in text.ngram_doc_freq_topk(docs, n=2, k=2).orderBy("rank").collect()
+    ]
+    assert got == [("a b", 3, 1), ("b c", 2, 2)]
 
-    # from-scratch build of the union under the SAME stored geometry
-    scratch = TableStore(spark, str(tmp_path / "scratch"))
-    similarity.ivfpq_index_build(
-        scratch,
-        d1.unionByName(d2),
-        name="pq",
-        n_subspaces=2,
-        cells=store.read("pq_cells"),
-        codebook=store.read("pq_codebook"),
-        carry_cols=("day",),
+
+def test_ngram_doc_freq_topk_breaks_ties_by_ngram(spark):
+    from aave_etl_spark.operators import text
+
+    docs = spark.createDataFrame(
+        [(1, "zeta"), (2, "alpha"), (3, "mid"), (4, "zeta alpha")], "doc_id long, text string"
     )
-    full = {
-        (r.day, r.vec_id, r.cell_id, tuple(r.codes))
-        for r in scratch.read("pq").collect()
-    }
-    assert full == inc
+    got = [
+        (r.ngram, r.doc_freq)
+        for r in text.ngram_doc_freq_topk(docs, n=1, k=3).orderBy("rank").collect()
+    ]
+    assert got == [("alpha", 2), ("zeta", 2), ("mid", 1)]
 
-    # idempotence: re-appending the same day leaves the table fixed
-    similarity.ivfpq_index_append(
-        store, d2, name="pq", n_subspaces=2, carry_cols=("day",)
+
+def test_stop_terms_from_shard_sketches_are_exact_for_heavy_terms(spark):
+    from aave_etl_spark.operators import text
+
+    rows = [(d, "the") for d in range(8)]
+    rows += [(d, "of") for d in range(6)]
+    rows += [(d, f"rare{d}") for d in range(8)]
+    postings = spark.createDataFrame(rows, "doc_id long, term string")
+    sk = text.stop_term_sketches(postings, m=16, n_shards=4)
+    assert sorted(r._shard for r in sk.collect()) == [0, 1, 2, 3]
+    got = [
+        (r.value, r.count_lb, r.count_ub, r.exact, r.rank)
+        for r in text.stop_terms_from_sketches(sk, k=2).orderBy("rank").collect()
+    ]
+    assert got == [("the", 8, 8, True, 1), ("of", 6, 6, True, 2)]
+
+
+def test_stop_term_sketches_bound_undercounts_when_truncated(spark):
+    """With m=1 each shard keeps only its heaviest term; a term missing
+    from a shard's summary gets that shard's rest_max as slack, so its
+    upper bound never falls below the true document frequency."""
+    from aave_etl_spark.operators import text
+
+    rows = [(d, "the") for d in range(8)] + [(d, "of") for d in (0, 1, 2)]
+    postings = spark.createDataFrame(rows, "doc_id long, term string")
+    sk = text.stop_term_sketches(postings, m=1, n_shards=4)
+    assert all(len(r.hh) == 1 for r in sk.collect())
+    top = text.stop_terms_from_sketches(sk, k=1).first()
+    assert (top.value, top.count_lb) == ("the", 8)
+    assert top.count_ub >= 8
+
+
+# ---------------------------------------------------------------------------
+# keep_first_per_group: one row per group under a pinned total order
+# ---------------------------------------------------------------------------
+def test_keep_first_per_group_ascending_with_tiebreak(spark):
+    df = spark.createDataFrame(
+        [("a", 2, "x"), ("a", 1, "z"), ("a", 1, "y"), ("b", 5, "w")],
+        "g string, ts long, tag string",
     )
-    assert {
-        (r.day, r.vec_id, r.cell_id, tuple(r.codes))
-        for r in store.read("pq").collect()
-    } == inc
-
-    # PQ-split drift is rejected loudly
-    with _pytest.raises(ValueError, match="n_subspaces"):
-        similarity.ivfpq_index_append(
-            store, d2, name="pq", n_subspaces=4, carry_cols=("day",)
-        )
-    # missing index is rejected loudly
-    with _pytest.raises(ValueError, match="not found"):
-        similarity.ivfpq_index_append(
-            TableStore(spark, str(tmp_path / "empty")), d2, name="pq",
-            n_subspaces=2,
-        )
+    out = dedup.keep_first_per_group(df, ["g"], [F.col("ts"), F.col("tag")])
+    assert out.columns == ["g", "ts", "tag"]
+    assert sorted(tuple(r) for r in out.collect()) == [("a", 1, "y"), ("b", 5, "w")]
 
 
-def test_ivf_index_append_day_scope_prunes_at_file_listing(spark, tmp_path):
-    """An extra_where day predicate on a carry-partitioned IVF index
-    reaches the PARTITION filters (file-listing pruning), and the
-    prior-day-scoped search never returns same-day rows — the
-    embeddings pipeline's backfill discipline, asserted at the plan."""
-    from aave_etl_spark.io.table_store import TableStore
-
-    mk = lambda lo, hi, day: spark.createDataFrame(
-        [(i, [float((i * 13) % 7), float((i * 5) % 11), 1.0], day) for i in range(lo, hi)],
-        "vec_id long, embedding array<double>, day string",
-    ).withColumn("day", F.to_date("day"))
-    d1, d2 = mk(0, 32, "2024-01-01"), mk(100, 120, "2024-01-02")
-
-    store = TableStore(spark, str(tmp_path))
-    similarity.ivf_index_build(store, d1, n_cells=8, carry_cols=("day",))
-    similarity.ivf_index_append(store, d2, carry_cols=("day",))
-
-    q = mk(500, 502, "2024-01-02").drop("day")
-    out = similarity.ivf_index_search(
-        store, q, k=50, n_probe=8, extra_where="day < DATE '2024-01-02'"
+def test_keep_first_per_group_keep_last_over_two_keys(spark):
+    df = spark.createDataFrame(
+        [("m", "d1", 1, 10.0), ("m", "d1", 3, 30.0), ("m", "d2", 2, 20.0), ("n", "d1", 9, 90.0)],
+        "market string, day string, block long, v double",
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "day" in plan.split("PartitionFilters", 1)[1][:400], plan[:3000]
-    # only day-1 candidates survive the scoped scan
-    assert {r.candidate_id for r in out.collect()} <= set(range(32))
-    unscoped = similarity.ivf_index_search(store, q, k=50, n_probe=8)
-    assert {r.candidate_id for r in unscoped.collect()} & set(range(100, 120))
+    out = dedup.keep_first_per_group(df, ["market", "day"], [F.col("block").desc()])
+    assert sorted((r.market, r.day, r.v) for r in out.collect()) == [
+        ("m", "d1", 30.0), ("m", "d2", 20.0), ("n", "d1", 90.0),
+    ]
+
+
+@pytest.mark.parametrize(
+    "opts, message",
+    [
+        ({"mix_weights": [("en", 1.0)], "mix_temperature": 0.5, "mix_budget": 10.0},
+         "mix_weights OR mix_temperature"),
+        ({"mix_budget": 10.0}, "mix_budget only applies"),
+        ({"mix_temperature": 0.5}, "mix_temperature needs mix_budget"),
+        ({"sample_weight_col": "quality"}, "sample_weight_col only applies"),
+        ({"sample_k": 0}, "sample_k must be >= 1, got 0"),
+    ],
+)
+def test_mix_and_pack_rejects_contradictory_tail_options(opts, message):
+    """A contradictory or incomplete mixing tail fails before any corpus
+    frame is touched (the core here is empty and the session absent)."""
+    from aave_etl_spark.plans.curation import mix_and_pack
+
+    with pytest.raises(ValueError, match=message):
+        mix_and_pack({}, None, **opts)

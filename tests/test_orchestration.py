@@ -799,118 +799,6 @@ def test_corpus_pipeline_survives_empty_first_day(spark, tmp_path):
     assert ("2024-01-03", 31) in clean3
 
 
-def test_embeddings_pipeline_dedup_append_and_maintenance(spark, tmp_path):
-    """The daily embeddings graph (plans/embeddings_pipeline.py) run for
-    two days: day 2's exact replica of a day-1 vector is dropped by the
-    prior-day-scoped IVF probe, a RESCALED replica is dropped too (cosine
-    is scale-invariant), a within-batch duplicate pair keeps only its min
-    id, and a genuinely new vector survives; re-running day 2 leaves the
-    index row count fixed (dynamic (cell, day) slice overwrite); the
-    incremental index equals a from-scratch build under the same frozen
-    centroids; a CORRECTED re-run that moves a vector across cells leaves
-    a stale slice which embeddings_maintenance reclaims."""
-    from aave_etl_spark.operators import similarity
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        embeddings_maintenance,
-        embeddings_pipeline_graph,
-    )
-
-    store = TableStore(spark, str(tmp_path / "emb_wh"))
-    # 4-d unit-ish vectors: ids 0..3 are day 1 (ids < EMB_N_CELLS so they
-    # all train the quantizer); day 2 plants copies/rescales/new
-    e0, e1, e2, e3 = (
-        [1.0, 0.0, 0.0, 0.0],
-        [0.0, 1.0, 0.0, 0.0],
-        [0.0, 0.0, 1.0, 0.0],
-        [0.6, 0.64, 0.0, 0.0],
-    )
-    new_a = [0.0, 0.0, 0.5, 0.8]  # far from everything on day 1
-    new_b = [0.5, -0.5, 0.5, -0.5]
-    rows = [
-        (0, e0, "2024-01-01"),
-        (1, e1, "2024-01-01"),
-        (2, e2, "2024-01-01"),
-        (3, e3, "2024-01-01"),
-        (10, e1, "2024-01-02"),  # exact replica of day-1 vec 1 -> dropped
-        (11, [x * 3.0 for x in e2], "2024-01-02"),  # rescaled replica -> dropped
-        (12, new_a, "2024-01-02"),  # survives
-        (13, new_b, "2024-01-02"),  # survives
-        (14, new_b, "2024-01-02"),  # within-batch copy of 13 -> dropped
-        (15, None, "2024-01-02"),  # NULL embedding: dropped at landing
-        # within-batch NEAR-dup (2x rescale of 13): different bytes, so the
-        # exact pass keeps it and the prior-day probe can't see it — only
-        # the round-12 SRP-bucketed self-join drops it
-        (16, [x * 2.0 for x in new_b], "2024-01-02"),
-    ]
-    landing = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, day string"
-    ).withColumn("day", F.to_date("day"))
-    graph = embeddings_pipeline_graph()
-    for day in ("2024-01-01", "2024-01-02"):
-        orch.run_day(spark, store, graph, day, markets=[], resources={"vectors": landing})
-
-    clean = store.read("emb_clean")
-    d2_ids = {r.vec_id for r in clean.filter("day = DATE '2024-01-02'").collect()}
-    assert d2_ids == {12, 13}
-    assert clean.count() == 6
-
-    idx = store.read("emb_ivf")
-    n0 = idx.count()
-    assert n0 == 6
-    rows0 = {(r.day, r.vec_id, r.cell_id) for r in idx.collect()}
-
-    # re-run day 2: byte-identical dynamic overwrite — index fixed, the
-    # surviving pair must NOT dedup against its own prior slice
-    orch.run_day(spark, store, graph, "2024-01-02", markets=[], resources={"vectors": landing})
-    idx1 = store.read("emb_ivf")
-    assert idx1.count() == n0
-    assert {(r.day, r.vec_id, r.cell_id) for r in idx1.collect()} == rows0
-    assert {
-        r.vec_id
-        for r in store.read("emb_clean").filter("day = DATE '2024-01-02'").collect()
-    } == {12, 13}
-
-    # incremental == from-scratch build under the SAME frozen centroids
-    scratch = TableStore(spark, str(tmp_path / "emb_scratch"))
-    similarity.ivf_index_build(
-        scratch,
-        store.read("emb_clean"),
-        name="emb_ivf",
-        centroids=store.read("emb_ivf_centroids"),
-        carry_cols=("day",),
-    )
-    rebuilt = {
-        (r.day, r.vec_id, r.cell_id) for r in scratch.read("emb_ivf").collect()
-    }
-    assert rebuilt == rows0
-
-    # cell stats cover both days over the incremental index
-    stats = store.read("emb_cell_stats")
-    assert stats.agg(F.sum("n_vecs")).collect()[0][0] == n0
-
-    # corrected re-run: vec 12's corrected vector is an exact copy of
-    # day-1 vec 0 — the prior-day-scoped probe now drops it, so day 2's
-    # slice shrinks AND the dropped vector's old (cell, day) files go
-    # stale; maintenance reclaims the index to the surviving rows
-    # (cell stats refresh on the NEXT daily run, not in maintenance)
-    corrected = landing.withColumn(
-        "embedding",
-        F.when(F.col("vec_id") == 12, F.array(*[F.lit(x) for x in e0])).otherwise(
-            F.col("embedding")
-        ),
-    )
-    orch.run_day(
-        spark, store, graph, "2024-01-02", markets=[], resources={"vectors": corrected}
-    )
-    n_clean = store.read("emb_clean").count()
-    assert n_clean == 5  # vec 12 now dedups away against day-1 vec 0
-    stale = store.read("emb_ivf").count()
-    assert stale > n_clean  # the dropped vector's old slice survived the overwrite
-    out = embeddings_maintenance(store)
-    assert out["emb_ivf"][1] == n_clean
-    assert store.read("emb_ivf").count() == n_clean
-
-
 def test_corpus_decontamination_gate_bars_eval_overlap(spark, tmp_path):
     """Benchmark decontamination at ingest: a doc that substantially
     overlaps the injected eval set survives CLEAN (it is not a duplicate
@@ -1017,239 +905,17 @@ def test_corpus_decontamination_gate_bars_eval_overlap(spark, tmp_path):
     assert not store2.exists("corpus_contam")
 
 
-def test_emb_pq_prefilter_mode_matches_flat_probe(spark, tmp_path):
-    """The PQ-prefiltered cross-corpus dedup mode (round 13): with the
-    ``emb_pq_prefilter`` resource, _emb_clean shortlists via ADC over the
-    UNIT-vector code twin and exact-verifies only the shortlist — the
-    day-2 clean slice must be IDENTICAL to the flat raw-probe run's
-    (exact + rescaled replicas dropped, fresh vectors kept), and the
-    unit code store must exist complete beside the raw one."""
-    import hashlib
-
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        EMB_PQ_UNIT,
-        embeddings_pipeline_graph,
-    )
-
-    def _coord(i, k):
-        return float(
-            int(hashlib.md5(f"{i}:{k}".encode()).hexdigest()[:8], 16) % 97
-        )
-
-    d1 = [(i, [_coord(i, k) for k in range(8)], "2024-01-01") for i in range(40)]
-    d2 = [
-        (10_000_100, [_coord(0, k) for k in range(8)], "2024-01-02"),  # exact
-        (
-            20_000_101,
-            [2.0 * _coord(1, k) for k in range(8)],
-            "2024-01-02",
-        ),  # rescaled
-        (102, [_coord(90_102, k) for k in range(8)], "2024-01-02"),  # fresh
-    ]
-    landing = spark.createDataFrame(
-        d1 + d2, "vec_id long, embedding array<double>, day string"
-    ).withColumn("day", F.to_date("day"))
-    graph = embeddings_pipeline_graph()
-
-    def run(res):
-        store = TableStore(spark, str(tmp_path / f"wh_{len(res)}"))
-        for day in ("2024-01-01", "2024-01-02"):
-            orch.run_day(
-                spark, store, graph, day, markets=[],
-                resources={"vectors": landing, **res},
-            )
-        return store
-
-    flat = run({})
-    pq = run({"emb_pq_prefilter": True})
-    assert pq.is_complete(EMB_PQ_UNIT)
-    assert pq.read(EMB_PQ_UNIT).count() > 0
-
-    def d2_ids(store):
-        return {
-            r.vec_id
-            for r in store.read(
-                "emb_clean", where="day = DATE '2024-01-02'"
-            ).collect()
-        }
-
-    assert d2_ids(flat) == {102}  # replicas dropped by the raw probe
-    assert d2_ids(pq) == d2_ids(flat)  # drop-set equality, end-to-end
-    # the raw IVF index (still maintained) holds the same 41 survivors
-    assert pq.read("emb_ivf").count() == flat.read("emb_ivf").count() == 41
-
-
-def test_quantizer_outgrowth_trigger_and_auto_retrain(spark, tmp_path):
-    """quantizer_outgrown is the executable drift trigger: with a 2-cell
-    quantizer and a corpus past factor x n_cells^2 it fires and
-    recommends ~sqrt(N) cells; embeddings_maintenance(auto_retrain=True)
-    acts on it, and under the balance point it leaves the quantizer
-    alone."""
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        embeddings_maintenance,
-        embeddings_pipeline_graph,
-        quantizer_outgrown,
-    )
-
-    # 40 spread-out 8-d vectors, ids 0..39: ids < EMB_N_CELLS(16) exist
-    # but we rebuild with a tiny quantizer to force outgrowth. md5-derived
-    # coordinates keep the max pairwise cosine ~0.98 — under the 0.999
-    # within-batch semantic-dedup threshold, so all 40 enter the index
-    # (low-dim modular grids have incidental >=0.999 pairs the round-12
-    # pass would drop)
-    import hashlib
-
-    def _coord(i, k):
-        return float(
-            int(hashlib.md5(f"{i}:{k}".encode()).hexdigest()[:8], 16) % 97
-        )
-
-    rows = [
-        (i, [_coord(i, k) for k in range(8)], "2024-01-01") for i in range(40)
-    ]
-    landing = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, day string"
-    ).withColumn("day", F.to_date("day"))
-    store = TableStore(spark, str(tmp_path / "wh"))
-    graph = embeddings_pipeline_graph()
-    orch.run_day(spark, store, graph, "2024-01-01", markets=[], resources={"vectors": landing})
-
-    # 16-cell quantizer over 40 vectors: inside the balance envelope
-    outgrown, rec, details = quantizer_outgrown(store, factor=4.0)
-    assert not outgrown and details["n_vectors"] == 40
-    # ... and the graph SURFACED that as stored state (round 12): the
-    # health asset row mirrors quantizer_outgrown's tuple
-    h = store.read("emb_index_health").collect()
-    assert len(h) == 1
-    assert not h[0].outgrown and h[0].n_vectors == 40 and h[0].n_cells == 16
-
-    # shrink the quantizer to 2 cells: 40 > 4 * 2^2 -> outgrown
-    embeddings_maintenance(store, retrain=True, n_cells=2)
-    outgrown, rec, details = quantizer_outgrown(store, factor=4.0)
-    assert outgrown and details["n_cells"] == 2
-    assert rec == 7  # ceil(sqrt(40))
-    # the next daily run refreshes the stored health row: the drift is
-    # visible in the store, with the retrain recommendation attached
-    orch.run_day(
-        spark, store, graph, "2024-01-01", markets=[], resources={"vectors": landing}
-    )
-    h2 = store.read("emb_index_health").collect()[0]
-    assert h2.outgrown and h2.n_cells == 2 and h2.recommended_n_cells == 7
-
-    # auto_retrain acts on the trigger at the recommended count
-    embeddings_maintenance(store, auto_retrain=True)
-    import math
-    n_cells_after = store.read("emb_ivf_centroids").count()
-    assert n_cells_after == 7
-    outgrown, _, _ = quantizer_outgrown(store, factor=4.0)
-    assert not outgrown
-    # the index row count is untouched by retrains (same corpus)
-    assert store.read("emb_ivf").count() == 40
-
-    # an unbuilt store reports not-outgrown instead of crashing
-    empty = TableStore(spark, str(tmp_path / "empty"))
-    assert quantizer_outgrown(empty) == (False, 0, {"reason": "index not built"})
-
-
-def test_auto_retrain_sizes_quantizer_under_sparse_ids(spark, tmp_path):
-    """The retrain quantizer is RANK-based, not id-threshold: with sparse /
-    non-zero-based vec_ids (the pipeline's own +10M planted ids) the old
-    `vec_id < n_cells` selection yields zero centroids — auto_retrain must
-    still produce exactly the recommended count (round-11 ADVICE)."""
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        embeddings_maintenance,
-        quantizer_outgrown,
-    )
-    from aave_etl_spark.io.table_store import TableStore as TS
-    from aave_etl_spark.operators import similarity
-
-    # 40 vectors whose ids ALL sit far above any plausible n_cells
-    rows = [
-        (
-            10_000_000 + i,
-            [float((i * 13) % 7), float((i * 5) % 11), 1.0, float(i % 3)],
-            "2024-01-01",
-        )
-        for i in range(40)
-    ]
-    clean = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, day string"
-    ).withColumn("day", F.to_date("day"))
-    store = TS(spark, str(tmp_path / "wh"))
-    store.write(clean, "emb_clean", partition_cols=["day"])
-    # a 2-cell trained quantizer: 40 > 4 * 2^2 -> outgrown
-    cents = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
-        "cell_id long, centroid array<double>",
-    )
-    similarity.ivf_index_build(
-        store, clean, name="emb_ivf", n_cells=2, centroids=cents,
-        carry_cols=("day",),
-    )
-    outgrown, rec, _ = quantizer_outgrown(store, factor=4.0)
-    assert outgrown and rec == 7  # ceil(sqrt(40))
-
-    embeddings_maintenance(store, auto_retrain=True)
-    assert store.read("emb_ivf_centroids").count() == 7
-    assert store.read("emb_ivf").count() == 40
-    outgrown, _, _ = quantizer_outgrown(store, factor=4.0)
-    assert not outgrown
-
-
-def test_scheduled_maintenance_acts_on_stored_trigger(spark, tmp_path):
-    """The maintenance loop is SELF-DRIVING through the orchestration layer
-    (round-12 judge #1): the weekly ``maintenance_schedule`` fires in
-    ``due_jobs``; its job body ``run_maintenance`` READS the stored
-    ``emb_index_health`` trigger, retrains at the stored recommendation,
-    re-materializes the health row through the graph (``outgrown`` flips
-    back to false IN THE STORE), runs ``corpus_maintenance``, and the next
-    daily run's cross-corpus dedup probe works under the recovered
-    quantizer — outgrowth -> scheduled retrain -> next-day recovery,
-    end-to-end, no hand calls on the retrain path."""
-    import hashlib
-    from datetime import datetime
-
+def test_scheduled_maintenance_runs_corpus_maintenance(spark, tmp_path):
+    """The weekly ``maintenance_schedule`` fires in ``due_jobs``, and its
+    job body ``run_maintenance`` runs ``corpus_maintenance`` on the corpus
+    store it is given (and nothing without one)."""
     from aave_etl_spark.plans.corpus_pipeline import corpus_pipeline_graph
-    from aave_etl_spark.plans.embeddings_pipeline import (
-        embeddings_maintenance,
-        embeddings_pipeline_graph,
-    )
 
-    # 1) the cadence is DECLARED: Sunday 03:00 UTC fires the job, a
-    #    weekday 03:00 does not (2024-01-07 was a Sunday)
+    # the cadence is DECLARED: Sunday 03:00 UTC fires the job, a weekday
+    # 03:00 does not (2024-01-07 was a Sunday)
     assert "maintenance" in orch.due_jobs(datetime(2024, 1, 7, 3, 0))
     assert "maintenance" not in orch.due_jobs(datetime(2024, 1, 8, 3, 0))
     assert "maintenance" not in orch.due_jobs(datetime(2024, 1, 7, 2, 0))
-
-    # md5-derived coordinates: max pairwise cosine ~0.98, under the 0.999
-    # dedup threshold, so every distinct vector enters the index
-    def _coord(i, k):
-        return float(
-            int(hashlib.md5(f"{i}:{k}".encode()).hexdigest()[:8], 16) % 97
-        )
-
-    def _vecs(ids, day):
-        rows = [(i, [_coord(i, k) for k in range(8)], day) for i in ids]
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>, day string"
-        ).withColumn("day", F.to_date("day"))
-
-    store = TableStore(spark, str(tmp_path / "emb_wh"))
-    graph = embeddings_pipeline_graph()
-    orch.run_day(
-        spark, store, graph, "2024-01-01", markets=[],
-        resources={"vectors": _vecs(range(40), "2024-01-01")},
-    )
-    # simulate corpus growth past the quantizer: shrink to 2 cells (the
-    # quantizer_outgrowth test's device) — 45 vectors > 4 x 2² after day 2
-    embeddings_maintenance(store, retrain=True, n_cells=2)
-    orch.run_day(
-        spark, store, graph, "2024-01-02", markets=[],
-        resources={"vectors": _vecs(range(100, 105), "2024-01-02")},
-    )
-    h = store.read("emb_index_health").collect()[0]
-    assert h.outgrown and h.n_cells == 2
-    assert h.recommended_n_cells == 7  # ceil(sqrt(45))
 
     # a small corpus store so the job's corpus half has state to maintain
     cstore = TableStore(spark, str(tmp_path / "corpus_wh"))
@@ -1266,44 +932,10 @@ def test_scheduled_maintenance_acts_on_stored_trigger(spark, tmp_path):
         resources={"landing": landing},
     )
 
-    # 2) the SCHEDULED dispatch: the job reads the stored trigger and acts
-    result = orch.run_maintenance(
-        spark, corpus_store=cstore, emb_store=store, day="2024-01-07"
-    )
-    assert result["emb_trigger"] == {"outgrown": True, "recommended_n_cells": 7}
-    assert store.read("emb_ivf_centroids").count() == 7
-    assert store.read("emb_ivf").count() == 45  # same corpus, re-assigned
+    result = orch.run_maintenance(spark, corpus_store=cstore)
+    assert set(result) == {"corpus"}
     assert "corpus_mh" in result["corpus"]  # band-index reclaim ran
-    # 3) the trigger is CONSUMED: the store's health row now reflects the
-    #    retrained quantizer
-    h2 = store.read("emb_index_health").collect()[0]
-    assert not h2.outgrown and h2.n_cells == 7
-
-    # 4) next-day recovery: the daily probe runs under the new quantizer —
-    #    a rescaled replica of a day-1 vector is caught cross-corpus
-    #    (cosine 1.0; the copy ranks cells identically to its original, so
-    #    the original's cell is its first probe), a fresh vector appends
-    replica = (
-        _vecs([0], "2024-01-08")
-        .select(
-            F.lit(200).cast("long").alias("vec_id"),
-            F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-            "day",
-        )
-    )
-    fresh = _vecs([90201], "2024-01-08")
-    orch.run_day(
-        spark, store, graph, "2024-01-08", markets=[],
-        resources={"vectors": replica.unionByName(fresh)},
-    )
-    kept = {
-        r.vec_id
-        for r in store.read("emb_clean", where="day = DATE '2024-01-08'").collect()
-    }
-    assert kept == {90201}
-    assert store.read("emb_ivf").count() == 46
-    h3 = store.read("emb_index_health").collect()[0]
-    assert not h3.outgrown and h3.n_vectors == 46
+    assert orch.run_maintenance(spark) == {}
 
 
 def test_corpus_shards_manifest_reproducible_and_complete(spark, tmp_path):

@@ -80,41 +80,6 @@ def test_span_dedup_rewrite_plan_shape(spark):
     assert "Window" not in p, p
 
 
-def test_emb_clean_within_batch_pass_no_cartesian(spark, tmp_path):
-    """The embeddings pipeline's round-12 within-batch semantic dedup
-    (SRP-bucketed self-join) and the corpus pipeline's within-batch
-    banding pass must be bucket equi-joins — a same-day dup storm fans
-    out INSIDE buckets (a join AQE can skew-split), never through a
-    CartesianProduct or a window over the hot key."""
-    from pyspark.sql import functions as F
-
-    from aave_etl_spark.io.table_store import TableStore
-    from aave_etl_spark.plans.embeddings_pipeline import _emb_clean
-    from aave_etl_spark.plans.orchestration import AssetContext, PartitionKey
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    vectors = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.0], "2024-01-01") for i in range(8)],
-        "vec_id long, embedding array<double>, day string",
-    ).withColumn("day", F.to_date("day"))
-    # emb_landing must exist for the upstream read
-    store.write(
-        vectors.select("vec_id", "embedding", "day"),
-        "emb_landing",
-        partition_cols=["day"],
-    )
-    ctx = AssetContext(
-        spark=spark, store=store, partition=PartitionKey(date="2024-01-01"),
-        resources={"vectors": vectors},
-    )
-    p = _emb_clean(ctx)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in p, p
-    # no index exists yet, so the whole day-1 plan is the within-batch
-    # passes — and neither (exact agg+join, SRP bucket self-join) may
-    # plan a Window over the storm-hot key
-    assert "Window" not in p, p
-
-
 def test_whole_stage_codegen_in_agg_path(spark):
     df = all_queries()["all_financials_shape"].builder(spark, SF)
     codegen = df._sc._jvm.PythonSQLUtils.explainString(
@@ -132,40 +97,6 @@ def test_flagship_broadcasts_dims_and_single_shuffle_agg(spark):
     assert "BroadcastHashJoin" in p
     # partial aggregation before the shuffle (map-side combine)
     assert "partial_sum" in p or "HashAggregate" in p
-
-
-def test_ivf_topk_broadcasts_centroids(spark):
-    """IVF-flat ANN: the coarse quantizer is a bounded driver-collected
-    matrix ranked per row by the Arrow cell-rank UDF — NO broadcast cross
-    join against a folded centroid row remains, and the corpus scan must
-    not shuffle for assignment; the only exchange is the cell-id join +
-    per-query window."""
-    p = plan(spark, "llm_ivf_topk")
-    # cell assignment / probe selection are per-row Arrow evals, not
-    # broadcast nested-loop joins against a collected centroid array
-    assert "ArrowEvalPython" in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "BatchEvalPython" not in p  # vectorized, never row-at-a-time
-    # the cell-id join broadcasts the (tiny) probe side
-    assert "BroadcastHashJoin" in p
-    # no cartesian product ever materializes corpus x corpus
-    assert "CartesianProduct" not in p
-    # cell assignment is a per-row rank: the ONLY window node (and the
-    # only hash-partition exchange feeding one) is the final per-query
-    # top-k — no Exchange between the corpus scan and its cell assignment
-    assert len(re.findall(r"\bWindow\b(?!GroupLimit)", p)) == 1
-    assert "hashpartitioning(candidate_id" not in p
-
-
-def test_srp_bucket_pairs_plan(spark):
-    """SRP-LSH pair generation: bucket equi-join only (never a cartesian
-    over the corpus), Arrow-batched pair scoring (never row-at-a-time
-    Python), and no runtime md5 in bucket assignment — the sign matrix is
-    a driver-side literal constant."""
-    p = plan(spark, "llm_srp_bucket_pairs")
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p  # einsum dot arrives via ArrowEvalPython
-    assert "md5" not in p
 
 
 def test_asof_join_single_keyed_window(spark):
@@ -250,22 +181,6 @@ def test_simhash_hamming_band_equi_join(spark):
     p = plan(spark, "llm_simhash_near_dup")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_semantic_dedup_plan(spark):
-    """SemDeDup: cluster assignment is the broadcast-argmax map (one
-    BroadcastNestedLoopJoin against the folded centroid row, no corpus
-    shuffle, no Window); the pair stage is a cell-keyed equi-join — never
-    corpus x corpus."""
-    p = plan(spark, "llm_semantic_dedup")
-    # the assignment subtree sits behind the localCheckpoint boundary; its
-    # broadcast-argmax shape is pinned by test_ivf_topk_broadcasts_centroids
-    # (shared _centroid_frame/_cell_sims code). Here: the pair stage must be
-    # a cell-keyed equi-join, never corpus x corpus, with no Window node.
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "hashpartitioning(cell_id" in p
-    assert len(re.findall(r"\bWindow\b(?!GroupLimit)", p)) == 0
 
 
 def test_span_dedup_plan(spark):
@@ -372,16 +287,6 @@ def test_dsir_no_cartesian_and_bounded_broadcasts(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_margin_topk_single_scan_both_windows(spark):
-    """margin_topk: the pair set is a broadcast NL join of the tiny query
-    set against the corpus (cosine_topk's shape); both neighborhood
-    windows and the forward top-k consume the SAME checkpointed pair set —
-    no second corpus scan, no cartesian product."""
-    p = plan(spark, "llm_margin_topk")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-
-
 def test_warehouse_measures_broadcast_dims(spark):
     """The measure-join transforms broadcast every dim (market-chain,
     internal addresses, classified-transfer aggregates are dim-sized) —
@@ -392,29 +297,12 @@ def test_warehouse_measures_broadcast_dims(spark):
         assert "BroadcastHashJoin" in p, q
 
 
-def test_semantic_dedup_subsplit_keyed_join(spark):
-    """The cell_cap sub-split keeps the pair stage a (cell_id, sub_cell)
-    equi-join — capping must never degrade to a cartesian pair join."""
-    p = plan(spark, "llm_semantic_dedup")
-    assert "CartesianProduct" not in p
-    assert "sub_cell" in p
-
-
 def test_bm25_retrieve_broadcast_probe_no_cartesian(spark):
     """The query-term probe joins the postings on `term` with the tiny
     query-term set BROADCAST — one corpus pass, no cartesian pairing."""
-    p = plan(spark, "llm_hybrid_rrf")
+    p = plan(spark, "llm_bm25_index_search")
     assert "CartesianProduct" not in p
-    assert "BroadcastHashJoin" in p  # the term probe (and the label join)
-
-
-def test_knn_classify_vote_is_bounded_no_cartesian(spark):
-    """kNN label voting: the corpus scan is the cosine arm's broadcast
-    nested-loop (queries tiny); the vote agg runs over |queries|x k rows —
-    no cartesian product anywhere."""
-    p = plan(spark, "llm_knn_classify")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
+    assert "BroadcastHashJoin" in p  # the term probe
 
 
 def test_scd2_windows_are_key_partitioned(spark):

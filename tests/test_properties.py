@@ -7,7 +7,7 @@ from __future__ import annotations
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from aave_etl_spark.operators import dedup, similarity
+from aave_etl_spark.operators import dedup
 
 WORDS = st.sampled_from(
     ["the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog", "aave", "spark"]
@@ -86,77 +86,11 @@ def test_identical_docs_collide_everywhere(spark, text):
     assert 0 <= vals[0] < 2**16
 
 
-@given(st.lists(st.floats(min_value=-5, max_value=5, allow_nan=False), min_size=2, max_size=6))
-@settings(**SETTINGS)
-def test_cosine_self_similarity(spark, vec):
-    if all(abs(x) < 1e-9 for x in vec):
-        return  # zero vector: cosine undefined
-    df = spark.createDataFrame([(0, vec), (1, vec)], "vec_id long, embedding array<double>")
-    out = similarity.cosine_topk(df, df.filter(F.col("vec_id") == 0), k=1).collect()
-    assert len(out) == 1
-    assert abs(out[0].cos_sim - 1.0) < 1e-6
-
-
-def test_blocked_equals_pairwise_cosine(spark):
-    """blocked_cosine_pairs must be block-count independent: n_blocks=1
-    (the cosine_pairs wrapper) and n_blocks=5 produce the exact same pair
-    set and rounded sims."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = similarity.cosine_pairs(emb, threshold=0.35).collect()
-    b = similarity.blocked_cosine_pairs(emb, threshold=0.35, n_blocks=5).collect()
-    key = lambda r: (r.id_a, r.id_b)
-    assert sorted(map(key, a)) == sorted(map(key, b))
-    sa = {key(r): r.cos_sim for r in a}
-    sb = {key(r): r.cos_sim for r in b}
-    assert all(abs(sa[k] - sb[k]) < 1e-9 for k in sa)
-
-
 VEC = st.lists(
     st.floats(min_value=-5, max_value=5, allow_nan=False, width=32),
     min_size=2,
     max_size=8,
 )
-
-
-@given(st.lists(VEC, min_size=1, max_size=4))
-@settings(**SETTINGS)
-def test_quantization_error_bound(spark, vecs):
-    """int8 round-trip error is bounded by half a quantization step
-    (0.5/qscale) for every vector with a nonzero scale; zero vectors
-    take qscale 0 and an all-zero qvec."""
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.quantize_embeddings(df).collect()
-    for r in out:
-        if r.qscale == 0.0:
-            assert all(q == 0 for q in r.qvec)
-            continue
-        step = 0.5 / r.qscale
-        for x, q in zip(r.embedding, r.qvec):
-            # q was rounded from float32-cast-to-double input
-            assert abs(float(x) - q / r.qscale) <= step + 1e-9
-
-
-def test_srp_sign_literals_match_md5_parity():
-    """The precomputed literal sign matrix must equal the md5-parity
-    derivation the DuckDB oracle computes in SQL."""
-    import duckdb
-
-    con = duckdb.connect()
-    for p in (0, 3, 7):
-        signs = similarity._srp_signs(p, 32)
-        sql = con.execute(
-            """
-            SELECT list_transform(range(0, 32), i ->
-              CASE WHEN strpos('13579bdf',
-                substring(md5(CAST($p AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 15, 1)) > 0
-              THEN 1.0 ELSE -1.0 END)
-            """,
-            {"p": p},
-        ).fetchone()[0]
-        assert signs == [float(x) for x in sql]
 
 
 EDGE = st.tuples(st.integers(0, 15), st.integers(0, 15))
@@ -241,64 +175,6 @@ def test_span_dedup_fraction_bounds_and_totals(spark, texts):
         assert 0.0 <= r.dup_fraction <= 1.0
 
 
-@given(st.lists(st.lists(st.floats(min_value=-3, max_value=3, allow_nan=False),
-                          min_size=3, max_size=3), min_size=2, max_size=10))
-@settings(**SETTINGS)
-def test_semantic_dedup_partitions_and_keeps_one_per_cell(spark, vecs):
-    """semantic dedup on any corpus: every vector appears exactly once,
-    n_cell sums to the corpus size, and each nonempty cell keeps >= 1
-    vector (the smallest id in a cell can never be dropped)."""
-    from collections import Counter
-
-    # skip zero vectors (undefined cosine)
-    vecs = [v for v in vecs if sum(x * x for x in v) > 1e-9]
-    if len(vecs) < 2:
-        return
-    emb = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
-    )
-    rows = similarity.semantic_dedup(emb, eps=0.95, n_cells=2).collect()
-    assert sorted(r.vec_id for r in rows) == list(range(len(vecs)))
-    sizes = Counter(r.cell_id for r in rows)
-    for r in rows:
-        assert r.n_cell == sizes[r.cell_id]
-    for cell in sizes:
-        members = [r for r in rows if r.cell_id == cell]
-        assert any(r.kept for r in members)
-        # the smallest id in a cell has no smaller partner: always kept
-        assert min(members, key=lambda r: r.vec_id).kept
-
-
-def test_random_projection_jl_properties(spark):
-    """JL invariants (deterministic given the fixed md5 sign matrix):
-    linearity (P(x+y) = P(x)+P(y)) and unbiased norm preservation —
-    the mean squared norm ratio over a batch concentrates near 1."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    X = rng.normal(size=(64, 64))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    out = {r.vec_id: r for r in similarity.random_projection(emb, r=16).collect()}
-    ratios_sq = [(out[i].proj_norm / out[i].orig_norm) ** 2 for i in range(64)]
-    # E[ratio^2] = 1; with 64 samples x 16 dims the mean is within ~35%
-    assert 0.65 < sum(ratios_sq) / len(ratios_sq) < 1.35
-    # linearity: project x, y, and x+y separately
-    pair = spark.createDataFrame(
-        [
-            (0, [float(x) for x in X[0]]),
-            (1, [float(x) for x in X[1]]),
-            (2, [float(x) for x in (X[0] + X[1])]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    got = {r.vec_id: r.rproj for r in similarity.random_projection(pair, r=16).collect()}
-    for a, b, s in zip(got[0], got[1], got[2]):
-        assert abs((a + b) - s) < 1e-9
-
-
 @given(
     st.lists(
         st.tuples(st.integers(0, 9), st.integers(0, 3)),
@@ -379,9 +255,8 @@ VECS_WITH_DUPS = st.lists(VEC, min_size=1, max_size=10)
 @given(VECS_WITH_DUPS)
 @settings(**SETTINGS)
 def test_keep_first_by_digest_on_vectors_keeps_min_id_per_group(spark, vecs):
-    """keep_first_by_digest with the VECTOR as the digest (the embeddings
-    pipeline's within-batch dedup) keeps exactly min(id) per identical
-    vector on any input — including NULL vectors as their own group —
+    """keep_first_by_digest with an array-valued VECTOR as the digest keeps
+    exactly min(id) per identical vector on any input — including NULL vectors as their own group —
     and never invents or reorders columns."""
     rows = [(i, v) for i, v in enumerate(vecs)] + [(len(vecs), None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")

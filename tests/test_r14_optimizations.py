@@ -1,8 +1,7 @@
 """Round-14 optimization internals: the equivalences each rewrite claims.
 
-Every test here pins a VALUE contract an optimization relies on — fused
-Arrow pair cosine vs the split form, batched pointer-jumping vs per-round
-checks, the shared geometry collect, the store-prefix BM25 ranking, the
+Every test here pins a VALUE contract an optimization relies on — batched
+pointer-jumping vs per-round checks, the store-prefix BM25 ranking, the
 scan fan-out's gating, and the schema-memo invalidation — so a future
 regression in any of them fails a named test, not a downstream hash.
 """
@@ -12,62 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aave_etl_spark.operators import dedup, similarity, text
+from aave_etl_spark.operators import text
 from aave_etl_spark.operators.skew import fan_out_scan
-
-
-def _vecs(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-# ---------------------------------------------------------------------------
-# _pair_cos_udf: bitwise the split dot_arrow/(norm*norm) form, including the
-# NULL contract (null operand / length mismatch / zero norm -> NULL).
-# ---------------------------------------------------------------------------
-def test_pair_cos_udf_matches_split_form(spark):
-    import random
-
-    rng = random.Random(14)
-    rows = [
-        (i, [rng.uniform(-2, 2) for _ in range(16)]) for i in range(40)
-    ]
-    df = _vecs(spark, rows)
-    a = df.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = df.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib")).limit(200)
-    fused = pairs.select(
-        "ia", "ib", similarity._pair_cos_udf()(F.col("va"), F.col("vb")).alias("c")
-    )
-    split = pairs.select(
-        "ia",
-        "ib",
-        (
-            similarity.dot_arrow(F.col("va"), F.col("vb"))
-            / (similarity.norm(F.col("va")) * similarity.norm(F.col("vb")))
-        ).alias("c"),
-    )
-    got = {(r.ia, r.ib): r.c for r in fused.collect()}
-    want = {(r.ia, r.ib): r.c for r in split.collect()}
-    assert got == want  # exact doubles, not approx
-
-
-def test_pair_cos_udf_null_contract(spark):
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 2.0], [3.0, 4.0]),
-            (2, None, [1.0, 1.0]),          # null operand -> NULL
-            (3, [1.0, 2.0, 3.0], [1.0, 2.0]),  # length mismatch -> NULL
-            (4, [0.0, 0.0], [1.0, 2.0]),    # zero norm -> NULL, not NaN
-            (5, [], []),                    # zero length -> NULL, not NaN
-        ],
-        "k long, a array<double>, b array<double>",
-    )
-    out = {r.k: r.c for r in df.select(
-        "k", similarity._pair_cos_udf()(F.col("a"), F.col("b")).alias("c")
-    ).collect()}
-    assert out[1] == pytest.approx(11.0 / ((5.0 ** 0.5) * (25.0 ** 0.5)))
-    assert out[2] is None and out[3] is None
-    assert out[4] is None and out[5] is None
 
 
 # ---------------------------------------------------------------------------
@@ -94,32 +39,6 @@ def test_connected_components_batched_equals_unbatched(spark):
     }
     assert one == two == three
     assert {c for _, c in two} == {0, 100}
-
-
-# ---------------------------------------------------------------------------
-# _geom_pair: the single-job combined collect parses exactly like the two
-# independent _geom_rows collects, including the empty-side fallback.
-# ---------------------------------------------------------------------------
-def test_geom_pair_matches_geom_rows(spark):
-    import numpy as np
-
-    cells = spark.createDataFrame(
-        [(0, [0.0, 1.0]), (1, [2.0, 3.0])], "cell_id int, cvec array<double>"
-    )
-    cb = spark.createDataFrame([(0, [5.0, 6.0])], "code int, cvec array<double>")
-    cells_row = similarity._struct_row(cells, "cell_id", "_cells")
-    cb_row = similarity._struct_row(cb, "code", "_cbs")
-    (gi, gc), (ki, kc) = similarity._geom_pair(cells_row, cb_row)
-    ri, rc = similarity._geom_rows(cells_row)
-    si, sc = similarity._geom_rows(cb_row)
-    assert np.array_equal(gi, ri) and np.array_equal(gc, rc)
-    assert np.array_equal(ki, si) and np.array_equal(kc, sc)
-    # empty side -> (None, None) so callers keep the interpreted fallback
-    empty = similarity._struct_row(
-        cells.filter("cell_id < 0"), "cell_id", "_cells"
-    )
-    (ei, ec), _ = similarity._geom_pair(empty, cb_row)
-    assert ei is None and ec is None
 
 
 # ---------------------------------------------------------------------------
@@ -220,3 +139,18 @@ def test_table_store_schema_memo_invalidated_on_write(spark, tmp_path):
     )
     assert [f.name for f in store.read("t").schema.fields] == ["k", "w", "z"]
     assert store.read("t").collect()[0].w == 3.5
+    # a direct-to-path writer (a streaming sink) clears the table through
+    # drop, then writes a different schema behind the store's back
+    assert store.drop("t")
+    spark.createDataFrame([(4, True)], "k long, flag boolean").write.parquet(
+        store._path("t")
+    )
+    assert [f.name for f in store.read("t").schema.fields] == ["k", "flag"]
+    # drop forgets the memoized schema even when the directory is already
+    # gone, so the next direct write is re-inferred too
+    import shutil
+
+    shutil.rmtree(store._path("t"))
+    assert not store.drop("t")
+    spark.createDataFrame([("y",)], "tag string").write.parquet(store._path("t"))
+    assert [f.name for f in store.read("t").schema.fields] == ["tag"]

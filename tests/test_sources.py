@@ -815,3 +815,157 @@ def test_seed_csv_quote_none_literal_quotes(spark, tmp_path):
         spark, str(p), "symbol string, label string"
     ).first()
     assert row.label == '"L0'
+
+
+def test_retry_policy_delays_double_from_initial_with_bounded_jitter():
+    exact = base.RetryPolicy(initial_s=0.01, max_retries=4, jitter_s=0.0)
+    assert list(exact.delays()) == [0.01, 0.02, 0.04, 0.08]
+    jittered = base.RetryPolicy(initial_s=1.0, max_retries=3, jitter_s=0.5)
+    for i, d in enumerate(jittered.delays()):
+        assert 2.0**i <= d <= 2.0**i + 0.5
+    assert list(base.RetryPolicy(max_retries=0).delays()) == []
+
+
+def test_retrying_raises_non_retryable_errors_at_once(monkeypatch):
+    sleeps: list[float] = []
+    monkeypatch.setattr(base.time, "sleep", sleeps.append)
+    calls = {"n": 0}
+
+    def bad_request():
+        calls["n"] += 1
+        raise ValueError("malformed request")
+
+    with pytest.raises(ValueError):
+        base.retrying(bad_request, base.DEFAULT_RETRY, retryable=(ConnectionError,))
+    assert calls["n"] == 1
+    assert sleeps == []
+
+
+def test_driver_fetch_builds_typed_frame_from_one_retried_request(spark):
+    schema = StructType([StructField("k", LongType()), StructField("v", LongType())])
+    seen: list[dict] = []
+
+    def transport(req):
+        seen.append(req)
+        if len(seen) == 1:
+            raise ConnectionError("first attempt drops")
+        return {"items": [[1, 10], [2, None]]}
+
+    df = base.driver_fetch(
+        spark, transport, {"block": 7},
+        lambda p: [{"k": k, "v": v} for k, v in p["items"]], schema, FAST,
+    )
+    assert seen == [{"block": 7}, {"block": 7}]
+    assert df.schema == schema
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 10), (2, None)]
+
+
+def test_empty_frame_is_typed_and_empty(spark):
+    df = base.empty_frame(spark, schemas.MARKET_TOKENS_BY_DAY)
+    assert df.schema == schemas.MARKET_TOKENS_BY_DAY
+    assert df.count() == 0
+
+
+def test_compound_v3_rate_to_apy_is_linear_in_per_second_rate():
+    assert connectors.compound_v3_rate_to_apy(0.0) == 0.0
+    one_year = 1e18 / connectors.SECONDS_PER_YEAR
+    assert connectors.compound_v3_rate_to_apy(one_year) == pytest.approx(1.0)
+    assert connectors.compound_v3_rate_to_apy(3 * one_year) == pytest.approx(3.0)
+
+
+def test_compound_by_day_units_and_lowercased_addresses(spark):
+    keys = spark.createDataFrame(
+        [(datetime(2024, 1, 1), 100, "ethereum", "v2", "cUSDC", "0xC0FFEE", "USDC", "0xUSDC", 6)],
+        "block_day timestamp, block_height long, chain string, compound_version string, "
+        "symbol string, address string, underlying_symbol string, "
+        "underlying_address string, underlying_decimals long",
+    )
+
+    def transport(req):
+        assert req["block_height"] == 100
+        return {
+            "supply_rate_per_block": 0,
+            "borrow_rate_per_block": 1e9,
+            "total_supply_underlying": 5_000_000,
+            "total_borrows": 1_500_000,
+        }
+
+    r = connectors.compound_by_day(keys, transport, FAST).first()
+    assert (r.address, r.underlying_address) == ("0xc0ffee", "0xusdc")
+    assert (r.deposits, r.borrows) == (5.0, 1.5)
+    assert r.supply_apy == 0.0
+    assert r.borrow_apy == pytest.approx(connectors.compound_rate_to_apy(1e9))
+    assert r.block_day == datetime(2024, 1, 1)
+
+
+def test_market_tokens_at_block_rpc_zips_reserves_with_atokens(spark):
+    seen: list[dict] = []
+
+    def transport(req):
+        seen.append(req)
+        return {
+            "pool": "0xPOOL",
+            "reserves": [
+                {"address": "0xAAA", "name": "Token A", "symbol": "A", "decimals": 18},
+                {"address": "0xBBB", "symbol": "B", "decimals": 6},
+            ],
+            "atokens": [{"address": "0xAA1", "symbol": "aA"}, {"address": "0xBB1", "symbol": "aB"}],
+        }
+
+    df = connectors.market_tokens_at_block_rpc(spark, transport, "ethereum_v2", 42, "2022-01-01", FAST)
+    assert seen == [{"kind": "rpc_tokens", "market": "ethereum_v2", "block": 42}]
+    got = sorted(
+        (r.reserve, r.name, r.atoken, r.atoken_symbol, r.pool, r.decimals, r.atoken_decimals)
+        for r in df.collect()
+    )
+    assert got == [
+        ("0xaaa", "Token A", "0xaa1", "aA", "0xpool", 18, 18),
+        ("0xbbb", None, "0xbb1", "aB", "0xpool", 6, 6),
+    ]
+    assert {r.block_day for r in df.collect()} == {datetime(2022, 1, 1)}
+
+
+def test_events_by_topic_hash_flattens_and_filters_sender(spark):
+    def transport(req):
+        assert (req["start_block"], req["end_block"], req["topic"]) == (10, 20, "0xTOPIC")
+        return {
+            "items": [
+                {"block_signed_at": 1_700_000_000, "block_height": 11, "tx_hash": "0xT1",
+                 "topics": ["0xTOPIC", "0xUSER"], "sender_address": "0xPOOL", "raw_log_data": "0x01"},
+                {"block_signed_at": 1_700_000_060, "block_height": 12, "tx_hash": "0xT2",
+                 "topics": ["0xTOPIC"], "sender_address": "0xOTHER"},
+            ]
+        }
+
+    all_rows = connectors.events_by_topic_hash(spark, transport, 10, 20, 1, "0xTOPIC", policy=FAST)
+    assert all_rows.schema == schemas.EVENTS_BY_TOPIC
+    got = sorted(
+        (r.tx_hash, r.raw_log_topics_0, r.raw_log_topics_1, r.sender_address, r.raw_log_data)
+        for r in all_rows.collect()
+    )
+    assert got == [
+        ("0xt1", "0xtopic", "0xuser", "0xpool", "0x01"),
+        ("0xt2", "0xtopic", None, "0xother", None),
+    ]
+    only = connectors.events_by_topic_hash(
+        spark, transport, 10, 20, 1, "0xTOPIC", sender_address="0xPool", policy=FAST
+    )
+    rows = only.collect()
+    assert [(r.tx_hash, r.block_signed_at) for r in rows] == [
+        ("0xt1", datetime(2023, 11, 14, 22, 13, 20))
+    ]
+
+
+def test_beacon_staking_returns_by_day_one_row(spark):
+    def transport(req):
+        assert req == {"kind": "beacon_day", "date": "2023-06-01"}
+        return {"data": {"day": "900", "day_start": 1_685_577_600, "day_end": 1_685_663_999,
+                         "apr": "0.042", "cl_apr": 0.03, "el_apr": 0.012}}
+
+    df = connectors.beacon_staking_returns_by_day(spark, transport, "2023-06-01", FAST)
+    assert df.schema == schemas.BEACON_STAKING_RETURNS_BY_DAY
+    r = df.first()
+    assert (r.partition_date, r.beaconchain_day) == ("2023-06-01", 900)
+    assert r.day_start == datetime(2023, 6, 1)
+    assert r.day_end == datetime(2023, 6, 1, 23, 59, 59)
+    assert (r.apr, r.cl_apr, r.el_apr) == (0.042, 0.03, 0.012)

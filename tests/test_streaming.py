@@ -179,77 +179,64 @@ def test_incremental_corpus_ingest_dedups_against_store(spark, tmp_path):
     ]
 
 
-def test_incremental_embedding_ingest_dedups_and_redelivery_noop(spark, tmp_path):
-    """Streaming ANN-index maintenance: batch 1 builds the frozen-
-    quantizer index; batch 2's exact replica, rescaled replica, and
-    within-batch duplicate are dropped (semantic anti-join against the
-    accumulated index) while genuinely new vectors append under the
-    stored centroids; RE-DELIVERING already-ingested content appends
-    nothing (the anti-join is the at-least-once idempotence mechanism)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+def test_dedup_keys_within_watermark_drops_jittered_replays(spark, tmp_path):
+    """Retries of one event carry different timestamps; copies within the
+    watermark delay of the first arrival collapse to one row per key."""
+    from aave_etl_spark.streaming.micro_batch import dedup_keys_within_watermark
 
-    from aave_etl_spark.io.table_store import TableStore
-    from aave_etl_spark.streaming.micro_batch import (
-        incremental_embedding_ingest,
-        stream_lake_table,
-    )
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    schema = StructType(
+    lake = str(tmp_path / "lake")
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    spark.createDataFrame(
         [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-        ]
+            ("tx1", t0, 1.0),
+            ("tx1", t0 + timedelta(minutes=7), 1.0),   # replay, jittered ts
+            ("tx2", t0 + timedelta(minutes=1), 2.0),
+            ("tx3", t0 + timedelta(minutes=2), 3.0),
+            ("tx3", t0 + timedelta(minutes=30), 3.0),  # replay, jittered ts
+        ],
+        "tx string, ts timestamp, value double",
+    ).write.parquet(lake)
+    schema = spark.read.parquet(lake).schema
+    out_dir = str(tmp_path / "out")
+    stream = stream_lake_table(spark, lake, schema)
+    q = run_available_now(
+        dedup_keys_within_watermark(stream, ["tx"]), str(tmp_path / "ckpt"),
+        query_name="dedup_wm_test", fmt="parquet", path=out_dir,
     )
-    e = {
-        0: [1.0, 0.0, 0.0, 0.0],
-        1: [0.0, 1.0, 0.0, 0.0],
-        2: [0.0, 0.0, 1.0, 0.0],
-        3: [0.6, 0.64, 0.0, 0.0],
-    }
-    new_a, new_b = [0.0, 0.0, 0.5, 0.8], [0.5, -0.5, 0.5, -0.5]
+    q.awaitTermination(60)
+    got = sorted((r.tx, r.value) for r in spark.read.parquet(out_dir).collect())
+    assert got == [("tx1", 1.0), ("tx2", 2.0), ("tx3", 3.0)]
 
-    def drain(rows):
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).write.mode("append").parquet(landing)
-        q = incremental_embedding_ingest(
-            store, stream_lake_table(spark, landing, schema), ckpt, n_cells=4
-        )
-        assert q.awaitTermination(120)
 
-    drain([(i, e[i]) for i in range(4)])
-    assert store.read("emb_ivf").count() == 4
+def test_windowed_rollup_stream_matches_hourly_truncation(spark, tmp_path):
+    """Closed tumbling windows are emitted once, aligned to the hour, with
+    the same counts and sums as a batch ``date_trunc('hour')`` rollup."""
+    from aave_etl_spark.streaming.micro_batch import windowed_rollup_stream
 
-    drain(
-        [
-            (10, e[1]),                      # exact replica -> dropped
-            (11, [x * 3.0 for x in e[2]]),   # rescaled replica -> dropped
-            (12, new_a),                     # survives
-            (13, new_b),                     # survives
-            (14, new_b),                     # within-batch copy -> dropped
-            (15, None),                      # NULL embedding -> dropped
-        ]
+    lake = str(tmp_path / "lake")
+    t0 = datetime(2024, 1, 1, 10, 0, 0)
+    rows = [
+        ("supply", t0 + timedelta(minutes=5), 1.0),
+        ("supply", t0 + timedelta(minutes=55), 2.0),
+        ("borrow", t0 + timedelta(minutes=20), 4.0),
+        ("supply", t0 + timedelta(hours=1, minutes=1), 8.0),
+        # far-future event: moves the watermark past every earlier window
+        ("borrow", t0 + timedelta(hours=5), 16.0),
+    ]
+    spark.createDataFrame(rows, "event_type string, ts timestamp, value double").write.parquet(lake)
+    schema = spark.read.parquet(lake).schema
+    out_dir = str(tmp_path / "out")
+    q = run_available_now(
+        windowed_rollup_stream(stream_lake_table(spark, lake, schema)),
+        str(tmp_path / "ckpt"), query_name="rollup_test", fmt="parquet", path=out_dir,
     )
-    idx = store.read("emb_ivf")
-    assert {r.vec_id for r in idx.collect()} == {0, 1, 2, 3, 12, 13}
-
-    # re-delivery of already-ingested content (fresh files, fresh ids the
-    # sink has under OTHER ids) appends nothing
-    drain([(20, e[0]), (21, new_a), (22, [x * 0.5 for x in new_b])])
-    assert {r.vec_id for r in store.read("emb_ivf").collect()} == {0, 1, 2, 3, 12, 13}
-
-    # SAME-ID redelivery (the at-least-once replay shape: a retried
-    # micro-batch carries the identical rows, ids included) appends
-    # nothing — each replayed vector's self-match IS its cosine-1.0
-    # duplicate evidence, so the search must not exclude it (round-11
-    # ADVICE: with exclude_self the anti-join misses every same-id
-    # replay whose nearest OTHER neighbor is under the threshold, and
-    # append_only duplicates the (vec_id, cell) rows)
-    drain([(12, new_a), (13, new_b), (0, e[0])])
-    idx3 = store.read("emb_ivf")
-    assert idx3.count() == 6
-    assert {r.vec_id for r in idx3.collect()} == {0, 1, 2, 3, 12, 13}
+    q.awaitTermination(60)
+    got = sorted(
+        (r.event_type, r.window_start, r.n_events, r.total_value)
+        for r in spark.read.parquet(out_dir).collect()
+    )
+    assert got == [
+        ("borrow", t0, 1, 4.0),
+        ("supply", t0, 2, 3.0),
+        ("supply", t0 + timedelta(hours=1), 1, 8.0),
+    ]

@@ -404,3 +404,68 @@ def test_balancer_bpt_warehouse_pricing(spark):
     assert out["0xp2"].underlying_asset_price == 1.0
     assert out["0xp2"].bpt_usd_price == pytest.approx(1.10)
     assert out["0xp2"].pool_tvl_usd == pytest.approx(1.10 * 500.0)
+
+
+def test_classify_transfers_quadrants_by_counterparty_and_chain(spark, market_chain):
+    from aave_etl_spark.warehouse.measures import classify_transfers
+
+    transfers = spark.createDataFrame(
+        [
+            ("polygon_v3", "IN", "0xint", "0xme", 1.0),    # from internal
+            ("polygon_v3", "IN", "0xwho", "0xme", 2.0),    # from unknown
+            ("polygon_v3", "OUT", "0xme", "0xint", 4.0),   # to internal
+            ("polygon_v3", "OUT", "0xme", "0xwho", 8.0),   # to unknown
+            # same counterparty, but it is internal only on polygon
+            ("ethereum_v1", "OUT", "0xme", "0xint", 16.0),
+        ],
+        ["transfers_market", "transfers_transfer_type", "transfers_from_address",
+         "transfers_to_address", "transfers_amount_transferred"],
+    )
+    internal = spark.createDataFrame(
+        [("polygon", "label", "0xint", "aave_internal")],
+        ["chain", "label", "contract_address", "internal_external"],
+    )
+    out = classify_transfers(transfers, internal, market_chain)
+    # the transfers_ prefix is stripped and the chain joined from the market
+    assert {"market", "chain", "amount_transferred"} <= set(out.columns)
+    got = {
+        r.amount_transferred: (
+            r.internal_external, r.tokens_in_external, r.tokens_in_internal,
+            r.tokens_out_external, r.tokens_out_internal,
+        )
+        for r in out.collect()
+    }
+    assert got == {
+        1.0: ("aave_internal", 0.0, 1.0, 0.0, 0.0),
+        2.0: ("aave_external", 2.0, 0.0, 0.0, 0.0),
+        4.0: ("aave_internal", 0.0, 0.0, 0.0, 4.0),
+        8.0: ("aave_external", 0.0, 0.0, 8.0, 0.0),
+        16.0: ("aave_external", 0.0, 0.0, 16.0, 0.0),
+    }
+
+
+def test_classify_transfers_unknown_market_defaults_external(spark, market_chain):
+    from aave_etl_spark.warehouse.measures import classify_transfers
+
+    transfers = spark.createDataFrame(
+        [("arbitrum_v3", "IN", "0xint", "0xme", 5.0)],
+        ["transfers_market", "transfers_transfer_type", "transfers_from_address",
+         "transfers_to_address", "transfers_amount_transferred"],
+    )
+    internal = spark.createDataFrame(
+        [("polygon", "label", "0xint", "aave_internal")],
+        ["chain", "label", "contract_address", "internal_external"],
+    )
+    r = classify_transfers(transfers, internal, market_chain).first()
+    assert r.chain is None
+    assert (r.internal_external, r.tokens_in_external) == ("aave_external", 5.0)
+
+
+def test_default_liquidity_targets_grid():
+    from aave_etl_spark.warehouse.liquidity import default_targets
+
+    grid = default_targets()
+    assert len(grid) == 17
+    assert grid[0] == pytest.approx(0.01) and grid[-1] == pytest.approx(0.05)
+    assert all(b - a == pytest.approx(0.0025) for a, b in zip(grid, grid[1:]))
+    assert default_targets(0.02, 0.03, 0.005) == pytest.approx([0.02, 0.025, 0.03])
