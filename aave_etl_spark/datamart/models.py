@@ -16,7 +16,7 @@ Each model docstring cites the reference file. ORDER BY clauses are kept
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)

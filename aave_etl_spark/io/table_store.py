@@ -35,92 +35,25 @@ from pyspark.sql.types import StructType
 from aave_etl_spark.localframe import local_df
 
 META_COLS = ("_load_timestamp", "_partition_type", "_partition_key")
+# the ``op_col`` value that marks a change-log row as a delete in merge()
+_DELETE_OP = "D"
 
 # Table-schema memo: every bare spark.read.parquet(dir) launches one
 # footer-inference driver job (~30-40 ms) — across the at-rest families
 # that is dozens of jobs per bench pass for schemas that cannot change
 # between a table's write and its reads (the catalog._SCHEMA_CACHE
 # discipline applied to the store). Keyed by table path; EVERY mutating
-# method invalidates its table's entry (write/merge/compact/restore/
-# drop), so a rewritten table is re-inferred — except an unpartitioned
-# overwrite, which seeds the entry with the schema it just wrote. Code
-# that writes a store path directly (streaming sinks) clears it through
-# drop first. Metadata only — never row data — and per-process, so
-# nothing survives across runs.
+# method invalidates its table's entry (write/merge/compact/drop), so a
+# rewritten table is re-inferred — except an unpartitioned overwrite,
+# which seeds the entry with the schema it just wrote. Code that writes a
+# store path directly (streaming sinks) clears it through drop first.
+# Metadata only — never row data — and per-process, so nothing survives
+# across runs.
 _SCHEMA_MEMO: dict[str, StructType] = {}
 
 
 def _schema_memo_invalidate(path: str) -> None:
     _SCHEMA_MEMO.pop(path, None)
-
-
-def morton_zkey(
-    cols: list[str], mins: list[float], maxs: list[float], bits: int = 16
-) -> F.Column:
-    """Z-order (Morton) key over ``cols``: each column min-max scales to a
-    ``bits``-wide unsigned int, then the bits interleave — bit ``i`` of
-    dimension ``j`` lands at position ``i*d + j`` of the key.
-
-    Interleaving is what makes the key MULTI-dimensional: a contiguous
-    z-range is a small hyper-rectangle, so sort-clustering files by the
-    key gives every clustered dimension usable per-file min/max footers —
-    a selective predicate on ANY of them (not just the first sort column,
-    the lexicographic layout's limit) skips row groups. This is the
-    OPTIMIZE ZORDER pattern of the lakehouse formats, re-expressed as
-    plain Spark integer expressions over open parquet.
-
-    ``mins``/``maxs`` are the scaling anchors (computed once at write
-    time, 2·d scalars). NULL dimension values scale to 0 (cluster first);
-    a constant column (min == max) contributes zeros and costs layout
-    nothing. Pure JVM-side integer math — shiftleft/shiftright/AND/OR —
-    so the key is codegen-friendly and engine-reproducible."""
-    d = len(cols)
-    if d < 1:
-        raise ValueError("morton_zkey needs at least one column")
-    if bits * d > 62:
-        raise ValueError(f"bits*dims must fit a signed long: {bits}*{d} > 62")
-    top = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for j, (c, lo, hi) in enumerate(zip(cols, mins, maxs)):
-        # guard ONLY the degenerate hi == lo case — clamping small spans
-        # to 1 would collapse sub-unit ranges (ratio columns span [0, 1])
-        # to a constant 0 and silently drop the dimension from the layout
-        span = float(hi - lo) if hi > lo else 1.0
-        # coalesce BEFORE the clamp: Spark's least/greatest skip NULLs
-        # (least(top, NULL) = top), so a NULL dim would clamp to the top
-        # bucket instead of 0. Multiply BEFORE dividing: (1/3)*3 floors
-        # to 0 in doubles, (1*3)/3 floors to 1 — exact small ratios must
-        # land on their bucket.
-        scaled = F.greatest(
-            F.lit(0).cast("long"),
-            F.least(
-                F.lit(top).cast("long"),
-                F.coalesce(
-                    F.floor(
-                        (F.col(c).cast("double") - float(lo)) * top / span
-                    ).cast("long"),
-                    F.lit(0).cast("long"),
-                ),
-            ),
-        )
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(scaled, i).bitwiseAND(F.lit(1)), i * d + j)
-            )
-    return z
-
-
-def _zorder_anchors(df: DataFrame, cols: list[str]) -> tuple[list[float], list[float]]:
-    """One bounded job: the 2·d min/max scaling anchors for a Morton key —
-    shared by write() and compact() so write-time and maintenance-time
-    layouts can never disagree."""
-    row = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"_lo{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"_hi{i}") for i, c in enumerate(cols)],
-    ).first()
-    mins = [row[f"_lo{i}"] if row[f"_lo{i}"] is not None else 0.0 for i in range(len(cols))]
-    maxs = [row[f"_hi{i}"] if row[f"_hi{i}"] is not None else 0.0 for i in range(len(cols))]
-    return mins, maxs
 
 
 class TableStore:
@@ -163,9 +96,9 @@ class TableStore:
         return os.path.exists(os.path.join(self.root, f"{tag}.__complete"))
 
     def _staging_path(self, name: str) -> str:
-        """Sibling directory a staged write, a compaction or a snapshot
-        restore lands in before :meth:`_swap_in` renames it live. Readers
-        never look there."""
+        """Sibling directory a staged write or a compaction lands in
+        before :meth:`_swap_in` renames it live. Readers never look
+        there."""
         return self._path(name) + ".__staging"
 
     def _swap_in(self, name: str, src: str) -> None:
@@ -195,7 +128,7 @@ class TableStore:
 
     def _recover_interrupted_swap(self, name: str) -> None:
         """Self-heal the one vulnerable window in :meth:`_swap_in` (shared
-        by staged writes, compaction and snapshot restore): a crash between
+        by staged writes and compaction): a crash between
         ``os.replace(live, old)`` and ``os.replace(src, live)`` leaves no
         live directory but a complete copy at ``<name>.__old``. Without
         this, ``exists()`` returns False and ``read()`` silently serves an
@@ -246,13 +179,6 @@ class TableStore:
         name: str,
         partition_cols: list[str] | None = None,
         append_only: bool = False,
-        cluster_by: list[str] | None = None,
-        cluster_files: int | None = None,
-        full_refresh: bool = False,
-        zorder_by: list[str] | None = None,
-        zorder_bits: int = 16,
-        bloom_cols: list[str] | None = None,
-        bloom_ndv: int = 100_000,
     ) -> bool:
         """Write ``df``; idempotent per-partition overwrite unless
         ``append_only`` (K2). Empty outputs are skipped like the reference
@@ -265,88 +191,26 @@ class TableStore:
         once — never once to probe emptiness and again to write. Each mode
         makes an empty write harmless in its own way:
 
-        - dynamic partition overwrite and partitioned append write in
-          place: an empty write replaces no partition, and the bare
-          directory Spark leaves for a table that did not exist before is
-          removed, so a missing table stays missing (K3);
-        - unpartitioned overwrite and ``full_refresh`` would destroy the
-          live table on an empty write, so they land in the sibling
-          ``<name>.__staging`` directory, swapped in (:meth:`_swap_in`)
-          only when rows were written;
-        - unpartitioned append also lands in ``<name>.__staging``; its
-          part files move into the live directory only when rows were
-          written.
+        - a partitioned write (dynamic partition overwrite or append) goes
+          in place: an empty write replaces no partition, and the
+          directory Spark makes for a table that did not exist before is
+          removed when the write is empty or its job fails, so a missing
+          table stays missing (K3);
+        - an unpartitioned write lands in the sibling ``<name>.__staging``
+          directory: an overwrite is swapped in (:meth:`_swap_in`) and an
+          append's part files move into the live directory, both only
+          when rows were written.
 
         A staged write whose job fails removes its staging directory;
         debris left by a crashed writer is never read and is removed by
         the next write of the table. An unpartitioned overwrite also
         records the schema it wrote, so the next :meth:`read` runs no
-        footer-inference job.
-
-        ``cluster_by`` sort-clusters the data before writing: rows are
-        range-repartitioned then sorted within tasks on
-        ``partition_cols + cluster_by``, so each output file carries a
-        TIGHT, largely disjoint min/max footer range on those columns.
-        Parquet readers (Spark's ParquetFilters included) drop whole
-        files/row-groups whose stats exclude a pushed predicate — at
-        100 TB a selective filter on the clustered column then scans the
-        few matching files instead of the table (the poor-man's Z-order:
-        one extra range exchange at write time buys data skipping for
-        every downstream scan; tests/test_io.py asserts the disjoint
-        footer ranges from the parquet metadata). ``cluster_files`` pins
-        the range-partition count (default: shuffle partitions, with AQE
-        free to coalesce — pass it when a specific file granularity
-        matters). ``full_refresh`` switches a partitioned overwrite from
-        dynamic (replace only the slices present in ``df`` — the K1
-        incremental contract) to static (drop EVERY existing partition
-        first) — required when the new snapshot is authoritative and a
-        partition absent from ``df`` must disappear rather than survive
-        as a stale directory (e.g. a rebuilt index).
-
-        ``zorder_by`` is the MULTI-column form of ``cluster_by``: a Morton
-        key interleaves the named (numeric) columns' scaled bits (see
-        :func:`morton_zkey`) and the data clusters on that key, so a
-        selective predicate on ANY z-ordered column skips files/row-groups
-        — lexicographic ``cluster_by`` only serves its leading column.
-        Scaling anchors (2·d scalars) are computed in one aggregate at
-        write time; the key itself is dropped before the write (it is a
-        layout device, not data). Mutually exclusive with ``cluster_by``.
-
-        ``bloom_cols`` writes a parquet BLOOM FILTER per listed column —
-        the point-lookup complement of range clustering: min/max footers
-        prune RANGES, but an equality probe on a column the file is NOT
-        sorted by (`WHERE tx_hash = '0x…'`) still opens every row group
-        whose range happens to cover the value; the bloom filter answers
-        "definitely absent" per row group at the footer, so a needle
-        lookup over 100 TB touches only the groups that might hold it.
-        Size the filter with ``bloom_ndv`` (expected distinct values per
-        row group — overestimating costs bytes, underestimating costs
-        false positives)."""
+        footer-inference job."""
         live = self._path(name)
         staging = self._staging_path(name)
         _schema_memo_invalidate(live)
         existed = self.exists(name)  # also heals an interrupted swap
         shutil.rmtree(staging, ignore_errors=True)
-        drop_after: list[str] = []
-        if zorder_by:
-            if cluster_by:
-                raise ValueError("pass cluster_by OR zorder_by, not both")
-            mins, maxs = _zorder_anchors(df, zorder_by)
-            df = df.withColumn(
-                "_zkey", morton_zkey(zorder_by, mins, maxs, bits=zorder_bits)
-            )
-            cluster_by = ["_zkey"]
-            drop_after = ["_zkey"]
-        if cluster_by:
-            rcols = [F.col(c) for c in [*(partition_cols or []), *cluster_by]]
-            ranged = (
-                df.repartitionByRange(cluster_files, *rcols)
-                if cluster_files
-                else df.repartitionByRange(*rcols)
-            )
-            # the projection after the sort preserves partition-local order;
-            # the z-key never reaches the files
-            df = ranged.sortWithinPartitions(*rcols).drop(*drop_after)
         stamped = df.withColumn(
             "_load_timestamp",
             F.lit(datetime.now(timezone.utc).isoformat()),
@@ -368,21 +232,18 @@ class TableStore:
             # partition overwrite must replace only the slices present in
             # `df` regardless of how the caller built their session.
             writer = writer.partitionBy(*partition_cols).option(
-                "partitionOverwriteMode", "static" if full_refresh else "dynamic"
+                "partitionOverwriteMode", "dynamic"
             )
-        for c in bloom_cols or []:
-            writer = writer.option(
-                f"parquet.bloom.filter.enabled#{c}", "true"
-            ).option(f"parquet.bloom.filter.expected.ndv#{c}", str(bloom_ndv))
-        if partition_cols and (append_only or not full_refresh):
-            # in place: an empty dynamic overwrite or append replaces no
-            # partition, but Spark makes the directory of a missing table
-            writer.mode("append" if append_only else "overwrite").parquet(live)
-            if observed.get["rows"]:
-                return True
-            if not existed:
-                shutil.rmtree(live, ignore_errors=True)
-            return False
+            landed = False
+            try:
+                writer.mode("append" if append_only else "overwrite").parquet(live)
+                landed = bool(observed.get["rows"])
+            finally:
+                # in place: an empty or failed write replaces no partition,
+                # but Spark makes the directory of a missing table
+                if not (landed or existed):
+                    shutil.rmtree(live, ignore_errors=True)
+            return landed
         # staged: an empty write must not replace or add to the live table
         try:
             writer.mode("overwrite").parquet(staging)
@@ -398,92 +259,13 @@ class TableStore:
             shutil.rmtree(staging)
             return True
         self._swap_in(name, staging)
-        if not (partition_cols or append_only):
+        if not append_only:
             # the swapped-in table holds exactly what was just written, so
             # its schema is known without a footer-inference job on the
             # next read. Partitioned tables are left to inference: Spark
             # types their partition columns from the directory names.
             _SCHEMA_MEMO[live] = stamped.schema
         return True
-
-    # -- snapshots: poor-man's time travel ---------------------------------
-    @staticmethod
-    def _link_tree(src: str, dst: str) -> None:
-        """Mirror ``src`` at ``dst`` as a hardlink tree (shared by
-        snapshot and restore so a future walk fix lands once)."""
-        for dirpath, _dirs, files in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            tgt = os.path.join(dst, rel) if rel != "." else dst
-            os.makedirs(tgt, exist_ok=True)
-            for f in files:
-                os.link(os.path.join(dirpath, f), os.path.join(tgt, f))
-
-    def snapshot(self, name: str, keep: int = 3) -> str:
-        """Snapshot ``name``'s current state under
-        ``<name>.__snapshots/<utc-stamp>`` and prune to the newest
-        ``keep``. Returns the snapshot id (the stamp).
-
-        Snapshots are HARDLINK trees: parquet writers never mutate a file
-        in place (overwrites create new files and remove old names), so
-        linked snapshots stay immutable while costing zero data copy and
-        zero extra bytes until the live table diverges — the same
-        copy-on-write economics a lakehouse format gets from its manifest
-        versions, expressed on a plain filesystem. Call before a risky
-        overwrite/merge; ``read_snapshot`` serves any kept version,
-        ``restore_snapshot`` rolls the live table back."""
-        src = self._path(name)
-        if not self.exists(name):
-            raise ValueError(f"snapshot: table {name!r} does not exist")
-        if keep < 1:
-            # snapshots[:-0] is the EMPTY slice — keep<=0 would silently
-            # invert the prune into "keep everything"
-            raise ValueError(f"snapshot: keep must be >= 1, got {keep}")
-        stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S_%f")
-        dst = os.path.join(self.root, f"{name}.__snapshots", stamp)
-        self._link_tree(src, dst)
-        for old in self.snapshots(name)[:-keep]:
-            shutil.rmtree(
-                os.path.join(self.root, f"{name}.__snapshots", old),
-                ignore_errors=True,
-            )
-        return stamp
-
-    def snapshots(self, name: str) -> list[str]:
-        """Kept snapshot ids for ``name``, oldest first."""
-        root = os.path.join(self.root, f"{name}.__snapshots")
-        if not os.path.isdir(root):
-            return []
-        return sorted(e for e in os.listdir(root) if not e.startswith("."))
-
-    def read_snapshot(self, name: str, snapshot_id: str) -> DataFrame:
-        """Read a kept snapshot (meta columns stripped, like ``read``)."""
-        p = os.path.join(self.root, f"{name}.__snapshots", snapshot_id)
-        if not os.path.isdir(p):
-            raise ValueError(f"no snapshot {snapshot_id!r} for table {name!r}")
-        df = self.spark.read.parquet(p)
-        return df.drop(*[c for c in META_COLS if c in df.columns])
-
-    def restore_snapshot(self, name: str, snapshot_id: str) -> None:
-        """Roll the live table back to ``snapshot_id``. The current state
-        is snapshotted first (a restore must never be the operation that
-        loses data), then the live directory is replaced by a hardlink
-        tree of the target snapshot — the snapshot itself stays kept."""
-        src = os.path.join(self.root, f"{name}.__snapshots", snapshot_id)
-        if not os.path.isdir(src):
-            raise ValueError(f"no snapshot {snapshot_id!r} for table {name!r}")
-        _schema_memo_invalidate(self._path(name))
-        if self.exists(name):
-            # keep wide enough that this bookkeeping snapshot can never
-            # prune the snapshot being restored from
-            self.snapshot(name, keep=len(self.snapshots(name)) + 1)
-        # build the restored tree at the staging sibling, then swap it in
-        # (the write/compact protocol): a crash never leaves a PARTIAL
-        # live directory for read() to serve, and the pre-restore state
-        # is already snapshotted above
-        tmp = self._staging_path(name)
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._link_tree(src, tmp)
-        self._swap_in(name, tmp)
 
     def merge(
         self,
@@ -492,13 +274,12 @@ class TableStore:
         key_cols: list[str],
         partition_cols: list[str] | None = None,
         op_col: str | None = None,
-        delete_op: str = "D",
-        sequence_col: str | None = None,
     ) -> bool:
         """MERGE a change log into a keyed table — the Delta/Iceberg
         ``MERGE INTO`` pattern on open parquet: inserts and updates upsert
-        by ``key_cols``, rows whose ``op_col`` equals ``delete_op`` are
-        removed, everything else in the table survives untouched.
+        by ``key_cols``, rows whose ``op_col`` equals ``"D"`` are removed,
+        everything else in the table survives untouched. ``op_col=None``
+        means a pure upsert feed (no deletes).
 
         Scale contract: with ``partition_cols`` the merge is PARTITION-
         SCOPED — only the partitions present in ``changes`` are read
@@ -517,51 +298,28 @@ class TableStore:
         values like zero-padded ints or minute-precision strings all
         round-trip correctly).
 
-        ``sequence_col``: when one batch carries several changes for a
-        key, keep the row with the highest sequence (ties undefined —
-        pass a total-order column). ``op_col=None`` means a pure upsert
-        feed (no deletes).
-
         Returns whether the table exists after the merge (False = the
         merge left NO table: either nothing pre-existed and the batch had
         no upserts, or the batch deleted every remaining row — the
         full-deletion paths remove the table directory outright, since
         write() skips empty frames and a leftover directory would either
         resurrect the deleted rows or be an unreadable husk)."""
-        from pyspark.sql.window import Window
-
         _schema_memo_invalidate(self._path(name))
 
-        if sequence_col:
-            w = Window.partitionBy(*key_cols).orderBy(F.col(sequence_col).desc())
-            changes = (
-                changes.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                # changelog metadata, not data — like op_col, it must not
-                # land in (or be expected from) the stored schema
-                .drop("_rn", sequence_col)
-            )
-        if not self.exists(name):
+        def upserts_of(batch: DataFrame) -> DataFrame:
             # eqNullSafe: a NULL op must mean "upsert", not "silently drop
             # the row" (plain != is NULL-valued on NULL and filters it out)
-            upserts = (
-                changes.filter(
-                    ~F.col(op_col).eqNullSafe(F.lit(delete_op))
-                ).drop(op_col)
-                if op_col
-                else changes
-            )
-            return self.write(upserts, name, partition_cols=partition_cols)
-        # materialize the change batch once: its lineage (often joins and
-        # the sequence window above) would otherwise re-run for the touched
-        # collect, the key distinct, AND the final union
+            if not op_col:
+                return batch
+            return batch.filter(~F.col(op_col).eqNullSafe(F.lit(_DELETE_OP))).drop(op_col)
+
+        if not self.exists(name):
+            return self.write(upserts_of(changes), name, partition_cols=partition_cols)
+        # materialize the change batch once: its lineage (often joins)
+        # would otherwise re-run for the touched collect, the key distinct,
+        # AND the final union
         changes = changes.localCheckpoint(eager=True)
-        if op_col:
-            upserts = changes.filter(
-                ~F.col(op_col).eqNullSafe(F.lit(delete_op))
-            ).drop(op_col)
-        else:
-            upserts = changes
+        upserts = upserts_of(changes)
         touched_vals: list[tuple] = []
         pinned_schema = None
         if partition_cols:
@@ -810,9 +568,6 @@ class TableStore:
         name: str,
         partition_cols: list[str] | None = None,
         target_file_bytes: int = 128 * 1024 * 1024,
-        sort_cols: list[str] | None = None,
-        zorder_by: list[str] | None = None,
-        zorder_bits: int = 16,
     ) -> tuple[int, int]:
         """Rewrite ``name`` with bounded file counts — the maintenance pass
         every incrementally-loaded table needs: daily partition overwrites
@@ -837,21 +592,9 @@ class TableStore:
         renames leaves the full old copy recoverable at ``<name>.__old``.
         On object storage the same shape runs against the FileSystem API.
 
-        A table written with ``cluster_by`` must pass those columns as
-        ``sort_cols`` — compaction re-sorts within the rewrite so the
-        disjoint min/max footer ranges (the data-skipping contract)
-        survive the file-count change. A table written with ``zorder_by``
-        must pass the same columns here as ``zorder_by``: the Morton key
-        is a layout device dropped before write, so the rewrite recomputes
-        it (fresh anchors over the current data) and re-clusters — without
-        it, compaction silently degrades the multi-dim skipping to
-        arrival order.
-
         Returns (files_before, files_after)."""
         import math
         _schema_memo_invalidate(self._path(name))
-        if zorder_by and sort_cols:
-            raise ValueError("pass sort_cols OR zorder_by, not both")
 
         # a bucketed table's co-location contract lives in the catalog; a
         # plain rewrite would leave bucket metadata pointing at files that
@@ -868,14 +611,6 @@ class TableStore:
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, math.ceil(total / target_file_bytes))
         df = self.spark.read.parquet(self._path(name))
-        drop_after: list[str] = []
-        if zorder_by:
-            mins, maxs = _zorder_anchors(df, zorder_by)
-            df = df.withColumn(
-                "_zkey", morton_zkey(zorder_by, mins, maxs, bits=zorder_bits)
-            )
-            sort_cols = ["_zkey"]
-            drop_after = ["_zkey"]
         tmp = self._staging_path(name)
         if partition_cols:
             # hash-repartition on the partition cols: every partition value
@@ -883,20 +618,9 @@ class TableStore:
             # directory (an oversized partition stays one file — see
             # docstring)
             out = df.repartition(n_out, *[F.col(c) for c in partition_cols])
-        elif sort_cols:
-            # re-establish the GLOBAL clustering, not just per-file order: a
-            # coalesce merges files in size order, so two sorted output
-            # files could still overlap in range — range-repartition first
-            out = df.repartitionByRange(n_out, *[F.col(c) for c in sort_cols])
+            writer = out.write.partitionBy(*partition_cols)
         else:
-            out = df.coalesce(n_out)
-        if sort_cols:
-            # replay the cluster_by / z-order layout so footer min/max
-            # ranges stay tight after the rewrite
-            out = out.sortWithinPartitions(
-                *[*(partition_cols or []), *sort_cols]
-            ).drop(*drop_after)
-        writer = out.write.partitionBy(*partition_cols) if partition_cols else out.write
+            writer = df.coalesce(n_out).write
         writer.mode("overwrite").parquet(tmp)
         self._swap_in(name, tmp)
         return (len(files), len(self._parquet_files(name)))

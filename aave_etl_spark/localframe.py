@@ -17,7 +17,8 @@ object-dtype pandas frame so ``None`` stays a true NULL (a float64 column
 would coerce it to NaN) and ints never widen to floats; the explicit
 schema drives the Arrow types exactly as the classic path does.
 
-Any shape pandas/Arrow cannot round-trip falls back to the classic
+No rows at all skip pandas: the JVM builds the empty ``LocalRelation``
+directly. Any shape pandas/Arrow cannot round-trip falls back to the classic
 ``createDataFrame`` — correctness is never traded for the fast path.
 """
 
@@ -45,8 +46,16 @@ def local_df(
         struct = (
             StructType.fromDDL(schema) if isinstance(schema, str) else schema
         )
+        if not rows:
+            # pandas hands an empty frame to a Python RDD (LogicalRDD); the
+            # JVM builds the empty LocalRelation with the exact schema itself
+            jspark = spark._jsparkSession
+            jdf = jspark.createDataFrame(
+                spark._jvm.java.util.ArrayList(), jspark.parseDataType(struct.json())
+            )
+            return DataFrame(jdf, spark)
         names = struct.fieldNames()
-        if rows and isinstance(rows[0], dict):
+        if isinstance(rows[0], dict):
             data: dict[str, list[Any]] = {n: [] for n in names}
             for r in rows:
                 for n in names:

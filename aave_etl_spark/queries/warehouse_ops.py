@@ -343,141 +343,6 @@ def liquidity_depth_append_store(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Sort-clustered storage certified from the store: lineitem lands through
-# TableStore cluster_by (range-repartition + in-task sort => tight disjoint
-# per-file min/max footers), then a selective predicate reads it back and
-# the query ASSERTS — from input_file_name() over the surviving rows —
-# that the clustered layout CONCENTRATED the predicate's rows into a
-# strict subset of the files. That concentration (disjoint per-file
-# ranges) is precisely the property the parquet reader's row-group
-# min/max pruning exploits under the pushed-down filter; the pruning
-# itself is asserted from actual footer metadata in tests/test_io.py
-# (vanilla Spark exposes no per-file skip metric to assert from here).
-# ---------------------------------------------------------------------------
-@register(
-    "clustered_scan_store",
-    oracle="""
-    SELECT l_returnflag,
-           round(sum(l_quantity), 6) AS sum_qty,
-           round(sum(l_extendedprice), 6) AS sum_price,
-           CAST(count(*) AS BIGINT) AS n_rows
-    FROM lineitem WHERE l_orderkey <= 400
-    GROUP BY l_returnflag
-    """,
-    doc=(
-        "sort-clustered write certified at rest: lineitem cluster_by"
-        " l_orderkey through TableStore; a selective predicate's surviving"
-        " rows must come from a strict subset of the table's parquet files"
-        " (input_file_name) — the row concentration row-group pruning"
-        " exploits; aggregates match the raw-table oracle"
-    ),
-)
-def clustered_scan_store(spark, sf_dir):
-    import os
-
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(
-        spark, session_scratch_dir(spark, "aave_etl_spark_cluster", corpus_key(sf_dir))
-    )
-    tbl = "li_clustered"
-    # build-once per session (marker stamped last, at-rest discipline)
-    if not (store.is_complete(tbl) and store.exists(tbl)):
-        store.clear_complete(tbl)
-        li = t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
-        )
-        store.write(li, tbl, cluster_by=["l_orderkey"], cluster_files=8)
-        store.mark_complete(tbl)
-    filtered = store.read(tbl, where="l_orderkey <= 400")
-    # the concentration claim, from the engine itself: every row the
-    # selective predicate keeps must live in a strict subset of the files
-    # (disjoint clustered ranges) — the layout property row-group pruning
-    # then exploits under the pushed-down filter
-    n_read = filtered.select(F.input_file_name()).distinct().count()
-    n_total = len(store._parquet_files(tbl))
-    if not 1 <= n_read < n_total:
-        raise RuntimeError(
-            f"selective predicate's rows span {n_read} of {n_total} files —"
-            " the cluster_by layout did not concentrate the key range"
-        )
-    return filtered.groupBy("l_returnflag").agg(
-        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 6).alias("sum_price"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Z-ORDER clustered storage certified from the store: lineitem lands
-# z-ordered on (l_partkey, l_suppkey) — a Morton key interleaves the two
-# dimensions' scaled bits, so contiguous key ranges are small rectangles
-# and EVERY z-ordered column gets usable per-file min/max footers. The
-# query asserts (from input_file_name over surviving rows) that a
-# selective predicate on EACH dimension INDEPENDENTLY concentrates into a
-# strict file subset — the multi-dimensional skipping a lexicographic
-# cluster_by cannot give its trailing columns — then certifies aggregates
-# under the first predicate against the raw-table oracle.
-# ---------------------------------------------------------------------------
-@register(
-    "zorder_scan_store",
-    oracle="""
-    SELECT l_returnflag,
-           round(sum(l_quantity), 6) AS sum_qty,
-           CAST(count(*) AS BIGINT) AS n_rows
-    FROM lineitem WHERE l_partkey <= 40
-    GROUP BY l_returnflag
-    """,
-    doc=(
-        "Z-order (Morton) clustered write certified at rest: lineitem"
-        " z-ordered on (l_partkey, l_suppkey) through TableStore; selective"
-        " predicates on EACH dimension independently land in a strict"
-        " subset of the files (the multi-dim skipping lexicographic"
-        " clustering can't give trailing columns); aggregates match the"
-        " raw-table oracle"
-    ),
-)
-def zorder_scan_store(spark, sf_dir):
-    import os
-
-    from aave_etl_spark.io.scratch import corpus_key, session_scratch_dir
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(
-        spark, session_scratch_dir(spark, "aave_etl_spark_zorder", corpus_key(sf_dir))
-    )
-    tbl = "li_zordered"
-    if not (store.is_complete(tbl) and store.exists(tbl)):
-        store.clear_complete(tbl)
-        li = t(spark, sf_dir, "lineitem").select(
-            "l_partkey", "l_suppkey", "l_quantity", "l_returnflag"
-        )
-        store.write(li, tbl, zorder_by=["l_partkey", "l_suppkey"], cluster_files=16)
-        store.mark_complete(tbl)
-    n_total = len(store._parquet_files(tbl))
-    # the z-order claim: BOTH dimensions' selective predicates concentrate
-    # (20% of the key space at sf0.001, 2% at sf0.01 — a 4x4 z-grid over
-    # 16 files puts either slab in ~4 of them)
-    by_part = store.read(tbl, where="l_partkey <= 40")
-    for tag, side in (
-        ("l_partkey", by_part),
-        ("l_suppkey", store.read(tbl, where="l_suppkey <= 2")),
-    ):
-        n_read = side.select(F.input_file_name()).distinct().count()
-        if not 1 <= n_read < n_total:
-            raise RuntimeError(
-                f"z-order: {tag} predicate's rows span {n_read} of {n_total}"
-                " files — the interleaved layout did not concentrate this"
-                " dimension"
-            )
-    return by_part.groupBy("l_returnflag").agg(
-        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # CDC MERGE certified from the store: a change log (updates x2 price,
 # deletes, inserts of fresh keys) merges into the status-partitioned
 # orders snapshot through TableStore.merge — the Delta-style MERGE INTO

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from aave_etl_spark.functions.scalars import SECONDS_PER_YEAR, bps_to_frac, from_ray, from_units
+from aave_etl_spark.functions.scalars import SECONDS_PER_YEAR
 from aave_etl_spark.functions.standardise import standardise_types
 from aave_etl_spark.sources import schemas
 from aave_etl_spark.sources.base import (

@@ -157,8 +157,22 @@ def test_local_df_tuples_keep_nulls_and_integers(spark):
 
 
 def test_local_df_is_a_local_relation(spark):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
     df = local_df(spark, [(1,), (2,)], "a long")
     assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+
+    # no rows: still a pure-JVM relation, with the exact schema
+    schema = StructType(
+        [StructField("a", LongType(), False), StructField("b", StringType())]
+    )
+    ddl = "a long, b string"
+    for spec, want in ((ddl, StructType.fromDDL(ddl)), (schema, schema)):
+        empty = local_df(spark, [], spec)
+        plan = empty._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" not in plan, plan
+        assert empty.schema == want
+        assert empty.count() == 0
 
 
 def test_local_df_dict_rows_follow_schema_order_and_fill_missing(spark):

@@ -8,7 +8,7 @@ import os
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from aave_etl_spark.io.table_store import TableStore
 
@@ -195,10 +195,6 @@ WRITE_MODES = {
         {"partition_cols": ["p"], "append_only": True},
     ),
     "append": ({"append_only": True}, {"append_only": True}),
-    "full_refresh": (
-        {"partition_cols": ["p"], "full_refresh": True},
-        {"partition_cols": ["p"]},
-    ),
 }
 
 
@@ -251,11 +247,10 @@ def test_write_runs_one_spark_job(spark, tmp_path, mode):
 
 
 def test_staged_overwrite_read_runs_no_inference_job(spark, tmp_path):
-    """An unpartitioned overwrite (plain or full_refresh) records the schema
-    it wrote: the next read runs no Spark job, and its schema equals what
-    footer inference gives, for every column type below. Partitioned
-    writes are left to inference (partition columns are typed from the
-    directory names)."""
+    """An unpartitioned overwrite records the schema it wrote: the next
+    read runs no Spark job, and its schema equals what footer inference
+    gives, for every column type below. Partitioned writes are left to
+    inference (partition columns are typed from the directory names)."""
     from aave_etl_spark.io.table_store import _SCHEMA_MEMO, META_COLS
 
     store = _store(spark, tmp_path)
@@ -268,19 +263,18 @@ def test_staged_overwrite_read_runs_no_inference_job(spark, tmp_path):
         " map('k', 1.0D) AS m"
     )
     sc = spark.sparkContext
-    for mode, kwargs in (("overwrite", {}), ("full_refresh", {"full_refresh": True})):
-        store.write(df, "t", **kwargs)
-        group = f"memo-read-{mode}"
-        try:
-            sc.setJobGroup(group, group)
-            got = store.read("t", keep_meta=True)
-            assert sc.statusTracker().getJobIdsForGroup(group) == [], mode
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        inferred = spark.read.parquet(os.path.join(store.root, "t"))
-        assert got.schema == inferred.schema, mode
-        assert store.read("t").schema == inferred.drop(*META_COLS).schema, mode
-        assert store.read("t").collect() == df.collect(), mode
+    store.write(df, "t")
+    group = "memo-read-overwrite"
+    try:
+        sc.setJobGroup(group, group)
+        got = store.read("t", keep_meta=True)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    inferred = spark.read.parquet(os.path.join(store.root, "t"))
+    assert got.schema == inferred.schema
+    assert store.read("t").schema == inferred.drop(*META_COLS).schema
+    assert store.read("t").collect() == df.collect()
 
     store.write(_frame(spark, 10), "parted", partition_cols=["p"])
     assert os.path.join(store.root, "parted") not in _SCHEMA_MEMO
@@ -308,6 +302,37 @@ def test_failed_staged_write_keeps_previous_table(spark, tmp_path):
     assert sorted(store.read("t").collect()) == before
     assert store.write(_frame(spark, 0), "t", partition_cols=["p"]) is False
     assert not os.path.exists(_staging(store, "t"))
+    assert sorted(store.read("t").collect()) == before
+
+
+@pytest.mark.parametrize("append_only", [False, True], ids=["dynamic", "append_partitioned"])
+def test_failed_in_place_write_onto_missing_table_leaves_it_missing(
+    spark, tmp_path, append_only
+):
+    """A partitioned write whose job fails onto a table that did not exist
+    leaves no directory behind: exists() is False and read(schema=...)
+    serves the typed empty frame (K3), not a directory of Spark's
+    staging debris that cannot be read. A failed write onto an existing
+    table leaves its rows as they were."""
+    store = _store(spark, tmp_path)
+    failing = spark.range(10).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).alias("p"),
+        F.assert_true(F.col("id") < 5).alias("ok"),
+    )
+    kwargs = {"partition_cols": ["p"], "append_only": append_only}
+    with pytest.raises(Exception, match="is not true"):
+        store.write(failing, "t", **kwargs)
+    assert not store.exists("t")
+    schema = StructType([StructField("k", LongType()), StructField("p", LongType())])
+    empty = store.read("t", schema=schema)
+    assert empty.schema == schema
+    assert empty.count() == 0
+
+    assert store.write(_frame(spark, 10), "t", **kwargs)
+    before = sorted(store.read("t").collect())
+    with pytest.raises(Exception, match="is not true"):
+        store.write(failing, "t", **kwargs)
     assert sorted(store.read("t").collect()) == before
 
 
@@ -353,72 +378,6 @@ def test_compact_refuses_bucketed_tables(spark, tmp_path):
             store.compact("bkt_compact_t")
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_compact_t")
-
-
-def test_cluster_by_write_disjoint_file_stats(spark, tmp_path):
-    """cluster_by must produce files whose min/max footer ranges on the
-    clustered column are tight and pairwise disjoint — the property parquet
-    data skipping runs on — and the clustered column's predicate must reach
-    the scan as a pushed filter."""
-    import pyarrow.parquet as pq
-
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    df = (
-        spark.range(0, 20_000)
-        .withColumn("k", F.pmod(F.hash("id"), F.lit(1_000_000)))
-        .select("id", "k")
-        .repartition(8)  # scrambled input: every task sees the full k range
-    )
-    store.write(df, "clustered", cluster_by=["k"], cluster_files=4)
-    files = [
-        str(p) for p in (tmp_path / "clustered").rglob("*.parquet")
-    ]
-    assert len(files) > 1  # range repartition actually split the data
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        kidx = md.schema.to_arrow_schema().get_field_index("k")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(kidx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping file ranges ({lo1},{hi1}) vs ({lo2},{hi2})"
-    # the predicate reaches the parquet scan (skipping runs off the footer
-    # stats the disjointness above guarantees are selective)
-    probe = ranges[0][1]  # a value only the first file can contain
-    plan = (
-        store.read("clustered", where=f"k = {probe}")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(k), EqualTo(k," in plan
-    # unclustered write of the same scrambled data would overlap everywhere;
-    # sanity: the clustered table still returns every row
-    assert store.read("clustered").count() == 20_000
-
-
-def test_full_refresh_overwrite_drops_absent_partitions(spark, tmp_path):
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    v1 = spark.createDataFrame(
-        [("a", 1), ("b", 2)], "part string, v long"
-    )
-    store.write(v1, "fr", partition_cols=["part"])
-    # dynamic overwrite (default): writing only partition 'a' keeps 'b'
-    store.write(v1.filter("part = 'a'"), "fr", partition_cols=["part"])
-    assert store.read("fr").count() == 2
-    # full refresh: partition 'b' absent from the snapshot must disappear
-    store.write(v1.filter("part = 'a'"), "fr", partition_cols=["part"], full_refresh=True)
-    rows = store.read("fr").collect()
-    assert [r.part for r in rows] == ["a"]
 
 
 def test_completion_marker_protocol(spark, tmp_path):
@@ -533,119 +492,6 @@ def test_corpus_key_digest_follows_the_resolved_path(tmp_path):
     assert corpus_key(str(link)).startswith("alias-")
 
 
-def test_morton_zkey_interleaves_bits(spark):
-    """Known-value check of the Morton key: with 2 dims x 2 bits and an
-    identity scaling (values 0..3 over range 0..3), the key is the
-    textbook bit interleave (x bits at even positions, y at odd)."""
-    from aave_etl_spark.io.table_store import morton_zkey
-
-    df = spark.createDataFrame(
-        [(0, 0), (1, 0), (0, 1), (1, 1), (2, 0), (3, 3)], "x int, y int"
-    )
-    got = {
-        (r.x, r.y): r.z
-        for r in df.select(
-            "x", "y", morton_zkey(["x", "y"], [0, 0], [3, 3], bits=2).alias("z")
-        ).collect()
-    }
-    assert got == {(0, 0): 0, (1, 0): 1, (0, 1): 2, (1, 1): 3, (2, 0): 4, (3, 3): 15}
-    # NULL dims scale to 0; out-of-anchor values clamp instead of wrapping
-    df2 = spark.createDataFrame([(None, 3), (99, 0)], "x int, y int")
-    got2 = [
-        r.z
-        for r in df2.select(
-            morton_zkey(["x", "y"], [0, 0], [3, 3], bits=2).alias("z")
-        ).collect()
-    ]
-    assert got2 == [10, 5]  # (0,3) -> y bits only; (3,0) clamped -> 5
-    with pytest.raises(ValueError, match="fit a signed long"):
-        morton_zkey(["x", "y"], [0, 0], [1, 1], bits=32)
-
-
-def test_zorder_write_concentrates_both_dimensions(spark, tmp_path):
-    """zorder_by must (a) keep the layout key out of the stored schema and
-    (b) give BOTH clustered dimensions per-file footer ranges far narrower
-    than the global range — the multi-dim concentration a lexicographic
-    cluster_by cannot give its trailing column."""
-    import pyarrow.parquet as pq
-
-    store = _store(spark, tmp_path)
-    df = (
-        spark.range(0, 10_000)
-        .select(
-            (F.col("id") % 100).cast("int").alias("x"),
-            F.pmod(F.hash("id"), F.lit(100)).cast("int").alias("y"),
-            F.col("id").alias("payload"),
-        )
-        .repartition(8)  # scrambled input: every task sees the full ranges
-    )
-    store.write(df, "zed", zorder_by=["x", "y"], cluster_files=16)
-    out = store.read("zed")
-    assert "_zkey" not in out.columns  # layout device, not data
-    assert out.count() == 10_000
-    files = [str(p) for p in (tmp_path / "warehouse" / "zed").rglob("*.parquet")]
-    assert len(files) > 4
-    widths = {"x": [], "y": []}
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        arrow = md.schema.to_arrow_schema()
-        for col in ("x", "y"):
-            cidx = arrow.get_field_index(col)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(cidx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            widths[col].append(max(maxs) - min(mins))
-    for col in ("x", "y"):
-        mean_w = sum(widths[col]) / len(widths[col])
-        # a z-straddling file can span two grid cells; the MEAN stays
-        # well under half the global range (a lexicographic layout's
-        # trailing column would sit at ~the full range in every file)
-        assert mean_w < 50, f"{col}: mean per-file width {mean_w} not concentrated"
-    with pytest.raises(ValueError, match="not both"):
-        store.write(df, "zed2", cluster_by=["x"], zorder_by=["y"])
-
-
-def test_compact_zorder_reestablishes_layout(spark, tmp_path):
-    """Compacting a z-ordered table with zorder_by recomputes the dropped
-    Morton key and re-clusters, so both dimensions' footer concentration
-    survives the file-count change."""
-    import pyarrow.parquet as pq
-
-    store = _store(spark, tmp_path)
-    df = spark.range(0, 8_000).select(
-        (F.col("id") % 80).cast("int").alias("x"),
-        F.pmod(F.hash("id"), F.lit(80)).cast("int").alias("y"),
-    )
-    store.write(df, "zc", zorder_by=["x", "y"], cluster_files=16)
-    # 6 KiB target → ~7 files: comfortably >1 (the file count wobbles ±1-2
-    # with JVM/compression state — at 12 KiB it sat at 4, one wobble from
-    # tripping the >1 floor in a full-suite run) and a finer z-grid keeps
-    # the footer-width bound below with margin
-    before, after = store.compact(
-        "zc", target_file_bytes=6 * 1024, zorder_by=["x", "y"]
-    )
-    assert after < before and after > 1
-    out = store.read("zc")
-    assert out.count() == 8_000 and "_zkey" not in out.columns
-    files = [str(p) for p in (tmp_path / "warehouse" / "zc").rglob("*.parquet")]
-    for col in ("x", "y"):
-        widths = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            cidx = md.schema.to_arrow_schema().get_field_index(col)
-            mins = [md.row_group(r).column(cidx).statistics.min for r in range(md.num_row_groups)]
-            maxs = [md.row_group(r).column(cidx).statistics.max for r in range(md.num_row_groups)]
-            widths.append(max(maxs) - min(mins))
-        # fewer files => coarser z-grid, so the bound is looser than the
-        # write-time test's; a layout lost to arrival order would sit at
-        # ~the full range (79) in every file
-        assert sum(widths) / len(widths) < 56, f"{col} lost concentration"
-    with pytest.raises(ValueError, match="not both"):
-        store.compact("zc", sort_cols=["x"], zorder_by=["y"])
-
-
 def test_merge_upsert_delete_and_partition_scope(spark, tmp_path):
     """MERGE semantics: updates replace by key, deletes remove, inserts
     add; untouched PARTITIONS are not rewritten (their files' mtimes are
@@ -688,20 +534,20 @@ def test_merge_upsert_delete_and_partition_scope(spark, tmp_path):
 
 
 def test_merge_sequence_keep_last_and_bootstrap(spark, tmp_path):
-    """sequence_col collapses multi-change batches to the highest-sequence
-    row per key; merging into a missing table bootstraps it from the
-    upserts (deletes ignored)."""
+    """Merging into a missing table bootstraps it from the upserts
+    (deletes ignored, the op column dropped); a feed with no op column
+    upserts every row."""
     store = _store(spark, tmp_path)
     changes = spark.createDataFrame(
         [
-            (1, 100.0, "I", 1),
-            (1, 150.0, "U", 2),   # later change for the same key wins
-            (2, 200.0, "I", 1),
-            (3, 300.0, "D", 1),   # delete against nothing: ignored
+            (1, 150.0, "U"),
+            (2, 200.0, "I"),
+            (3, 300.0, "D"),   # delete against nothing: ignored
         ],
-        "k long, v double, op string, seq long",
+        "k long, v double, op string",
     )
-    store.merge(changes, "boot", ["k"], op_col="op", sequence_col="seq")
+    store.merge(changes, "boot", ["k"], op_col="op")
+    assert store.read("boot").columns == ["k", "v"]
     got = {r.k: r.v for r in store.read("boot").collect()}
     assert got == {1: 150.0, 2: 200.0}
     # pure-upsert feed (no op col): every change row upserts
@@ -902,108 +748,11 @@ def test_merge_batch_missing_partition_column_raises_contract_error(spark, tmp_p
         store.merge(bad, "mp", ["k"], partition_cols=["part"], op_col="op")
 
 
-def test_morton_zkey_sub_unit_span_keeps_resolution(spark):
-    """A dimension spanning less than 1 (ratio columns) must still spread
-    across the key space — the span guard only protects hi == lo."""
-    from aave_etl_spark.io.table_store import morton_zkey
-
-    df = spark.createDataFrame(
-        [(0.0, 0), (0.5e-5, 0), (1e-5, 0)], "x double, y int"
-    )
-    zs = [
-        r.z
-        for r in df.select(
-            morton_zkey(["x", "y"], [0.0, 0], [1e-5, 0], bits=2).alias("z")
-        ).collect()
-    ]
-    # x scales to 0/1/3 (floor(0.5*3)=1), y constant contributes nothing
-    assert zs == [0, 1, 5]
-
-
-def test_bloom_filter_write_adds_footer_bytes_and_keeps_lookups(spark, tmp_path):
-    """bloom_cols must materially grow the file (the serialized filter
-    lives between the data and the footer; this pyarrow build exposes no
-    offset field, so bytes are the observable), and point lookups stay
-    correct through the store."""
-    import os
-
-    store = _store(spark, tmp_path)
-    df = spark.range(0, 20_000).select(
-        F.md5(F.col("id").cast("string")).alias("h"), F.col("id").alias("v")
-    ).coalesce(1)
-    store.write(df, "plain")
-    store.write(df, "bloomed", bloom_cols=["h"], bloom_ndv=20_000)
-
-    def _bytes(table):
-        return sum(
-            os.path.getsize(f)
-            for f in (tmp_path / "warehouse" / table).rglob("*.parquet")
-        )
-
-    plain_b, bloom_b = _bytes("plain"), _bytes("bloomed")
-    # ndv=20k at the default fpp is a >=10 KiB filter — far above noise
-    assert bloom_b > plain_b + 8_192, (plain_b, bloom_b)
-    # behavioral: the needle comes back identical through the store read
-    needle = df.limit(1).collect()[0]
-    got = store.read("bloomed", where=f"h = '{needle.h}'").collect()
-    assert [(r.h, r.v) for r in got] == [(needle.h, needle.v)]
-    # READ-side proof the filter actually skips: probing an ABSENT value
-    # lexically inside the hash range (min/max stats can't prune random
-    # md5 strings) decodes ZERO rows through the bloomed table's scan,
-    # while the plain table decodes every row of every row group — the
-    # same certified-from-the-metrics standard as the zorder/clustered
-    # scans (numOutputRows of the scan leaf = rows the reader decoded
-    # after row-group-level filtering)
-    absent = "h = '7fffffffffffffffffffffffffffffff'"
-    assert store.read("plain", where=absent).count() == 0  # truly absent
-
-    def _scan_rows(table, where):
-        q = store.read(table, where=where)
-        q.collect()
-        leaves = q._jdf.queryExecution().executedPlan().collectLeaves()
-        tot = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numOutputRows"):
-                tot += m.apply("numOutputRows").value()
-        return tot
-
-    assert _scan_rows("bloomed", absent) == 0
-    assert _scan_rows("plain", absent) == 20_000
-
-
-def test_snapshot_time_travel_and_restore(spark, tmp_path):
-    """Hardlink snapshots: overwrites don't disturb kept versions, any
-    version reads back exactly, restore rolls the live table back (and
-    itself snapshots first, never losing the pre-restore state)."""
-    store = _store(spark, tmp_path)
-    v1 = spark.createDataFrame([(1, "a")], "k long, v string")
-    v2 = spark.createDataFrame([(1, "b"), (2, "c")], "k long, v string")
-    store.write(v1, "tt")
-    s1 = store.snapshot("tt")
-    store.write(v2, "tt")  # full overwrite of the live table
-    assert {(r.k, r.v) for r in store.read("tt").collect()} == {(1, "b"), (2, "c")}
-    assert {(r.k, r.v) for r in store.read_snapshot("tt", s1).collect()} == {(1, "a")}
-    store.restore_snapshot("tt", s1)
-    assert {(r.k, r.v) for r in store.read("tt").collect()} == {(1, "a")}
-    # the pre-restore state was snapshotted by the restore itself
-    snaps = store.snapshots("tt")
-    assert s1 in snaps and len(snaps) == 2
-    latest = store.read_snapshot("tt", snaps[-1])
-    assert {(r.k, r.v) for r in latest.collect()} == {(1, "b"), (2, "c")}
-    # prune: keep=1 retains only the newest
-    store.snapshot("tt", keep=1)
-    assert len(store.snapshots("tt")) == 1
-    with pytest.raises(ValueError, match="no snapshot"):
-        store.read_snapshot("tt", s1)
-
-
 def test_scd2_cdc_snapshot_share_one_lineage(spark, tmp_path):
     """The warehouse story in one test: a change log drives CDC merges
-    into a live keyed table; the SAME log builds the SCD2 dimension; a
-    snapshot taken between batches proves time travel. Invariants —
-    scd2_as_of(t) over the dimension == the merged table's state at t ==
-    the hardlink snapshot taken at t, on (key, attrs)."""
+    into a live keyed table; the SAME log builds the SCD2 dimension.
+    Invariants — scd2_as_of(t) over the dimension == the merged table's
+    state at t (collected before the next batch), on (key, attrs)."""
     from datetime import datetime
 
     from aave_etl_spark.operators.scd import scd2_as_of, scd2_snapshot
@@ -1019,20 +768,21 @@ def test_scd2_cdc_snapshot_share_one_lineage(spark, tmp_path):
 
     store.merge(spark.createDataFrame(batch1, schema), "dim_live", ["k"])
     store.merge(spark.createDataFrame(batch2, schema), "dim_live", ["k"])
-    snap = store.snapshot("dim_live")  # the state as of day 2
+
+    def state(df):
+        return {(r.k, r.attr, r.v) for r in df.select("k", "attr", "v").collect()}
+
+    live_day2 = state(store.read("dim_live"))  # the state as of day 2
     store.merge(spark.createDataFrame(batch3, schema), "dim_live", ["k"])
 
     log = spark.createDataFrame(batch1 + batch2 + batch3, schema)
     dim = scd2_snapshot(log, ["k"], ["attr", "v"], ts_col="ts")
 
-    def state(df):
-        return {(r.k, r.attr, r.v) for r in df.select("k", "attr", "v").collect()}
-
     day2 = {(1, "A", 11.0), (2, "B", 20.0), (3, "C", 30.0)}
     day3 = {(1, "A", 11.0), (2, "B2", 21.0), (3, "C", 30.0)}
-    # as-of == merged state at that time == the snapshot, all three ways
+    # as-of == merged state at that time, both ways
     assert state(scd2_as_of(dim, datetime(2024, 1, 2, 12))) == day2
-    assert state(store.read_snapshot("dim_live", snap)) == day2
+    assert live_day2 == day2
     assert state(store.read("dim_live")) == day3
     assert state(scd2_as_of(dim, datetime(2024, 1, 3, 12))) == day3
     assert state(dim.filter("is_current")) == day3
@@ -1114,21 +864,6 @@ def test_sketch_tables_store_once_roll_up_anywhere(spark, tmp_path):
     assert len(hh) == 10
     for r in hh:
         assert r.count_lb <= truth[r.value] <= r.count_ub
-
-
-def test_snapshot_restore_prune_never_drops_restore_target(spark, tmp_path):
-    """The bookkeeping snapshot inside restore must not prune the target:
-    restoring the OLDEST of >3 snapshots still works."""
-    store = _store(spark, tmp_path)
-    ids = []
-    for i in range(4):
-        store.write(
-            spark.createDataFrame([(i,)], "k long"), "pp"
-        )
-        ids.append(store.snapshot("pp", keep=10))
-    oldest = ids[0]
-    store.restore_snapshot("pp", oldest)
-    assert [r.k for r in store.read("pp").collect()] == [0]
 
 
 def test_read_table_memoizes_the_schema_per_directory(spark, tmp_path):

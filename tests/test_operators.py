@@ -1047,33 +1047,6 @@ def test_tokens_lowercase_shared_tokenization(spark):
     assert row.n_tokens == 3 and row.n_distinct_tokens == 1
 
 
-def test_compact_sort_cols_keeps_disjoint_ranges(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    from aave_etl_spark.io.table_store import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    df = (
-        spark.range(0, 10_000)
-        .withColumn("k", F.pmod(F.hash("id"), F.lit(1_000_000)))
-        .repartition(8)
-    )
-    store.write(df, "ct", cluster_by=["k"], cluster_files=4)
-    store.compact("ct", target_file_bytes=40_000, sort_cols=["k"])
-    files = [str(p) for p in (tmp_path / "ct").rglob("*.parquet")]
-    assert len(files) > 1
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        kidx = md.schema.to_arrow_schema().get_field_index("k")
-        stats = [md.row_group(rg).column(kidx).statistics for rg in range(md.num_row_groups)]
-        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-    assert store.read("ct").count() == 10_000
-
-
 def test_dsir_importance_resample_prefers_target_like(spark):
     """DSIR: docs sharing the target side's n-gram distribution score
     higher; kept = ceil(keep_frac * N) docs; deterministic across

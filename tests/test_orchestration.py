@@ -17,14 +17,12 @@ from aave_etl_spark.io.table_store import TableStore
 from aave_etl_spark.plans import orchestration as orch
 from aave_etl_spark.plans.events_pipeline import events_pipeline_graph
 from aave_etl_spark.plans.orchestration import (
-    DAILY,
     MARKET_DAY,
     UNPARTITIONED,
     Asset,
     AssetContext,
     AssetGraph,
     PartitionKey,
-    Schedule,
     backfill,
     cron_due,
     date_range,

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from aave_etl_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
