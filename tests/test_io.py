@@ -66,6 +66,105 @@ def test_k4_plain_roundtrip_strips_meta(spark, tmp_path):
     assert store.read("t", keep_meta=True).columns != out.columns
 
 
+def test_unpartitioned_overwrite_replaces_every_row(spark, tmp_path):
+    """An unpartitioned overwrite is the whole table: rows absent from the
+    new frame are gone, and the swap leaves no staging directory."""
+    store = _store(spark, tmp_path)
+    store.write(spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double"), "t")
+    assert store.write(spark.createDataFrame([("c", 3.0)], "k string, v double"), "t")
+    assert [(r.k, r.v) for r in store.read("t").collect()] == [("c", 3.0)]
+    assert not os.path.exists(_staging(store, "t"))
+
+
+def test_unpartitioned_append_keeps_existing_part_files(spark, tmp_path):
+    """An unpartitioned append moves its staged part files into the live
+    table beside the ones already there; no existing file is rewritten."""
+    store = _store(spark, tmp_path)
+    store.write(spark.createDataFrame([("a", 1.0)], "k string, v double"), "t", append_only=True)
+    before = {f: os.path.getsize(f) for f in store._parquet_files("t")}
+    assert store.write(
+        spark.createDataFrame([("b", 2.0)], "k string, v double"), "t", append_only=True
+    )
+    after = {f: os.path.getsize(f) for f in store._parquet_files("t")}
+    assert before.items() <= after.items() and len(after) > len(before)
+    assert sorted((r.k, r.v) for r in store.read("t").collect()) == [("a", 1.0), ("b", 2.0)]
+    assert not os.path.exists(_staging(store, "t"))
+
+
+def test_partitioned_append_leaves_other_partitions_untouched(spark, tmp_path):
+    """A partitioned append adds rows to the partitions it writes and
+    touches no file of any other partition."""
+    store = _store(spark, tmp_path)
+    df = spark.createDataFrame([("d1", 1), ("d2", 2)], "day string, v long")
+    store.write(df, "t", partition_cols=["day"], append_only=True)
+    d2 = sorted(str(p) for p in (tmp_path / "warehouse" / "t" / "day=d2").glob("*.parquet"))
+    store.write(
+        spark.createDataFrame([("d1", 3)], "day string, v long"),
+        "t", partition_cols=["day"], append_only=True,
+    )
+    got = sorted((r.day, r.v) for r in store.read("t").collect())
+    assert got == [("d1", 1), ("d1", 3), ("d2", 2)]
+    assert sorted(
+        str(p) for p in (tmp_path / "warehouse" / "t" / "day=d2").glob("*.parquet")
+    ) == d2
+
+
+@pytest.mark.parametrize("append_only", [False, True], ids=["overwrite", "append"])
+def test_failed_staged_write_onto_missing_table_leaves_it_missing(
+    spark, tmp_path, append_only
+):
+    """An unpartitioned write whose job fails onto a table that did not
+    exist leaves neither the table nor its staging directory: the read
+    serves the typed empty frame (K3)."""
+    store = _store(spark, tmp_path)
+    failing = spark.range(10).select(
+        F.col("id").alias("k"), F.assert_true(F.col("id") < 5).alias("ok")
+    )
+    with pytest.raises(Exception, match="is not true"):
+        store.write(failing, "t", append_only=append_only)
+    assert not store.exists("t")
+    assert not os.path.exists(_staging(store, "t"))
+    schema = StructType([StructField("k", LongType())])
+    empty = store.read("t", schema=schema)
+    assert empty.schema == schema and empty.count() == 0
+
+
+def test_merge_only_the_delete_op_removes_rows(spark, tmp_path):
+    """Only an op of exactly ``"D"`` deletes; any other op value (lower
+    case ``"d"``, an unknown code, the empty string) upserts its row."""
+    store = _store(spark, tmp_path)
+    base = spark.createDataFrame(
+        [(k, float(k)) for k in range(1, 6)], "k long, v double"
+    )
+    store.write(base, "m")
+    changes = spark.createDataFrame(
+        [(1, 0.0, "D"), (2, 20.0, "d"), (3, 30.0, "X"), (4, 40.0, ""), (6, 60.0, "I")],
+        "k long, v double, op string",
+    )
+    assert store.merge(changes, "m", ["k"], op_col="op")
+    got = {r.k: r.v for r in store.read("m").collect()}
+    assert got == {2: 20.0, 3: 30.0, 4: 40.0, 5: 5.0, 6: 60.0}
+    assert store.read("m").columns == ["k", "v"]
+
+
+def test_compact_partition_over_target_stays_one_file(spark, tmp_path):
+    """A partition larger than ``target_file_bytes`` still compacts to one
+    file: hash partitioning on the partition column cannot split a value."""
+    store = _store(spark, tmp_path)
+    df = spark.createDataFrame(
+        [(d, i) for d in ("d1", "d2") for i in range(300)], "day string, k long"
+    ).repartition(8)
+    store.write(df, "t", partition_cols=["day"])
+    before = sorted(store.read("t").collect())
+    total = sum(os.path.getsize(f) for f in store._parquet_files("t"))
+    n_before = len(store._parquet_files("t"))
+    assert n_before > 2
+    # each partition holds about half the bytes, so each is over target
+    fb, fa = store.compact("t", partition_cols=["day"], target_file_bytes=max(1, total // 4))
+    assert (fb, fa) == (n_before, 2)
+    assert sorted(store.read("t").collect()) == before
+
+
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Two tables bucketed on the join key with equal bucket counts must
     join with ZERO Exchange operators — bucket i zips with bucket i."""
