@@ -520,10 +520,10 @@ class TableStore:
         df: DataFrame,
         name: str,
         bucket_cols: list[str],
-        n_buckets: int = 32,
+        n_buckets: int | None = None,
         sort_cols: list[str] | None = None,
         mode: str = "overwrite",
-    ) -> None:
+    ) -> int:
         """Persist ``df`` hash-bucketed (CLUSTERED BY) on ``bucket_cols``.
 
         Bucketing is the co-location tool the partition layout (K1) can't
@@ -535,12 +535,27 @@ class TableStore:
         key. Requires the session catalog (bucket metadata lives there,
         not in parquet); read back with ``read_bucketed``.
 
-        ``mode="append"`` adds files into the EXISTING bucketed table —
-        each new file still hash-routes rows by the bucket function, so
-        co-location survives incremental ingest (Spark validates the
-        bucket spec against the catalog and refuses a mismatch). The
-        caller must pass the ORIGINAL ``n_buckets``/``sort_cols``."""
+        The bucket count is chosen once, when a write builds the table:
+        ``n_buckets`` or, by default, ``sc.defaultParallelism`` — the
+        slot count, the same scale-adaptive target ``fan_out_scan`` uses.
+        Each write task emits one file per bucket it holds, so a fixed
+        count far above the slot count scatters a small table into many
+        tiny files. A rebuild (``mode="overwrite"``) picks the count
+        again.
+
+        ``mode="append"`` onto an existing table takes the TABLE'S bucket
+        count from the catalog (``n_buckets`` and the default are not
+        consulted, so a changed slot count never re-sizes a table
+        mid-life) — each new file still hash-routes rows by the bucket
+        function, so co-location survives incremental ingest. Spark
+        refuses ``bucket_cols``/``sort_cols`` that differ from the
+        table's. Returns the bucket count of the written table."""
         _schema_memo_invalidate(self._path(name))
+        n_buckets = (
+            (self._num_buckets(name) if mode == "append" else None)
+            or n_buckets
+            or self.spark.sparkContext.defaultParallelism
+        )
         writer = (
             df.write.format("parquet")
             .mode(mode)
@@ -549,6 +564,18 @@ class TableStore:
         if sort_cols:
             writer = writer.sortBy(*sort_cols)
         writer.option("path", self._path(name)).saveAsTable(name)
+        return n_buckets
+
+    def _num_buckets(self, name: str) -> int | None:
+        """The bucket count the session catalog holds for table ``name``
+        (None when there is no such table). A catalog command: no Spark
+        job."""
+        if not self.spark.catalog.tableExists(name):
+            return None
+        rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        return next(
+            (int(r.data_type) for r in rows if r.col_name == "Num Buckets"), None
+        )
 
     def read_bucketed(self, name: str) -> DataFrame:
         """Catalog read preserving bucket metadata (a plain parquet read of
@@ -592,9 +619,12 @@ class TableStore:
         renames leaves the full old copy recoverable at ``<name>.__old``.
         On object storage the same shape runs against the FileSystem API.
 
+        A table that is already compact — one file in every partition
+        directory, or at most the target count unpartitioned — is left
+        as it is (no rewrite, no Spark job) and reports ``(n, n)``.
+
         Returns (files_before, files_after)."""
         import math
-        _schema_memo_invalidate(self._path(name))
 
         # a bucketed table's co-location contract lives in the catalog; a
         # plain rewrite would leave bucket metadata pointing at files that
@@ -610,6 +640,13 @@ class TableStore:
             return (0, 0)
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, math.ceil(total / target_file_bytes))
+        if partition_cols:
+            compact = len({os.path.dirname(f) for f in files}) == len(files)
+        else:
+            compact = len(files) <= n_out
+        if compact:
+            return (len(files), len(files))
+        _schema_memo_invalidate(self._path(name))
         df = self.spark.read.parquet(self._path(name))
         tmp = self._staging_path(name)
         if partition_cols:

@@ -534,7 +534,7 @@ def span_index_build(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
     carry_cols: tuple[str, ...] = (),
 ) -> None:
     """Materialize a corpus's CANONICAL span-window occurrences as an
@@ -558,16 +558,19 @@ def span_index_build(
     bucketed on ``_h`` so both the daily match join and the append's
     anti-join run exchange-free on the stored side. ``carry_cols`` (an
     ingest ``day``) give re-run scoping and maintenance passes a
-    pruning handle, exactly like the MinHash index."""
+    pruning handle, exactly like the MinHash index. ``n_buckets``
+    defaults to the slot count (``TableStore.write_bucketed``'s rule, so
+    a maintenance rebuild re-sizes); the count used is recorded in the
+    ``<name>_params`` sidecar."""
     canon = _span_canonicals(docs, id_col, text_col, n, carry_cols)
-    store.write_bucketed(
+    n_buckets = store.write_bucketed(
         canon, name, bucket_cols=["_h"], n_buckets=n_buckets, sort_cols=["_h"]
     )
     # params sidecar (the minhash_index_build discipline): a drifted n
     # silently produces never-matching window hashes — match/append
     # validate against this row and raise instead
     local_df(docs.sparkSession, 
-        [(int(n), int(n_buckets))], "n int, n_buckets int"
+        [(int(n), n_buckets)], "n int, n_buckets int"
     ).write.mode("overwrite").parquet(store._path(name + "_params"))
 
 
@@ -620,8 +623,7 @@ def span_index_append(
     windows plus one bucketed scan of the skinny hash rows — corpus
     TEXT is never re-read."""
     spark = new_docs.sparkSession
-    built = _span_params(store, spark, name, n)
-    if built is None:
+    if _span_params(store, spark, name, n) is None:
         raise ValueError(
             f"span_index_append: no params sidecar for index {name!r} —"
             " build it with span_index_build first"
@@ -631,8 +633,7 @@ def span_index_append(
         store.read_bucketed(name).select("_h"), "_h", "left_anti"
     )
     store.write_bucketed(
-        fresh, name, bucket_cols=["_h"], n_buckets=built.n_buckets,
-        sort_cols=["_h"], mode="append",
+        fresh, name, bucket_cols=["_h"], sort_cols=["_h"], mode="append"
     )
 
 
@@ -918,7 +919,7 @@ def minhash_index_build(
     shingle_n: int = 3,
     num_hashes: int = 8,
     rows_per_band: int = 2,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
     carry_cols: tuple[str, ...] = (),
 ) -> None:
     """Materialize a corpus's MinHash band keys as an AT-REST signature
@@ -938,7 +939,11 @@ def minhash_index_build(
     maintenance passes a pruning handle: each append's files carry one
     constant value, so a predicate on the carry column skips every other
     file via parquet row-group stats (see ``minhash_index_append``
-    ``if_absent_where``)."""
+    ``if_absent_where``).
+
+    ``n_buckets`` defaults to the slot count (``TableStore.write_bucketed``'s
+    rule, so a maintenance rebuild re-sizes); the count used is recorded
+    in the ``<name>_params`` sidecar beside the banding parameters."""
     banded = band_keys(
         minhash_signatures(
             word_shingles(docs, id_col, text_col, n=shingle_n),
@@ -950,7 +955,7 @@ def minhash_index_build(
     )
     if carry_cols:
         banded = banded.join(docs.select(id_col, *carry_cols), id_col)
-    store.write_bucketed(
+    n_buckets = store.write_bucketed(
         banded, name, bucket_cols=["band_key"], n_buckets=n_buckets,
         sort_cols=["band_key"],
     )
@@ -960,7 +965,7 @@ def minhash_index_build(
     # minhash_index_match/append validate against this and raise instead
     spark = docs.sparkSession
     local_df(spark, 
-        [(int(shingle_n), int(num_hashes), int(rows_per_band), int(n_buckets))],
+        [(int(shingle_n), int(num_hashes), int(rows_per_band), n_buckets)],
         "shingle_n int, num_hashes int, rows_per_band int, n_buckets int",
     ).write.mode("overwrite").parquet(store._path(name + "_params"))
 
@@ -1011,7 +1016,7 @@ def minhash_index_append(
     match a new batch (`minhash_index_match`) → verify → append the
     SURVIVORS' bands here, so the next batch matches against the whole
     corpus seen so far without ever re-scanning or re-banding it. The
-    append re-uses the catalog's bucket spec (validated by Spark) and the
+    append takes the table's bucket spec from the catalog and the
     sidecar's banding params (validated here — a drifted shingle_n would
     silently produce never-colliding keys), so each appended file is
     bucket-routed exactly like the original build and later matches stay
@@ -1037,8 +1042,7 @@ def minhash_index_append(
     tests/test_orchestration.py via the fixed row count; scan-metric
     proof in SCALE.md)."""
     spark = new_docs.sparkSession
-    built = _index_params(store, spark, name, shingle_n, num_hashes, rows_per_band)
-    if built is None:
+    if _index_params(store, spark, name, shingle_n, num_hashes, rows_per_band) is None:
         raise ValueError(
             f"minhash_index_append: no params sidecar for index {name!r} —"
             " build it with minhash_index_build first"
@@ -1062,8 +1066,8 @@ def minhash_index_append(
             existing.select(id_col, "band_key"), ["band_key", id_col], "left_anti"
         )
     store.write_bucketed(
-        banded, name, bucket_cols=["band_key"], n_buckets=built.n_buckets,
-        sort_cols=["band_key"], mode="append",
+        banded, name, bucket_cols=["band_key"], sort_cols=["band_key"],
+        mode="append",
     )
 
 

@@ -515,7 +515,7 @@ def bm25_index_build(
     text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Materialize a corpus's BM25 postings as an AT-REST inverted index,
     hash-bucketed on `term` through the TableStore.
@@ -530,16 +530,18 @@ def bm25_index_build(
     the index is a snapshot: append-heavy corpora rebuild on a cadence
     (weights drift slowly — df/N ratios move little per ingest batch), the
     same trade every production BM25 index makes between freshness and
-    rebuild cost."""
+    rebuild cost. ``n_buckets`` defaults to the slot count
+    (``TableStore.write_bucketed``'s rule); the count used is recorded in
+    the ``<name>_params`` sidecar."""
     posts = bm25_postings(corpus, id_col=id_col, text_col=text_col, k1=k1, b=b)
-    store.write_bucketed(
+    n_buckets = store.write_bucketed(
         posts, name, bucket_cols=["term"], n_buckets=n_buckets, sort_cols=["term"]
     )
     # one-row params sidecar: a probe scored under different (k1, b) than
     # the stored weights would silently disagree with its in-flight twin —
     # bm25_index_search validates and raises instead
     local_df(corpus.sparkSession,
-        [(float(k1), float(b), int(n_buckets))], "k1 double, b double, n_buckets int"
+        [(float(k1), float(b), n_buckets)], "k1 double, b double, n_buckets int"
     ).write.mode("overwrite").parquet(store._path(name + "_params"))
     # a rebuild at the same path must re-validate, not serve the old pair
     _BM25_PARAMS_SEEN.pop(store._path(name + "_params"), None)
@@ -956,9 +958,12 @@ def bpe_learn(
     plus a narrow string rewrite over the VOCAB table only, so per-round
     cost is corpus-size-independent. Rounds are inherently sequential
     (classic BPE is a sequential greedy algorithm); each round's argmax
-    is a one-row bounded collect (the block-height-scalar discipline),
-    and the rewritten vocab is ``localCheckpoint``-ed per round to keep
-    the plan flat (the k-means update discipline). A production 32k-vocab
+    is a one-row bounded collect (the block-height-scalar discipline).
+    The rewritten vocab is local-checkpointed LAZILY each round: the next
+    round's pair count materializes it in the same job that reads it, so
+    the plan stays flat (the k-means update discipline) at two Spark jobs
+    per round — the pair count's shuffle stage and the argmax — with no
+    separate materialization job. A production 32k-vocab
     run batches compatible merges per round to cut round count; this
     operator is the exact top-1 form the batched variant must reproduce.
     """
@@ -1004,7 +1009,7 @@ def bpe_learn(
                 F.lit(BPE_SEP + best.lft + best.rgt + BPE_SEP),
             ).alias("sym"),
             "freq",
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
     return local_df(spark, 
         merges,
         "rank int, left string, right string, merged string, pair_count long",

@@ -283,7 +283,12 @@ def _corpus_clean(ctx: AssetContext) -> DataFrame:
     sh_b = dedup.word_shingles(
         batch.select("doc_id", "text"), n=3
     ).localCheckpoint(eager=False)
-    wdups = dedup.within_batch_near_dup_drops(sh_b, threshold=0.5)
+    # the drop ids feed every later query over the batch (the span
+    # rewrite's checkpoints and the final write): cut the lineage so the
+    # band joins and verifies run once per day, not once per query
+    wdups = dedup.within_batch_near_dup_drops(
+        sh_b, threshold=0.5
+    ).localCheckpoint(eager=False)
     batch = batch.join(wdups, "doc_id", "left_anti")
     store = ctx.store
     # state reads are scoped to STRICTLY EARLIER days (partition-pruned):
@@ -908,17 +913,24 @@ def corpus_maintenance(
     - COMPACT each day-partitioned table's accreted small files (every
       daily run writes one file-set per partition; re-runs add more) to
       bounded counts via ``TableStore.compact`` — content-preserving,
-      same partition layout.
-    - REBUILD the MinHash band index from ``corpus_docs`` — the reclaim
-      path for stale bands: corrected backfills append the corrected
-      docs' new bands while the old-text bands stay (harmless for
-      matching — candidate pairs are prior-day-scoped and the verify
-      reads current text — but storage and candidate noise grow under
-      repeated corrections). A rebuild over the current docs is exactly
-      the from-scratch build the append path is certified equal to.
+      same partition layout. A table already at one file per partition
+      (a single daily run usually leaves ``corpus_clean`` and
+      ``corpus_digests`` so) is left untouched.
+    - REBUILD the MinHash band index and the span index from
+      ``corpus_docs`` — the reclaim path for stale rows: corrected
+      backfills append the corrected docs' new bands while the old-text
+      bands stay (harmless for matching — candidate pairs are
+      prior-day-scoped and the verify reads current text — but storage
+      and candidate noise grow under repeated corrections). A rebuild
+      over the current docs is exactly the from-scratch build the append
+      path is certified equal to, and it re-picks the bucket count for
+      the current slot count (``TableStore.write_bucketed``).
+    - LEARN the tokenizer's BPE merge table over the accumulated docs
+      and store it as ``corpus_bpe_merges`` (two Spark jobs per merge
+      round).
 
     Returns ``{table: (before, after)}`` — file counts for compacted
-    tables, row counts for the index rebuild. Run it off the daily path
+    tables, row counts for the index rebuilds and the merge table. Run it off the daily path
     (weekly, or after a heavy backfill); cost is one scan+rewrite of the
     state tables, never the raw landing data."""
     out: dict[str, tuple[int, int]] = {}

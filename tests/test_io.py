@@ -4,6 +4,7 @@ co-location — direct tests for the IO layer the datamart runner builds on."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -189,6 +190,84 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS bf")
         spark.sql("DROP TABLE IF EXISTS bd")
+
+
+def _bucket_ids(store, name):
+    """The bucket ids of a bucketed table's files (``..._<id>.c000...``)."""
+    return {
+        int(re.search(r"_(\d+)\.", os.path.basename(f)).group(1))
+        for f in store._parquet_files(name)
+    }
+
+
+def test_write_bucketed_sizes_buckets_to_slots_once(spark, tmp_path, monkeypatch):
+    """A build picks ``defaultParallelism`` buckets; an append under a
+    different default keeps the table's spec (its files hash into the
+    table's buckets); a rebuild picks the count again."""
+    from pyspark import SparkContext
+
+    def slots(n):
+        monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: n))
+
+    store = _store(spark, tmp_path)
+    df = spark.range(200).select(F.col("id").alias("k"))
+    try:
+        slots(3)
+        assert store.write_bucketed(df, "bk_rule", ["k"], sort_cols=["k"]) == 3
+        assert store._num_buckets("bk_rule") == 3
+        slots(5)
+        assert store.write_bucketed(df, "bk_rule", ["k"], sort_cols=["k"], mode="append") == 3
+        assert store._num_buckets("bk_rule") == 3
+        assert _bucket_ids(store, "bk_rule") == {0, 1, 2}
+        assert store.read_bucketed("bk_rule").count() == 400
+        assert store.write_bucketed(df, "bk_rule", ["k"]) == 5
+        assert store._num_buckets("bk_rule") == 5
+        assert _bucket_ids(store, "bk_rule") == set(range(5))
+        assert store.read_bucketed("bk_rule").count() == 200
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bk_rule")
+
+
+def test_compact_leaves_an_already_compact_table_alone(spark, tmp_path):
+    """One file per partition directory (unpartitioned: no more than the
+    target count) is already compact: ``compact`` reports ``(n, n)`` and
+    runs no Spark job, and every file keeps its name. A crash-left swap
+    is still healed first, and a partition that holds two files is still
+    rewritten."""
+    store = _store(spark, tmp_path)
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(d, i) for d in ("d1", "d2") for i in range(20)], "day string, k long"
+    )
+    store.write(df.repartition("day"), "p", partition_cols=["day"])
+    store.write(df.coalesce(1), "u")
+    def rows():
+        return sorted((r.day, r.k) for r in store.read("p").collect())
+
+    want = rows()
+    for name, cols in (("p", ["day"]), ("u", None)):
+        files = sorted(store._parquet_files(name))
+        group = f"compact-noop-{name}"
+        try:
+            sc.setJobGroup(group, group)
+            assert store.compact(name, partition_cols=cols) == (len(files), len(files))
+            assert not sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sorted(store._parquet_files(name)) == files
+    # crash between _swap_in's two renames: the next compact heals it
+    live = os.path.join(store.root, "p")
+    with open(live + ".__swap_pending", "w") as f:
+        f.write("p")
+    os.replace(live, live + ".__old")
+    assert store.compact("p", partition_cols=["day"]) == (2, 2)
+    assert rows() == want
+    assert not os.path.exists(live + ".__old")
+    # a second file in one partition: compacted back to one per directory
+    extra = spark.createDataFrame([("d1", 99)], "day string, k long")
+    store.write(extra, "p", partition_cols=["day"], append_only=True)
+    assert store.compact("p", partition_cols=["day"]) == (3, 2)
+    assert rows() == sorted(want + [("d1", 99)])
 
 
 def test_compact_partitioned_preserves_content_and_shrinks_files(spark, tmp_path):

@@ -779,6 +779,28 @@ def test_bpe_learn_and_segment_match_reference(spark):
         assert seg[w] == (ref_seg[w], f, len(ref_seg[w])), w
 
 
+def test_bpe_learn_runs_two_spark_jobs_per_round(spark):
+    """A merge round is the pair count's shuffle stage and the argmax
+    collect: the rewritten vocabulary materializes inside the next
+    round's pair count, not in a job of its own."""
+    from aave_etl_spark.operators import text as text_ops
+
+    df = spark.createDataFrame(
+        [(0, "low lower newest widest " * 4)], "doc_id long, text string"
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for k in (1, 4):
+            group = f"bpe-rounds-{k}"
+            sc.setJobGroup(group, group)
+            assert len(text_ops.bpe_learn(df, n_merges=k).collect()) == k
+            jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[4] - jobs[1] == 2 * 3, jobs
+
+
 def test_global_desc_rank_equals_naive_window(spark):
     """The distributed exact rank (range-partitioned local ranks +
     broadcast offsets) must equal the partition-less row_number window
@@ -1392,6 +1414,61 @@ def test_minhash_index_if_absent_scoped_append(spark, tmp_path):
         if_absent_where="day = DATE '2024-01-03'",
     )
     assert store.read("mh_idx_sc").count() > n
+
+
+def _plan_path_to(plan: str, leaf: str) -> list[str]:
+    """The ancestor lines of the first node in a physical-plan tree string
+    that contains ``leaf``, nearest first, up to the root."""
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if leaf in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            out.append(ln)
+            d = depth(ln)
+    return out
+
+
+def test_index_builds_bucket_at_the_slot_count(spark, tmp_path):
+    """With no ``n_buckets`` the three at-rest index builders bucket at
+    ``defaultParallelism`` and record that count in their params sidecar,
+    which agrees with the catalog's spec; the band-index match join scans
+    the corpus side bucketed with no Exchange beneath the join."""
+    from aave_etl_spark.io.table_store import TableStore
+    from aave_etl_spark.operators import dedup as dd
+    from aave_etl_spark.operators.text import bm25_index_build
+
+    slots = spark.sparkContext.defaultParallelism
+    text = lambda w: f"{w}1 {w}2 {w}3 {w}4 {w}5 {w}6 {w}7 {w}8 {w}9"  # noqa: E731
+    docs = spark.createDataFrame(
+        [(i, text(f"w{i % 3}")) for i in range(12)], "doc_id long, text string"
+    )
+    store = TableStore(spark, str(tmp_path))
+    dd.minhash_index_build(store, docs.filter("doc_id < 6"), "mh_slots")
+    dd.span_index_build(store, docs, "span_slots")
+    bm25_index_build(store, docs, "bm25_slots")
+    for name in ("mh_slots", "span_slots", "bm25_slots"):
+        sidecar = spark.read.parquet(store._path(name + "_params")).head()
+        assert sidecar.n_buckets == store._num_buckets(name) == slots, name
+    # broadcast off, so the corpus side is joined in place rather than
+    # shipped: the only Exchange feeding the join is the new batch's
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(threshold)
+    try:
+        spark.conf.set(threshold, "-1")
+        got = dd.minhash_index_match(store, docs.filter("doc_id >= 6"), "mh_slots")
+        assert got.collect()
+        plan = got._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(threshold, saved)
+    path = _plan_path_to(plan, "default.mh_slots")
+    assert "Bucketed: true" in next(ln for ln in plan.splitlines() if "default.mh_slots" in ln)
+    below_join = path[: next(i for i, ln in enumerate(path) if "Join" in ln)]
+    assert not any("Exchange" in ln for ln in below_join), plan
 
 
 def test_epoch_shards_deterministic_and_partition_invariant(spark):

@@ -1041,6 +1041,45 @@ def test_corpus_pipeline_backfill_range_and_rerun(spark, tmp_path):
     ) == manifest_before
 
 
+def test_corpus_clean_plan_computes_within_batch_drops_once(spark, tmp_path):
+    """The within-batch near-dup drop ids are computed once per day: the
+    clean asset's output plan reads them from a cut lineage, so neither
+    the band join nor the Jaccard verify beneath them re-runs in the span
+    rewrite or the final write. The drops still happen (14 keeps, its
+    same-day paraphrase 15 goes)."""
+    from aave_etl_spark.plans.corpus_pipeline import (
+        _corpus_clean,
+        corpus_pipeline_graph,
+    )
+
+    nd = (
+        "the quick of brown and foxes is a jumper the lazy of dogs and"
+        " cats is a sleeper the tiny of mice and birds is a runner"
+    )
+    landing = spark.createDataFrame(
+        [
+            (13, "en", "the fresh of content and words is a story today", "2024-01-01"),
+            (14, "en", nd, "2024-01-01"),
+            (15, "en", nd + " extra appended tail words here", "2024-01-01"),
+        ],
+        "doc_id long, lang string, text string, day string",
+    ).withColumn("day", F.to_date("day"))
+    store = TableStore(spark, str(tmp_path / "wh"))
+    resources = {"landing": landing}
+    run_partition(
+        spark, store, corpus_pipeline_graph(), PartitionKey("2024-01-01"),
+        resources, selection=("corpus_landing",),
+    )
+    ctx = AssetContext(
+        spark=spark, store=store, partition=PartitionKey("2024-01-01"),
+        resources=resources,
+    )
+    clean = _corpus_clean(ctx)
+    plan = clean._jdf.queryExecution().optimizedPlan().toString()
+    assert "band_key" not in plan and "LogicalRDD" in plan, plan
+    assert sorted(r.doc_id for r in clean.collect()) == [13, 14]
+
+
 def test_corpus_contam_plan_broadcasts_eval_digests(spark, tmp_path):
     """The contamination probe's scale claim, pinned at the plan: the
     eval-digest state joins as a BROADCAST semi-join (no shuffle of the
